@@ -52,6 +52,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import stat
 import time
 
 __all__ = [
@@ -59,6 +60,8 @@ __all__ = [
     "cached_listing_digest",
     "invalidate_listing_cache",
     "listing_token",
+    "scan_token",
+    "session_scan",
 ]
 
 RACE_WINDOW_NS = 2_000_000_000  # 2 s: newest-mtime guard window
@@ -138,3 +141,56 @@ def invalidate_listing_cache(src: str | None = None) -> None:
         return
     for key in [k for k in _CACHE if k[1] == src]:
         _CACHE.pop(key, None)
+
+
+def scan_token(src: str) -> str | None:
+    """:func:`listing_token` for a directory; for a lone file, its size
+    and mtime_ns under the same race window.  None — "do not cache" —
+    for anything ``os.stat`` cannot see (``s3a://``/``hdfs://`` URIs,
+    missing paths) or written within ``RACE_WINDOW_NS``."""
+    try:
+        st = os.stat(src)
+    except OSError:
+        return None
+    if stat.S_ISDIR(st.st_mode):
+        return listing_token(src)
+    if st.st_mtime_ns > time.time_ns() - RACE_WINDOW_NS:
+        return None
+    return f"{st.st_size}:{st.st_mtime_ns}"
+
+
+# Session attribute holding {path: (scan_token, DataFrame)}
+_HANDLES_ATTR = "_pwis_scan_handles"
+
+
+def session_scan(spark, path: str, read):
+    """``read()`` — a LAZY scan handle for ``path`` — reused while
+    :func:`scan_token` of ``path`` is unchanged.
+
+    Each ``spark.read.parquet`` lists the files, infers the schema (a
+    Spark job) and makes py4j round trips before any query runs; a
+    reused handle skips all of it.  Only the plan is shared, never data:
+    every action still reads the files.  The memo lives on the session
+    object, so a stopped session frees its handles and two sessions
+    never share plans.  A handle pins its file listing, so the token
+    must move whenever the files do: the write-once contract above
+    (Spark appends and overwrites always add, remove or rename
+    entries), with anything inside the race window read uncached.
+    """
+    token = scan_token(path)
+    memo = getattr(spark, _HANDLES_ATTR, None)
+    if memo is None:
+        memo = {}
+        try:
+            setattr(spark, _HANDLES_ATTR, memo)
+        except (AttributeError, TypeError):  # session proxy: uncached
+            return read()
+    hit = memo.get(path)
+    if token is not None and hit is not None and hit[0] == token:
+        return hit[1]
+    df = read()
+    if token is not None:
+        memo[path] = (token, df)
+    else:
+        memo.pop(path, None)
+    return df

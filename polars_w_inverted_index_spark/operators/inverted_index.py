@@ -35,7 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.paths import field_name_to_column
+from ..functions.paths import field_name_to_column, sql_ident
 
 
 def postings(
@@ -49,11 +49,14 @@ def postings(
     In-engine equivalent of the reference's driver-side loop
     (main.rs:325-385). Null value/id pairs dropped per main.rs:338-342.
     """
-    col = field_name_to_column(field)
+    # SQL strings, not Column chains: the same plan, parsed by the JVM in
+    # a few py4j calls instead of one round trip per Column node
+    col = sql_ident(field_name_to_column(field))
+    ids = sql_ident(doc_id_col)
     grouped = (
-        df.where(F.col(col).isNotNull() & F.col(doc_id_col).isNotNull())
-        .groupBy(F.col(col).cast("string").alias("value"))
-        .agg(F.collect_list(F.col(doc_id_col).cast("long")).alias("doc_ids"))
+        df.where(f"{col} IS NOT NULL AND {ids} IS NOT NULL")
+        .groupBy(F.expr(f"CAST({col} AS STRING) AS value"))
+        .agg(F.expr(f"collect_list(CAST({ids} AS BIGINT)) AS doc_ids"))
     )
     if sort_postings:
         grouped = grouped.withColumn("doc_ids", F.sort_array("doc_ids"))

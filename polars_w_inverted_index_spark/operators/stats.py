@@ -14,16 +14,17 @@ with input and is network-bound only on the tiny partial-agg states.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..functions.paths import field_name_to_column
+from ..functions.paths import field_name_to_column, sql_ident
 
 
 def numeric_stats(df: DataFrame, field: str) -> DataFrame:
     """1-row ``DataFrame[min double, max double, avg double]``."""
-    col = field_name_to_column(field)
-    return df.agg(
-        F.min(col).cast("double").alias("min"),
-        F.max(col).cast("double").alias("max"),
-        F.avg(F.col(col).cast("double")).alias("avg"),
+    col = sql_ident(field_name_to_column(field))
+    # one SQL string per aggregate (same plan as the Column form, a
+    # handful of py4j calls instead of one per Column node)
+    return df.selectExpr(
+        f"CAST(min({col}) AS DOUBLE) AS min",
+        f"CAST(max({col}) AS DOUBLE) AS max",
+        f"avg(CAST({col} AS DOUBLE)) AS avg",
     )

@@ -20,6 +20,7 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.listing import session_scan
 from ..operators.inverted_index import postings, postings_chunked
 
 
@@ -441,6 +442,17 @@ class IndexCatalog:
         common = os.path.commonpath(files)
         return common
 
+    def _scan(self, path: str) -> DataFrame:
+        """Lazy scan of a static index directory, reused across lookups
+        while its listing token is unchanged (functions/listing
+        .session_scan): a fresh ``spark.read.parquet`` re-lists the
+        files and runs a schema-inference job on every lookup.  Any
+        rebuild rewrites the directory and moves the token; the gates in
+        the callers still run on every lookup."""
+        return session_scan(
+            self.spark, path, lambda: self.spark.read.parquet(path)
+        )
+
     def lookup(
         self, table: str, field: str, doc_id_col: str | None = None
     ) -> DataFrame | None:
@@ -497,7 +509,7 @@ class IndexCatalog:
             from ..streaming.index_maintenance import read_index_postings
 
             return read_index_postings(self.spark, meta["path"])
-        df = self.spark.read.parquet(meta["path"])
+        df = self._scan(meta["path"])
         if meta.get("chunked"):
             from pyspark.sql import functions as F
 
@@ -519,9 +531,7 @@ class IndexCatalog:
         per duplicated requested id — a posting-filter cannot), or the
         list is too large for a literal predicate
         (plans/rewrite.ISIN_THRESHOLD)."""
-        from pyspark.sql import functions as F
-
-        from .rewrite import ISIN_THRESHOLD
+        from .rewrite import ISIN_THRESHOLD, sql_in_ids
 
         ids = [int(i) for i in doc_ids]
         if len(ids) > ISIN_THRESHOLD or len(set(ids)) != len(ids):
@@ -529,11 +539,9 @@ class IndexCatalog:
         df = self.lookup(table, field, doc_id_col=doc_id_col)
         if df is None:
             return None
-        filtered = F.filter(F.col("doc_ids"), lambda x: x.isin(ids))
-        return (
-            df.select("value", filtered.alias("doc_ids"))
-            .where(F.size("doc_ids") > 0)
-        )
+        return df.selectExpr(
+            "value", f"filter(doc_ids, x -> {sql_in_ids('x', ids)}) AS doc_ids"
+        ).where("size(doc_ids) > 0")
 
     # -- composite (multi-field) indexes ----------------------------------
 
@@ -692,7 +700,7 @@ class IndexCatalog:
             if df is None:
                 return None
         else:
-            df = self.spark.read.parquet(meta["path"])
+            df = self._scan(meta["path"])
         for f, v in norm_eq.items():
             df = df.where(F.col(f"v_{f}") == F.lit(str(v)))
         return df

@@ -26,6 +26,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..functions.paths import sql_ident
+
 # Above this many ids, an in-predicate stops being pushdown-friendly and the
 # broadcast-join path (with bloom-filter scan pruning) wins.
 ISIN_THRESHOLD = 10_000
@@ -39,6 +41,19 @@ def id_frame(
     return spark.createDataFrame(
         [(int(i),) for i in doc_ids], f"{doc_id_col} long"
     )
+
+
+def sql_in_ids(col: str, ids: Sequence[int]) -> str:
+    """``col IN (i1, i2, ...)`` as one SQL string, ``false`` for no ids.
+
+    The same predicate as ``F.col(col).isin(ids)`` — the optimized plans
+    are identical and it still reaches the parquet scan as ``In`` — but
+    the JVM parses it in one call, where ``isin`` makes several py4j
+    round trips per id to build a literal Column for each.
+    """
+    if not ids:
+        return "false"
+    return f"{sql_ident(col)} IN ({', '.join(str(int(i)) for i in ids)})"
 
 
 def filter_by_doc_ids(
@@ -58,7 +73,7 @@ def filter_by_doc_ids(
     ids = [int(i) for i in doc_ids]
     has_dups = len(set(ids)) != len(ids)
     if len(ids) <= ISIN_THRESHOLD and not (preserve_multiplicity and has_dups):
-        return df.where(F.col(doc_id_col).isin(ids))
+        return df.where(sql_in_ids(doc_id_col, ids))
     spark = df.sparkSession
     keys = id_frame(spark, ids, doc_id_col)
     if not preserve_multiplicity:

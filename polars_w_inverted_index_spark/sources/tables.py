@@ -6,6 +6,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.listing import session_scan
+
 TABLES = (
     "region",
     "nation",
@@ -19,37 +21,8 @@ TABLES = (
     "embeddings",
 )
 
-# Per-session DataFrame-HANDLE memo (r15, r14 VERDICT task 7): every
-# bench/driver row called spark.read.parquet() afresh, paying the
-# relation's file listing + footer/schema read + py4j round trips per
-# QUERY — the scaling block showed the tiny ref_* rows core-count-flat
-# because this fixed driver-side setup, not executor work, is their
-# floor.  The memo caches the LAZY scan handle (never data, never
-# results: every action still computes from the parquet files), keyed
-# by (path, size, mtime) so a regenerated fixture re-reads, and stored
-# on the session object so a stopped session frees its handles and two
-# concurrent sessions never share plans.  This is the same reuse a
-# catalog table gets from Spark's own session-scoped file-index cache.
-_CACHE_ATTR = "_pwis_table_handles"
 
-
-def _stat_key(path: str) -> tuple:
-    st = os.stat(path)
-    return (path, st.st_size, int(st.st_mtime_ns))
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    cache = getattr(spark, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        try:
-            setattr(spark, _CACHE_ATTR, cache)
-        except Exception:  # exotic session proxy: serve uncached
-            cache = None
-    key = _stat_key(path) if cache is not None else None
-    if cache is not None and key in cache:
-        return cache[key]
+def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects by
         # default (PARQUET_TYPE_ILLEGAL). Read nanos as long, then convert
@@ -63,11 +36,19 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = spark.read.parquet(path)
         if dict(df.dtypes).get("ts") == "bigint":
             df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    else:
-        df = spark.read.parquet(path)
-    if cache is not None:
-        cache[key] = df
-    return df
+        return df
+    return spark.read.parquet(path)
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Lazy scan of ``<sf_dir>/<name>.parquet``.  The handle is reused per
+    session while the path's listing token is unchanged
+    (functions/listing.session_scan): a fresh ``spark.read.parquet`` per
+    query re-pays the file listing, footer/schema read and py4j round
+    trips, which is the whole floor of the small reference queries.  A
+    root ``os.stat`` cannot see (``s3a://``, ``hdfs://``) reads uncached."""
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    return session_scan(spark, path, lambda: _read_table(spark, path, name))
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

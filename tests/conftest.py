@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import os
+import re
 import sys
 
 import pytest
@@ -65,7 +67,30 @@ SLOW_TESTS = {
 }
 
 
+_TEST_DEF = re.compile(r"^\s*(?:async\s+)?def\s+(test_\w+)", re.M)
+
+
+def undefined_slow_tests(tests_dir: str = os.path.dirname(__file__)) -> set:
+    """``SLOW_TESTS`` names with no ``def test_…`` in any source file
+    under ``tests_dir``.  Read from the sources, not the collected
+    items, so a single-file run stays green while a renamed or deleted
+    slow test still fails every run."""
+    defined: set = set()
+    for dirpath, _dn, filenames in os.walk(tests_dir):
+        for fn in filenames:
+            if fn.endswith(".py"):
+                with open(os.path.join(dirpath, fn)) as f:
+                    defined.update(_TEST_DEF.findall(f.read()))
+    return SLOW_TESTS - defined
+
+
 def pytest_collection_modifyitems(config, items):
+    missing = undefined_slow_tests()
+    if missing:
+        raise pytest.UsageError(
+            "tests/conftest.py SLOW_TESTS names no test defined under "
+            f"tests/: {sorted(missing)}"
+        )
     for item in items:
         if item.name.split("[")[0] in SLOW_TESTS:
             item.add_marker(pytest.mark.slow)

@@ -969,3 +969,94 @@ def test_streaming_composite_chunked_lsm_converges_and_appends(
         ).collect()
     )
     assert got_ids == truth and len(truth) > 0
+
+
+# -- scan-handle reuse: stale-memo paths ----------------------------------
+
+
+def _backdate(path, secs=10.0):
+    """Age every directory mtime under ``path`` past the listing
+    token's race window, so the memos keyed on it engage."""
+    import os
+    import time
+
+    t = time.time() - secs
+    for dirpath, _dn, _fn in os.walk(path):
+        os.utime(dirpath, (t, t))
+
+
+def test_index_handle_reused_until_rebuild(spark, lineitem, tmp_path):
+    """A settled static index's lazy scan handle is reused across
+    lookups; a base append still makes a warm lookup decline (the
+    fingerprint gate runs every time), and rebuilding in place — by
+    build and by build_many — moves the listing token, so the next
+    lookup serves the new postings, not the old handle."""
+    base = str(tmp_path / "tbl")
+    lineitem.limit(200).write.mode("overwrite").parquet(base)
+    root = str(tmp_path / "idx")
+    cat = IndexCatalog(spark, root)
+    pair = {"l_returnflag": "N", "l_linestatus": "O"}
+
+    def build_all():
+        tbl = spark.read.parquet(base)
+        cat.build(tbl, "tbl", "l_returnflag", doc_id_col="l_orderkey")
+        cat.build_many(tbl, "tbl", ["l_linestatus"], doc_id_col="l_orderkey")
+        cat.build_composite(tbl, "tbl", list(pair), doc_id_col="l_orderkey")
+        _backdate(base)
+        _backdate(root)
+
+    build_all()
+    first = {}
+    for f in ("l_returnflag", "l_linestatus"):
+        first[f] = cat.lookup("tbl", f)
+        assert first[f] is not None
+        assert cat.lookup("tbl", f) is first[f]  # warm: same handle
+    assert cat.lookup_composite("tbl", pair) is not None
+
+    lineitem.where(F.col("l_orderkey") > 3000).limit(50).write.mode(
+        "append"
+    ).parquet(base)
+    for f in first:
+        assert cat.lookup("tbl", f) is None
+    assert cat.lookup_composite("tbl", pair) is None
+
+    build_all()
+    fresh = spark.read.parquet(base)
+    for f in first:
+        hit = cat.lookup("tbl", f)
+        assert hit is not None and hit is not first[f]
+        assert _vm(hit) == _vm(postings(fresh, f, "l_orderkey"))
+    got = cat.lookup_composite("tbl", pair).collect()
+    want = sorted(
+        r["l_orderkey"]
+        for r in fresh.where(
+            (F.col("l_returnflag") == "N") & (F.col("l_linestatus") == "O")
+        ).collect()
+    )
+    assert len(got) == 1 and list(got[0]["doc_ids"]) == want
+
+
+def test_fresh_index_read_uncached(spark, lineitem, tmp_path):
+    """An index written inside the 2 s race window has no listing
+    token: every lookup reads it afresh instead of memoizing."""
+    cat = IndexCatalog(spark, str(tmp_path / "idx"))
+    cat.build(lineitem, "lineitem", "l_returnflag", doc_id_col="l_orderkey")
+    a = cat.lookup("lineitem", "l_returnflag")
+    b = cat.lookup("lineitem", "l_returnflag")
+    assert a is not None and b is not None and a is not b
+
+
+def test_second_session_never_reuses_handle(spark, lineitem, tmp_path):
+    """The handle memo lives on the session object: another session
+    over the same catalog root builds its own."""
+    root = str(tmp_path / "idx")
+    cat = IndexCatalog(spark, root)
+    cat.build(lineitem, "lineitem", "l_returnflag", doc_id_col="l_orderkey")
+    _backdate(root)
+    mine = cat.lookup("lineitem", "l_returnflag")
+    assert cat.lookup("lineitem", "l_returnflag") is mine
+    other = spark.newSession()
+    theirs = IndexCatalog(other, root).lookup("lineitem", "l_returnflag")
+    assert theirs is not None and theirs is not mine
+    assert theirs.sparkSession is other
+    assert _vm(theirs) == _vm(mine)

@@ -11,6 +11,7 @@ from polars_w_inverted_index_spark.functions.listing import (
     cached_listing_digest,
     invalidate_listing_cache,
     listing_token,
+    scan_token,
 )
 
 
@@ -212,3 +213,25 @@ def test_token_changes_whenever_digest_would(tmp_path_factory, muts):
     finally:
         L.RACE_WINDOW_NS = old_win
         shutil.rmtree(root, ignore_errors=True)
+
+
+def test_scan_token_lone_file_dir_and_uri(tmp_path):
+    """The scan-handle memo's key: a settled lone file is keyed on its
+    size and mtime (any rewrite moves it), a directory on its listing
+    token, and a fresh file or a URI ``os.stat`` cannot see gets None."""
+    lone = tmp_path / "t.parquet"
+    lone.write_bytes(b"x")
+    assert scan_token(str(lone)) is None  # inside the race window
+    old = time.time() - 10
+    os.utime(lone, (old, old))
+    t0 = scan_token(str(lone))
+    assert t0 is not None and t0 == scan_token(str(lone))
+    lone.write_bytes(b"xy")
+    os.utime(lone, (old - 5, old - 5))
+    assert scan_token(str(lone)) not in (None, t0)
+
+    src = _mk_tree(tmp_path)
+    _backdate(src)
+    assert scan_token(src) == listing_token(src) is not None
+    assert scan_token(f"file://{src}") is None
+    assert scan_token("s3a://bucket/t.parquet") is None

@@ -233,3 +233,68 @@ def test_csv_corrupt_line_modes(spark, tmp_path_factory):
 
     dropped = read_logs_csv(spark, str(p), mode="DROPMALFORMED").collect()
     assert len(dropped) == 1 and dropped[0]["doc_id"] == 1
+
+
+# -- load_table handle memo -----------------------------------------------
+
+
+def test_load_table_uri_root_reads_uncached(spark, tmp_path, monkeypatch):
+    """A root ``os.stat`` cannot see (``file://``, ``s3a://``,
+    ``hdfs://`` URIs) falls through to a plain, uncached read instead
+    of raising ``OSError``."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from polars_w_inverted_index_spark.sources.tables import load_table
+
+    spark.range(5).write.parquet(str(tmp_path / "t.parquet"))
+    uri = f"file://{tmp_path}"
+    a = load_table(spark, uri, "t")
+    assert sorted(r.id for r in a.collect()) == list(range(5))
+    assert load_table(spark, uri, "t") is not a
+
+    read = []
+    monkeypatch.setattr(
+        DataFrameReader, "parquet", lambda self, p: read.append(p) or p
+    )
+    assert load_table(spark, "s3a://bucket/sf", "region") == (
+        "s3a://bucket/sf/region.parquet"
+    )
+    assert read == ["s3a://bucket/sf/region.parquet"]
+
+
+def test_load_table_rereads_after_part_rewrite(spark, tmp_path):
+    """A directory-valued ``<name>.parquet`` whose part file is replaced
+    inside a partition directory re-reads: the memo is keyed on every
+    directory under the root, not on the root's own stat."""
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from polars_w_inverted_index_spark.sources.tables import load_table
+
+    path = tmp_path / "t.parquet"
+    spark.createDataFrame(
+        [(1, "a", 1), (2, "b", 2)], "id long, v string, k int"
+    ).write.partitionBy("k").parquet(str(path))
+    t = time.time() - 10
+    for dirpath, _dn, _fn in os.walk(path):
+        os.utime(dirpath, (t, t))
+    first = load_table(spark, str(tmp_path), "t")
+    assert load_table(spark, str(tmp_path), "t") is first  # memo hit
+
+    part_dir = path / "k=1"
+    for f in os.listdir(part_dir):
+        os.remove(part_dir / f)
+    pq.write_table(
+        pa.table({"id": pa.array([7, 8], pa.int64()), "v": ["x", "y"]}),
+        part_dir / "part-00000-rewrite.parquet",
+    )
+    t = time.time() - 5  # settled again; the root dir is untouched
+    os.utime(part_dir, (t, t))
+    again = load_table(spark, str(tmp_path), "t")
+    assert again is not first
+    assert sorted((r.id, r.v) for r in again.collect()) == [
+        (2, "b"), (7, "x"), (8, "y"),
+    ]
