@@ -977,8 +977,10 @@ def main() -> None:
     # driver's regression detector.  Entries the current run errored
     # on stay errored, and prior-only entries are dropped (the current
     # workload defines the entry set — registry rotations must not
-    # resurrect ghosts).
-    floor_timings, prior_calibs = _floor_merge_round_sidecar(timings)
+    # resurrect ghosts).  A sidecar stamped with a different core
+    # count (or none) is another machine's floor and never merges.
+    cpus = spark.sparkContext.defaultParallelism
+    floor_timings, prior_calibs = _floor_merge_round_sidecar(timings, cpus)
 
     # Per-row budget flag (r12 VERDICT task 6): the driver-row sweep's
     # cost creep must be visible IN-REPO — any registry row costing
@@ -1049,7 +1051,7 @@ def main() -> None:
             errors["logs10m_exec_peak_mb"] = f"{type(e).__name__}: {e}"[:300]
     if errors:
         out["errors"] = errors
-    sidecar_extra = {}
+    sidecar_extra = {"cpus": cpus}
     if prior_calibs:
         sidecar_extra["floor_merged"] = True
         sidecar_extra["calib_runs"] = [
@@ -1098,14 +1100,16 @@ def _round_detail_file() -> str:
 
 
 def _floor_merge_round_sidecar(
-    timings: dict[str, float],
+    timings: dict[str, float], cpus: int
 ) -> tuple[dict[str, float], list[float] | None]:
     """Per-entry cross-run minima against THIS ROUND's existing sidecar
     (r13 VERDICT task 5 — see the call site's comment).  Returns the
     merged timings plus the prior runs' calibration stamps, or
-    ``(timings, None)`` when no prior same-round sidecar exists.  Only
-    entries present in the CURRENT run merge (prior-only names are
-    dropped; current errors stay errors)."""
+    ``(timings, None)`` when no prior same-round sidecar exists or the
+    prior one was not stamped with this run's ``cpus`` (an 8-core
+    scaling run must not seed a 32-core round's floors).  Only entries
+    present in the CURRENT run merge (prior-only names are dropped;
+    current errors stay errors)."""
     path = _round_detail_file()
     try:
         with open(path) as f:
@@ -1113,7 +1117,7 @@ def _floor_merge_round_sidecar(
     except (OSError, ValueError):
         return timings, None
     pq = prior.get("queries")
-    if not isinstance(pq, dict):
+    if not isinstance(pq, dict) or prior.get("cpus") != cpus:
         return timings, None
     merged = {
         k: min(v, pq[k]) if isinstance(pq.get(k), (int, float)) else v

@@ -857,17 +857,9 @@ def build_ann_index(
     assigned = _assign_cells(
         corpus, None, id_col, vec_col, keep_n=1, _collected=collected
     )
-    (
-        assigned.select(
-            "cell",
-            F.lit(-1).alias("ingest_batch"),
-            F.col("_id").alias("vec_id"),
-            F.col("v").alias("cv"),
-            F.col("vn").alias("cn"),
-        )
-        .write.mode("overwrite")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(os.path.join(root, "cells"))
+    cells = _cells_rows(assigned, -1)
+    cells.write.mode("overwrite").partitionBy("cell", "ingest_batch").parquet(
+        os.path.join(root, "cells")
     )
     _write_meta_atomic(
         os.path.join(root, "_ann_meta.json"),
@@ -918,6 +910,12 @@ def build_ann_index(
             "code_fps": {},
             "books_id": None,
             "retired": retired,
+            # the cells tree's schema (cell typed like the centroid ids),
+            # so its readers skip the schema-inference job
+            "cells_schema": ", ".join(
+                f"{f.name} {f.dataType.simpleString()}"
+                for f in cells.schema.fields
+            ),
         },
     )
     _stamp_bandwidth(root)
@@ -955,6 +953,9 @@ def _assign_batch_checkpoint(
     # before any parquet/manifest write, with the exact standalone
     # errors (_width_gate_verdict); a refused batch writes nothing.
     # Centroids come from the file-listing memo (frozen per root).
+    # (Observed metrics on the checkpoint would fold the per-cell
+    # collect's two jobs into it, but a pyspark ``Observation`` leaves
+    # its session unable to serialize a fitted Spark ML model.)
     assigned = _assign_cells(
         batch, None, id_col, vec_col, keep_n=1, width_flags=True,
         _collected=_load_centroids(spark, root),
@@ -980,17 +981,28 @@ def _assign_batch_checkpoint(
     return assigned, touched, n
 
 
+def _cells_rows(assigned: DataFrame, batch_tag: int) -> DataFrame:
+    """``_assign_cells`` output as cells-tree rows
+    ``[cell, ingest_batch, vec_id, cv, cn]``."""
+    return assigned.select(
+        "cell",
+        F.lit(int(batch_tag)).alias("ingest_batch"),
+        F.col("_id").alias("vec_id"),
+        F.col("v").alias("cv"),
+        F.col("vn").alias("cn"),
+    )
+
+
 def _append_assigned(
     root: str, assigned: DataFrame, batch_tag: int
 ) -> None:
+    """Append the batch's assigned rows to the cells tree, one file per
+    touched cell: the rows are rebalanced on ``cell`` before the
+    partitioned write (AQE still splits a cell above the advisory
+    partition size)."""
     (
-        assigned.select(
-            "cell",
-            F.lit(int(batch_tag)).alias("ingest_batch"),
-            F.col("_id").alias("vec_id"),
-            F.col("v").alias("cv"),
-            F.col("vn").alias("cn"),
-        )
+        _cells_rows(assigned, batch_tag)
+        .hint("rebalance", "cell")
         .write.mode("append")
         .partitionBy("cell", "ingest_batch")
         .parquet(os.path.join(root, "cells"))
@@ -1349,6 +1361,19 @@ def _live_paths(root: str, tree: str, m: dict, cells=None) -> list[str]:
     return out
 
 
+def _read_cells(
+    spark: SparkSession, root: str, m: dict, paths: list[str]
+) -> DataFrame:
+    """The cells tree's ``paths`` (from :func:`_live_paths`), read with
+    the schema the build recorded in the manifest — no schema-inference
+    job.  A manifest without one (written before the schema was
+    recorded) is read with inference."""
+    reader = spark.read.option("basePath", os.path.join(root, "cells"))
+    if m.get("cells_schema"):
+        reader = reader.schema(m["cells_schema"])
+    return reader.parquet(*paths)
+
+
 def _manifest_walk(cdir: str, tags) -> str | None:
     """The live-set digest walk behind :func:`_manifest_cell_digest`:
     sha256 over sorted (path relative to the cell dir, size) of every
@@ -1623,13 +1648,12 @@ def ann_index_compact_cells(
     ]
     # r14: the tiny-input static-planning gate was tried here and
     # REVERTED with the rest of the ANN family (see build_ann_index)
-    current = (
-        spark.read.option("basePath", cells_dir)
-        .parquet(*live)
-        .select("cell", "vec_id", "cv", "cn")
+    current = _read_cells(spark, root, m, live).select(
+        "cell", "vec_id", "cv", "cn"
     )
     (
         current.withColumn("ingest_batch", F.lit(tag))
+        .hint("rebalance", "cell")  # one file per folded cell
         .write.mode("append")
         .partitionBy("cell", "ingest_batch")
         .parquet(cells_dir)
@@ -1650,10 +1674,8 @@ def ann_index_compact_cells(
             os.path.join(cells_dir, f"cell={c}", f"ingest_batch={tag}")
             for c in folded_cells
         ]
-        folded_df = (
-            spark.read.option("basePath", cells_dir)
-            .parquet(*folded_paths)
-            .select("cell", "vec_id", "cv", "cn")
+        folded_df = _read_cells(spark, root, m, folded_paths).select(
+            "cell", "vec_id", "cv", "cn"
         )
         cell_ddl = folded_df.schema["cell"].dataType.simpleString()
         (
@@ -1908,10 +1930,9 @@ def ann_search(
         ]
         if not paths:  # every probed cell is empty under this snapshot
             return spark.createDataFrame([], empty_schema)
-        cells = (
-            spark.read.option("basePath", os.path.join(root, "cells"))
-            .parquet(*paths)  # the pinned live set: static pruning with
-            .select("cell", "vec_id", "cv")  # snapshot isolation
+        # the pinned live set: static pruning with snapshot isolation
+        cells = _read_cells(spark, root, manifest, paths).select(
+            "cell", "vec_id", "cv"
         )
     else:
         cells = (
@@ -2231,7 +2252,6 @@ def _pq_augment_manifest(
 
     from .pq import pq_train, pq_encode
 
-    cells_dir = os.path.join(root, "cells")
     codes_dir = os.path.join(root, "pq_codes")
     _sweep_orphan_dirs(root, m, sorted(m["cells"]))
     g = int(m["gen"]) + 1
@@ -2245,10 +2265,8 @@ def _pq_augment_manifest(
         raise ValueError(
             f"pq_augment_ann_index: no live cells to encode at {root}."
         )
-    cells = (
-        spark.read.option("basePath", cells_dir)
-        .parquet(*live)
-        .select("cell", "vec_id", "cv", "cn")
+    cells = _read_cells(spark, root, m, live).select(
+        "cell", "vec_id", "cv", "cn"
     )
     cb = pq_train(
         cells,
@@ -2374,7 +2392,6 @@ def pq_reencode_stale_cells(
             "(missing meta, or codes/books pairing broken by a crashed "
             "retrain) — run pq_augment_ann_index(spark, root) first."
         )
-    cells_dir = os.path.join(root, "cells")
     codes_dir = os.path.join(root, "pq_codes")
     current = {
         c: _manifest_cell_digest(root, m, c, use_cache=False)
@@ -2404,10 +2421,8 @@ def pq_reencode_stale_cells(
             for p in _live_paths(root, "cells", m, refresh)
             if os.path.isdir(p)
         ]
-        cells = (
-            spark.read.option("basePath", cells_dir)
-            .parquet(*live)
-            .select("cell", "vec_id", "cv", "cn")
+        cells = _read_cells(spark, root, m, live).select(
+            "cell", "vec_id", "cv", "cn"
         )
         cell_ddl = cells.schema["cell"].dataType.simpleString()
         # a refreshed cell's codes are rewritten WHOLE under the new
@@ -2506,10 +2521,8 @@ def _encode_batch_codes(
     ]
     delta_dirs = [d for d in delta_dirs if os.path.isdir(d)]
     if delta_dirs:
-        batch = (
-            spark.read.option("basePath", cells_dir)
-            .parquet(*delta_dirs)
-            .select("cell", "vec_id", "cv", "cn")
+        batch = _read_cells(spark, root, m, delta_dirs).select(
+            "cell", "vec_id", "cv", "cn"
         )
         cell_ddl = batch.schema["cell"].dataType.simpleString()
         (
@@ -3002,10 +3015,11 @@ def ann_search_pq(
                 f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
                 "rank int",
             )
+        # non-empty: codes above came from these cells' live content
+        # (gate invariant)
         floats = (
-            spark.read.option("basePath", os.path.join(root, "cells"))
-            .parquet(*float_paths)  # non-empty: codes above came from
-            .select(  # these cells' live content (gate invariant)
+            _read_cells(spark, root, manifest, float_paths)
+            .select(
                 F.col("vec_id").alias("neighbor_id"),
                 F.col("cv"),
                 F.col("cn"),

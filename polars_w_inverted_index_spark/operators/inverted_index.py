@@ -75,8 +75,12 @@ def postings_chunked(
     (SURVEY.md §7 hard part #1).  Chunk assignment hashes doc_id into
     ``ceil(count/max)`` buckets per value — two shuffles (count, then group)
     but every aggregation state is bounded, so the plan survives arbitrary
-    value skew.  The un-chunked :func:`postings` is preferable when value
-    cardinality is high and postings are small.
+    value skew.  The streaming index re-chunks with the same rule in ONE
+    shuffle (``streaming/index_maintenance._rechunked``): its rows must be
+    clustered by value-hash bucket for the write anyway, so the count runs
+    as a window inside the bucket partition.  The un-chunked
+    :func:`postings` is preferable when value cardinality is high and
+    postings are small.
     """
     col = field_name_to_column(field)
     base = (

@@ -22,6 +22,27 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+# Logical nodes a fan-out may sit on: a file scan under projections and
+# filters.  Over anything else (an aggregate, join, sort, window or
+# repartition) the frame arrives distributed by its own shuffle, and the
+# leaf-scan bytes say nothing about its partition count.
+_BARE_SCAN_NODES = frozenset({"Relation", "Project", "Filter"})
+
+# Compressed text inputs Hadoop cannot split: each file is read whole by
+# one task, so a scan yields at most one partition per file.
+_NON_SPLITTABLE = (".gz", ".deflate", ".lz4", ".snappy", ".zst")
+
+
+def _is_bare_scan(df: DataFrame) -> bool:
+    """True when the optimized plan is only scan/project/filter nodes."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    return all(
+        line.lstrip(" :+-|").split(" ", 1)[0] in _BARE_SCAN_NODES
+        for line in plan.splitlines()
+        if line.strip()
+    )
+
+
 def ensure_parallelism(
     df: DataFrame, min_partitions: int | None = None
 ) -> DataFrame:
@@ -44,18 +65,20 @@ def ensure_parallelism(
     ``df.rdd.getNumPartitions()`` probe forced physical planning of
     every frame on the driver (~77 ms per call site, measured) and,
     with AQE on, EXECUTES upstream shuffle stages eagerly for frames
-    with shuffle lineage.  Contract (documented, was implicit): only
-    file-scan-backed frames fan out — literal/stream-micro-batch/
-    post-shuffle frames pass through unchanged, which is what the old
-    probe decided for them anyway (parallelize and shuffle outputs
-    already arrive cluster-wide).
+    with shuffle lineage.  Contract: only a bare file scan (scan,
+    project and filter nodes) fans out — literal, post-shuffle and
+    stream-micro-batch frames pass through unchanged (parallelize and
+    shuffle outputs already arrive cluster-wide; a memory-stream
+    micro-batch may be one partition and is still passed through).
+    Non-splittable inputs (``.gz`` and other compressed text) cap the
+    estimate at one partition per file.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
     try:
         files = df.inputFiles()
-        if not files:
-            return df  # not scan-backed: already parallel by source
+        if not files or not _is_bare_scan(df):
+            return df  # not a bare scan: already parallel by source
         split_conf = getattr(spark, "_pwis_split_conf", None)
         if split_conf is None:
             conf = spark._jsparkSession.sessionState().conf()
@@ -69,6 +92,8 @@ def ensure_parallelism(
         if size >= (1 << 62):  # stats unknown: fail closed, no shuffle
             return df
         est_partitions = (size + open_cost * len(files)) / max(max_pb, 1)
+        if any(f.endswith(_NON_SPLITTABLE) for f in files):
+            est_partitions = min(est_partitions, len(files))
         if est_partitions >= target:
             return df
     except Exception:

@@ -48,6 +48,17 @@ resolves its directories from the manifest + the assignment — no
 legacy-root migration in ``_ensure_manifest`` (once per index
 lifetime).
 
+Commit shape (pinned by tests/test_plan_budgets.py and
+tests/test_commit_shape.py): one parquet file per touched cell per
+batch, and one per folded cell per fold — the rows are rebalanced on
+``cell`` before the partitioned write, so AQE still splits a cell above
+the advisory partition size.  An ingest is 5 Spark jobs: the assign
+checkpoint, the per-cell collect (a shuffle map stage and its result)
+and the write (a shuffle map stage and the write).  A fold adds 2 more;
+it reads the live cells with the schema the build recorded in the
+manifest, so it runs no schema-inference job (it still pays Spark's
+parallel-listing job when it reads more than 32 directories).
+
 Centroids never move during ingest; rebuild with ``build_ann_index``
 on the cadence the drift monitor (streaming/drift.py) indicates —
 standard IVF operating procedure (see :func:`should_rebuild` /

@@ -43,6 +43,18 @@ Two merge shapes:
   compaction debt; pass ``max_segments_per_bucket=None`` to take over
   the schedule.
 
+Commit shape (pinned by tests/test_plan_budgets.py and
+tests/test_commit_shape.py): every write is ONE shuffle on the bucket
+column followed by a ``partitionBy("bucket")`` write, so each touched
+bucket gets exactly one parquet file per commit.  A chunked merge
+shuffles the batch's raw ``(bucket, key, doc_id)`` rows and groups and
+cuts chunks inside the partition (2 Spark jobs: the shuffle's map stage
+and the write); compaction and rebucket shuffle the compact chunk rows
+and re-chunk inside the partition (:func:`_rechunked`, also 2 jobs).
+Readers pass the segment schema derived from the marker
+(:func:`_segment_schema`), so opening the index — every streaming
+catalog lookup, every compaction — runs no schema-inference job.
+
 Why pointers instead of in-place overwrite: Spark cannot atomically
 overwrite a parquet directory it is concurrently reading (the merge
 reads bucket k while producing its replacement), and readers must never
@@ -70,9 +82,10 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.paths import field_name_to_column, sql_ident
 from ..operators.inverted_index import postings
 
 DEFAULT_N_BUCKETS = 16
@@ -117,8 +130,24 @@ def _read_marker(index_path: str) -> dict | None:
     return meta
 
 
-def _bucket_col(n_buckets: int):
-    return F.pmod(F.xxhash64(F.col("value")), F.lit(n_buckets))
+def _bucket_col(keys: list[str], n_buckets: int):
+    """``pmod(xxhash64(*keys), B)`` — the bucket of a single-field
+    (``["value"]``) or composite (``["v_<f1>", ...]``) key."""
+    return F.pmod(F.xxhash64(*keys), F.lit(n_buckets))
+
+
+def _segment_schema(meta: dict) -> str:
+    """DDL of every segment file of the index ``meta`` describes: the
+    string key columns, ``chunk bigint`` for a chunked index, and
+    ``doc_ids array<bigint>``.  Readers pass it so that opening the
+    index runs no schema-inference job."""
+    keys = ", ".join(f"{sql_ident(k)} string" for k in _key_cols(meta))
+    chunk = (
+        " chunk bigint,"
+        if meta.get("max_postings_per_row") is not None
+        else ""
+    )
+    return f"{keys},{chunk} doc_ids array<bigint>"
 
 
 def read_index(spark: SparkSession, index_path: str) -> DataFrame | None:
@@ -135,7 +164,7 @@ def read_index(spark: SparkSession, index_path: str) -> DataFrame | None:
         for segs in meta["buckets"].values()
         for rel in segs
     ]
-    return spark.read.parquet(*paths)
+    return spark.read.schema(_segment_schema(meta)).parquet(*paths)
 
 
 def read_index_postings(
@@ -180,45 +209,70 @@ def _key_cols(meta: dict) -> list[str]:
     return [f"v_{f}" for f in comp] if comp else ["value"]
 
 
-def _meta_bucket_col(meta: dict, n_buckets: int):
-    """Bucket expression matching the index's key shape (single-field
-    and composite merges must hash identically to their writers)."""
-    comp = meta.get("composite_fields")
-    if comp:
-        return F.pmod(
-            F.xxhash64(*[f"v_{f}" for f in comp]), F.lit(n_buckets)
-        )
-    return _bucket_col(n_buckets)
-
-
-def _rechunked(df: DataFrame, meta: dict) -> DataFrame:
+def _rechunked(df: DataFrame, meta: dict, n_buckets: int) -> DataFrame:
     """Re-chunk a chunked index frame to the minimal ``ceil(n/max)``
-    rows per key — the normalization step shared by :func:`compact_index`
+    rows per key, as ``[bucket, *keys, chunk, doc_ids]`` clustered by
+    bucket — the normalization step shared by :func:`compact_index`
     and :func:`rebucket_index` (both produce single-segment buckets, so
     both must restore the per-segment ``(key, chunk)`` uniqueness the
     module docstring promises; a plain union of segments can hold the
     same chunk id twice).
 
+    ONE shuffle: the compact chunk rows are repartitioned by bucket
+    first, and a key lives in exactly one bucket, so the per-key count
+    (a window over ``(bucket, *keys)``) and the regroup by
+    ``(bucket, *keys, chunk)`` both run inside the partition, and the
+    writer's ``partitionBy("bucket")`` finds the rows already clustered.
+
     Chunk assignment is the same doc_id hash
-    ``operators/inverted_index.postings_chunked`` uses, so chunk sizes
+    ``operators/inverted_index.postings_chunked`` uses,
+    ``pmod(xxhash64(doc_id), greatest(1, ceil(n/max)))``, so chunk sizes
     are ``max`` in expectation with multiplicative concentration
     (±~1/√max) — at the production-scale caps this path exists for
     (10^5-10^6) that is a tight bound."""
     m = int(meta["max_postings_per_row"])
     keys = _key_cols(meta)
-    exploded = df.select(*keys, F.explode("doc_ids").alias("doc_id"))
-    counts = exploded.groupBy(*keys).agg(F.count("*").alias("n"))
-    sized = counts.select(
-        *keys,
-        F.greatest(F.lit(1), F.ceil(F.col("n") / F.lit(m))).alias("_nc"),
+    per_key = Window.partitionBy("bucket", *keys)
+    n_chunks = F.greatest(
+        F.lit(1), F.ceil(F.count(F.lit(1)).over(per_key) / F.lit(m))
     )
     return (
-        exploded.join(sized, keys)
+        df.withColumn("bucket", _bucket_col(keys, n_buckets))
+        .repartition("bucket")
+        .select("bucket", *keys, F.explode("doc_ids").alias("doc_id"))
         .withColumn(
-            "chunk", F.pmod(F.xxhash64("doc_id"), F.col("_nc")).cast("long")
+            "chunk", F.pmod(F.xxhash64("doc_id"), n_chunks).cast("long")
         )
-        .groupBy(*keys, "chunk")
+        .groupBy("bucket", *keys, "chunk")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
+    )
+
+
+def _write_folded(
+    index_path: str, meta: dict, folded: DataFrame, n_buckets: int
+) -> None:
+    """Write ``folded`` (rows clustered by ``bucket``: one file per
+    bucket) under a fresh ``m=<n>`` directory and swap EVERY bucket's
+    segment list to it — the commit :func:`compact_index` and
+    :func:`rebucket_index` share."""
+    next_m = meta.get("merge", -1) + 1
+    out = os.path.join(index_path, f"m={next_m}")
+    folded.write.mode("overwrite").partitionBy("bucket").parquet(out)
+    new_pointers = {
+        d.split("=", 1)[1]: os.path.join(f"m={next_m}", d)
+        for d in os.listdir(out)
+        if d.startswith("bucket=")
+    }
+    _commit(
+        index_path,
+        meta,
+        new_pointers,
+        batch_id=None,
+        n_buckets=n_buckets,
+        next_m=next_m,
+        max_rows=meta.get("max_postings_per_row"),
+        replace_buckets=True,
+        composite_fields=meta.get("composite_fields"),
     )
 
 
@@ -232,11 +286,13 @@ def compact_index(spark: SparkSession, index_path: str) -> None:
     are always single-segment).  Works for single-field AND composite
     (tuple-keyed) chunked indexes.
 
-    Chunk assignment is the same doc_id hash ``postings_chunked`` uses,
-    so chunk sizes are ``max`` in expectation with multiplicative
-    concentration (±~1/√max) — at the production-scale caps this path
-    exists for (10^5-10^6) that is a tight bound; merge-time pieces cut
-    by ``slice`` remain exactly capped.
+    One read, one shuffle (:func:`_rechunked`), one write of one file
+    per bucket.  Chunk assignment is the same doc_id hash
+    ``postings_chunked`` uses, so chunk sizes are ``max`` in expectation
+    with multiplicative concentration (±~1/√max) — at the
+    production-scale caps this path exists for (10^5-10^6) that is a
+    tight bound; merge-time pieces cut by ``slice`` remain exactly
+    capped.
     """
     meta = _read_marker(index_path)
     if meta is None or meta.get("max_postings_per_row") is None:
@@ -245,38 +301,8 @@ def compact_index(spark: SparkSession, index_path: str) -> None:
     if df is None:
         return
     n_buckets = meta["n_buckets"]
-    compacted = _rechunked(df, meta).withColumn(
-        "bucket", _meta_bucket_col(meta, n_buckets)
-    )
-    m = int(meta["max_postings_per_row"])
-    next_m = meta.get("merge", -1) + 1
-    out = os.path.join(index_path, f"m={next_m}")
-    # r15 (r14 VERDICT task 8 re-A/B): the r14 static-planning gate was
-    # REMOVED from every index_maintenance site — after the write-only
-    # merge restructure the gate LOST in both A/B orders (composite row
-    # 4.0/5.2 s gated vs 3.1/3.2 s ungated; incremental index 2.5/2.3
-    # vs 2.0/2.0): AQE now coalesces the lone repartition("bucket")
-    # write shuffle to few tasks, which beats the gate's static width,
-    # and the probe jobs the gate used to save no longer exist.
-    compacted.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out)
-    written = [
-        d for d in os.listdir(out) if d.startswith("bucket=")
-    ]
-    new_pointers = {
-        d.split("=", 1)[1]: os.path.join(f"m={next_m}", d) for d in written
-    }
-    _commit(
-        index_path,
-        meta,
-        new_pointers,
-        batch_id=None,
-        n_buckets=n_buckets,
-        next_m=next_m,
-        max_rows=m,
-        replace_buckets=True,
-        composite_fields=meta.get("composite_fields"),
+    _write_folded(
+        index_path, meta, _rechunked(df, meta, n_buckets), n_buckets
     )
 
 
@@ -368,32 +394,15 @@ def rebucket_index(
         # uniqueness.  Already-single-segment buckets skip the O(index)
         # explode/re-group — a key lives in exactly ONE bucket, so a
         # union of single-segment buckets is globally (key, chunk)
-        # unique and a plain re-hash preserves that (r11 review: the
-        # driver row runs compact_index then rebucket_index, which
-        # otherwise paid the normalization twice back-to-back).
-        df = _rechunked(df, meta)
-    rebucketed = df.withColumn("bucket", _meta_bucket_col(meta, new_n))
-    next_m = meta.get("merge", -1) + 1
-    out = os.path.join(index_path, f"m={next_m}")
-    # r15: gate removed (see compact_index — lost both A/B orders)
-    rebucketed.repartition("bucket").write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(out)
-    written = [d for d in os.listdir(out) if d.startswith("bucket=")]
-    new_pointers = {
-        d.split("=", 1)[1]: os.path.join(f"m={next_m}", d) for d in written
-    }
-    _commit(
-        index_path,
-        meta,
-        new_pointers,
-        batch_id=None,
-        n_buckets=new_n,
-        next_m=next_m,
-        max_rows=meta.get("max_postings_per_row"),
-        replace_buckets=True,
-        composite_fields=meta.get("composite_fields"),
-    )
+        # unique and a plain re-hash preserves that (a registry row
+        # runs compact_index then rebucket_index, which otherwise paid
+        # the normalization twice back-to-back).
+        folded = _rechunked(df, meta, new_n)
+    else:
+        folded = df.withColumn(
+            "bucket", _bucket_col(_key_cols(meta), new_n)
+        ).repartition("bucket")
+    _write_folded(index_path, meta, folded, new_n)
 
 
 def _replayed(meta: dict | None, batch_id: int | None) -> bool:
@@ -477,67 +486,25 @@ def merge_postings_batch(
         n_buckets = meta["n_buckets"]
         max_postings_per_row = meta.get("max_postings_per_row")
 
-    new = postings(batch_df, field, doc_id_col, sort_postings=False)
     if max_postings_per_row is not None:
-        # bounded pieces: a batch value with n postings becomes
-        # ceil(n/max) rows; the piece index is segment-LOCAL — readers
-        # merge by value and compaction re-chunks, so chunk-id
-        # collisions across segments are harmless by construction
-        m = int(max_postings_per_row)
-        pieces = F.ceil(F.size("doc_ids") / F.lit(m)).cast("int")
-        new = (
-            new.withColumn("_i", F.explode(F.sequence(F.lit(0), pieces - 1)))
-            .select(
-                "value",
-                F.col("_i").cast("long").alias("chunk"),
-                F.sort_array(
-                    F.slice("doc_ids", F.col("_i") * m + 1, m)
-                ).alias("doc_ids"),
-            )
+        col = sql_ident(field_name_to_column(field))
+        ids = sql_ident(doc_id_col)
+        pairs = batch_df.where(
+            f"{col} IS NOT NULL AND {ids} IS NOT NULL"
+        ).selectExpr(
+            f"CAST({col} AS STRING) AS value",
+            f"CAST({ids} AS BIGINT) AS doc_id",
         )
-    new = new.withColumn("bucket", _bucket_col(n_buckets))
-    # r15: the r14 tiny-input static-planning gate is gone from the
-    # merge paths (lost both A/B orders after the write-only
-    # restructure — see compact_index)
-    next_m = (meta or {}).get("merge", -1) + 1
-    out = os.path.join(index_path, f"m={next_m}")
-    if max_postings_per_row is not None:
-        # SEGMENT APPEND (LSM): only the batch's own chunk rows are
-        # written; committed segments are never re-read or re-written,
-        # so per-merge bytes track the batch, not the index.  r15
-        # (guide §1.2/§5): the write is the merge's ONLY action — the
-        # touched-bucket list is read off the written partition tree
-        # afterwards (the compact/rebucket convention), replacing the
-        # r14 probe collect + persist pair.  One file per bucket via
-        # repartition("bucket") as before.
-        new.select(
-            "bucket", "value", "chunk", "doc_ids"
-        ).repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(out)
-        touched = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out)
-            if d.startswith("bucket=")
+        _append_segment(
+            spark, pairs, ["value"], index_path, meta, batch_id,
+            n_buckets, int(max_postings_per_row), max_segments_per_bucket,
         )
-        if not touched:  # empty batch: still commit the batch_id; the
-            # empty m= directory is collected by the commit's prune
-            _commit(
-                index_path, meta, {}, batch_id, n_buckets,
-                max_rows=max_postings_per_row,
-            )
-            return
-        new_pointers = {
-            str(b): os.path.join(f"m={next_m}", f"bucket={b}")
-            for b in touched
-        }
-        _commit(
-            index_path, meta, new_pointers, batch_id, n_buckets, next_m,
-            max_rows=max_postings_per_row, append=True,
-        )
-        _maybe_autocompact(spark, index_path, max_segments_per_bucket)
         return
 
+    new = postings(batch_df, field, doc_id_col, sort_postings=False)
+    new = new.withColumn("bucket", _bucket_col(["value"], n_buckets))
+    next_m = (meta or {}).get("merge", -1) + 1
+    out = os.path.join(index_path, f"m={next_m}")
     # plain-row mode: the touched probe must run BEFORE the write (it
     # decides which committed buckets to read and re-write whole)
     new = new.persist()
@@ -557,8 +524,10 @@ def merge_postings_batch(
         for rel in old_buckets.get(str(b), [])
     ]
     if old_paths:
-        old = spark.read.parquet(*old_paths).withColumn(
-            "bucket", _bucket_col(n_buckets)
+        old = (
+            spark.read.schema(_segment_schema(meta))
+            .parquet(*old_paths)
+            .withColumn("bucket", _bucket_col(["value"], n_buckets))
         )
         merged = (
             old.unionByName(new)
@@ -591,6 +560,75 @@ def merge_postings_batch(
         next_m,
         max_rows=max_postings_per_row,
     )
+
+
+def _append_segment(
+    spark: SparkSession,
+    pairs: DataFrame,
+    keys: list[str],
+    index_path: str,
+    meta: dict | None,
+    batch_id: int | None,
+    n_buckets: int,
+    max_postings_per_row: int,
+    max_segments_per_bucket: int | None,
+    composite_fields: list[str] | None = None,
+) -> None:
+    """The chunked (LSM) merge shared by the single-field and composite
+    merges: write the batch's own chunk rows as ONE new segment and
+    APPEND it to each touched bucket's list — committed segments are
+    never re-read or re-written, so per-merge bytes track the batch.
+
+    ``pairs`` holds the batch's non-null ``(*keys, doc_id)`` rows.  They
+    are repartitioned by bucket ONCE; a key lives in one bucket, so the
+    per-key grouping runs inside the partition and each touched bucket
+    is written by one task as one file.  A key's sorted postings are
+    cut into ``ceil(n/max)`` exactly-capped pieces whose chunk index is
+    segment-LOCAL — readers merge by key and compaction re-chunks, so
+    chunk-id collisions across segments are harmless by construction.
+    The write is the merge's only action: the touched buckets are read
+    off the written partition tree."""
+    m = max_postings_per_row
+    pieces = F.ceil(F.size("doc_ids") / F.lit(m)).cast("int")
+    piece = F.explode(F.sequence(F.lit(0), pieces - 1))
+    next_m = (meta or {}).get("merge", -1) + 1
+    out = os.path.join(index_path, f"m={next_m}")
+    (
+        pairs.withColumn("bucket", _bucket_col(keys, n_buckets))
+        .repartition("bucket")
+        .groupBy("bucket", *keys)
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("doc_ids"))
+        .select("bucket", *keys, piece.alias("_i"), "doc_ids")
+        .select(
+            "bucket",
+            *keys,
+            F.col("_i").cast("long").alias("chunk"),
+            F.slice("doc_ids", F.col("_i") * m + 1, m).alias("doc_ids"),
+        )
+        .write.mode("overwrite")
+        .partitionBy("bucket")
+        .parquet(out)
+    )
+    touched = sorted(
+        int(d.split("=", 1)[1])
+        for d in os.listdir(out)
+        if d.startswith("bucket=")
+    )
+    if not touched:  # empty batch: still commit the batch_id; the
+        # empty m= directory is collected by the commit's prune
+        _commit(
+            index_path, meta, {}, batch_id, n_buckets, max_rows=m,
+            composite_fields=composite_fields,
+        )
+        return
+    new_pointers = {
+        str(b): os.path.join(f"m={next_m}", f"bucket={b}") for b in touched
+    }
+    _commit(
+        index_path, meta, new_pointers, batch_id, n_buckets, next_m,
+        max_rows=m, composite_fields=composite_fields, append=True,
+    )
+    _maybe_autocompact(spark, index_path, max_segments_per_bucket)
 
 
 def _commit(
@@ -701,8 +739,6 @@ def merge_composite_postings_batch(
     """
     from functools import reduce
 
-    from ..functions.paths import field_name_to_column
-
     spark = batch_df.sparkSession
     norm = sorted(field_name_to_column(f) for f in fields)
     if len(norm) < 2:
@@ -727,74 +763,31 @@ def merge_composite_postings_batch(
         max_postings_per_row = meta.get("max_postings_per_row")
 
     sel = [F.col(f).cast("string").alias(f"v_{f}") for f in norm]
-    bucket = F.pmod(F.xxhash64(*vcols), F.lit(n_buckets))
-    new = (
-        batch_df.select(
-            F.col(doc_id_col).cast("long").alias("_id"), *sel
+    pairs = batch_df.select(
+        F.col(doc_id_col).cast("long").alias("doc_id"), *sel
+    ).where(
+        reduce(
+            lambda a, b: a & b,
+            [F.col(c).isNotNull() for c in vcols],
+            F.col("doc_id").isNotNull(),
         )
-        .where(
-            reduce(
-                lambda a, b: a & b,
-                [F.col(c).isNotNull() for c in vcols],
-                F.col("_id").isNotNull(),
-            )
-        )
-        .groupBy(*vcols)
-        .agg(F.collect_list("_id").alias("doc_ids"))
     )
     if max_postings_per_row is not None:
-        # bounded pieces, segment-local chunk ids (see the single-field
-        # merge: collisions across segments are harmless — readers
-        # merge by key, compaction re-chunks)
-        m = int(max_postings_per_row)
-        pieces = F.ceil(F.size("doc_ids") / F.lit(m)).cast("int")
-        new = (
-            new.withColumn("_i", F.explode(F.sequence(F.lit(0), pieces - 1)))
-            .select(
-                *vcols,
-                F.col("_i").cast("long").alias("chunk"),
-                F.sort_array(
-                    F.slice("doc_ids", F.col("_i") * m + 1, m)
-                ).alias("doc_ids"),
-            )
+        _append_segment(
+            spark, pairs, vcols, index_path, meta, batch_id, n_buckets,
+            int(max_postings_per_row), max_segments_per_bucket,
+            composite_fields=norm,
         )
-    new = new.withColumn("bucket", bucket)
-    # r15: gate removed (see the single-field merge)
-    next_m = (meta or {}).get("merge", -1) + 1
-    out = os.path.join(index_path, f"m={next_m}")
-    if max_postings_per_row is not None:
-        # SEGMENT APPEND (LSM): only the batch's own chunk rows are
-        # written; committed segments are never re-read or re-written.
-        # r15: write-only action, touched buckets read off the written
-        # tree (see the single-field merge).
-        new.select(
-            "bucket", *vcols, "chunk", "doc_ids"
-        ).repartition("bucket").write.mode("overwrite").partitionBy(
-            "bucket"
-        ).parquet(out)
-        touched = sorted(
-            int(d.split("=", 1)[1])
-            for d in os.listdir(out)
-            if d.startswith("bucket=")
-        )
-        if not touched:
-            _commit(
-                index_path, meta, {}, batch_id, n_buckets,
-                max_rows=max_postings_per_row, composite_fields=norm,
-            )
-            return
-        new_pointers = {
-            str(b): os.path.join(f"m={next_m}", f"bucket={b}")
-            for b in touched
-        }
-        _commit(
-            index_path, meta, new_pointers, batch_id, n_buckets, next_m,
-            max_rows=max_postings_per_row, composite_fields=norm,
-            append=True,
-        )
-        _maybe_autocompact(spark, index_path, max_segments_per_bucket)
         return
 
+    bucket = _bucket_col(vcols, n_buckets)
+    new = (
+        pairs.groupBy(*vcols)
+        .agg(F.collect_list("doc_id").alias("doc_ids"))
+        .withColumn("bucket", bucket)
+    )
+    next_m = (meta or {}).get("merge", -1) + 1
+    out = os.path.join(index_path, f"m={next_m}")
     # plain-row mode: probe BEFORE the write (decides which committed
     # buckets to read and re-write whole)
     new = new.persist()
@@ -815,7 +808,11 @@ def merge_composite_postings_batch(
         for rel in old_buckets.get(str(b), [])
     ]
     if old_paths:
-        old = spark.read.parquet(*old_paths).withColumn("bucket", bucket)
+        old = (
+            spark.read.schema(_segment_schema(meta))
+            .parquet(*old_paths)
+            .withColumn("bucket", bucket)
+        )
         merged = (
             old.select("bucket", *vcols, "doc_ids")
             .unionByName(new.select("bucket", *vcols, "doc_ids"))

@@ -205,3 +205,35 @@ def test_printed_lines_are_current_run_floor_confined_to_sidecar(
     assert all(v == 1.0 for v in sidecar["queries"].values())
     assert all(v == 2.0 for v in sidecar["run_queries"].values())
     assert sidecar["floor_merged"] is True
+
+
+def test_floor_merge_skips_a_sidecar_from_another_core_count(
+    bench, universe, tmp_path
+):
+    """A same-round sidecar stamped with another ``cpus`` (or with
+    none: written before the stamp existed) is another machine's floor
+    — an 8-core scaling run once seeded a round's floors — so the
+    merge skips it; a same-``cpus`` sidecar still merges.  The stamp is
+    sidecar-only: the printed lines do not carry it."""
+    bench.DETAIL_FILE = str(tmp_path / "BENCH_DETAIL.json")
+    (tmp_path / "BENCH_r15.json").write_text("{}")
+    prior = tmp_path / "BENCH_DETAIL_r16.json"
+    now = {"a": 2.0, "b": 1.0}
+    for stamp in ({"cpus": 8}, {}):
+        prior.write_text(json.dumps({
+            "queries": {"a": 1.0, "b": 1.0}, "calibration_s": 0.38, **stamp,
+        }))
+        assert bench._floor_merge_round_sidecar(now, 32) == (now, None)
+    prior.write_text(json.dumps({
+        "queries": {"a": 1.0, "b": 3.0}, "calibration_s": 0.3, "cpus": 32,
+    }))
+    assert bench._floor_merge_round_sidecar(now, 32) == (
+        {"a": 1.0, "b": 1.0}, [0.3]
+    )
+
+    lines = bench.render_output_lines(
+        {"metric": "reference_workload_total", "value": 3.0},
+        now, {"a"}, {}, sidecar_extra={"cpus": 32},
+    )
+    assert json.loads(prior.read_text())["cpus"] == 32
+    assert all('"cpus"' not in ln for ln in lines)

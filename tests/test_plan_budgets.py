@@ -1,12 +1,15 @@
-"""Plan-construction budgets on the serving path.
+"""Plan-construction and write-path budgets.
 
 Wall time moves run to run; py4j round trips and Spark job counts do
 not, so they are the regression gate for the driver-side cost of
-building a plan.  Each budget here pins a plan-building function well
-below what its Column-chain form cost (``isin`` on 100 ids alone was
-~430 calls; a cold index read is a schema-inference job), and each
-SQL-string form is pinned to the same optimized plan as the Column form
-it replaced.
+building a plan and for the scheduling cost of a streaming commit.
+Each serving budget pins a plan-building function well below what its
+Column-chain form cost (``isin`` on 100 ids alone was ~430 calls; a
+cold index read is a schema-inference job), and each SQL-string form is
+pinned to the same optimized plan as the Column form it replaced.  The
+write-path budgets pin the commit shapes of the two streaming indexes:
+one shuffle per LSM merge and per compaction, and no schema-inference
+job on reads of the engine's own index trees.
 """
 
 from __future__ import annotations
@@ -16,15 +19,29 @@ import re
 import time
 import uuid
 
+import numpy as np
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from polars_w_inverted_index_spark.operators.ann_index import (
+    ann_search,
+    build_ann_index,
+)
 from polars_w_inverted_index_spark.operators.inverted_index import postings
 from polars_w_inverted_index_spark.operators.stats import numeric_stats
 from polars_w_inverted_index_spark.plans.catalog import IndexCatalog
 from polars_w_inverted_index_spark.plans.rewrite import (
     filter_by_doc_ids,
     sql_in_ids,
+)
+from polars_w_inverted_index_spark.streaming.ann_ingest import (
+    ann_ingest_batch,
+)
+from polars_w_inverted_index_spark.streaming.index_maintenance import (
+    compact_index,
+    index_fragmentation,
+    merge_postings_batch,
 )
 
 IDS = list(range(0, 1500, 15))  # 100 ids
@@ -149,6 +166,100 @@ def test_warm_lookups_launch_no_jobs(spark, warm_catalog):
     # session has no memo
     cold = IndexCatalog(spark.newSession(), warm_catalog.root)
     assert _jobs(spark, lambda: cold.lookup("lineitem", "l_returnflag")) >= 1
+
+
+# -- write-path budgets ---------------------------------------------------
+
+
+def _events(spark, lo, n=2000):
+    """``n`` (doc_id, user_id) rows over 37 users, in 4 partitions."""
+    return spark.range(lo, lo + n, numPartitions=4).selectExpr(
+        "id AS doc_id", "concat('u', id % 37) AS user_id"
+    )
+
+
+def _vectors(spark, lo, n, parts=None, dim=8):
+    x = np.random.default_rng(lo).normal(size=(n, dim))
+    df = spark.createDataFrame(pa.table({
+        "vec_id": pa.array(np.arange(lo, lo + n), pa.int64()),
+        "embedding": pa.array(list(x), pa.list_(pa.float64())),
+    }))
+    return df.repartition(parts).cache() if parts else df
+
+
+def _merge(df, idx, batch_id):
+    merge_postings_batch(
+        df, "user_id", idx, batch_id=batch_id, n_buckets=4,
+        max_postings_per_row=8, max_segments_per_bucket=None,
+    )
+
+
+@pytest.fixture(scope="module")
+def lsm_index(spark, tmp_path_factory):
+    """A chunked streaming index after one merge, adopted as a catalog
+    entry."""
+    root = str(tmp_path_factory.mktemp("budget_lsm"))
+    idx = os.path.join(root, "idx")
+    _merge(_events(spark, 0), idx, 0)
+    cat = IndexCatalog(spark, os.path.join(root, "catalog"))
+    cat.adopt_streaming("events", "user_id", idx)
+    return idx, cat
+
+
+@pytest.fixture(scope="module")
+def ann_root(spark, tmp_path_factory):
+    root = str(tmp_path_factory.mktemp("budget_ann"))
+    build_ann_index(_vectors(spark, 0, 2000), root, n_centroids=6, n_iters=1)
+    return root
+
+
+def test_chunked_merge_and_compaction_budgets(spark, lsm_index):
+    """One shuffle per merge and per compaction, and no schema-inference
+    job on the compaction's read: 2 jobs each (a shuffle map stage and
+    the write).  The two-shuffle merge launched 3 and the join-form
+    compaction 6."""
+    idx, _ = lsm_index
+    batch = _events(spark, 10_000)
+    merge = _jobs(spark, lambda: _merge(batch, idx, 1))
+    assert index_fragmentation(idx)["max_segments_per_bucket"] == 2
+    compact = _jobs(spark, lambda: compact_index(spark, idx))
+    assert index_fragmentation(idx)["max_segments_per_bucket"] == 1
+    assert merge <= 2 and compact <= 2, (merge, compact)
+
+
+def test_warm_streaming_lookup_launches_no_jobs(spark, lsm_index):
+    """A streaming catalog entry re-reads the ``_LATEST`` marker on
+    every lookup and opens its segments with the marker's schema."""
+    _, cat = lsm_index
+    assert cat.lookup("events", "user_id") is not None
+    assert _jobs(spark, lambda: cat.lookup("events", "user_id")) == 0
+
+
+def test_ann_ingest_budgets(spark, ann_root):
+    """An ingest is the assign checkpoint, the per-cell collect (a
+    shuffle map stage and its result) and the write rebalanced on
+    ``cell`` (a map stage and the write): 5 jobs.  A fold adds its own
+    rebalanced write and no schema-inference job: 7.  The unrebalanced
+    write launched one job fewer each time and wrote one file per input
+    partition and cell (tests/test_commit_shape.py)."""
+    b0, b1 = _vectors(spark, 5000, 500, 4), _vectors(spark, 6000, 500, 4)
+    b0.count(), b1.count()
+    ingest = _jobs(spark, lambda: ann_ingest_batch(
+        b0, ann_root, batch_id=0, max_batch_dirs_per_cell=None))
+    fold = _jobs(spark, lambda: ann_ingest_batch(
+        b1, ann_root, batch_id=1, max_batch_dirs_per_cell=1))
+    assert ingest <= 5 and fold <= 7, (ingest, fold)
+
+
+def test_ann_search_plan_launches_no_jobs(spark, ann_root):
+    """Centroids are memoized, the probed cells are read with the
+    recorded schema, and an Arrow-backed query frame collects without
+    a job."""
+    q = _vectors(spark, 10**9, 5)
+    assert ann_search(spark, ann_root, q, k=3, nprobe=2).count() == 15
+    assert _jobs(
+        spark, lambda: ann_search(spark, ann_root, q, k=3, nprobe=2)
+    ) == 0
 
 
 # -- same plans as the Column forms ---------------------------------------
