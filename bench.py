@@ -958,11 +958,6 @@ def main() -> None:
         except Exception as e:  # noqa: BLE001 - record and continue
             errors[name] = f"{type(e).__name__}: {e}"[:300]
 
-    def _total(names) -> float:
-        if any(n in errors for n in names):
-            return -1.0  # a graded query failed: poison, don't fake
-        return round(sum(timings[n] for n in names), 4)
-
     calib_end = _calibration(spark)
     calibration_s = min(calib_start, calib_end)
 
@@ -982,32 +977,13 @@ def main() -> None:
     cpus = spark.sparkContext.defaultParallelism
     floor_timings, prior_calibs = _floor_merge_round_sidecar(timings, cpus)
 
-    # Per-row budget flag (r12 VERDICT task 6): the driver-row sweep's
-    # cost creep must be visible IN-REPO — any registry row costing
-    # more than 3× the registry median is named here, so a row that
-    # doubles (the r12 ann widening went 4.6 → 8.5 s before anyone
-    # noticed) shows up in the sidecar diff, not in the judge's
-    # arithmetic.  Informational, never poisons totals.
-    reg_rows = {k: v for k, v in timings.items() if _group(k) == "registry"}
-    row_budget: dict = {}
-    if reg_rows:
-        med = sorted(reg_rows.values())[len(reg_rows) // 2]
-        row_budget = {
-            "registry_rows": len(reg_rows),
-            "registry_median_s": round(med, 3),
-            "flagged_over_3x_median": {
-                k: round(v, 2)
-                for k, v in sorted(
-                    reg_rows.items(), key=lambda kv: -kv[1]
-                )
-                if v > 3 * med
-            },
-        }
-
-    total = _total(headline)
+    registry_names = {k for k in timings if _group(k) == "registry"}
+    cur = view_totals(
+        timings, headline, logs, registry_names, errors, calibration_s
+    )
     out = {
         "metric": "reference_workload_total",
-        "value": total,
+        "value": cur["value"],
         "unit": "sec",
         "sf": sf_val,
         # machine-speed probe at bench start/end (see module docstring);
@@ -1019,19 +995,14 @@ def main() -> None:
         # timing against the probe of ITS phase, not the run brackets
         "calib_phase": {k: round(v, 3) for k, v in calib_phase.items()},
     }
-    if row_budget:
-        out["row_budget"] = row_budget
+    if "row_budget" in cur:
+        out["row_budget"] = cur["row_budget"]
     if logs:
         # apples-to-apples vs BASELINE.md: same 10 M-record workload
-        out["logs10m_total"] = _total(logs)
+        out["logs10m_total"] = cur["logs10m_total"]
         out["logs10m_rows"] = LOGS_N
-        if out["logs10m_total"] > 0 and calibration_s > 0:
-            # headline re-based to the reference machine speed: raw and
-            # normalized moving together = machine drift; normalized
-            # moving alone = a real code change
-            out["logs10m_total_norm"] = round(
-                out["logs10m_total"] * (CALIB_REF / calibration_s), 4
-            )
+        if "logs10m_total_norm" in cur:
+            out["logs10m_total_norm"] = cur["logs10m_total_norm"]
         # executor-side peak execution memory for the canonical postings
         # query (QueryStats with job-group attribution, stats.py) — the
         # number the reference's driver-RSS fields cannot give on a
@@ -1053,6 +1024,11 @@ def main() -> None:
         out["errors"] = errors
     sidecar_extra = {"cpus": cpus}
     if prior_calibs:
+        # the sidecar's totals are sums of its own (floor) queries
+        sidecar_extra.update(view_totals(
+            floor_timings, headline, logs, registry_names, errors,
+            calibration_s,
+        ))
         sidecar_extra["floor_merged"] = True
         sidecar_extra["calib_runs"] = [
             round(c, 4) for c in prior_calibs + [calibration_s]
@@ -1062,6 +1038,50 @@ def main() -> None:
         floor_timings=floor_timings, sidecar_extra=sidecar_extra,
     ):
         print(line)
+
+
+def view_totals(
+    timings, headline, logs, registry_names, errors, calibration_s
+) -> dict:
+    """The summary figures of one view of the per-entry timings:
+    ``value`` (headline total), ``row_budget``, ``logs10m_total`` and
+    ``logs10m_total_norm``.  The printed record takes them from the
+    current run and the sidecar from its floors, so each file's totals
+    are the sums of its own ``queries``."""
+
+    def _total(names) -> float:
+        if any(n in errors for n in names):
+            return -1.0  # a graded query failed: poison, don't fake
+        return round(sum(timings[n] for n in names), 4)
+
+    res: dict = {"value": _total(headline)}
+    # Per-row budget flag: any registry row costing more than 3× the
+    # registry median is named here, so a row whose cost doubles shows
+    # up in the sidecar diff.  Informational, never poisons totals.
+    reg_rows = {k: v for k, v in timings.items() if k in registry_names}
+    if reg_rows:
+        med = sorted(reg_rows.values())[len(reg_rows) // 2]
+        res["row_budget"] = {
+            "registry_rows": len(reg_rows),
+            "registry_median_s": round(med, 3),
+            "flagged_over_3x_median": {
+                k: round(v, 2)
+                for k, v in sorted(
+                    reg_rows.items(), key=lambda kv: -kv[1]
+                )
+                if v > 3 * med
+            },
+        }
+    if logs:
+        res["logs10m_total"] = _total(logs)
+        if res["logs10m_total"] > 0 and calibration_s > 0:
+            # headline re-based to the reference machine speed: raw and
+            # normalized moving together = machine drift; normalized
+            # moving alone = a real code change
+            res["logs10m_total_norm"] = round(
+                res["logs10m_total"] * (CALIB_REF / calibration_s), 4
+            )
+    return res
 
 
 # One bounded chunk line must fit the tail beside the headline line; the
@@ -1164,7 +1184,8 @@ def render_output_lines(
     like-for-like best-of-runs, and the next run's merge composes),
     with the current run preserved beside it as ``run_queries``.
     ``sidecar_extra`` carries the merge provenance (``floor_merged`` /
-    ``calib_runs``) — sidecar-only for the same reason.
+    ``calib_runs``) and the floors' :func:`view_totals` — sidecar-only
+    for the same reason.
 
     COMPLETENESS ARITHMETIC (r9 VERDICT tasks 2/7): the full record —
     ~50 registry names + ~35 ext names + the graded headline — is

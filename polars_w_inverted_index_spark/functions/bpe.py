@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .pickling import guard_import_caches
 from .text import tokens
 
 EOW = "</w>"
@@ -310,6 +311,7 @@ def bpe_encode(
         return syms
 
     def _run(it):
+        guard_import_caches()
         import pandas as pd
 
         memo: dict = {}

@@ -17,13 +17,25 @@ a same-code copy whose qualname no longer resolves to itself in the
 module, which flips cloudpickle to BY-VALUE serialization — the code
 object ships inside the task binary and the worker never imports the
 package.
+
+Every closure handed to a Python stage (``mapInArrow``, ``mapInPandas``,
+``applyInPandas``, ``applyInPandasWithState``) calls
+:data:`guard_import_caches` as its FIRST statement.  PySpark's worker
+runs ``importlib.invalidate_caches()`` at the start of every task, and
+on CPython 3.11 each ``zipimporter`` answers that by re-parsing its
+whole archive.  A worker holds 16 of them (most into ``pyspark.zip``),
+26.7 k directory entries in all, so a task waits ~220 ms (4-core VM)
+before its function starts, even on a reused worker.  The guard makes
+that re-read depend on the archive actually changing.  It has to run
+inside the worker, so it ships by value like the closures themselves
+(``tests/test_worker_pickling.py`` scans every call site for it).
 """
 
 from __future__ import annotations
 
 import types
 
-__all__ = ["by_value"]
+__all__ = ["by_value", "guard_import_caches"]
 
 
 def by_value(fn):
@@ -85,3 +97,45 @@ def by_value(fn):
     )
     copy.__kwdefaults__ = getattr(fn, "__kwdefaults__", None)
     return copy
+
+
+def _guard_import_caches():
+    """Make ``zipimporter.invalidate_caches`` skip unchanged archives.
+
+    Installs itself once per process (a second call finds the patched
+    method's ``__wrapped__`` and returns).  The patched method stats the archive and re-reads
+    it through the stock method only when ``(st_ino, st_size,
+    st_mtime_ns)`` differs from the stat taken before that importer's
+    last read, so a rewritten or replaced archive is re-read as
+    before.  An importer with no recorded stat, or an archive that
+    cannot be stat'ed (removed), always takes the stock path.  The stat
+    is taken BEFORE the read, so a write racing the read only costs one
+    extra re-read later.
+    """
+    import os
+    import zipimport
+
+    cls = zipimport.zipimporter
+    if hasattr(cls.invalidate_caches, "__wrapped__"):
+        return
+    stock = cls.invalidate_caches
+
+    def invalidate_caches(self):
+        try:
+            st = os.stat(self.archive)
+            key = (st.st_ino, st.st_size, st.st_mtime_ns)
+        except OSError:
+            key = None
+        if key is not None and getattr(self, "_read_stat", None) == key:
+            return
+        stock(self)
+        self._read_stat = key
+
+    invalidate_caches.__wrapped__ = stock
+    cls.invalidate_caches = invalidate_caches
+
+
+# The by-value copy is what closures call: its qualname
+# (``_guard_import_caches``) resolves to the original, not to itself,
+# so cloudpickle ships its code inside every task.
+guard_import_caches = by_value(_guard_import_caches)

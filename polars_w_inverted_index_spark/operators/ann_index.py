@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrow_batches import decode_list_matrix
-from ..functions.pickling import by_value
+from ..functions.pickling import by_value, guard_import_caches
 from ..functions.vectors import cosine_with_norms, norm
 
 
@@ -354,6 +354,7 @@ def _cell_partial_sums(
 
     def _sums(batches):
         # SELF-CONTAINED worker closure (repo convention)
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 
@@ -488,6 +489,7 @@ def _assign_cells(
         # SELF-CONTAINED worker closure (repo convention: imports inside,
         # everything else a closure VALUE — a module-level helper would
         # pickle by reference and executors would need the repo on path)
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 
@@ -1838,6 +1840,7 @@ def ann_search(
         # + pad loop measured ~2 s per million probed rows — the
         # dominant serve cost at 10 M rows; one flatten+reshape decodes
         # each batch with zero per-row Python (see _assign_cells).
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 
@@ -2845,6 +2848,7 @@ def ann_search_pq(
         # Arrow-native (r10): codes decode to the (batch × m) int matrix
         # with one flatten+reshape — zero per-row Python (the pandas
         # bridge's per-row np.vstack objects dominated at 10 M rows)
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 

@@ -34,6 +34,7 @@ from ..functions.hashing import (
     uh_base,
     uh_params,
 )
+from ..functions.pickling import guard_import_caches
 from ..functions.text import tokens, word_shingles
 from ..functions.vectors import cosine_with_norms, norm
 
@@ -932,6 +933,7 @@ def embedding_cosine_pairs_gemm(
         # column decodes with one flatten+reshape (the shared
         # functions/arrow_batches decode since r11) and the id/vector
         # columns pass through untouched
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 
@@ -994,6 +996,7 @@ def embedding_cosine_pairs_gemm(
     )
 
     def _pairs(pdf):
+        guard_import_caches()
         import numpy as np
         import pandas as pd
 

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.pickling import guard_import_caches
+
 MAGIC = b"FAKM"
 HEADER_FMT = ">4sc3H"  # magic, kind, width, height, n_frames
 HEADER_SIZE = struct.calcsize(HEADER_FMT)
@@ -306,6 +308,7 @@ def extract_features(media: DataFrame) -> DataFrame:
     import numpy as np
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_import_caches()
         for pdf in it:
             out = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -358,6 +361,7 @@ def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
     import numpy as np
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_import_caches()
         for pdf in it:
             rows = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):
@@ -409,6 +413,7 @@ def sample_frames(media: DataFrame, every_n: int = 2) -> DataFrame:
     import numpy as np
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        guard_import_caches()
         for pdf in it:
             rows = []
             for mid, data in zip(pdf["media_id"], pdf["data"]):

@@ -34,6 +34,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pickling import guard_import_caches
+
 # Local pack ids are offset by shard * _SHARD_STRIDE to form globally
 # unique pack ids without any cross-shard coordination.
 _SHARD_STRIDE = 1 << 40
@@ -122,6 +124,7 @@ def pack_documents(
     bfd = by_value(bfd_assign)
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:
+        guard_import_caches()
         shard = int(pdf["shard"].iloc[0])
         base = shard * _SHARD_STRIDE
         pdf = pdf.sort_values(

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrow_batches import decode_list_matrix
-from ..functions.pickling import by_value
+from ..functions.pickling import by_value, guard_import_caches
 from ..functions.vectors import cosine_with_norms, norm
 
 __all__ = [
@@ -227,6 +227,7 @@ def pq_encode(
         # try `import polars_w_inverted_index_spark` — which only
         # resolves when the driver's cwd happens to be the repo root.
         # Everything this touches is an import or a closure VALUE.
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 
@@ -337,6 +338,7 @@ def pq_topk(
         # Arrow-native (r10): codes decode to the (batch × m) int
         # matrix with one flatten+reshape — the pandas bridge's per-row
         # np.vstack objects measured ~2 s per million rows
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 

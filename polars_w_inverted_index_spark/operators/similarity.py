@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions.pickling import guard_import_caches
 from ..functions.vectors import cosine_with_norms, norm
 
 
@@ -304,6 +305,7 @@ def brute_force_topk_gemm(
         # objects + pad loop measured ~2 s per million corpus rows —
         # one flatten+reshape decodes each batch with zero per-row
         # Python (ann_index._assign_cells has the pattern's rationale)
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 
@@ -467,6 +469,7 @@ def _ivf_assign_gemm(
     rdigits = int(round_digits)
 
     def _assign(batches):
+        guard_import_caches()
         import pyarrow as pa
 
         for rb in batches:
@@ -775,6 +778,7 @@ def hyperplane_signature_gemm(
     sig_pa_schema = _arrow_schema(sig_ddl)
 
     def _sign(batches):
+        guard_import_caches()
         import numpy as np
         import pyarrow as pa
 

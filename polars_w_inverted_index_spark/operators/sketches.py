@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.pickling import guard_import_caches
+
 DEFAULT_QUANTILES = (0.5, 0.95, 0.99)
 DEFAULT_RSD = 0.05  # HLL++ relative standard deviation
 DEFAULT_PCT_ACCURACY = 10_000  # percentile_approx accuracy knob
@@ -140,6 +142,7 @@ def heavy_hitters_approx(
     """
 
     def _mg(it):
+        guard_import_caches()
         import pyarrow as pa
         import pyarrow.compute as pc
 

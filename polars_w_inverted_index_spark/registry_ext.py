@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from .functions import text as TX
 from .functions.canon import csv_array, csv_array_sql
 from .functions.hashing import md5_long_sql, uh_apply_sql, uh_base_sql
+from .functions.pickling import guard_import_caches
 from .functions.timeutil import epoch_us
 from .functions.vectors import cosine_sql
 from .operators import dedup as DD
@@ -947,6 +948,7 @@ def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     media = _media_from_documents(spark, sf_dir)
 
     def _to_fake(it):
+        guard_import_caches()
         for pdf in it:
             rows = []
             for mid in pdf["media_id"]:

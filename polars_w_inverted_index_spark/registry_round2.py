@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from .engine import Engine
 from .functions.canon import csv_array
+from .functions.pickling import guard_import_caches
 from .operators.asof import asof_join
 from .operators.inverted_index import postings
 from .sources.tables import load_table
@@ -267,6 +268,7 @@ def _fake_media(spark: SparkSession, sf_dir: str, kind: str,
     n_payload = w * h * n_frames
 
     def _to_fake(it):
+        guard_import_caches()
         for pdf in it:
             rows = []
             for mid in pdf["media_id"]:

@@ -155,14 +155,14 @@ def _drift_monitor_batch_actions(
     # r14's gate around the WHOLE batch lost to the merged-LM write's
     # file-count trap; this gate wraps ONLY the report action (the
     # write above stays adaptive), and sizes on the REAL bytes of the
-    # just-written merged LM + standing state — known even for literal
+    # state directory, which holds the just-written merged LM and the
+    # not-yet-pruned prior version — known even for literal
     # micro-batch frames, scale-adaptive by construction (a 100 TB
     # ingest's vocabulary LM exceeds the threshold and keeps AQE).
     from ..plans.distribution import dir_bytes, static_plan_when_tiny
 
     with static_plan_when_tiny(
-        spark, dir_bytes(out) + dir_bytes(state_path),
-        shuffle_partitions=2,
+        spark, dir_bytes(state_path), shuffle_partitions=2
     ):
         report = report_plan.localCheckpoint()
 

@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..functions.pickling import guard_import_caches
+
 
 # Ship this module's code with the closure (workers may not have the
 # package importable — see operators/multimodal.py for the rationale).
@@ -41,6 +43,7 @@ def _update(
     pdfs: Iterator[pd.DataFrame],
     state: GroupState,
 ) -> Iterator[pd.DataFrame]:
+    guard_import_caches()
     n, total = state.get if state.exists else (0, 0.0)
     for pdf in pdfs:
         n += len(pdf)

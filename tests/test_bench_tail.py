@@ -237,3 +237,53 @@ def test_floor_merge_skips_a_sidecar_from_another_core_count(
     )
     assert json.loads(prior.read_text())["cpus"] == 32
     assert all('"cpus"' not in ln for ln in lines)
+
+
+def test_sidecar_totals_are_sums_of_its_own_floor_queries(
+    bench, universe, tmp_path
+):
+    """The sidecar's summary figures come from the same view as its
+    ``queries``: with a floor merge they are floor sums (the sidecar
+    ``value`` equals the sum of its own headline ``queries``), while
+    the printed record keeps current-run totals."""
+    headline, reg, ext, logs = universe
+    names = headline + reg + ext + logs
+    timings = {n: 2.0 + i / 100.0 for i, n in enumerate(names)}
+    floors = {n: v / 2.0 for n, v in timings.items()}
+    baseline_keys = set(headline) | set(logs)
+
+    def totals(view):
+        return bench.view_totals(view, headline, logs, set(reg), {}, 0.25)
+
+    cur = totals(timings)
+    out = {"metric": "reference_workload_total", **cur, "unit": "sec"}
+    bench.DETAIL_FILE = str(tmp_path / "BENCH_DETAIL.json")
+    lines = bench.render_output_lines(
+        out, timings, baseline_keys, {},
+        floor_timings=floors,
+        sidecar_extra={"floor_merged": True, **totals(floors)},
+    )
+    printed = json.loads(lines[-1])
+    assert printed["value"] == pytest.approx(
+        sum(timings[n] for n in headline), abs=1e-3
+    )
+    assert printed["logs10m_total"] == cur["logs10m_total"]
+
+    sidecar = json.loads((tmp_path / "BENCH_DETAIL.json").read_text())
+    q = sidecar["queries"]
+    assert sidecar["value"] == pytest.approx(
+        sum(q[n] for n in headline), abs=1e-3
+    )
+    assert sidecar["value"] < printed["value"]
+    assert sidecar["logs10m_total"] == pytest.approx(
+        sum(q[n] for n in logs), abs=1e-3
+    )
+    assert sidecar["logs10m_total_norm"] == pytest.approx(
+        sidecar["logs10m_total"] * bench.CALIB_REF / 0.25, abs=1e-3
+    )
+    assert sidecar["row_budget"]["registry_median_s"] == round(
+        sorted(q[n] for n in reg)[len(reg) // 2], 3
+    )
+    assert sidecar["run_queries"] == {
+        k: round(v, 4) for k, v in sorted(timings.items())
+    }

@@ -567,6 +567,47 @@ def test_drift_monitor_batches(spark, tmp_path):
     assert read_ingest_lm(spark, state).count() == 10
 
 
+
+def test_drift_report_gate_sizes_the_state_once(
+    spark, tmp_path, monkeypatch
+):
+    """The report gate is sized on the state directory's bytes: the
+    just-written merged LM lies inside it, so adding its own size
+    again would count it twice."""
+    import contextlib
+    import os
+
+    from polars_w_inverted_index_spark.functions.text import unigram_lm
+    from polars_w_inverted_index_spark.plans import distribution
+    from polars_w_inverted_index_spark.plans.distribution import dir_bytes
+    from polars_w_inverted_index_spark.streaming import drift_monitor_batch
+
+    state = str(tmp_path / "drift_state")
+    seen = []
+
+    @contextlib.contextmanager
+    def capture(_spark, size, **_kw):
+        newest = max(
+            (n for n in os.listdir(state) if n.startswith("v=")),
+            key=lambda n: int(n[2:]),
+        )
+        seen.append(
+            (size, dir_bytes(state), dir_bytes(os.path.join(state, newest)))
+        )
+        yield
+
+    monkeypatch.setattr(distribution, "static_plan_when_tiny", capture)
+    schema = "doc_id long, text string"
+    ref = spark.createDataFrame([(0, "alpha beta " * 5)], schema)
+    ref_lm = unigram_lm(ref)
+    for i, text in enumerate(["alpha beta gamma " * 3, "delta beta " * 4]):
+        batch = spark.createDataFrame([(i, text)], schema)
+        drift_monitor_batch(batch, state, ref_lm, batch_id=i).collect()
+    assert len(seen) == 2
+    for size, state_bytes, merged_lm_bytes in seen:
+        assert merged_lm_bytes > 0
+        assert size == state_bytes
+
 def test_drift_monitor_end_to_end(spark, tmp_path):
     """start_drift_monitor over a real file stream (availableNow):
     reports land in the report path, one row per micro-batch."""

@@ -13,6 +13,7 @@ module-global reference, fixed via functions/pickling.by_value).
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
@@ -203,3 +204,283 @@ def test_by_value_sees_through_nested_defs():
     exec(code, ns)
     with pytest.raises(ValueError, match="worker-import trap"):
         by_value(ns["outer_leaky"])
+
+
+# ---------------------------------------------------------------------------
+# guard_import_caches: PySpark runs importlib.invalidate_caches() at the
+# start of every worker task, and CPython 3.11's zipimporter answers it
+# by re-parsing its whole archive.  The guard makes the re-read depend
+# on the archive's stat; every Python-stage closure calls it first.
+# ---------------------------------------------------------------------------
+
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+_GUARD_SEMANTICS = textwrap.dedent(
+    """
+    import importlib, os, sys, zipfile, zipimport
+    sys.path.insert(0, sys.argv[2])
+    from polars_w_inverted_index_spark.functions.pickling import (
+        guard_import_caches,
+    )
+
+    arc = os.path.join(sys.argv[1], "mods.zip")
+
+    def write(path, mods):
+        with zipfile.ZipFile(path, "w") as z:
+            for name, src in mods.items():
+                z.writestr(name + ".py", src)
+
+    write(arc, {"m_a": "X = 1"})
+    sys.path.insert(0, arc)
+    import m_a
+    imp = sys.path_importer_cache[arc]
+
+    reads = []
+    orig = zipimport._read_directory
+
+    def counting(path):
+        if path == arc:
+            reads.append(path)
+        return orig(path)
+
+    zipimport._read_directory = counting
+
+    def reads_per_invalidate():
+        del reads[:]
+        importlib.invalidate_caches()
+        return len(reads)
+
+    cls = zipimport.zipimporter
+    stock = cls.invalidate_caches
+    assert reads_per_invalidate() == 1  # stock: every call re-reads
+
+    # installing twice wraps once
+    guard_import_caches()
+    guarded = cls.invalidate_caches
+    guard_import_caches()
+    assert cls.invalidate_caches is guarded
+    assert guarded.__wrapped__ is stock
+
+    # unchanged archive: the first guarded call records the stat, then
+    # no call re-reads
+    assert reads_per_invalidate() == 1
+    assert [reads_per_invalidate() for _ in range(3)] == [0, 0, 0]
+
+    # rewritten in place (same inode): re-read once, the new module
+    # imports, then quiet again
+    write(arc, {"m_a": "X = 1", "m_b": "Y = 2"})
+    assert reads_per_invalidate() == 1
+    import m_b
+    assert m_b.Y == 2
+    assert reads_per_invalidate() == 0
+
+    # replaced by rename (new inode)
+    write(arc + ".new", {"m_a": "X = 1", "m_b": "Y = 2", "m_c": "Z = 3"})
+    os.replace(arc + ".new", arc)
+    assert reads_per_invalidate() == 1
+    import m_c
+    assert m_c.Z == 3
+
+    # removed: the stock path runs on every call (a failed read empties
+    # the importer and drops the directory cache), and a restored
+    # archive is read again
+    os.remove(arc)
+    assert reads_per_invalidate() == 1
+    assert imp._files == {} and arc not in zipimport._zip_directory_cache
+    assert reads_per_invalidate() == 1
+    write(arc, {"m_d": "W = 4"})
+    assert reads_per_invalidate() == 1
+    import m_d
+    assert m_d.W == 4
+    print("GUARD OK")
+    """
+)
+
+
+def test_guard_rereads_an_archive_only_when_it_changes(tmp_path):
+    proc = subprocess.run(
+        [sys.executable, "-c", _GUARD_SEMANTICS, str(tmp_path), _REPO],
+        cwd=str(tmp_path),
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "GUARD OK" in proc.stdout
+
+
+def test_guard_stops_pyspark_zip_rereads_in_a_spark_task(spark):
+    """The deterministic counter behind the Python-stage start cost:
+    archive reads per ``importlib.invalidate_caches()`` inside a real
+    worker, where ``pyspark.zip`` backs every pyspark import."""
+    from polars_w_inverted_index_spark.functions.pickling import (
+        guard_import_caches,
+    )
+
+    def _probe(batches):
+        guard_import_caches()
+        import importlib
+        import zipimport
+
+        import pyarrow as pa
+
+        cls = zipimport.zipimporter
+        guarded = cls.invalidate_caches
+        orig = zipimport._read_directory
+        reads = []
+
+        def counting(path):
+            reads.append(path)
+            return orig(path)
+
+        zipimport._read_directory = counting
+        try:
+            cls.invalidate_caches = guarded.__wrapped__
+            importlib.invalidate_caches()
+            stock = len(reads)
+            zip_reads = sum(p.endswith("pyspark.zip") for p in reads)
+            cls.invalidate_caches = guarded
+            importlib.invalidate_caches()  # records any missing stat
+            del reads[:]
+            importlib.invalidate_caches()
+            after = len(reads)
+        finally:
+            zipimport._read_directory = orig
+            cls.invalidate_caches = guarded
+        for _rb in batches:
+            pass
+        yield pa.RecordBatch.from_pydict(
+            {"stock": [stock], "zip_reads": [zip_reads], "guarded": [after]}
+        )
+
+    row = (
+        spark.range(1, numPartitions=1)
+        .mapInArrow(_probe, "stock long, zip_reads long, guarded long")
+        .collect()[0]
+    )
+    assert row.zip_reads > 0, row
+    assert row.stock >= row.zip_reads and row.guarded == 0, row
+
+
+_STAGE_APIS = {
+    "mapInArrow",
+    "mapInPandas",
+    "applyInPandas",
+    "applyInPandasWithState",
+}
+
+
+def _python_stage_sites(tree):
+    """``(lineno, callable name, guarded)`` for every Python-stage call
+    in ``tree``.  The callable must be a name bound by a ``def`` in an
+    enclosing scope, and guarded means its first statement (after any
+    docstring) is a bare ``guard_import_caches()`` call."""
+    import ast
+
+    parents = {}
+    for node in ast.walk(tree):
+        for child in ast.iter_child_nodes(node):
+            parents[child] = node
+
+    def resolve(node, name):
+        scope = parents.get(node)
+        while scope is not None:
+            if isinstance(scope, (ast.FunctionDef, ast.Module)):
+                for stmt in scope.body:
+                    if isinstance(stmt, ast.FunctionDef) and stmt.name == name:
+                        return stmt
+            scope = parents.get(scope)
+        return None
+
+    def runs_guard_first(fdef):
+        body = fdef.body
+        if (
+            isinstance(body[0], ast.Expr)
+            and isinstance(body[0].value, ast.Constant)
+            and len(body) > 1
+        ):
+            body = body[1:]
+        first = body[0]
+        return (
+            isinstance(first, ast.Expr)
+            and isinstance(first.value, ast.Call)
+            and isinstance(first.value.func, ast.Name)
+            and first.value.func.id == "guard_import_caches"
+            and not first.value.args
+        )
+
+    sites = []
+    for node in ast.walk(tree):
+        if (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr in _STAGE_APIS
+        ):
+            arg = node.args[0] if node.args else None
+            name = arg.id if isinstance(arg, ast.Name) else ast.dump(arg)
+            fdef = resolve(node, name) if isinstance(arg, ast.Name) else None
+            ok = fdef is not None and runs_guard_first(fdef)
+            sites.append((node.lineno, name, ok))
+    return sites
+
+
+def test_python_stage_scan_flags_an_unwired_site():
+    import ast
+
+    src = textwrap.dedent(
+        """
+        def wired(df):
+            def _f(batches):
+                '''doc'''
+                guard_import_caches()
+                yield from batches
+            return df.mapInArrow(_f, "x long")
+
+        def unwired(df):
+            def _g(key, pdf):
+                import pandas as pd
+                guard_import_caches()
+                return pdf
+            return df.groupBy("k").applyInPandas(_g, "x long")
+
+        def _top(pdf):
+            return pdf
+
+        def module_level(df):
+            return df.mapInPandas(_top, "x long")
+
+        def lam(df):
+            return df.mapInPandas(lambda it: it, "x long")
+        """
+    )
+    assert [(n, ok) for _l, n, ok in _python_stage_sites(ast.parse(src))] == [
+        ("_f", True),
+        ("_g", False),
+        ("_top", False),
+        (ast.dump(ast.parse("lambda it: it", mode="eval").body), False),
+    ]
+
+
+def test_every_python_stage_runs_the_guard_first():
+    """Every engine call site of a Python stage passes a closure whose
+    first statement is ``guard_import_caches()``: a first-line call,
+    not a wrapper, so pyspark's ``getfullargspec`` arity check on
+    ``applyInPandas`` callables (``(pdf)`` vs ``(key, pdf)``) still sees
+    the closure's own signature."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(_REPO) / "polars_w_inverted_index_spark"
+    sites, unwired = 0, []
+    for path in sorted(pkg.rglob("*.py")):
+        for lineno, name, ok in _python_stage_sites(
+            ast.parse(path.read_text())
+        ):
+            sites += 1
+            if not ok:
+                unwired.append(f"{path.relative_to(pkg)}:{lineno} {name}")
+    assert not unwired, unwired
+    # today's 20 sites (ann_index 4, similarity 3, multimodal 3, dedup 2,
+    # pq 2, packing, sketches, bpe, stateful, two registry generators);
+    # a scan that stops finding them must not pass vacuously
+    assert sites >= 20, sites
