@@ -835,12 +835,6 @@ def build_ann_index(
     dev box's literal.
     """
     spark = corpus.sparkSession
-    # r14: static_plan_when_tiny was tried around the build legs and
-    # REVERTED — both A/B orders ran the lifecycle row SLOWER gated
-    # (15.2-15.9 s ungated vs 16.5-18.6 s gated): with adaptive off the
-    # Lloyd/count shuffles run 32 static partitions where AQE coalesces
-    # to ~1, and the added task scheduling + the gate's own size probes
-    # outweighed the saved per-stage jobs (guide §1.1 empirical loop).
     dims = _uniform_width(corpus, vec_col, f"build_ann_index({root})")
     cent = kmeans_centroids(
         corpus, n_centroids, n_iters, id_col, vec_col

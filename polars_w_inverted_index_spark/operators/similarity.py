@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from ..functions.pickling import guard_import_caches
 from ..functions.vectors import cosine_with_norms, norm
+from ..plans.distribution import plan_size_bytes
 
 
 def brute_force_topk(
@@ -61,7 +62,7 @@ def brute_force_topk(
     small = _is_small(corpus)
     if not allow_full_scan and not small:
         try:
-            est = f"{_plan_size_bytes(corpus)} bytes"
+            est = f"{plan_size_bytes(corpus)} bytes"
         except Exception:  # pragma: no cover - stats access failed
             est = "unavailable"
         raise ValueError(
@@ -111,15 +112,6 @@ def brute_force_topk(
     )
 
 
-def _plan_size_bytes(df: DataFrame) -> int:
-    """Optimizer size estimate (metadata only — file sizes for scans,
-    exact for local relations; no job runs)."""
-    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-    # py4j maps BigInt to int for in-range values; fall back to string
-    # parse for a JavaObject
-    return size if isinstance(size, int) else int(size.toString())
-
-
 _PROBE_ROWS = 10_000
 
 
@@ -139,7 +131,7 @@ def _is_small(df: DataFrame) -> bool:
             df.sparkSession._jsparkSession.sessionState().conf()
             .autoBroadcastJoinThreshold()
         )
-        size = _plan_size_bytes(df)
+        size = plan_size_bytes(df)
         if size >= (1 << 62) and not df.inputFiles():
             return df.limit(_PROBE_ROWS + 1).count() <= _PROBE_ROWS
         return 0 <= size <= max(thresh, 0)

@@ -1,25 +1,19 @@
-"""Data-distribution primitives: bucketed co-located joins, skew salting.
+"""Plan-shape probes the engine's operators share.
 
-The brief scale levers beyond AQE's automatic handling (session.py):
+- :func:`ensure_parallelism` fans a small file scan out to the cluster's
+  parallelism in front of CPU-heavy per-row work, and is a no-op
+  whenever the scan already supplies that many partitions (any input at
+  scale).
+- :func:`plan_size_bytes` is the optimizer's size estimate of a frame,
+  read from plan metadata without running a job.
 
-- **Bucketing** removes the shuffle from every future equi-join/agg on the
-  bucket key: both sides are written pre-hash-partitioned (and per-bucket
-  sorted), so Catalyst plans a join with NO Exchange.  At 100 TB this is
-  the difference between re-shuffling the fact table per query and never
-  shuffling it again — the storage-layout analog of the reference's
-  one-time sort by doc_id (main.rs:233).
-- **Salting** splits one pathological key across ``salt_factor`` reducers.
-  AQE's skew-join split (enabled by default here) covers sort-merge joins
-  adaptively; the manual primitive remains for broadcast-ineligible cases
-  and for aggregations, and as the explicit, plan-visible form.
+Runtime re-planning (partition coalescing, join conversion, skew
+splits) is left to AQE, which the session enables (session.py).
 """
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
 
 
 # Logical nodes a fan-out may sit on: a file scan under projections and
@@ -58,18 +52,18 @@ def ensure_parallelism(
     Use AFTER filters (so pushdown still reaches the scan) and only in
     front of genuinely expensive per-row work.
 
-    r15 (r14 ADVICE + VERDICT item 5): the decision is METADATA-ONLY —
-    expected scan partitions are estimated from the relation's file
-    bytes (+ the per-file open cost, Spark's own split arithmetic)
-    against ``spark.sql.files.maxPartitionBytes``.  The old
-    ``df.rdd.getNumPartitions()`` probe forced physical planning of
-    every frame on the driver (~77 ms per call site, measured) and,
-    with AQE on, EXECUTES upstream shuffle stages eagerly for frames
-    with shuffle lineage.  Contract: only a bare file scan (scan,
-    project and filter nodes) fans out — literal, post-shuffle and
-    stream-micro-batch frames pass through unchanged (parallelize and
-    shuffle outputs already arrive cluster-wide; a memory-stream
-    micro-batch may be one partition and is still passed through).
+    The decision is METADATA-ONLY: expected scan partitions are
+    estimated from the relation's file bytes (+ the per-file open cost,
+    Spark's own split arithmetic) against
+    ``spark.sql.files.maxPartitionBytes``.  A ``df.rdd.getNumPartitions()``
+    probe would force physical planning of every frame on the driver
+    (~77 ms per call site, measured) and, with AQE on, EXECUTE upstream
+    shuffle stages eagerly for frames with shuffle lineage.  Contract:
+    only a bare file scan (scan, project and filter nodes) fans out —
+    literal, post-shuffle and stream-micro-batch frames pass through
+    unchanged (parallelize and shuffle outputs already arrive
+    cluster-wide; a memory-stream micro-batch may be one partition and
+    is still passed through).
     Non-splittable inputs (``.gz`` and other compressed text) cap the
     estimate at one partition per file.
     """
@@ -101,211 +95,8 @@ def ensure_parallelism(
     return df.repartition(target)
 
 
-# Below this many input bytes AQE has nothing to re-optimize: every
-# shuffle coalesces to ~1 partition regardless, no join can flip
-# strategy usefully, and no partition can be skewed — but AQE still
-# materializes every exchange as its OWN job, so a small multi-shuffle
-# action pays N job-scheduling round-trips instead of one.  64 MB = one
-# advisory partition (session.py): at or below it the re-planning is
-# provably a no-op.  Maintenance paths that run many small actions
-# (ANN ingest/fold/rebuild, streaming LM merges) gate on this; at
-# production sizes the same code keeps AQE on.
-#
-# NOTE (r14 ADVICE): for parquet-scan-backed frames the optimizer's
-# sizeInBytes is COMPRESSED on-disk bytes; text near the threshold can
-# be several times larger decompressed/in-shuffle.  The consequence is
-# perf-only (AQE off on a shuffle a few times bigger than 64 MB — its
-# coalescing would still barely fire at one advisory partition per
-# ~couple of those), and every gated write is explicitly partitioned,
-# so the layout cannot degrade; the margin is priced into the
-# deliberately small threshold rather than a decompression factor.
-TINY_PLAN_BYTES = 64 * 1024 * 1024
-
-
-def dir_bytes(path: str) -> int:
-    """On-disk bytes under ``path`` (0 if absent) — the cheap local-
-    metadata size source for gate decisions over materialized state."""
-    import os
-
-    total = 0
-    for base, _dirs, files in os.walk(path):
-        for f in files:
-            try:
-                total += os.path.getsize(os.path.join(base, f))
-            except OSError:
-                pass
-    return total
-
-
 def plan_size_bytes(df: DataFrame) -> int:
     """Optimizer size estimate (metadata only — file sizes for scans,
     exact for local relations; no job runs)."""
     size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     return size if isinstance(size, int) else int(size.toString())
-
-
-# Serializes static_plan_when_tiny windows: two concurrent gated
-# actions must not interleave their get/set/restore sequences (the
-# second would read "false" as the restore target).  The residual,
-# DOCUMENTED exposure is a concurrent NON-gated query in the same
-# session planning non-adaptively during the window — AQE enablement
-# is session-global and read per-query (r14 ADVICE).  Every gated
-# call site is a state-MAINTENANCE action under the repo's
-# single-writer contract (streaming/ann_ingest.py module docstring);
-# serving concurrent with maintenance loses at most AQE on one query
-# over a < 64 MB state — perf-only, layout unaffected (gated writes
-# are explicitly partitioned).
-import threading as _threading
-
-_TINY_GATE_LOCK = _threading.RLock()
-
-
-@contextmanager
-def static_plan_when_tiny(
-    spark, size_bytes: int | DataFrame, shuffle_partitions: int | None = None
-):
-    """Disable adaptive execution for the enclosed actions when the
-    operation's input is provably tiny (``size_bytes`` — an int, or a
-    DataFrame whose optimizer estimate is read), restoring the session
-    conf afterwards.  Yields True when the gate is ACTIVE (AQE off for
-    the window) so callers can compensate for the one thing static
-    planning does not do — coalesce small shuffle outputs before a
-    file write (the r14 file-count trap).
-
-    r14 (guide §1.2 step 3, measured): the ANN lifecycle row's steady-
-    state wall dropped 20.4 s → 16.2 s with adaptive off — its actions
-    are many tiny multi-exchange plans, and each AQE stage
-    materialization is a separate job whose scheduling round-trip
-    (~0.15 s on local[32]) dwarfs any re-planning win at these sizes.
-    The gate is DATA-adaptive, not a local-mode constant: above
-    ``TINY_PLAN_BYTES`` (the session's advisory partition size — where
-    coalescing, skew splitting and join re-planning start to matter)
-    the context is a no-op and AQE stays on, so 100 TB maintenance
-    keeps its adaptive plans.
-
-    Concurrency (r14 ADVICE): the conf flip is session-global; windows
-    serialize on a lock, and the call sites are single-writer
-    maintenance actions by contract — see ``_TINY_GATE_LOCK``.
-    """
-    import os as _os
-
-    if _os.environ.get("SPARK_GRAFT_NO_TINY_GATE"):
-        yield False  # A/B knob: measure the gate's own contribution
-        return
-    if not isinstance(size_bytes, int):
-        try:
-            size_bytes = plan_size_bytes(size_bytes)
-        except Exception:
-            size_bytes = 1 << 62  # unknown: fail open, keep AQE on
-    key = "spark.sql.adaptive.enabled"
-    if size_bytes > TINY_PLAN_BYTES:
-        yield False  # no conf touch: ungated windows never lock
-        return
-    sp_key = "spark.sql.shuffle.partitions"
-    with _TINY_GATE_LOCK:
-        prev = spark.conf.get(key, "true")
-        if prev != "true":
-            # an enclosing window already flipped it (or AQE is off
-            # session-wide): nested windows must not restore over it
-            yield False
-            return
-        spark.conf.set(key, "false")
-        # optional second dial (r15, measured per site): with AQE off a
-        # tiny plan's shuffles run the full static width; a caller whose
-        # gated actions involve NO explicitly-partitioned write may also
-        # pin a small static width for the window (the provably-tiny
-        # input cannot skew).  Callers whose gated writes use
-        # repartition("col") MUST NOT pass this — that operator takes
-        # its count from this very conf.
-        prev_sp = None
-        if shuffle_partitions is not None:
-            prev_sp = spark.conf.get(sp_key, None)
-            spark.conf.set(sp_key, str(int(shuffle_partitions)))
-        try:
-            yield True
-        finally:
-            spark.conf.set(key, prev)
-            if prev_sp is not None:
-                spark.conf.set(sp_key, prev_sp)
-
-
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    key: str,
-    num_buckets: int,
-    sort: bool = True,
-) -> None:
-    """Persist ``df`` hash-bucketed (and per-bucket sorted) by ``key``.
-
-    Readers joining/aggregating two tables bucketed with the SAME bucket
-    count on the SAME key get an exchange-free plan.  Bucket count is a
-    layout contract — pick once per lake (e.g. 4096 at 100 TB: ~25 GB per
-    bucket per 100 TB table, split further by files).
-    """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    # a stale managed-table directory (e.g. from a dropped metastore)
-    # blocks CREATE even after DROP — clear it
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-    shutil.rmtree(f"{wh}/{table.split('.')[-1]}", ignore_errors=True)
-    writer = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, key
-    )
-    if sort:
-        writer = writer.sortBy(key)
-    writer.saveAsTable(table)
-
-
-def salt_column(salt_factor: int) -> Column:
-    """Uniform per-row salt in [0, salt_factor) — row-identity based, so
-    it splits even a single hot key's rows evenly."""
-    return F.pmod(
-        F.xxhash64(F.monotonically_increasing_id()), F.lit(salt_factor)
-    ).cast("int")
-
-
-def salted_inner_join(
-    big: DataFrame,
-    small: DataFrame,
-    key: str,
-    salt_factor: int = 8,
-) -> DataFrame:
-    """Inner equi-join where ``big`` has skewed keys: big rows get a random
-    salt, the small side is replicated ``salt_factor``× so every (key,
-    salt) pair still matches.  Shuffle load per hot key drops by
-    salt_factor at the cost of replicating the small side's shuffle.
-    Result is identical to ``big.join(small, key)`` — only row
-    distribution changes.
-    """
-    big_s = big.withColumn("_salt", salt_column(salt_factor))
-    small_s = small.withColumn(
-        "_salt",
-        F.explode(F.sequence(F.lit(0), F.lit(salt_factor - 1)).cast(
-            "array<int>"
-        )),
-    )
-    return big_s.join(small_s, [key, "_salt"], "inner").drop("_salt")
-
-
-def salted_count(
-    df: DataFrame, key: str, salt_factor: int = 8
-) -> DataFrame:
-    """``groupBy(key).count()`` in two stages (salted partial → final) so
-    one hot key never lands on a single reducer.
-
-    NOTE Spark's hash aggregates already do map-side partial combine, which
-    handles most count/sum skew; the explicit two-stage form matters for
-    aggregation states that don't combine cheaply (collect_list — see
-    postings_chunked — or large HLL sketches) and is shown here in its
-    simplest shape.
-    """
-    partial = (
-        df.withColumn("_salt", salt_column(salt_factor))
-        .groupBy(key, "_salt")
-        .agg(F.count("*").alias("_c"))
-    )
-    return partial.groupBy(key).agg(F.sum("_c").alias("count"))

@@ -16,6 +16,29 @@ import os
 
 from pyspark.sql import SparkSession
 
+# Default driver heap: half the host's memory, capped at 48 GB.  A fixed
+# 48 GB default let a full test run on a 15 GB host grow until the
+# kernel killed it; SPARK_GRAFT_DRIVER_MEM overrides the derivation.
+DRIVER_MEM_FRACTION = 0.5
+DRIVER_MEM_CEILING_MB = 48 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` for this host: ``DRIVER_MEM_FRACTION`` of
+    MemTotal, at most ``DRIVER_MEM_CEILING_MB`` (also the value when
+    ``meminfo`` is unreadable, as on hosts without procfs)."""
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, ValueError, IndexError, StopIteration):
+        return f"{DRIVER_MEM_CEILING_MB}m"
+    mb = int(kb / 1024 * DRIVER_MEM_FRACTION)
+    return f"{max(1024, min(mb, DRIVER_MEM_CEILING_MB))}m"
+
+
 # Tuned for correctness-at-any-scale: every flag below is either a pure
 # optimization (AQE, bloom filter) or a storage-layout convention (zstd).
 _DEFAULTS: dict[str, str] = {
@@ -64,7 +87,8 @@ _DEFAULTS: dict[str, str] = {
     # ext_zorder_write +28% bench move was environment noise, not this
     # pin.  Parity is free locally; keep the pin.
     "spark.shuffle.sort.bypassMergeThreshold": "1",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    or default_driver_memory(),
 }
 
 

@@ -39,8 +39,6 @@ def write_sorted_parquet(
     ``single_file=True`` reproduces the reference's one-file layout
     (main.rs:241-245) for small fixtures; leave False at scale.
     """
-    from ..plans.distribution import static_plan_when_tiny
-
     if single_file:
         out = df.coalesce(1).sortWithinPartitions(sort_col)
     else:
@@ -50,19 +48,15 @@ def write_sorted_parquet(
         out = df.repartitionByRange(int(n), sort_col).sortWithinPartitions(
             sort_col
         )
-    # r14 (guide §1.2): a range write is range-sampling + exchange +
-    # write — for a provably tiny input AQE's per-stage jobs are pure
-    # scheduling overhead (data-gated; large writes keep AQE)
-    with static_plan_when_tiny(df.sparkSession, df):
-        (
-            out.write.mode("overwrite")
-            .option("compression", compression)
-            # parquet-mr writes column statistics always; row-group sizing
-            # is byte-based in Spark — approximate the reference's 512 Ki
-            # rows via block size (stats granularity, main.rs:698).
-            .option("parquet.block.size", str(128 * 1024 * 1024))
-            .parquet(path)
-        )
+    (
+        out.write.mode("overwrite")
+        .option("compression", compression)
+        # parquet-mr writes column statistics always; row-group sizing
+        # is byte-based in Spark — approximate the reference's 512 Ki
+        # rows via block size (stats granularity, main.rs:698).
+        .option("parquet.block.size", str(128 * 1024 * 1024))
+        .parquet(path)
+    )
 
 
 @contextmanager
@@ -176,25 +170,20 @@ def write_zordered(
     b = df.agg(*aggs).first()
     mins = [b[f"{c}__min"] for c in cols]
     maxs = [b[f"{c}__max"] for c in cols]
-    from ..plans.distribution import static_plan_when_tiny
-
     z = zorder_key(cols, mins, maxs, bits)
     n = target_partitions or df.sparkSession.conf.get(
         "spark.sql.shuffle.partitions"
     )
-    # r14 (guide §1.2): data-gated static planning, same rationale as
-    # write_sorted_parquet
-    with static_plan_when_tiny(df.sparkSession, df):
-        (
-            df.withColumn("_z", z)
-            .repartitionByRange(int(n), "_z")
-            .sortWithinPartitions("_z")
-            .drop("_z")
-            .write.mode("overwrite")
-            .option("compression", compression)
-            .option("parquet.block.size", str(128 * 1024 * 1024))
-            .parquet(path)
-        )
+    (
+        df.withColumn("_z", z)
+        .repartitionByRange(int(n), "_z")
+        .sortWithinPartitions("_z")
+        .drop("_z")
+        .write.mode("overwrite")
+        .option("compression", compression)
+        .option("parquet.block.size", str(128 * 1024 * 1024))
+        .parquet(path)
+    )
 
 
 def write_bucketed_table(

@@ -270,10 +270,6 @@ def ann_ingest_batch(
                 f"index or replay without batch_id."
             )
     m = AI._ensure_manifest(root)
-    # r14: the tiny-input static-planning gate was tried around this
-    # commit sequence and REVERTED with the rest of the ANN family (see
-    # operators/ann_index.build_ann_index — both A/B orders ran the
-    # lifecycle row slower gated)
     assigned, touched, n = AI._assign_batch_checkpoint(
         spark, root, batch_df, id_col, vec_col
     )

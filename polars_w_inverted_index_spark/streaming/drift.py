@@ -82,22 +82,6 @@ def drift_monitor_batch(
     ):
         return None  # committed replay: no-op
 
-    # r14: static_plan_when_tiny was tried here and REVERTED — with
-    # adaptive off, the merged-LM state write loses AQE's partition
-    # coalescing and lands one tiny file PER SHUFFLE PARTITION each
-    # version, and the extra listing/read cost exceeded the per-job
-    # scheduling saved (measured: ext_streaming_drift_batch 1.23 →
-    # 1.50 s gated).  The one-action commit below stays.
-    return _drift_monitor_batch_actions(
-        spark, batch_df, state_path, reference_lm, text_col,
-        batch_id, alpha, meta,
-    )
-
-
-def _drift_monitor_batch_actions(
-    spark, batch_df, state_path, reference_lm, text_col, batch_id, alpha,
-    meta,
-):
     # r15 (guide §1.2/§5): persist, NOT localCheckpoint — the eager
     # checkpoint was its own Spark job; a lazy cache is populated by the
     # state write below and reused by the batch divergence + token
@@ -130,7 +114,7 @@ def _drift_monitor_batch_actions(
 
     b_div = corpus_divergence(batch_lm, reference_lm, alpha=alpha)
     c_div = corpus_divergence(merged, reference_lm, alpha=alpha)
-    report_plan = (
+    report = (
         b_div.select(
             F.col("js_bits").alias("batch_js_bits"),
         )
@@ -147,24 +131,8 @@ def _drift_monitor_batch_actions(
             "batch_js_bits",
             "cumulative_js_bits",
         )
+        .localCheckpoint()
     )
-    # r15 (guide §1.2; the r14 drift-gate revert REVISITED at finer
-    # grain): the report is a ~10-exchange plan over two
-    # vocabulary-sized LMs collapsing to ONE row — with AQE on, every
-    # exchange materializes as its own job (~0.15 s scheduling each).
-    # r14's gate around the WHOLE batch lost to the merged-LM write's
-    # file-count trap; this gate wraps ONLY the report action (the
-    # write above stays adaptive), and sizes on the REAL bytes of the
-    # state directory, which holds the just-written merged LM and the
-    # not-yet-pruned prior version — known even for literal
-    # micro-batch frames, scale-adaptive by construction (a 100 TB
-    # ingest's vocabulary LM exceeds the threshold and keeps AQE).
-    from ..plans.distribution import dir_bytes, static_plan_when_tiny
-
-    with static_plan_when_tiny(
-        spark, dir_bytes(state_path), shuffle_partitions=2
-    ):
-        report = report_plan.localCheckpoint()
 
     marker = {
         "v": next_v,

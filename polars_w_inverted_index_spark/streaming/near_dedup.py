@@ -92,34 +92,6 @@ def near_dedup_batch(
     output write (the replayed committed batch returns EMPTY, so
     output deferred past the commit has no second chance).
     """
-    from ..plans.distribution import (
-        dir_bytes,
-        plan_size_bytes,
-        static_plan_when_tiny,
-    )
-
-    spark = batch_df.sparkSession
-    # r14 (guide §1.2): a near-dedup commit is many small actions (band
-    # probe, cluster union-find rounds, checkpoint, delta commit); when
-    # batch + state are provably tiny, adaptive re-planning only
-    # multiplies job count — data-gated, production sizes keep AQE
-    try:
-        _sz = plan_size_bytes(batch_df) + dir_bytes(state_path)
-    except Exception:
-        _sz = 1 << 62
-    with static_plan_when_tiny(spark, _sz) as gated:
-        return _near_dedup_batch_actions(
-            batch_df, state_path, text_col, id_col, min_shared_bands,
-            batch_id, num_hashes, num_bands, shingle_k, max_delta_dirs,
-            delta_partitions, max_state_files, sink, gated,
-        )
-
-
-def _near_dedup_batch_actions(
-    batch_df, state_path, text_col, id_col, min_shared_bands, batch_id,
-    num_hashes, num_bands, shingle_k, max_delta_dirs, delta_partitions,
-    max_state_files, sink, gated=False,
-):
     spark = batch_df.sparkSession
     meta = read_marker(state_path)
     if (
@@ -187,17 +159,10 @@ def _near_dedup_batch_actions(
     # below prunes the corpus-band version this plan read, so a caller
     # recomputing a merely-persisted frame (cache eviction, unpersist)
     # would chase deleted files.  The returned frame must be
-    # self-contained.
-    # r14 ADVICE: under the ACTIVE gate the anti-join's shuffle output
-    # is never AQE-coalesced, so a sink write of ``accepted`` would land
-    # one tiny file per static shuffle partition — the drift-monitor
-    # file-count trap.  The gate only fires on provably-tiny batches,
-    # where coalescing to the delta width is free; ungated (production)
-    # batches keep their adaptive partitioning untouched.
-    accepted = survivors
-    if gated:
-        accepted = accepted.coalesce(max(1, delta_partitions))
-    accepted = accepted.localCheckpoint()
+    # self-contained.  The rebalance lets AQE size the partitions a sink
+    # writes: a runtime-converted anti-join otherwise keeps the batch's
+    # input partitioning, one tiny file per input partition.
+    accepted = survivors.hint("rebalance").localCheckpoint()
     if sink is not None:
         sink(accepted)  # idempotent output BEFORE the commit (see above)
 

@@ -1,82 +1,12 @@
-"""Distribution primitives: bucketed exchange-free joins, salting, and
-nested-array (answers) querying on the generated logs schema."""
+"""Scan fan-out (``ensure_parallelism``) and nested-array (answers)
+querying on the generated logs schema."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from polars_w_inverted_index_spark.plans.distribution import (
-    ensure_parallelism,
-    salted_count,
-    salted_inner_join,
-    write_bucketed,
-)
+from polars_w_inverted_index_spark.plans.distribution import ensure_parallelism
 from polars_w_inverted_index_spark.sources.generator import generate_logs
-
-
-def test_bucketed_join_has_no_exchange(spark, sf_dir, tmp_path_factory):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    write_bucketed(li.select("l_orderkey", "l_quantity"),
-                   "t_li_b", "l_orderkey", 8)
-    write_bucketed(o.select("o_orderkey", "o_totalprice"),
-                   "t_o_b", "o_orderkey", 8)
-    # at test scale Spark would broadcast (cheaper than reading buckets);
-    # disable it so the plan shows what bucketing buys at real scale,
-    # where neither side is broadcastable
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        a = spark.table("t_li_b")
-        b = spark.table("t_o_b").withColumnRenamed("o_orderkey", "l_orderkey")
-        joined = a.join(b, "l_orderkey")
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        # co-located: a shuffle-free sort-merge join over bucketed scans
-        assert "Exchange hashpartitioning" not in plan
-        assert "Bucketed: true" in plan
-        want = (
-            li.select("l_orderkey", "l_quantity")
-            .join(
-                o.select(
-                    F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-                ),
-                "l_orderkey",
-            )
-            .count()
-        )
-        assert joined.count() == want
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("DROP TABLE IF EXISTS t_li_b")
-        spark.sql("DROP TABLE IF EXISTS t_o_b")
-
-
-def test_salted_join_matches_plain(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    dim = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_orderstatus"
-    )
-    got = salted_inner_join(li, dim, "l_orderkey", salt_factor=4)
-    want = li.join(dim, "l_orderkey")
-    assert sorted(map(tuple, got.collect())) == sorted(
-        map(tuple, want.collect())
-    )
-
-
-def test_salted_count_matches_plain(spark, sf_dir):
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    got = {
-        r["l_returnflag"]: r["count"]
-        for r in salted_count(li, "l_returnflag", 4).collect()
-    }
-    want = {
-        r["l_returnflag"]: r["count"]
-        for r in li.groupBy("l_returnflag").count().collect()
-    }
-    assert got == want
 
 
 def test_nested_answers_array_queries(spark):

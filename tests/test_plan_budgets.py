@@ -9,7 +9,9 @@ cold index read is a schema-inference job), and each SQL-string form is
 pinned to the same optimized plan as the Column form it replaced.  The
 write-path budgets pin the commit shapes of the two streaming indexes:
 one shuffle per LSM merge and per compaction, and no schema-inference
-job on reads of the engine's own index trees.
+job on reads of the engine's own index trees.  The sorted writers and
+the near-dedup, span-scrub and drift commits are pinned too: they plan
+with AQE, one job per exchange, except span-scrub's tiny commits.
 """
 
 from __future__ import annotations
@@ -24,6 +26,7 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from polars_w_inverted_index_spark.functions.text import unigram_lm
 from polars_w_inverted_index_spark.operators.ann_index import (
     ann_search,
     build_ann_index,
@@ -34,6 +37,15 @@ from polars_w_inverted_index_spark.plans.catalog import IndexCatalog
 from polars_w_inverted_index_spark.plans.rewrite import (
     filter_by_doc_ids,
     sql_in_ids,
+)
+from polars_w_inverted_index_spark.sources.parquet import (
+    write_sorted_parquet,
+    write_zordered,
+)
+from polars_w_inverted_index_spark.streaming import (
+    drift_monitor_batch,
+    near_dedup_batch,
+    span_scrub_batch,
 )
 from polars_w_inverted_index_spark.streaming.ann_ingest import (
     ann_ingest_batch,
@@ -260,6 +272,51 @@ def test_ann_search_plan_launches_no_jobs(spark, ann_root):
     assert _jobs(
         spark, lambda: ann_search(spark, ann_root, q, k=3, nprobe=2)
     ) == 0
+
+
+def test_sorted_and_zorder_write_budgets(spark, tmp_path):
+    """A range write is its range-sampling job, the exchange's map
+    stage and the write: 3 jobs [2 when a tiny input turned AQE off].
+    The z-order write adds its min/max bounds job: 5 [4]."""
+    df = spark.range(0, 5000, numPartitions=4).selectExpr(
+        "id AS doc_id", "id % 97 AS k"
+    )
+    df.count()
+    srt = _jobs(spark, lambda: write_sorted_parquet(
+        df, str(tmp_path / "sorted"), target_partitions=4))
+    z = _jobs(spark, lambda: write_zordered(
+        df, str(tmp_path / "z"), ["doc_id", "k"], target_partitions=4))
+    assert srt <= 3 and z <= 5, (srt, z)
+
+
+def _docs(spark, path, lo, n=40):
+    """``n`` file-backed documents sharing no word, so no band or
+    window repeats across or within batches."""
+    spark.createDataFrame(
+        [(i, " ".join(f"w{i}x{j}" for j in range(12)))
+         for i in range(lo, lo + n)],
+        "doc_id long, text string",
+    ).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_streaming_commit_budgets(spark, tmp_path):
+    """Batch 1 of a near-dedup, span-scrub and drift stream, each over
+    the state batch 0 committed.  With AQE every exchange is a job of
+    its own: near-dedup 18 [7 when a tiny input turned AQE off] and
+    drift 22 [13].  Span-scrub still plans tiny commits statically: 6."""
+    b0 = _docs(spark, str(tmp_path / "b0"), 0)
+    b1 = _docs(spark, str(tmp_path / "b1"), 1000)
+    nd, ss, dr = (str(tmp_path / n) for n in ("nd", "ss", "drift"))
+    ref = unigram_lm(b0).localCheckpoint()
+    near_dedup_batch(b0, nd, batch_id=0)
+    span_scrub_batch(b0, ss, batch_id=0)
+    drift_monitor_batch(b0, dr, ref, batch_id=0)
+    near = _jobs(spark, lambda: near_dedup_batch(b1, nd, batch_id=1))
+    scrub = _jobs(spark, lambda: span_scrub_batch(b1, ss, batch_id=1))
+    drift = _jobs(
+        spark, lambda: drift_monitor_batch(b1, dr, ref, batch_id=1))
+    assert near <= 18 and scrub <= 6 and drift <= 22, (near, scrub, drift)
 
 
 # -- same plans as the Column forms ---------------------------------------

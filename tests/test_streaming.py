@@ -381,6 +381,34 @@ def test_near_dedup_sink_before_commit_crash_replay(spark, tmp_path):
     assert rows.select("doc_id").distinct().count() == 2
 
 
+def test_near_dedup_sink_writes_few_files(spark, tmp_path):
+    """A 40-row batch over a prior corpus reaches the sink in at most
+    ``delta_partitions`` part files.  An RDD-backed batch has no size
+    statistics, and the runtime-converted anti-join kept the shuffle's
+    partitioning: one tiny file per partition."""
+    import os as _os
+
+    from polars_w_inverted_index_spark.streaming import near_dedup_batch
+
+    def batch(lo):
+        rows = [(i, " ".join(f"w{i}x{j}" for j in range(12)))
+                for i in range(lo, lo + 40)]
+        return spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, 8),
+            "doc_id long, text string",
+        )
+
+    state, out = str(tmp_path / "state"), str(tmp_path / "out")
+    near_dedup_batch(batch(0), state, batch_id=0)
+    acc = near_dedup_batch(
+        batch(1000), state, batch_id=1, delta_partitions=2,
+        sink=lambda rows: rows.write.mode("overwrite").parquet(out),
+    )
+    assert acc.count() == 40
+    parts = [f for f in _os.listdir(out) if f.endswith(".parquet")]
+    assert 1 <= len(parts) <= 2, parts
+
+
 def test_streaming_near_dedup_end_to_end(spark, tmp_path, events_batch):
     """Drive start_near_dedup over a two-file stream: output contains no
     near-dup pair, and unioned batches dedup to the same count as a
@@ -566,47 +594,6 @@ def test_drift_monitor_batches(spark, tmp_path):
     assert drift_monitor_batch(b1, state, ref_lm, batch_id=1) is None
     assert read_ingest_lm(spark, state).count() == 10
 
-
-
-def test_drift_report_gate_sizes_the_state_once(
-    spark, tmp_path, monkeypatch
-):
-    """The report gate is sized on the state directory's bytes: the
-    just-written merged LM lies inside it, so adding its own size
-    again would count it twice."""
-    import contextlib
-    import os
-
-    from polars_w_inverted_index_spark.functions.text import unigram_lm
-    from polars_w_inverted_index_spark.plans import distribution
-    from polars_w_inverted_index_spark.plans.distribution import dir_bytes
-    from polars_w_inverted_index_spark.streaming import drift_monitor_batch
-
-    state = str(tmp_path / "drift_state")
-    seen = []
-
-    @contextlib.contextmanager
-    def capture(_spark, size, **_kw):
-        newest = max(
-            (n for n in os.listdir(state) if n.startswith("v=")),
-            key=lambda n: int(n[2:]),
-        )
-        seen.append(
-            (size, dir_bytes(state), dir_bytes(os.path.join(state, newest)))
-        )
-        yield
-
-    monkeypatch.setattr(distribution, "static_plan_when_tiny", capture)
-    schema = "doc_id long, text string"
-    ref = spark.createDataFrame([(0, "alpha beta " * 5)], schema)
-    ref_lm = unigram_lm(ref)
-    for i, text in enumerate(["alpha beta gamma " * 3, "delta beta " * 4]):
-        batch = spark.createDataFrame([(i, text)], schema)
-        drift_monitor_batch(batch, state, ref_lm, batch_id=i).collect()
-    assert len(seen) == 2
-    for size, state_bytes, merged_lm_bytes in seen:
-        assert merged_lm_bytes > 0
-        assert size == state_bytes
 
 def test_drift_monitor_end_to_end(spark, tmp_path):
     """start_drift_monitor over a real file stream (availableNow):
