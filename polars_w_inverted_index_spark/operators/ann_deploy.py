@@ -215,18 +215,13 @@ def _live_corpus(spark: SparkSession, root: str, meta: dict) -> DataFrame:
     externally retained corpus copy."""
     from pyspark.sql import functions as F
 
-    m = AI._ensure_manifest(root)
+    m = AI._load_manifest(root)
     paths = AI._live_paths(root, "cells", m)
     if not paths:
         raise ValueError(f"index at {root} has no live cells to rebuild from")
-    cells_dir = os.path.join(root, "cells")
-    return (
-        spark.read.option("basePath", cells_dir)
-        .parquet(*paths)
-        .select(
-            F.col("vec_id").alias(meta["id_col"]),
-            F.col("cv").alias(meta["vec_col"]),
-        )
+    return AI._read_cells(spark, root, m, paths).select(
+        F.col("vec_id").alias(meta["id_col"]),
+        F.col("cv").alias(meta["vec_col"]),
     )
 
 

@@ -17,6 +17,7 @@ Layout under ``root``::
     centroids/                 parquet [cid int, centv array<double>, centn double]
     cells/cell=<c>/ingest_batch=<b>/  parquet [vec_id long, cv array<float>, cn double]
     _ann_meta.json             {n_centroids, n_iters, dims, id_col, vec_col}
+    _cells_manifest.json       live ingest_batch= sets (snapshot manifest)
 
 The second partition level tags WHICH write produced each file: the
 initial build uses ``ingest_batch=-1`` and every streaming micro-batch
@@ -867,7 +868,9 @@ def build_ann_index(
             "vec_col": vec_col,
         },
     )
-    # snapshot manifest (r14): one build-time listing of the fresh tree.
+    # snapshot manifest (r14): one build-time listing of the fresh tree —
+    # the only writer of a root's FIRST manifest, so the only entry point
+    # that accepts a root without one.
     # A REBUILD over an existing root invalidates any PQ sidecar
     # wholesale (new centroids → new cells → every code stale): the new
     # manifest carries no codes/fingerprints (PQ serves refuse loudly
@@ -890,10 +893,14 @@ def build_ann_index(
     # fresh codes beside retired ones in the same directory, i.e.
     # duplicate candidates (caught by the lifecycle row's oracle the
     # round this was built).  Carry max(previous gen, any gen tag still
-    # physically present) forward.
-    prev = _load_manifest(root)
+    # physically present) forward — the tags cover a previous build that
+    # crashed before its manifest write.
+    try:
+        prev_gen = int(_load_manifest(root)["gen"])
+    except ValueError:  # no usable manifest yet: this build writes one
+        prev_gen = 1
     gen = max(
-        [1, int(prev["gen"]) if prev is not None else 1]
+        [1, prev_gen]
         + [-t for tags in old_code_tags.values() for t in tags if t < -1]
     )
     _write_manifest(
@@ -1038,7 +1045,7 @@ def ann_index_add_batch(
     ingest never does this; direct untagged appends are a
     batch-pipeline convenience).
     """
-    m = _ensure_manifest(root)
+    m = _load_manifest(root)
     assigned, touched, n = _assign_batch_checkpoint(
         spark, root, batch, id_col, vec_col
     )
@@ -1055,104 +1062,20 @@ def ann_index_add_batch(
     return n
 
 
-def _recover_cells(root: str) -> None:
-    """Finish a compaction swap a crash interrupted.  Two swap shapes
-    exist, both healed here so serving and ingest self-repair on the
-    next touch (single-writer contract: this must not run CONCURRENTLY
-    with a live compaction — see the module docstring of
-    streaming/ann_ingest.py):
-
-    - whole-index (:func:`ann_index_compact`): write tmp → rename cells
-      away → rename tmp in.  A crash between the renames leaves no
-      ``cells`` but a COMPLETE ``cells__compacting`` — promote it; a
-      leftover ``cells__old`` beside a live ``cells`` is post-swap
-      garbage — drop it.
-    - per-cell (:func:`ann_index_compact_cells`, r13): each folded cell
-      is swapped by rename(cell → cells__cellfold_old/cell) +
-      rename(stage/cell → cell).  A crash between the two leaves that
-      ONE cell missing from the live tree: promote the staged copy when
-      the stage write committed (``_SUCCESS`` present — the swap phase
-      only starts after it), else restore the old copy.  A leftover
-      old dir whose every cell is live again is post-swap garbage.
-    """
-    import shutil
-
-    cells = os.path.join(root, "cells")
-    tmp = os.path.join(root, "cells__compacting")
-    old = os.path.join(root, "cells__old")
-    if not os.path.exists(cells):
-        if os.path.exists(tmp):  # complete new data: finish the swap
-            os.rename(tmp, cells)
-        elif os.path.exists(old):  # crashed before the tmp write landed
-            os.rename(old, cells)
-    if os.path.exists(cells) and os.path.exists(old):
-        shutil.rmtree(old, ignore_errors=True)
-    # --- per-cell fold windows (r13) ---------------------------------
-    stage = os.path.join(root, "cells__cellfold")
-    cell_old = os.path.join(root, "cells__cellfold_old")
-    if os.path.exists(cell_old):
-        staged_ok = os.path.exists(os.path.join(stage, "_SUCCESS"))
-        for entry in os.listdir(cell_old):
-            if not entry.startswith("cell="):
-                continue
-            live = os.path.join(cells, entry)
-            if os.path.exists(live):
-                continue
-            staged = os.path.join(stage, entry)
-            if staged_ok and os.path.exists(staged):
-                os.rename(staged, live)  # finish the interrupted swap
-            else:
-                os.rename(os.path.join(cell_old, entry), live)
-        shutil.rmtree(cell_old, ignore_errors=True)
-    # the stage dir itself is owned by the (single-writer) compact job —
-    # collected there, never here, same rule as cells__compacting
-
-
-def _legacy_cell_layout(cells_dir: str) -> bool:
-    """True when cell directories hold parquet files directly — the
-    pre-``ingest_batch`` layout.  Appending the two-level layout beside
-    it would make partition discovery fail for the WHOLE table
-    ('conflicting directory structures'), so writers must gate.
-
-    Answers from the FIRST decisive entry (r13.2): every writer gates,
-    so a tree is homogeneous by construction — a data file directly
-    under a cell dir means legacy, an ``ingest_batch=`` subdirectory
-    means current, and the scan stops there.  The pre-r13.2 form
-    listed EVERY cell dir before returning False, an O(#cells)
-    per-ingest-batch cost in the streaming hot path (this guard and
-    the codes-maintainability check both run per micro-batch); empty
-    cell dirs keep scanning.  A hand-mixed tree (no writer produces
-    one) answers by whichever decisive entry lists first — such a
-    tree already fails partition discovery on any read."""
-    import glob
-
-    for cell in glob.glob(os.path.join(cells_dir, "cell=*")):
-        for entry in os.listdir(cell):
-            if entry.startswith((".", "_")):
-                continue
-            if os.path.isfile(os.path.join(cell, entry)):
-                return True
-            if entry.startswith("ingest_batch="):
-                return False
-    return False
-
-
 # ---------------------------------------------------------------------------
-# Snapshot manifest (r14, r13 VERDICT task 1): serves overlap maintenance
+# Snapshot manifest: serves overlap maintenance
 # ---------------------------------------------------------------------------
 #
-# Pre-r14 maintenance swapped directories via renames whose crash windows
-# `_recover_cells` healed on the NEXT touch — which forced the module
-# contract "no serves while a fold/ingest-with-dial runs" (a serve could
-# observe a mid-swap tree or race the healer).  At 100 TB with continuous
-# ingest, serve windows are the norm, so the index now uses MANIFEST
-# INDIRECTION, the same discipline the postings LSM's per-bucket segment
-# lists approximate:
+# Every index root carries `_cells_manifest.json`, and every reader and
+# writer goes through it — MANIFEST INDIRECTION, the same discipline the
+# postings LSM's per-bucket segment lists approximate.  At 100 TB with
+# continuous ingest, serve windows are the norm, so no maintenance step
+# ever renames or deletes a path a serve may be reading:
 #
 # - `_cells_manifest.json` (atomic tmp+replace) names every cell's LIVE
 #   `ingest_batch=` directory set for BOTH trees (cells + pq_codes), the
-#   recorded per-cell code fingerprints, and a `books_id` pairing the
-#   codes with the codebooks in `_pq_meta.json`;
+#   recorded per-cell code fingerprints, a `books_id` pairing the codes
+#   with the codebooks in `_pq_meta.json`, and the cells tree's schema;
 # - readers resolve the manifest ONCE per serve and read those explicit
 #   directories (never partition discovery over the physical tree), so a
 #   pinned snapshot stays self-consistent at every instant;
@@ -1173,11 +1096,10 @@ def _legacy_cell_layout(cells_dir: str) -> bool:
 # MAINTENANCE jobs (ingest commits, folds, re-encodes, augments) still
 # must not overlap EACH OTHER — one maintenance writer at a time, the
 # normal single-writer rule — but serves need no coordination at all.
-# Roots built before r14 migrate on the first maintenance touch
-# (`_ensure_manifest`): one full tree listing, after which every
-# per-batch decision is O(touched cells) from the manifest (r13 VERDICT
-# task 4).  Manifest-less roots keep the legacy read path (whole-tree
-# partition discovery + `_recover_cells`), so old indexes stay readable.
+# `build_ann_index` writes a root's first manifest; every other entry
+# point refuses a root whose manifest is missing, torn or lacks the
+# cells schema (`_load_manifest`), so per-batch decisions are always
+# O(touched cells) reads of the manifest, never a tree walk.
 
 _MANIFEST_FORMAT = 1
 
@@ -1193,21 +1115,28 @@ def _manifest_path(root: str) -> str:
     return os.path.join(root, "_cells_manifest.json")
 
 
-def _load_manifest(root: str) -> dict | None:
-    """The manifest dict, or None for a legacy (pre-r14) root.  An
-    unreadable/torn manifest also reads as None — the writer is atomic
-    (tmp+replace), so that only happens for hand-damaged roots, where
-    the legacy whole-tree read path is the conservative fallback."""
+def _load_manifest(root: str) -> dict:
+    """The root's manifest.  Raises ValueError, naming the root and the
+    repair, when it is missing, torn (the writer is atomic, so only a
+    hand-damaged root has one) or records no ``cells_schema``."""
     try:
         with open(_manifest_path(root)) as f:
             m = json.load(f)
-    except (OSError, ValueError):
-        return None
+    except (OSError, ValueError) as e:
+        raise ValueError(
+            f"ANN index at {root} has no readable _cells_manifest.json "
+            f"({type(e).__name__}) — rebuild it with build_ann_index."
+        ) from e
     if m.get("format") != _MANIFEST_FORMAT:
         raise ValueError(
             f"index manifest at {root} has format {m.get('format')!r}; "
             f"this engine writes v{_MANIFEST_FORMAT} — rebuild the index "
-            "or upgrade the engine."
+            "with build_ann_index or upgrade the engine."
+        )
+    if not m.get("cells_schema"):
+        raise ValueError(
+            f"ANN index at {root} has a manifest without cells_schema — "
+            "rebuild it with build_ann_index."
         )
     return m
 
@@ -1229,8 +1158,8 @@ def _books_id(books) -> str:
 
 def _list_tree_tags(tree_dir: str) -> dict[str, list[int]]:
     """``{cell value (dir-name string) → sorted ingest_batch tags}`` from
-    one physical listing — migration/build-time only; per-batch paths
-    read the manifest instead."""
+    one physical listing — build-time only; every other path reads the
+    manifest instead."""
     out: dict[str, list[int]] = {}
     try:
         entries = os.listdir(tree_dir)
@@ -1253,86 +1182,6 @@ def _list_tree_tags(tree_dir: str) -> dict[str, list[int]]:
         if tags:
             out[entry[len("cell="):]] = sorted(tags)
     return out
-
-
-def _ensure_manifest(root: str) -> dict:
-    """Load the manifest, or migrate a legacy root to one (single
-    maintenance writer only: heals legacy crash shapes via
-    :func:`_recover_cells`, collects pre-manifest staging leftovers,
-    lists both trees once — the one O(#cells) walk per index lifetime,
-    after which every per-batch decision reads the manifest).
-
-    A legacy PQ sidecar migrates with it: ``books_id`` is stamped into
-    ``_pq_meta.json`` so codes/books pairing is checkable, and per-cell
-    fingerprints carry over ONLY for cells that actually have codes
-    directories — a fingerprint without codes would gate-pass a cell
-    whose rows have no codes (the r13.2 silent-wrong-top-k refusal,
-    preserved here as fail-closed staleness).  A flat (pre-r13.2) codes
-    tree cannot be referenced by the manifest; it is derived data, so it
-    is dropped and one ``pq_augment_ann_index`` rebuilds it (the same
-    migration the legacy path demanded)."""
-    import shutil
-
-    m = _load_manifest(root)
-    if m is not None:
-        return m
-    _recover_cells(root)
-    # pre-manifest orphan staging (owned by the legacy compact jobs —
-    # dead weight once manifest-mode folds take over)
-    for leftover in ("cells__compacting", "cells__cellfold"):
-        shutil.rmtree(os.path.join(root, leftover), ignore_errors=True)
-    cells_dir = os.path.join(root, "cells")
-    if os.path.isdir(cells_dir) and _legacy_cell_layout(cells_dir):
-        raise ValueError(
-            f"index at {root} uses the pre-ingest_batch cell layout — "
-            "run ann_index_compact(spark, root) once to migrate, then "
-            "every maintenance path works."
-        )
-    codes_dir = os.path.join(root, "pq_codes")
-    codes: dict[str, list[int]] = {}
-    code_fps: dict[str, str] = {}
-    bid = None
-    meta_path = os.path.join(root, "_pq_meta.json")
-    pq_meta = None
-    if os.path.exists(meta_path):
-        try:
-            with open(meta_path) as f:
-                pq_meta = json.load(f)
-        except (OSError, ValueError):
-            pq_meta = None
-    if os.path.isdir(codes_dir) and _legacy_cell_layout(codes_dir):
-        shutil.rmtree(codes_dir)  # flat codes: rebuild via one augment
-    elif pq_meta is not None and pq_meta.get("books"):
-        bid = pq_meta.get("books_id") or _books_id(pq_meta["books"])
-        if pq_meta.get("books_id") != bid:
-            pq_meta["books_id"] = bid
-            _write_meta_atomic(meta_path, pq_meta)
-        codes = _list_tree_tags(codes_dir)
-        recorded = pq_meta.get("cell_fingerprints")
-        if codes and isinstance(recorded, dict):
-            code_fps = {c: d for c, d in recorded.items() if c in codes}
-    cells_tags = _list_tree_tags(cells_dir)
-    m = {
-        "format": _MANIFEST_FORMAT,
-        # a hand-deleted manifest may leave gen-tagged dirs behind:
-        # start past them so a fold can never append into one
-        "gen": max(
-            [1]
-            + [
-                -t
-                for tags in list(cells_tags.values()) + list(codes.values())
-                for t in tags
-                if t < -1
-            ]
-        ),
-        "cells": cells_tags,
-        "codes": codes,
-        "code_fps": code_fps,
-        "books_id": bid,
-        "retired": [],
-    }
-    _write_manifest(root, m)
-    return m
 
 
 def _live_paths(root: str, tree: str, m: dict, cells=None) -> list[str]:
@@ -1362,23 +1211,23 @@ def _read_cells(
 ) -> DataFrame:
     """The cells tree's ``paths`` (from :func:`_live_paths`), read with
     the schema the build recorded in the manifest — no schema-inference
-    job.  A manifest without one (written before the schema was
-    recorded) is read with inference."""
-    reader = spark.read.option("basePath", os.path.join(root, "cells"))
-    if m.get("cells_schema"):
-        reader = reader.schema(m["cells_schema"])
-    return reader.parquet(*paths)
+    job."""
+    return (
+        spark.read.option("basePath", os.path.join(root, "cells"))
+        .schema(m["cells_schema"])
+        .parquet(*paths)
+    )
 
 
 def _manifest_walk(cdir: str, tags) -> str | None:
     """The live-set digest walk behind :func:`_manifest_cell_digest`:
     sha256 over sorted (path relative to the cell dir, size) of every
-    visible file under the given ``ingest_batch=`` tag directories —
-    the same per-file format as :func:`_cells_walk`, so a
-    freshly-migrated manifest's digests match the legacy recorded
-    fingerprints exactly (no spurious whole-index re-encode at
-    migration).  Module-level so tests can interpose it (warm serves
-    must not re-walk — the r8 staleness-cache discipline)."""
+    visible file under the given ``ingest_batch=`` tag directories.
+    Hidden (``.``/``_``) entries are skipped — they are markers or
+    in-flight writer state, and the listing cache's mtime token
+    (functions/listing.py) does not descend into hidden directories.
+    Module-level so tests can interpose it (warm serves must not
+    re-walk — the r8 staleness-cache discipline)."""
     import hashlib
 
     entries = []
@@ -1534,46 +1383,13 @@ def ann_index_compact(
 ) -> int:
     """Fold EVERY cell's accumulated ``ingest_batch=<id>`` delta
     directories into a fresh generation; returns the NUMBER OF DELTA
-    DIRECTORIES FOLDED.  Also migrates a pre-``ingest_batch`` (legacy
-    flat-cell) index into the current layout + manifest, which unblocks
-    :func:`ann_index_add_batch` on old roots — a pure legacy migration
-    rewrites the index but folds 0 deltas and returns 0, so the return
-    value is only "did nothing happen" when the layout was already
-    current (ADVICE r5).
+    DIRECTORIES FOLDED (0 when no cell holds a delta).
 
-    Since r14 this is :func:`ann_index_compact_cells` over every cell
-    with deltas (manifest snapshot isolation — see the section comment
+    This is :func:`ann_index_compact_cells` over every cell the manifest
+    names, with the same snapshot isolation (see the section comment
     above): serves may run concurrently; only other MAINTENANCE must
     not."""
-    import shutil
-
-    cells_dir = os.path.join(root, "cells")
-    if _load_manifest(root) is None and _legacy_cell_layout(cells_dir):
-        # flat-file cells cannot be named by a manifest: one whole-tree
-        # rewrite into the two-level layout (the pre-r14 migration,
-        # single-writer, no concurrent serves on a pre-manifest root),
-        # then the manifest takes over.
-        _recover_cells(root)
-        tmp = os.path.join(root, "cells__compacting")
-        shutil.rmtree(tmp, ignore_errors=True)
-        current = spark.read.parquet(cells_dir).select(
-            "cell", "vec_id", "cv", "cn"
-        )
-        (
-            current.withColumn("ingest_batch", F.lit(-1))
-            .write.mode("overwrite")
-            .partitionBy("cell", "ingest_batch")
-            .parquet(tmp)
-        )
-        old = os.path.join(root, "cells__old")
-        shutil.rmtree(old, ignore_errors=True)
-        os.rename(cells_dir, old)
-        os.rename(tmp, cells_dir)
-        shutil.rmtree(old, ignore_errors=True)
-        _ensure_manifest(root)
-        _stamp_bandwidth(root)
-        return 0
-    m = _ensure_manifest(root)
+    m = _load_manifest(root)
     return ann_index_compact_cells(
         spark, root, sorted(m["cells"]), retire_grace_seconds
     )
@@ -1615,7 +1431,7 @@ def ann_index_compact_cells(
     single-writer."""
     import time as _time
 
-    m = _ensure_manifest(root)
+    m = _load_manifest(root)
     cells_dir = os.path.join(root, "cells")
     codes_dir = os.path.join(root, "pq_codes")
     want = [str(c) for c in cells]
@@ -1756,12 +1572,8 @@ def ann_search(
     # snapshot resolve (r14): ONE manifest read pins this serve's live
     # directory set — concurrent ingest/folds swap the manifest and
     # retire (never delete-in-grace) directories, so the pinned snapshot
-    # stays readable and self-consistent throughout the serve.  Legacy
-    # (manifest-less) roots keep the pre-r14 behavior: whole-tree read
-    # plus the crash-swap healer, which must then not race maintenance.
+    # stays readable and self-consistent throughout the serve
     manifest = _load_manifest(root)
-    if manifest is None:
-        _recover_cells(root)  # finish any crash-interrupted legacy swap
     q_rows = (
         queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
         .limit(max_query_rows + 1)
@@ -1920,23 +1732,13 @@ def ann_search(
                     schema=score_pa_schema,
                 )
 
-    if manifest is not None:
-        paths = [
-            p
-            for p in _live_paths(root, "cells", manifest, probe_cells)
-        ]
-        if not paths:  # every probed cell is empty under this snapshot
-            return spark.createDataFrame([], empty_schema)
-        # the pinned live set: static pruning with snapshot isolation
-        cells = _read_cells(spark, root, manifest, paths).select(
-            "cell", "vec_id", "cv"
-        )
-    else:
-        cells = (
-            spark.read.parquet(os.path.join(root, "cells"))
-            .where(F.col("cell").isin(probe_cells))  # static pruning
-            .select("cell", "vec_id", "cv")
-        )
+    paths = _live_paths(root, "cells", manifest, probe_cells)
+    if not paths:  # every probed cell is empty under this snapshot
+        return spark.createDataFrame([], empty_schema)
+    # the pinned live set: static pruning with snapshot isolation
+    cells = _read_cells(spark, root, manifest, paths).select(
+        "cell", "vec_id", "cv"
+    )
     scored = cells.mapInArrow(_score, score_ddl)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
@@ -1950,11 +1752,6 @@ def ann_search(
 # ---------------------------------------------------------------------------
 # IVF-PQ: product-quantized codes sidecar over the cell layout
 # ---------------------------------------------------------------------------
-
-# Bump when _cells_walk's digest input changes (v2 = r9's hidden-entry
-# skip).  Recorded in _pq_meta.json so a mismatch can name its cause.
-_FINGERPRINT_VERSION = 2
-
 
 def _tree_bytes(d: str) -> int:
     """Visible-file bytes under ``d`` (hidden ``.``/``_`` entries are
@@ -1975,113 +1772,18 @@ def _tree_bytes(d: str) -> int:
     return total
 
 
-def _probed_cell_bytes(root: str, probe_cells, manifest=None) -> int | None:
-    """On-disk bytes of the probed float cell directories, or None when
-    the root is not a locally-listable path (object stores) — callers
-    treat None as 'assume large', the scale-safe direction.  One
-    os.walk per probed cell: metadata-only, never data I/O.  With a
-    manifest, only LIVE directories count — retired-but-unpruned
-    generations must not inflate the estimate."""
+def _probed_cell_bytes(root: str, probe_cells, manifest: dict) -> int | None:
+    """On-disk bytes of the probed cells' LIVE float directories, or None
+    when the root is not a locally-listable path (object stores) —
+    callers treat None as 'assume large', the scale-safe direction.  One
+    os.walk per live directory: metadata-only, never data I/O, and
+    retired-but-unpruned generations do not inflate the estimate."""
     if not os.path.isdir(os.path.join(root, "cells")):
         return None
     try:
-        if manifest is not None:
-            return _live_tree_bytes(root, manifest, probe_cells)
-        total = 0
-        for c in probe_cells:
-            d = os.path.join(root, "cells", f"cell={c}")
-            # empty cells are routine (a centroid that is nobody's
-            # argmax gets no partition dir): 0 bytes, not a listing
-            # failure — raising here would engage the pushdown's extra
-            # job on every serve of a perfectly listable index
-            if os.path.isdir(d):
-                total += _tree_bytes(d)
+        return _live_tree_bytes(root, manifest, probe_cells)
     except OSError:
         return None
-    return total
-
-
-def _cells_walk(cells_dir: str) -> str:
-    """Full O(#files) digest of the cells tree: sha256 over the sorted
-    (relative path, size) listing.  Module-level so tests can interpose
-    it (warm serves must not re-walk).  Hidden (``.``/``_``) entries
-    are skipped — they are markers/in-flight writer state, not data,
-    and the cache's mtime token (functions/listing.py) deliberately
-    does not descend into hidden directories, so digesting them would
-    open a token-blind staleness channel (r9 review finding)."""
-    import hashlib
-
-    entries = []
-    for dirpath, dirnames, files in os.walk(cells_dir):
-        dirnames[:] = [
-            d for d in dirnames if not d.startswith((".", "_"))
-        ]
-        for name in files:
-            if name.startswith((".", "_")):
-                continue
-            p = os.path.join(dirpath, name)
-            entries.append(
-                (os.path.relpath(p, cells_dir), os.path.getsize(p))
-            )
-    h = hashlib.sha256()
-    for rel, size in sorted(entries):
-        h.update(f"{rel}\x00{size}\n".encode())
-    return h.hexdigest()
-
-
-def _cells_fingerprint(root: str, use_cache: bool = True) -> str:
-    """Content identity of the cells tree.  Any build/ingest/compaction
-    changes the file set, so a stale codes sidecar can never serve
-    silently — the IndexCatalog staleness discipline applied to the
-    vector side.  Serving memoizes the walk behind the O(#dirs) mtime
-    token (functions/listing.py); the augmentation passes
-    ``use_cache=False`` so the PINNED fingerprint always comes from a
-    real walk."""
-    from ..functions.listing import cached_listing_digest
-
-    return cached_listing_digest(
-        os.path.join(root, "cells"),
-        _cells_walk,
-        "cells",
-        use_cache=use_cache,
-    )
-
-
-def _cell_fingerprints(
-    root: str, cells=None, use_cache: bool = True
-) -> dict[str, str]:
-    """Per-cell content digests: ``{cell value (dir-name string) →
-    digest of cells/cell=<c>}``, restricted to ``cells`` when given
-    (values str()-matched against the partition dir names).  Missing /
-    empty cell directories get NO entry — serving treats
-    absent-on-both-sides as consistent (an empty probed cell has no
-    codes either).  This is the staleness gate's r13 granularity: a
-    selective fold + re-encode updates only the folded cells' entries,
-    and a PQ serve checks only its PROBED cells, so streaming ingest
-    into cell A never blocks serves probing untouched cell B."""
-    from ..functions.listing import cached_listing_digest
-
-    cells_dir = os.path.join(root, "cells")
-    want = None if cells is None else {f"cell={c}" for c in cells}
-    out: dict[str, str] = {}
-    try:
-        entries = os.listdir(cells_dir)
-    except OSError:
-        return out
-    for entry in entries:
-        if not entry.startswith("cell="):
-            continue
-        if want is not None and entry not in want:
-            continue
-        d = os.path.join(cells_dir, entry)
-        if not os.path.isdir(d):
-            continue
-        digest = cached_listing_digest(
-            d, _cells_walk, "cell", use_cache=use_cache
-        )
-        if digest is not None:
-            out[entry[len("cell="):]] = digest
-    return out
 
 
 def pq_augment_ann_index(
@@ -2093,19 +1795,17 @@ def pq_augment_ann_index(
     sample_rows: int = 65_536,
     n_dims: int | None = None,
 ) -> str:
-    """Encode the index's cell-partitioned corpus into a PQ codes
-    sidecar (``pq_codes/cell=<c>/``) + codebooks; returns root.
+    """Train PQ codebooks on the index's live cells and encode every
+    live cell into the codes sidecar (``pq_codes/cell=<c>/``); returns
+    root.
 
     One corpus pass (narrow — the encode keeps each row's cell key, no
     shuffle), after which :func:`ann_search_pq` serves the ADC scan
     from the 64×-smaller codes and touches float vectors only for the
-    re-rank candidates.  The sidecar is pinned to the EXACT current
-    cells tree by fingerprint: any later build/ingest/compaction makes
-    it stale and serving raises loudly — re-run this augmentation on
-    the same cadence as compaction.  Crash-safe: codes land in a tmp
-    dir swapped in by rename, and the meta file (fingerprint +
-    codebooks) is written LAST — a crash between the two leaves a
-    sidecar that fails the fingerprint gate, never a wrong answer.
+    re-rank candidates.  Each cell's codes are pinned to that cell's
+    live content by a per-cell fingerprint in the manifest: a later
+    ingest or fold that changes a cell without re-encoding it makes its
+    codes stale, and a serve probing it raises loudly.
 
     ``n_dims`` defaults to the dims recorded in ``_ann_meta.json`` at
     build time — NOT a fixed constant, or a >64-dim index would be
@@ -2113,18 +1813,20 @@ def pq_augment_ann_index(
     and ADC ranking would quietly degrade.  Raises if the meta is
     missing dims and no explicit override is given.
 
-    Manifest roots (r14) take the snapshot-isolated path: new codes land
-    under a fresh generation tag (invisible), the meta (books) write
-    opens a milliseconds-wide loud-refusal window (``books_id``
-    mismatch), and one manifest swap makes the new codes + fingerprints
-    + pairing live together — a crash anywhere leaves a state that
-    either serves the OLD sidecar consistently or refuses loudly, never
-    a wrong answer.
+    Snapshot-isolated and crash-safe: new codes land under a fresh
+    generation tag (invisible), the meta (books) write opens a
+    milliseconds-wide loud-refusal window (``books_id`` mismatch), and
+    one manifest swap makes the new codes + fingerprints + pairing live
+    together — a crash anywhere leaves a state that either serves the
+    OLD sidecar consistently or refuses loudly, never a wrong answer.
+    Superseded codes directories retire behind
+    ``DEFAULT_RETIRE_GRACE_SECONDS``.
     """
-    import shutil
+    import time as _time
 
     from .pq import pq_train, pq_encode
 
+    m = _load_manifest(root)
     if n_dims is None:
         ann_meta_path = os.path.join(root, "_ann_meta.json")
         try:
@@ -2140,115 +1842,6 @@ def pq_augment_ann_index(
                 "vector width."
             )
         n_dims = int(recorded)
-    m = _load_manifest(root)
-    if m is not None:
-        return _pq_augment_manifest(
-            spark, root, m, m_subspaces, n_codes, n_iters, sample_rows,
-            n_dims,
-        )
-    _recover_cells(root)
-    cells = spark.read.parquet(os.path.join(root, "cells"))
-    cell_ddl = cells.schema["cell"].dataType.simpleString()
-    cb = pq_train(
-        cells,
-        m_subspaces=m_subspaces,
-        n_codes=n_codes,
-        sample_rows=sample_rows,
-        n_iters=n_iters,
-        id_col="vec_id",
-        vec_col="cv",
-        n_dims=n_dims,
-    )
-    fp = _cells_fingerprint(root, use_cache=False)
-    cell_fps = _cell_fingerprints(root, use_cache=False)
-    codes_dir = os.path.join(root, "pq_codes")
-    tmp_dir = codes_dir + "__tmp"
-    old_dir = codes_dir + "__old"
-    for d in (tmp_dir, old_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    meta_path = os.path.join(root, "_pq_meta.json")
-    if os.path.exists(meta_path):
-        os.remove(meta_path)  # serving gate off during the swap
-    # two-level layout since r13 (mirrors the cells tree): the initial
-    # encode lands under ingest_batch=-1 so the streaming ingest can
-    # append each micro-batch's codes under its own tagged directory
-    # (pq_append_batch_codes) without breaking partition discovery
-    (
-        pq_encode(
-            cells,
-            cb,
-            id_col="vec_id",
-            vec_col="cv",
-            extra_cols={"cell": cell_ddl},
-        )
-        .withColumn("ingest_batch", F.lit(-1))
-        .write.mode("overwrite")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(tmp_dir)
-    )
-    if os.path.exists(codes_dir):
-        os.rename(codes_dir, old_dir)
-    os.rename(tmp_dir, codes_dir)
-    if os.path.exists(old_dir):
-        shutil.rmtree(old_dir)
-    _write_meta_atomic(
-        meta_path,
-        {
-            "books": cb.books,
-            "n_dims": cb.n_dims,
-            "cells_fingerprint": fp,
-            # v2 (r9): hidden ('.'/'_') entries are skipped by the
-            # walk — versioned so serving can tell "format changed,
-            # re-augment" from "cells tree really changed" when an
-            # older sidecar mismatches (r9 ADVICE)
-            "fingerprint_version": _FINGERPRINT_VERSION,
-            # r13: the gate's selective granularity — serving checks
-            # only its PROBED cells against this map, and the selective
-            # fold's re-encode updates only the folded cells' entries
-            # (the whole-tree digest above stays for debugging and for
-            # pre-r13 readers)
-            "cell_fingerprints": cell_fps,
-            # training dials recorded so maintenance re-augments replay
-            # the operator's geometry AND training budget instead of
-            # silently reverting to defaults (r12 ADVICE)
-            "m_subspaces": m_subspaces,
-            "n_codes": n_codes,
-            "n_iters": n_iters,
-            "sample_rows": sample_rows,
-        },
-    )
-    # An index built before the bandwidth stamp existed (or whose probe
-    # failed) gets a second chance here — augmentation is the moment a
-    # deployment opts into the float-vs-PQ choice the stamp informs.
-    try:
-        with open(os.path.join(root, "_ann_meta.json")) as f:
-            has_stamp = "bandwidth_mbps" in json.load(f)
-    except (OSError, ValueError):
-        has_stamp = True  # unreadable meta: nothing to stamp into
-    if not has_stamp:
-        _stamp_bandwidth(root)
-    return root
-
-
-def _pq_augment_manifest(
-    spark: SparkSession,
-    root: str,
-    m: dict,
-    m_subspaces: int,
-    n_codes: int,
-    n_iters: int,
-    sample_rows: int,
-    n_dims: int,
-    retire_grace_seconds: float = DEFAULT_RETIRE_GRACE_SECONDS,
-) -> str:
-    """Manifest-mode full augmentation (train + whole-corpus encode) —
-    see :func:`pq_augment_ann_index`'s manifest paragraph for the
-    commit-order argument."""
-    import time as _time
-
-    from .pq import pq_train, pq_encode
-
     codes_dir = os.path.join(root, "pq_codes")
     _sweep_orphan_dirs(root, m, sorted(m["cells"]))
     g = int(m["gen"]) + 1
@@ -2311,11 +1904,9 @@ def _pq_augment_manifest(
             "books": cb.books,
             "n_dims": cb.n_dims,
             "books_id": bid,
-            "cells_fingerprint": _cells_fingerprint(root, use_cache=False),
-            "fingerprint_version": _FINGERPRINT_VERSION,
-            # vestigial in manifest mode (the manifest's code_fps is the
-            # serving gate); kept truthful for tools and legacy readers
-            "cell_fingerprints": digests,
+            # training dials recorded so maintenance re-augments replay
+            # the operator's geometry AND training budget instead of
+            # silently reverting to defaults (r12 ADVICE)
             "m_subspaces": m_subspaces,
             "n_codes": n_codes,
             "n_iters": n_iters,
@@ -2331,13 +1922,16 @@ def _pq_augment_manifest(
         m["codes"][c] = [tag]
     m["code_fps"] = digests
     m["books_id"] = bid
-    _prune_retired(root, m, retire_grace_seconds)
+    _prune_retired(root, m, DEFAULT_RETIRE_GRACE_SECONDS)
     _write_manifest(root, m)
+    # an index whose build-time bandwidth probe failed gets a second
+    # chance here — augmentation is the moment a deployment opts into
+    # the float-vs-PQ choice the stamp informs
     try:
         with open(os.path.join(root, "_ann_meta.json")) as f:
             has_stamp = "bandwidth_mbps" in json.load(f)
     except (OSError, ValueError):
-        has_stamp = True
+        has_stamp = True  # unreadable meta: nothing to stamp into
     if not has_stamp:
         _stamp_bandwidth(root)
     return root
@@ -2375,13 +1969,12 @@ def pq_reencode_stale_cells(
     path is touched) and ONE manifest swap moves codes set +
     fingerprints together; a crash anywhere leaves the old state
     serving (stale cells keep refusing) and the new generation's dirs
-    orphaned for the next maintenance sweep.  Legacy roots migrate on
-    touch (:func:`_ensure_manifest`)."""
+    orphaned for the next maintenance sweep."""
     import time as _time
 
     from .pq import pq_encode
 
-    m = _ensure_manifest(root)
+    m = _load_manifest(root)
     cb = _sidecar_books(root, m)
     if cb is None:
         raise ValueError(
@@ -2496,8 +2089,10 @@ def _encode_batch_codes(
     content.  Refreshing unconditionally would launder that staleness
     into a passing gate over rows that have no codes — silently wrong
     top-k, the exact failure the fail-closed contract exists to
-    prevent.  A brand-new cell (no live dirs, no recorded fingerprint)
-    counts as fresh: all of its rows ARE this batch.
+    prevent.  A cell whose live codes directories are gone (deleted by
+    hand) is not fresh either: its base rows have no codes.  A brand-new
+    cell (no live dirs, no recorded fingerprint) counts as fresh: all
+    of its rows ARE this batch.
     """
     from .pq import pq_encode
 
@@ -2509,6 +2104,7 @@ def _encode_batch_codes(
         for c in touched
         if m["code_fps"].get(str(c))
         == _manifest_cell_digest(root, m, str(c), use_cache=False)
+        and all(map(os.path.isdir, _live_paths(root, "pq_codes", m, [c])))
     ]
     if not fresh:
         return {}
@@ -2587,7 +2183,7 @@ def pq_append_batch_codes(
             "partition, not a batch — guarded callers must skip codes "
             "maintenance for untagged appends."
         )
-    m = _ensure_manifest(root)
+    m = _load_manifest(root)
     if _sidecar_books(root, m) is None:
         raise ValueError(
             f"pq_append_batch_codes: no usable PQ sidecar at {root} "
@@ -2666,8 +2262,6 @@ def ann_search_pq(
     # ingest commit or fold pairs codes, cells and fingerprints from
     # the SAME snapshot at every instant (see the manifest section)
     manifest = _load_manifest(root)
-    if manifest is None:
-        _recover_cells(root)
     meta_path = os.path.join(root, "_pq_meta.json")
     if not os.path.exists(meta_path):
         raise ValueError(
@@ -2676,45 +2270,16 @@ def ann_search_pq(
         )
     with open(meta_path) as f:
         meta = json.load(f)
-    if manifest is not None:
-        # codes/books pairing: a mid-retrain (or crashed-augment) state
-        # mismatches — refuse loudly rather than rank ADC sims computed
-        # from foreign codebooks
-        meta_bid = meta.get("books_id") or _books_id(meta.get("books", []))
-        if manifest.get("books_id") != meta_bid:
-            raise ValueError(
-                f"ann_search_pq: the PQ sidecar at {root} is mid-retrain "
-                "(or a retrain crashed): the manifest's codes were not "
-                "written by the codebooks in _pq_meta.json — re-run "
-                "pq_augment_ann_index(spark, root)."
-            )
-        recorded_cell_fps = manifest["code_fps"]
-    else:
-        recorded_cell_fps = meta.get("cell_fingerprints")
-    # r13 sidecars gate per PROBED cell (after the probe set is known,
-    # below): ingest into cell A must not block serves probing only
-    # untouched cell B.  Legacy sidecars keep the whole-tree gate.
-    if manifest is None and recorded_cell_fps is None and (
-        meta["cells_fingerprint"] != _cells_fingerprint(root)
-    ):
-        if meta.get("fingerprint_version") != _FINGERPRINT_VERSION:
-            # an older sidecar whose recorded digest predates the
-            # current walk format mismatches on EVERY serve even when
-            # the cells tree is untouched — name the real cause so
-            # operators don't chase a phantom ingest race (r9 ADVICE)
-            raise ValueError(
-                f"ann_search_pq: the PQ sidecar at {root} records a "
-                f"v{meta.get('fingerprint_version', 1)} cells "
-                f"fingerprint but this engine computes "
-                f"v{_FINGERPRINT_VERSION} (the digest format changed: "
-                "hidden '.'/'_' entries are no longer walked). The "
-                "codes may be fine but cannot be verified — re-run "
-                "pq_augment_ann_index(spark, root) once to re-pin."
-            )
+    # codes/books pairing: a mid-retrain (or crashed-augment) state
+    # mismatches — refuse loudly rather than rank ADC sims computed from
+    # foreign codebooks
+    meta_bid = meta.get("books_id") or _books_id(meta.get("books", []))
+    if manifest.get("books_id") != meta_bid:
         raise ValueError(
-            f"ann_search_pq: the cells tree at {root} changed since the "
-            "PQ sidecar was built (ingest/compaction/rebuild) — the "
-            "codes are STALE. Re-run pq_augment_ann_index(spark, root)."
+            f"ann_search_pq: the PQ sidecar at {root} is mid-retrain "
+            "(or a retrain crashed): the manifest's codes were not "
+            "written by the codebooks in _pq_meta.json — re-run "
+            "pq_augment_ann_index(spark, root)."
         )
     cb = PQCodebooks(
         books=tuple(tuple(tuple(c) for c in b) for b in meta["books"]),
@@ -2779,26 +2344,21 @@ def ann_search_pq(
             "cells; shrink the query set / nprobe or raise the cap "
             "explicitly"
         )
-    if recorded_cell_fps is not None:
-        if manifest is not None:
-            current_fps = {
-                str(c): _manifest_cell_digest(root, manifest, str(c))
-                for c in probe_cells
-            }
-        else:
-            current_fps = _cell_fingerprints(root, cells=probe_cells)
-        stale = [
-            c
-            for c in probe_cells
-            if current_fps.get(str(c)) != recorded_cell_fps.get(str(c))
-        ]
-        if stale:
-            raise ValueError(
-                f"ann_search_pq: probed cells {stale} at {root} changed "
-                "since their PQ codes were written (ingest/fold) — those "
-                "codes are STALE. Run pq_reencode_stale_cells(spark, "
-                "root) (or pq_augment_ann_index to retrain)."
-            )
+    # per PROBED cell gate (r13): ingest into cell A must not block
+    # serves probing only untouched cell B
+    stale = [
+        c
+        for c in probe_cells
+        if _manifest_cell_digest(root, manifest, str(c))
+        != manifest["code_fps"].get(str(c))
+    ]
+    if stale:
+        raise ValueError(
+            f"ann_search_pq: probed cells {stale} at {root} changed "
+            "since their PQ codes were written (ingest/fold) — those "
+            "codes are STALE. Run pq_reencode_stale_cells(spark, "
+            "root) (or pq_augment_ann_index to retrain)."
+        )
     if _stop_after == "probe":
         cell_ddl = _cell_ddl
         return spark.createDataFrame(
@@ -2950,27 +2510,20 @@ def ann_search_pq(
                     schema=adc_pa_schema,
                 )
 
-    if manifest is not None:
-        code_paths = _live_paths(root, "pq_codes", manifest, probe_cells)
-        if not code_paths:
-            # every probed cell is codeless under this snapshot — and
-            # consistent (the per-cell gate above passed), i.e. empty
-            return spark.createDataFrame(
-                [],
-                f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
-                "rank int",
-            )
-        codes_df = (
-            spark.read.option("basePath", os.path.join(root, "pq_codes"))
-            .parquet(*code_paths)  # pinned snapshot, static pruning
-            .select("cell", "vec_id", "codes", "vnorm")
+    code_paths = _live_paths(root, "pq_codes", manifest, probe_cells)
+    if not code_paths:
+        # every probed cell is codeless under this snapshot — and
+        # consistent (the per-cell gate above passed), i.e. empty
+        return spark.createDataFrame(
+            [],
+            f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
+            "rank int",
         )
-    else:
-        codes_df = (
-            spark.read.parquet(os.path.join(root, "pq_codes"))
-            .where(F.col("cell").isin(probe_cells))  # static prune
-            .select("cell", "vec_id", "codes", "vnorm")
-        )
+    codes_df = (
+        spark.read.option("basePath", os.path.join(root, "pq_codes"))
+        .parquet(*code_paths)  # pinned snapshot, static pruning
+        .select("cell", "vec_id", "codes", "vnorm")
+    )
     scored = codes_df.mapInArrow(_adc, adc_ddl)
     w = Window.partitionBy("query_id").orderBy(
         F.col("adc_sim").desc(), F.col("neighbor_id").asc()
@@ -3005,34 +2558,20 @@ def ann_search_pq(
         F.col(vec_col).alias("qv"),
         norm(F.col(vec_col)).alias("qn"),
     )
-    if manifest is not None:
-        float_paths = _live_paths(root, "cells", manifest, probe_cells)
-        if not float_paths:  # codes without cells: nothing to re-rank
-            return spark.createDataFrame(
-                [],
-                f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
-                "rank int",
-            )
-        # non-empty: codes above came from these cells' live content
-        # (gate invariant)
-        floats = (
-            _read_cells(spark, root, manifest, float_paths)
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("cv"),
-                F.col("cn"),
-            )
+    float_paths = _live_paths(root, "cells", manifest, probe_cells)
+    if not float_paths:  # codes without cells: nothing to re-rank
+        return spark.createDataFrame(
+            [],
+            f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
+            "rank int",
         )
-    else:
-        floats = (
-            spark.read.parquet(os.path.join(root, "cells"))
-            .where(F.col("cell").isin(probe_cells))
-            .select(
-                F.col("vec_id").alias("neighbor_id"),
-                F.col("cv"),
-                F.col("cn"),
-            )
-        )
+    # non-empty: codes above came from these cells' live content (gate
+    # invariant)
+    floats = _read_cells(spark, root, manifest, float_paths).select(
+        F.col("vec_id").alias("neighbor_id"),
+        F.col("cv"),
+        F.col("cn"),
+    )
     probed_bytes = _probed_cell_bytes(root, probe_cells, manifest)
     if len(q_rows) * n_cand <= max_pushdown_candidates and (
         probed_bytes is None or probed_bytes >= min_pushdown_bytes
@@ -3153,13 +2692,9 @@ def ann_serving_policy(
             "ADC gather at local-disk bandwidth (r11 measured)",
         )
         return out
+    m = _load_manifest(root)
     try:
-        m = _load_manifest(root)
-        cells_bytes = (
-            _live_tree_bytes(root, m)
-            if m is not None
-            else _tree_bytes(os.path.join(root, "cells"))
-        )
+        cells_bytes = _live_tree_bytes(root, m)
     except OSError:
         cells_bytes = None
     if cells_bytes is None or not n_centroids:

@@ -335,8 +335,8 @@ def q_ann_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving paths, in one row: ``build_ann_index`` on HALF the
     embeddings (Lloyd train + GEMM assign + cell-partitioned parquet),
     ``ann_index_add_batch`` ingesting the other half against the frozen
-    centroids (which first runs the ``_recover_cells`` crash-heal
-    check), ``ann_index_compact`` folding the ingest delta back into
+    centroids (committed through the root's snapshot manifest),
+    ``ann_index_compact`` folding the ingest delta back into
     the base layout, ``pq_augment_ann_index`` (codes sidecar over the
     compacted cells), then
 

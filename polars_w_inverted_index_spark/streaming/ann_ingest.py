@@ -44,9 +44,10 @@ Per-batch metadata is O(touched cells), never O(#cells) (r13 VERDICT
 task 4): the batch's own GEMM assignment names its cells, the manifest
 carries every cell's delta count for the dial, and replay cleanup
 resolves its directories from the manifest + the assignment — no
-``cell=*`` globs in the hot path.  The one full tree walk left is the
-legacy-root migration in ``_ensure_manifest`` (once per index
-lifetime).
+``cell=*`` globs in the hot path.  The only full tree listing is the
+one ``build_ann_index`` makes to write a root's first manifest; a root
+without a readable manifest is refused with a ValueError that says to
+rebuild it.
 
 Commit shape (pinned by tests/test_plan_budgets.py and
 tests/test_commit_shape.py): one parquet file per touched cell per
@@ -86,8 +87,8 @@ from ..operators.ann_index import (
 
 # Autocompaction dial (r12): fold the per-batch delta directories back
 # into the base layout once any cell has accumulated more than this
-# many.  Measured knee (tools/ann_frag_knee.py, result JSON beside it;
-# SAME-SIZE fragmented-vs-compacted warm serves on an incompressible
+# many.  Measured knee (a one-shot benchmark, since deleted; SAME-SIZE
+# fragmented-vs-compacted warm serves on an incompressible
 # 0.9–3.9 M-row corpus): amplification 1.41× at 4 dirs, 1.60× at 8,
 # 1.84× at 16, then 3.09× at 32 and 3.53× at 64 — 16 is the last
 # point inside the ≤2× discipline the LSM postings index pins its
@@ -182,7 +183,8 @@ def _maybe_autocompact(
     siblings past the dial), so a long-running stream pays a write
     stall bounded by the offending cells' bytes instead of relying on
     an external scheduler to ever run :func:`ann_index_compact` (serve
-    cost measured ~1.9× at 64 accumulated dirs, tools/ann_frag_knee.py).
+    cost measured ~1.9× at 64 accumulated dirs — 17.96 s fragmented vs
+    9.40 s compacted, with a one-shot benchmark since deleted).
 
     Selective since r13 (r12 VERDICT #1): under skewed ingest the fold
     follows the hot cells — :func:`ann_index_compact_cells` reads and
@@ -192,16 +194,14 @@ def _maybe_autocompact(
     that same commit (existing codebooks — geometry and training dials
     untouched), so concurrent float AND PQ serves stay consistent
     through the fold and ``ann_search_pq`` needs no separate refresh
-    pass.  A legacy sidecar whose codes/books pairing the manifest
-    cannot verify (pre-``books_id`` metas, crashed retrains) falls back
-    to one full ``pq_augment_ann_index`` replaying the dials recorded
-    at augment time (m_subspaces/n_codes/n_iters/sample_rows — r12
-    ADVICE), which upgrades it for every later trigger."""
+    pass.  A sidecar whose codes/books pairing the manifest cannot
+    verify (a crashed retrain) falls back to one full
+    ``pq_augment_ann_index`` replaying the dials recorded at augment
+    time (m_subspaces/n_codes/n_iters/sample_rows — r12 ADVICE), which
+    re-pairs it for every later trigger."""
     if max_batch_dirs_per_cell is None:
         return False
     m = AI._load_manifest(root)
-    if m is None:  # wrapper always ensures one; direct callers may not
-        m = AI._ensure_manifest(root)
     offending = _cells_past_dial(m, int(max_batch_dirs_per_cell))
     if not offending:
         return False
@@ -212,11 +212,11 @@ def _maybe_autocompact(
     if os.path.exists(pq_meta):
         m = AI._load_manifest(root)
         if AI._sidecar_books(root, m) is None:
-            # legacy/unpaired sidecar: one full augment — replaying the
-            # dials recorded at augment time (r12 ADVICE; older metas
-            # recover geometry from the books and keep default training
-            # dials) — migrates it to the manifest-paired gate, so
-            # every later trigger takes the inline path above
+            # unpaired sidecar (a crashed retrain): one full augment —
+            # replaying the dials recorded at augment time (r12 ADVICE;
+            # a meta without them recovers geometry from the books and
+            # keeps default training dials) — re-pairs codes and books,
+            # so every later trigger takes the inline path above
             try:
                 with open(pq_meta) as f:
                     meta = json.load(f)
@@ -269,7 +269,7 @@ def ann_ingest_batch(
                 f"{meta['batch_id']}: checkpoint was reset — rebuild the "
                 f"index or replay without batch_id."
             )
-    m = AI._ensure_manifest(root)
+    m = AI._load_manifest(root)
     assigned, touched, n = AI._assign_batch_checkpoint(
         spark, root, batch_df, id_col, vec_col
     )

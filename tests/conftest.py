@@ -6,7 +6,9 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout holding this conftest, whichever directory it lives in
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from polars_w_inverted_index_spark.session import get_session  # noqa: E402
 

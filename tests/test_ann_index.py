@@ -362,58 +362,6 @@ def test_dim_mismatch_fails_loudly(spark, emb, index_root):
         ann_search(spark, index_root, narrow, k=3, nprobe=2)
 
 
-def test_legacy_layout_gate_migration_and_swap_recovery(spark, emb, tmp_path):
-    """(a) Ingest into a pre-ingest_batch (flat-cell) index is refused
-    loudly — a mixed-depth append would break partition discovery for
-    the whole table; (b) ann_index_compact migrates the legacy layout;
-    (c) a compaction swap interrupted between its two renames self-heals
-    on the next serve (the complete staging dir is promoted)."""
-    import os as _os
-    import shutil
-
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
-        ann_index_compact,
-    )
-
-    old_half = emb.where(F.col("vec_id") % 2 == 0)
-    new_half = emb.where(F.col("vec_id") % 2 == 1)
-    root = str(tmp_path / "ann_legacy")
-    build_ann_index(old_half, root, n_centroids=6, n_iters=1)
-    # forge the legacy flat layout: same rows, cell-only partitioning
-    cells = _os.path.join(root, "cells")
-    flat = _os.path.join(root, "cells_flat")
-    spark.read.parquet(cells).select("cell", "vec_id", "cv", "cn").write \
-        .mode("overwrite").partitionBy("cell").parquet(flat)
-    shutil.rmtree(cells)
-    _os.rename(flat, cells)
-    # a real pre-r14 root has no manifest — drop the build's
-    _os.remove(_os.path.join(root, "_cells_manifest.json"))
-
-    with pytest.raises(ValueError, match="pre-ingest_batch"):
-        ann_index_add_batch(spark, root, new_half, batch_tag=0)
-
-    # zero-delta legacy migration: rewrites the layout but folds 0
-    # deltas and must SAY 0 (ADVICE r5) — migration success is observed
-    # by ingest now being unblocked, not by the fold count
-    assert ann_index_compact(spark, root) == 0
-    assert ann_index_add_batch(spark, root, new_half, batch_tag=0) == \
-        new_half.count()
-
-    queries = emb.where(F.col("vec_id") % 100 == 0)
-    exact = _key(brute_force_topk(emb, queries, k=5))
-    assert _key(ann_search(spark, root, queries, k=5, nprobe=6)) == exact
-
-    # simulate a PRE-r14 root that crashed between the legacy swap's two
-    # renames: cells gone, complete staging dir left behind, no manifest
-    # (manifest-mode folds never rename, so this shape only exists on
-    # legacy roots — drop the manifest to forge one)
-    _os.remove(_os.path.join(root, "_cells_manifest.json"))
-    _os.rename(cells, _os.path.join(root, "cells__compacting"))
-    assert _key(ann_search(spark, root, queries, k=5, nprobe=6)) == exact
-    assert _os.path.isdir(cells)  # recovery promoted the staging dir
-
-
 # ---------------------------------------------------------------------------
 # IVF-PQ sidecar
 # ---------------------------------------------------------------------------
@@ -771,46 +719,6 @@ def test_kmeans_update_excludes_null_vectors(spark):
     assert key(c1) == key(c2)
 
 
-def test_pq_fingerprint_version_mismatch_names_cause(spark, emb, tmp_path):
-    """r9 ADVICE: a sidecar recorded under an older fingerprint FORMAT
-    mismatches on every serve even with an untouched cells tree — the
-    error must name the format change, not a phantom ingest race; a
-    current-version mismatch stays the plain STALE message."""
-    import json as _json
-
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_search_pq,
-        pq_augment_ann_index,
-    )
-
-    root = str(tmp_path / "pq_ver")
-    build_ann_index(emb.where(F.col("vec_id") < 150), root, n_centroids=2)
-    pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
-    meta_path = os.path.join(root, "_pq_meta.json")
-    with open(meta_path) as f:
-        meta = _json.load(f)
-    assert meta["fingerprint_version"] == 2  # pinned: bump = new test
-
-    q = emb.where(F.col("vec_id") < 2)
-    # a real pre-r13 sidecar has no per-cell map and a pre-r14 root has
-    # no manifest — drop both so the legacy whole-tree gate (the path
-    # under test) engages
-    os.remove(os.path.join(root, "_cells_manifest.json"))
-    legacy = dict(meta, cells_fingerprint="0" * 64)
-    legacy.pop("fingerprint_version")
-    legacy.pop("cell_fingerprints")
-    with open(meta_path, "w") as f:
-        _json.dump(legacy, f)
-    with pytest.raises(ValueError, match="digest format changed"):
-        ann_search_pq(spark, root, q, k=1)
-    v2 = dict(meta, cells_fingerprint="0" * 64)
-    v2.pop("cell_fingerprints")
-    with open(meta_path, "w") as f:
-        _json.dump(v2, f)
-    with pytest.raises(ValueError, match="STALE"):
-        ann_search_pq(spark, root, q, k=1)
-
-
 def test_pq_candidate_pushdown_identical_and_pruned(spark, emb, tmp_path):
     """r10: the rerank's candidate-ID pushdown (engaged when the probed
     float cells are big enough to out-cost its extra job; forced here
@@ -869,23 +777,24 @@ def test_probed_cell_bytes_unlistable_root_is_none(tmp_path, monkeypatch):
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
 
+    m = {"cells": {"0": [-1]}}
     # URI-style / nonexistent roots: no local `cells` dir -> None
-    assert ai._probed_cell_bytes("s3a://bucket/index", [0, 1]) is None
-    assert ai._probed_cell_bytes(str(tmp_path / "missing"), [0]) is None
+    assert ai._probed_cell_bytes("s3a://bucket/index", [0, 1], m) is None
+    assert ai._probed_cell_bytes(str(tmp_path / "missing"), [0], m) is None
 
-    # a real tree counts bytes (hidden entries skipped)
+    # a real tree counts the live bytes (hidden entries skipped)
     root = tmp_path / "idx"
-    cell = root / "cells" / "cell=0"
-    cell.mkdir(parents=True)
-    (cell / "part-0.parquet").write_bytes(b"x" * 100)
-    (cell / "_SUCCESS").write_bytes(b"")
-    assert ai._probed_cell_bytes(str(root), [0]) == 100
+    live = root / "cells" / "cell=0" / "ingest_batch=-1"
+    live.mkdir(parents=True)
+    (live / "part-0.parquet").write_bytes(b"x" * 100)
+    (live / "_SUCCESS").write_bytes(b"")
+    assert ai._probed_cell_bytes(str(root), [0], m) == 100
 
     # a probed cell with NO directory is an EMPTY cell (a centroid
     # that is nobody's argmax gets no partition dir) — 0 bytes, not an
     # unlistable tree; returning None here would engage the pushdown's
     # extra job on every serve of a listable index (r11 review)
-    assert ai._probed_cell_bytes(str(root), [0, 7]) == 100
+    assert ai._probed_cell_bytes(str(root), [0, 7], m) == 100
 
     # a walk-time listing error (permission-denied dir under a listable
     # root; simulated — tests run as root, which bypasses mode bits)
@@ -897,7 +806,7 @@ def test_probed_cell_bytes_unlistable_root_is_none(tmp_path, monkeypatch):
         return real_scandir(path)
 
     monkeypatch.setattr(os, "scandir", deny)
-    assert ai._probed_cell_bytes(str(root), [0]) is None
+    assert ai._probed_cell_bytes(str(root), [0], m) is None
 
 
 def test_ingest_autocompact_dial_folds_and_reaugments(spark, emb, tmp_path):
@@ -1080,32 +989,6 @@ def test_compact_cells_folds_only_requested(spark, emb, tmp_path):
     )
     want = _key(brute_force_topk(union, q, k=5, allow_full_scan=True))
     assert _key(ann_search(spark, root, q, k=5, nprobe=6)) == want
-
-
-def test_compact_cells_refuses_legacy_layout(spark, emb, tmp_path):
-    """A pre-ingest_batch (flat-cell) index must migrate through the
-    full compact; a selective fold over a mixed tree would break
-    partition discovery for the whole table."""
-    import glob
-    import shutil
-
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_compact_cells,
-    )
-
-    root = str(tmp_path / "sel_legacy")
-    build_ann_index(emb.where(F.col("vec_id") < 100), root,
-                    n_centroids=2, n_iters=0)
-    # flatten one cell to the legacy layout
-    cell = glob.glob(f"{root}/cells/cell=*")[0]
-    batch_dir = glob.glob(f"{cell}/ingest_batch=*")[0]
-    for f in os.listdir(batch_dir):
-        shutil.move(os.path.join(batch_dir, f), os.path.join(cell, f))
-    os.rmdir(batch_dir)
-    # a real flat root predates the manifest too
-    os.remove(os.path.join(root, "_cells_manifest.json"))
-    with pytest.raises(ValueError, match="pre-ingest_batch"):
-        ann_index_compact_cells(spark, root, [0])
 
 
 def test_autocompact_selective_fold_is_per_cell(spark, emb, tmp_path):
@@ -1440,125 +1323,22 @@ def test_encode_at_ingest_keeps_pq_fresh(spark, emb, tmp_path):
     assert pq_reencode_stale_cells(spark, root) == 0
 
 
-def test_legacy_single_level_codes_migrate_via_full_augment(
+def test_missing_codes_tree_disables_ingest_maintenance(
     spark, emb, tmp_path
 ):
-    """A pre-r13.2 single-level codes tree on a pre-r14 (manifest-less)
-    root: the manifest migration drops the unreferenceable flat codes
-    (derived data — meta kept), so the sidecar fails CLOSED everywhere
-    (refresh refuses, serves raise STALE, ingest skips codes
-    maintenance) until the autocompact trigger migrates it with ONE
-    full augment replaying the recorded dials — after which the
-    manifest-paired sidecar serves."""
-    import glob
-    import json as _json
+    """A sidecar whose codes tree was deleted by hand (the manifest and
+    _pq_meta.json still pair them) must NOT take per-batch code appends:
+    recreating the tree from new batches alone would let refreshed
+    fingerprints serve cells whose BASE rows have no codes — silent
+    wrong top-k.  A cell whose live codes directories are gone is not
+    pre-append-fresh, so ingest and a direct append refresh NOTHING
+    (fail closed), no codes tree reappears, a serve over the ingested
+    cells refuses, and a full augment repairs."""
     import shutil
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
     from polars_w_inverted_index_spark.operators.ann_index import (
         ann_search_pq,
-        pq_augment_ann_index,
-        pq_reencode_stale_cells,
-    )
-    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
-
-    root = str(tmp_path / "codes_legacy")
-    base = emb.where(F.col("vec_id") < 200)
-    build_ann_index(base, root, n_centroids=6, n_iters=1)
-    pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
-    # forge the pre-r13.2 state: flatten the codes tree, no manifest,
-    # no books_id pairing in the meta
-    for cell in glob.glob(f"{root}/pq_codes/cell=*"):
-        for batch_dir in glob.glob(os.path.join(cell, "ingest_batch=*")):
-            for f in os.listdir(batch_dir):
-                shutil.move(
-                    os.path.join(batch_dir, f), os.path.join(cell, f)
-                )
-            os.rmdir(batch_dir)
-    os.remove(os.path.join(root, "_cells_manifest.json"))
-    meta = _json.load(open(f"{root}/_pq_meta.json"))
-    for k in ("books_id", "cell_fingerprints"):
-        meta.pop(k, None)
-    with open(f"{root}/_pq_meta.json", "w") as f:
-        _json.dump(meta, f)
-
-    # the refresh migrates the root and finds an unusable sidecar —
-    # loud refusal, never a mixed-layout stage
-    with pytest.raises(ValueError, match="no usable PQ sidecar"):
-        pq_reencode_stale_cells(spark, root)
-    m = ai._load_manifest(root)
-    assert m is not None and m["books_id"] is None
-    assert not os.path.isdir(f"{root}/pq_codes")  # flat codes dropped
-
-    b0 = emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 300))
-    assert ann_ingest_batch(
-        b0, root, batch_id=0, max_batch_dirs_per_cell=None
-    ) == b0.count()
-    assert not glob.glob(f"{root}/pq_codes/cell=*/ingest_batch=0")
-    # a probed cell fails closed — the manifest carries no codes/books
-    # pairing, so the serve refuses naming the repair
-    q = emb.where(F.col("vec_id") % 100 == 0)
-    with pytest.raises(ValueError, match="pq_augment_ann_index"):
-        ann_search_pq(spark, root, q, k=5, nprobe=6, rerank_factor=1000)
-
-    # second batch crosses the dial: the trigger's legacy fallback runs
-    # ONE full augment with the recorded dials, migrating the sidecar
-    b1 = emb.where(F.col("vec_id") >= 300)
-    assert ann_ingest_batch(
-        b1, root, batch_id=1, max_batch_dirs_per_cell=1
-    ) == b1.count()
-    m = ai._load_manifest(root)
-    assert ai._sidecar_books(root, m) is not None  # paired + usable
-    meta = _json.load(open(f"{root}/_pq_meta.json"))
-    assert len(meta["books"]) == 4 and len(meta["books"][0]) == 8
-    want = _key(brute_force_topk(emb, q, k=5))
-    got = ann_search_pq(spark, root, q, k=5, nprobe=6, rerank_factor=1000)
-    assert _key(got) == want
-
-
-def test_legacy_layout_check_is_first_entry_decisive(tmp_path):
-    """The layout guard runs per micro-batch on both trees, so it must
-    answer from the first decisive entry instead of listing every cell
-    (r13.2): direct file → legacy True, ingest_batch= subdir → current
-    False, hidden entries and empty cells skipped."""
-    import polars_w_inverted_index_spark.operators.ann_index as ai
-
-    cells = tmp_path / "cells"
-    # empty tree / empty cell dirs: not legacy
-    (cells / "cell=0").mkdir(parents=True)
-    assert ai._legacy_cell_layout(str(cells)) is False
-    # hidden entries are ignored
-    (cells / "cell=0" / "_SUCCESS").write_bytes(b"")
-    assert ai._legacy_cell_layout(str(cells)) is False
-    # homogeneous two-level: False (decided at the first subdir entry)
-    (cells / "cell=0" / "ingest_batch=-1").mkdir()
-    (cells / "cell=1" / "ingest_batch=-1").mkdir(parents=True)
-    assert ai._legacy_cell_layout(str(cells)) is False
-    # homogeneous flat: True (decided at the first file entry)
-    import shutil
-
-    for c in ("cell=0", "cell=1"):
-        shutil.rmtree(cells / c)
-        (cells / c).mkdir()
-        (cells / c / "part-0.parquet").write_bytes(b"x")
-    assert ai._legacy_cell_layout(str(cells)) is True
-
-
-def test_missing_codes_tree_disables_ingest_maintenance(
-    spark, emb, tmp_path
-):
-    """A _pq_meta.json whose codes tree was deleted (manual surgery —
-    here forged on a pre-r14 root: no manifest) must NOT take per-batch
-    code appends: recreating the tree from new batches alone would let
-    refreshed fingerprints serve cells whose BASE rows have no codes —
-    silent wrong top-k.  The r14 freshness guard makes this structural:
-    no cell has a recorded fingerprint, so nothing is pre-append-fresh,
-    the append refreshes NOTHING (fail closed), ingest creates no codes
-    tree, and a full augment repairs."""
-    import shutil
-
-    import polars_w_inverted_index_spark.operators.ann_index as ai
-    from polars_w_inverted_index_spark.operators.ann_index import (
         pq_append_batch_codes,
         pq_augment_ann_index,
     )
@@ -1568,19 +1348,146 @@ def test_missing_codes_tree_disables_ingest_maintenance(
     build_ann_index(emb.where(F.col("vec_id") < 150), root,
                     n_centroids=4, n_iters=0)
     pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
+    fps_before = dict(ai._load_manifest(root)["code_fps"])
     shutil.rmtree(os.path.join(root, "pq_codes"))
-    os.remove(os.path.join(root, "_cells_manifest.json"))  # pre-r14 root
     b0 = emb.where(F.col("vec_id").between(150, 200))
     assert ann_ingest_batch(
         b0, root, batch_id=0, max_batch_dirs_per_cell=None
     ) == b0.count()
     assert not os.path.isdir(os.path.join(root, "pq_codes"))  # skipped
+    assert ai._load_manifest(root)["code_fps"] == fps_before
     # a direct append refreshes nothing — and materializes no codes
     assert pq_append_batch_codes(spark, root, batch_tag=0) == []
     assert not os.path.isdir(os.path.join(root, "pq_codes"))
+    q = emb.where(F.col("vec_id") % 50 == 0)
+    with pytest.raises(ValueError, match="STALE"):
+        ann_search_pq(spark, root, q, k=5, nprobe=4, rerank_factor=1000)
     pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
     m = ai._load_manifest(root)
     assert ai._sidecar_books(root, m) is not None  # repaired + paired
+    want = _key(brute_force_topk(emb.where(F.col("vec_id") <= 200), q, k=5))
+    got = ann_search_pq(spark, root, q, k=5, nprobe=4, rerank_factor=1000)
+    assert _key(got) == want
+
+
+def _refusing_entry_points():
+    """Every entry point that needs a root's manifest, as
+    ``name -> call(spark, deployment_dir, root, batch)``."""
+    from polars_w_inverted_index_spark.operators import ann_index as ai
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        ann_deployment_rebuild,
+    )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
+
+    return {
+        "ann_index_add_batch": lambda spark, dep, root, batch: (
+            ai.ann_index_add_batch(spark, root, batch, batch_tag=0)
+        ),
+        "ann_ingest_batch": lambda spark, dep, root, batch: (
+            ann_ingest_batch(batch, root, batch_id=0)
+        ),
+        "ann_index_compact": lambda spark, dep, root, batch: (
+            ai.ann_index_compact(spark, root)
+        ),
+        "ann_search": lambda spark, dep, root, batch: (
+            ai.ann_search(spark, root, batch, k=3)
+        ),
+        "ann_search_pq": lambda spark, dep, root, batch: (
+            ai.ann_search_pq(spark, root, batch, k=3)
+        ),
+        "pq_augment_ann_index": lambda spark, dep, root, batch: (
+            ai.pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
+        ),
+        "ann_deployment_rebuild": lambda spark, dep, root, batch: (
+            ann_deployment_rebuild(spark, dep)
+        ),
+    }
+
+
+@pytest.fixture(scope="module")
+def pq_deployment(tmp_path_factory, emb):
+    """A one-root deployment with a PQ sidecar, copied per test."""
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        ann_deployment_build,
+    )
+
+    dep = str(tmp_path_factory.mktemp("refuse") / "dep")
+    ann_deployment_build(
+        emb.where(F.col("vec_id") < 100), dep, n_centroids=2, n_iters=0,
+        pq={"m_subspaces": 4, "n_codes": 8},
+    )
+    return dep
+
+
+def _damaged_copy(template, dest, damage):
+    """Copy the deployment and remove or truncate its root's manifest;
+    returns (deployment_dir, root)."""
+    import shutil
+
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        resolve_ann_root,
+    )
+
+    shutil.copytree(template, dest)
+    root = resolve_ann_root(dest)
+    path = os.path.join(root, "_cells_manifest.json")
+    if damage == "removed":
+        os.remove(path)
+    else:
+        raw = open(path).read()
+        with open(path, "w") as f:
+            f.write(raw[: len(raw) // 2])
+    return dest, root
+
+
+def _tree_state(d):
+    return {
+        os.path.relpath(os.path.join(dp, n), d): (
+            os.path.getsize(os.path.join(dp, n)),
+            os.stat(os.path.join(dp, n)).st_mtime_ns,
+        )
+        for dp, dn, fn in os.walk(d)
+        for n in fn + dn
+    }
+
+
+@pytest.mark.parametrize("damage", ["removed", "truncated"])
+@pytest.mark.parametrize("entry", sorted(_refusing_entry_points()))
+def test_root_without_manifest_is_refused(
+    spark, emb, pq_deployment, tmp_path, damage, entry
+):
+    """A root whose manifest is missing or torn is refused by every
+    entry point that needs one: a ValueError naming the root and the
+    repair (build_ann_index), and not one file written, moved or
+    deleted under the deployment."""
+    dep, root = _damaged_copy(pq_deployment, str(tmp_path / "dep"), damage)
+    batch = emb.where(F.col("vec_id").between(100, 110))
+    before = _tree_state(dep)
+    with pytest.raises(ValueError, match="build_ann_index") as e:
+        _refusing_entry_points()[entry](spark, dep, root, batch)
+    assert root in str(e.value)
+    assert _tree_state(dep) == before
+
+
+@pytest.mark.parametrize("damage", ["removed", "truncated"])
+def test_build_over_root_without_manifest(
+    spark, emb, pq_deployment, tmp_path, damage
+):
+    """build_ann_index writes a root's first manifest, so it is the one
+    entry point that accepts a root without one — and the rebuilt root
+    serves."""
+    from polars_w_inverted_index_spark.operators import ann_index as ai
+
+    _dep, root = _damaged_copy(
+        pq_deployment, str(tmp_path / "dep"), damage
+    )
+    corpus = emb.where(F.col("vec_id") < 100)
+    build_ann_index(corpus, root, n_centroids=2, n_iters=0)
+    m = ai._load_manifest(root)
+    assert m["codes"] == {} and m["cells_schema"]
+    q = emb.where(F.col("vec_id") < 3)
+    want = _key(brute_force_topk(corpus, q, k=3))
+    assert _key(ann_search(spark, root, q, k=3, nprobe=2)) == want
 
 
 # ---------------------------------------------------------------------------

@@ -220,7 +220,7 @@ def test_ann_ingest_and_fold_write_one_file_per_cell(spark, tmp_path):
 def test_cells_readers_use_the_recorded_schema(spark, tmp_path):
     """The build records the cells tree's schema (cell typed like the
     centroid ids); it is the schema of the written files, and a
-    manifest without it still reads (with inference)."""
+    manifest without it is refused."""
     from polars_w_inverted_index_spark.operators import ann_index as AI
 
     root = str(tmp_path / "ann")
@@ -232,8 +232,14 @@ def test_cells_readers_use_the_recorded_schema(spark, tmp_path):
     )
     paths = AI._live_paths(root, "cells", m)
     known = AI._read_cells(spark, root, m, paths)
+    inferred = spark.read.option(
+        "basePath", os.path.join(root, "cells")
+    ).parquet(*paths)
     del m["cells_schema"]
-    inferred = AI._read_cells(spark, root, m, paths)
+    with open(os.path.join(root, "_cells_manifest.json"), "w") as f:
+        json.dump(m, f)
+    with pytest.raises(ValueError, match="cells_schema"):
+        AI._load_manifest(root)
     cols = ["vec_id", "cv", "cn"]
     assert known.select(cols).schema == inferred.select(cols).schema
     assert sorted(known.select(cols).collect()) == sorted(

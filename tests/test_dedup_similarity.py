@@ -84,14 +84,18 @@ def test_dedup_clusters_transitive(spark):
     transitively to min-id labels, independent of pair direction."""
     pairs = spark.createDataFrame(
         # component {1,2,3} given indirectly; component {5,6};
-        # chain 10-11-12-13-14 exercises multi-round propagation
-        [(2, 1), (2, 3), (5, 6), (10, 11), (11, 12), (12, 13), (13, 14)],
+        # chain 10-11-12-13-14 exercises multi-round propagation;
+        # duplicate, reversed and self pairs change nothing, and a node
+        # paired only with itself is a cluster of one
+        [(2, 1), (2, 3), (5, 6), (10, 11), (11, 12), (12, 13), (13, 14),
+         (2, 1), (1, 2), (6, 5), (14, 13), (3, 3), (20, 20)],
         "doc_a long, doc_b long",
     )
     want = {
         1: 1, 2: 1, 3: 1,
         5: 5, 6: 5,
         10: 10, 11: 10, 12: 10, 13: 10, 14: 10,
+        20: 20,
     }
     # driver_threshold=0 forces the distributed propagation loop; the
     # default takes the driver union-find fast path — same contract

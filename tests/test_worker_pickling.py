@@ -19,10 +19,12 @@ import sys
 import textwrap
 
 
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 _DRIVER = textwrap.dedent(
     """
     import sys
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, sys.argv[1])  # the checkout under test
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
@@ -113,7 +115,7 @@ _DRIVER = textwrap.dedent(
 
 def test_python_closure_operators_run_with_foreign_cwd(tmp_path):
     proc = subprocess.run(
-        [sys.executable, "-c", _DRIVER],
+        [sys.executable, "-c", _DRIVER, _REPO],
         cwd=str(tmp_path),  # NOT the repo root — the hostile layout
         capture_output=True,
         text=True,
@@ -484,3 +486,23 @@ def test_every_python_stage_runs_the_guard_first():
     # pq 2, packing, sketches, bpe, stateful, two registry generators);
     # a scan that stops finding them must not pass vacuously
     assert sites >= 20, sites
+
+
+def test_package_imports_from_this_checkout(request):
+    """The suite tests the package of the checkout it runs from: a
+    conftest that pinned a fixed checkout path would silently test
+    another tree's code when run from a clone or worktree."""
+    import polars_w_inverted_index_spark as pkg
+
+    conftest = next(
+        p
+        for p in request.config.pluginmanager.get_plugins()
+        if str(getattr(p, "__file__", "")).endswith(
+            os.path.join("tests", "conftest.py")
+        )
+    )
+    repo = os.path.dirname(os.path.dirname(os.path.realpath(conftest.__file__)))
+    assert os.path.realpath(pkg.__file__).startswith(repo + os.sep), (
+        pkg.__file__,
+        repo,
+    )

@@ -13,9 +13,10 @@ Usage:  python tools/plan_audit.py [sf_dir] > PLANS.md
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # Python nodes that are DESIGNED into specific operators (Arrow-batched,
 # documented in SCALE.md) — flagged separately from accidental ones.
