@@ -143,12 +143,13 @@ class Engine:
             # explode — same zero-base-scan serving as the composite
             (field, value), = equals.items()
             hit = self.catalog.lookup(
-                self.table_name, field, doc_id_col=self.doc_id_col
+                self.table_name, field, doc_id_col=self.doc_id_col,
+                value=str(value),
             )
             if hit is not None:
-                return hit.where(
-                    F.col("value") == F.lit(str(value))
-                ).select(F.explode("doc_ids").alias(self.doc_id_col))
+                return hit.select(
+                    F.explode("doc_ids").alias(self.doc_id_col)
+                )
         cond = None
         for f, v in equals.items():
             c = F.col(field_name_to_column(f)).cast("string") == str(v)

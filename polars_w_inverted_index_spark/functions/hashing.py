@@ -17,6 +17,8 @@ built-in expressions) — no Python in the hot path.
 
 from __future__ import annotations
 
+import struct
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -77,3 +79,60 @@ def uh_apply(base: Column, j: int) -> Column:
 def uh_apply_sql(base_expr: str, j: int) -> str:
     a, b = uh_params(j)
     return f"(({base_expr} * {a} + {b}) % {UH_PRIME})"
+
+
+# XXH64 constants (the reference algorithm Spark's ``xxhash64`` uses)
+_P1 = 0x9E3779B185EBCA87
+_P2 = 0xC2B2AE3D27D4EB4F
+_P3 = 0x165667B19E3779F9
+_P4 = 0x85EBCA77C2B2AE63
+_P5 = 0x27D4EB2F165667C5
+_M64 = (1 << 64) - 1
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _xxh_round(acc: int, lane: int) -> int:
+    return (_rotl((acc + lane * _P2) & _M64, 31) * _P1) & _M64
+
+
+def xxhash64(data: bytes, seed: int = 42) -> int:
+    """Spark's ``xxhash64`` of one string or binary value, computed on
+    the driver: XXH64 of ``data`` (a string's UTF-8 bytes) under Spark's
+    default seed 42, as the signed long Spark returns.  Lets a driver
+    name the hash bucket ``pmod(xxhash64(v), B)`` of a literal without
+    a Spark job."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _P1 + _P2) & _M64, (seed + _P2) & _M64,
+            seed & _M64, (seed - _P1) & _M64,
+        ]
+        while i + 32 <= n:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh_round(a, b) for a, b in zip(v, lanes)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for a in v:
+            h = ((h ^ _xxh_round(0, a)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        (k,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl(h ^ _xxh_round(0, k), 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        (k,) = struct.unpack_from("<I", data, i)
+        h = (_rotl(h ^ ((k * _P1) & _M64), 23) * _P2 + _P3) & _M64
+        i += 4
+    while i < n:
+        h = (_rotl(h ^ ((data[i] * _P5) & _M64), 11) * _P1) & _M64
+        i += 1
+    h = ((h ^ (h >> 33)) * _P2) & _M64
+    h = ((h ^ (h >> 29)) * _P3) & _M64
+    h ^= h >> 32
+    return h - (1 << 64) if h >> 63 else h

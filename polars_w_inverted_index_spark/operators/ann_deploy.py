@@ -215,11 +215,10 @@ def _live_corpus(spark: SparkSession, root: str, meta: dict) -> DataFrame:
     externally retained corpus copy."""
     from pyspark.sql import functions as F
 
-    m = AI._load_manifest(root)
-    paths = AI._live_paths(root, "cells", m)
-    if not paths:
+    cells = AI._read_cells(spark, root, AI._load_manifest(root))
+    if cells is None:
         raise ValueError(f"index at {root} has no live cells to rebuild from")
-    return AI._read_cells(spark, root, m, paths).select(
+    return cells.select(
         F.col("vec_id").alias(meta["id_col"]),
         F.col("cv").alias(meta["vec_col"]),
     )

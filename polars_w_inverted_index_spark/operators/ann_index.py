@@ -15,23 +15,28 @@ materialization is the same fix applied to vectors).
 Layout under ``root``::
 
     centroids/                 parquet [cid int, centv array<double>, centn double]
-    cells/cell=<c>/ingest_batch=<b>/  parquet [vec_id long, cv array<float>, cn double]
+    cells/cell=<c>/ingest_batch=<g>/  base: parquet [vec_id long, cv array<double>, cn double]
+    deltas/ingest_batch=<b>/   one ingest commit: parquet [cell, vec_id, cv, cn], sorted by cell
     _ann_meta.json             {n_centroids, n_iters, dims, id_col, vec_col}
-    _cells_manifest.json       live ingest_batch= sets (snapshot manifest)
+    _cells_manifest.json       live (cell, ingest_batch) pairs (snapshot manifest)
 
-The second partition level tags WHICH write produced each file: the
-initial build uses ``ingest_batch=-1`` and every streaming micro-batch
-its checkpoint batch id — so a batch whose append committed but whose
-marker write crashed can be removed exactly (delete its
-``ingest_batch=<b>`` directories) before the replay re-appends, making
-streaming ingest idempotent (streaming/ann_ingest.py).  Serving never
-filters on it; pruning stays on ``cell``.
-
-``cells`` is **partition-by-cell**: a probe of ``nprobe`` cells prunes
-to those directories at the file-listing level (static partition
-pruning — the probe cell set is collected from the tiny centroid
-ranking, never from the corpus), so per-query I/O is
+``ingest_batch`` tags WHICH write produced each file.  The base tree
+``cells`` is **partition-by-cell**: the build writes ``ingest_batch=-1``
+and each fold a fresh generation ``-<gen>``, so a probe of ``nprobe``
+cells prunes to those directories at the file-listing level (static
+partition pruning — the probe cell set is collected from the tiny
+centroid ranking, never from the corpus), and per-query base I/O is
 O(corpus · nprobe / n_centroids) regardless of corpus size.
+
+Each streaming micro-batch is **commit-major**: one directory
+``deltas/ingest_batch=<batch id>`` holding every touched cell's rows,
+with ``cell`` a data column and the rows sorted by it, so a commit
+writes a few files instead of one per touched cell and a reader names
+one path per live commit instead of one per (cell, commit).  A batch
+whose append committed but whose marker write crashed is removed
+exactly (delete its commit directory) before the replay re-appends,
+making streaming ingest idempotent (streaming/ann_ingest.py).  Folds
+move a cell's delta rows back into its base leaf.
 
 Centroid training is Lloyd's refinement written as DataFrame ops:
 
@@ -787,6 +792,21 @@ def _write_meta_atomic(meta_path: str, meta: dict) -> None:
     os.replace(tmp, meta_path)
 
 
+def _stamp_bandwidth_once(root: str) -> None:
+    """:func:`_stamp_bandwidth` unless ``_ann_meta.json`` already
+    records ``bandwidth_mbps``: a root whose build could not measure
+    gets its stamp from the first maintenance pass that can (a fold or
+    an augment), and every later pass skips the probe's tree walk,
+    copy and fsync."""
+    try:
+        with open(os.path.join(root, "_ann_meta.json")) as f:
+            if "bandwidth_mbps" in json.load(f):
+                return
+    except (OSError, ValueError):
+        return  # unreadable meta: nothing to stamp into
+    _stamp_bandwidth(root)
+
+
 def _stamp_bandwidth(root: str) -> None:
     """Measure and record ``bandwidth_mbps`` (+ ``bandwidth_probe_bytes``
     and ``bandwidth_probe_method``) in ``_ann_meta.json`` — best-effort:
@@ -855,9 +875,14 @@ def build_ann_index(
         corpus, None, id_col, vec_col, keep_n=1, _collected=collected
     )
     cells = _cells_rows(assigned, -1)
-    cells.write.mode("overwrite").partitionBy("cell", "ingest_batch").parquet(
-        os.path.join(root, "cells")
-    )
+    cells.write.mode("overwrite").options(**_CV_PLAIN).partitionBy(
+        "cell", "ingest_batch"
+    ).parquet(os.path.join(root, "cells"))
+    # a rebuild in place drops the old build's ingest commits with its
+    # cells (their rows were assigned against the old centroids)
+    import shutil
+
+    shutil.rmtree(os.path.join(root, "deltas"), ignore_errors=True)
     _write_meta_atomic(
         os.path.join(root, "_ann_meta.json"),
         {
@@ -996,19 +1021,54 @@ def _cells_rows(assigned: DataFrame, batch_tag: int) -> DataFrame:
     )
 
 
+# Per-write parquet option: the vectors are written PLAIN.  Float
+# vectors almost never repeat, so the writer's dictionary attempt on
+# ``cv`` always falls back after building a page's dictionary; skipping
+# it cut a 12,000 × 64 fold-sized write from 431 to 346 ms with
+# identical file bytes (4-core VM).  Column-scoped, so ``cell`` and
+# ``cn`` keep their dictionaries.
+_CV_PLAIN = {"parquet.enable.dictionary#cv.list.element": "false"}
+
+
+def _write_base(rows: DataFrame, root: str) -> None:
+    """Append cells-tree rows ``[cell, ingest_batch, vec_id, cv, cn]`` to
+    the base leaves, one file per cell: the rows are rebalanced on
+    ``cell`` before the partitioned write (AQE still splits a cell
+    above the advisory partition size)."""
+    (
+        rows.hint("rebalance", "cell")
+        .write.mode("append")
+        .options(**_CV_PLAIN)
+        .partitionBy("cell", "ingest_batch")
+        .parquet(os.path.join(root, "cells"))
+    )
+
+
+def _commit_dir(root: str, tag: int) -> str:
+    return os.path.join(root, "deltas", f"ingest_batch={int(tag)}")
+
+
 def _append_assigned(
     root: str, assigned: DataFrame, batch_tag: int
 ) -> None:
-    """Append the batch's assigned rows to the cells tree, one file per
-    touched cell: the rows are rebalanced on ``cell`` before the
-    partitioned write (AQE still splits a cell above the advisory
-    partition size)."""
+    """Write the batch's assigned rows.  A tagged batch (``batch_tag >=
+    0``) is one commit directory ``deltas/ingest_batch=<tag>``: the rows
+    are rebalanced without a key and sorted by ``cell`` inside each
+    file, so the commit is a few files whatever the number of touched
+    cells, and a probe's ``cell`` filter prunes row groups by their
+    min/max.  An untagged append (``-1``) joins the build's base
+    leaves."""
+    rows = _cells_rows(assigned, batch_tag)
+    if int(batch_tag) < 0:
+        _write_base(rows, root)
+        return
     (
-        _cells_rows(assigned, batch_tag)
-        .hint("rebalance", "cell")
+        rows.drop("ingest_batch")
+        .hint("rebalance")
+        .sortWithinPartitions("cell")
         .write.mode("append")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(os.path.join(root, "cells"))
+        .options(**_CV_PLAIN)
+        .parquet(_commit_dir(root, batch_tag))
     )
 
 
@@ -1025,9 +1085,9 @@ def ann_index_add_batch(
 
     Ingest-time maintenance without retraining: the batch is assigned
     against the FROZEN centroids (one narrow pass over the batch only —
-    the standing corpus is never touched) and appended to the
-    cell-partitioned layout, so per-batch cost is O(batch), independent
-    of index size — the same property the streaming postings-index
+    the standing corpus is never touched) and appended as one commit
+    directory (:func:`_append_assigned`), so per-batch cost is
+    O(batch), independent of index size — the same property the streaming postings-index
     merge has.  Centroids drift from optimal as the distribution moves;
     rebuild with :func:`build_ann_index` on whatever cadence the drift
     monitor (streaming/drift.py) says, exactly like any IVF system.
@@ -1035,11 +1095,12 @@ def ann_index_add_batch(
     The manifest swap lands AFTER the parquet append, so snapshot
     readers see the batch only once it is complete — a crash in between
     leaves invisible files a tagged replay removes
-    (streaming/ann_ingest.py).  ``batch_tag`` names the
-    ``ingest_batch=`` partition the files land in: streaming ingest
-    passes its checkpoint batch id so a crashed-then-replayed batch can
-    be removed exactly; direct callers default to -1 (same directory as
-    the build — untagged: NOT replay-cleanable, and appending into an
+    (streaming/ann_ingest.py).  ``batch_tag`` names the commit
+    directory ``deltas/ingest_batch=<tag>`` the files land in:
+    streaming ingest passes its checkpoint batch id so a
+    crashed-then-replayed batch can be removed exactly; direct callers
+    default to -1 (the build's base leaves — untagged: NOT
+    replay-cleanable, and appending into an
     already-live directory means a concurrent snapshot reader may
     observe the batch's committed files early.  Guarded streaming
     ingest never does this; direct untagged appends are a
@@ -1072,13 +1133,21 @@ def ann_index_add_batch(
 # continuous ingest, serve windows are the norm, so no maintenance step
 # ever renames or deletes a path a serve may be reading:
 #
-# - `_cells_manifest.json` (atomic tmp+replace) names every cell's LIVE
-#   `ingest_batch=` directory set for BOTH trees (cells + pq_codes), the
-#   recorded per-cell code fingerprints, a `books_id` pairing the codes
-#   with the codebooks in `_pq_meta.json`, and the cells tree's schema;
+# - `_cells_manifest.json` (atomic tmp+replace) maps every cell to its
+#   LIVE `ingest_batch` tags for BOTH trees (`cells` and `codes`), and
+#   records the per-cell code fingerprints, a `books_id` pairing the
+#   codes with the codebooks in `_pq_meta.json`, and the schemas of the
+#   cells and codes trees;
+# - a cells tag names a directory by its sign (`_tag_dir`): a negative
+#   tag is the cell's base leaf `cells/cell=<c>/ingest_batch=<tag>`, a
+#   tag >= 0 an ingest's commit directory `deltas/ingest_batch=<tag>`,
+#   shared by every cell that commit touched.  Codes keep one
+#   `pq_codes/cell=<c>/ingest_batch=<tag>` directory per pair;
 # - readers resolve the manifest ONCE per serve and read those explicit
-#   directories (never partition discovery over the physical tree), so a
-#   pinned snapshot stays self-consistent at every instant;
+#   directories (never partition discovery over the physical tree),
+#   keeping from a commit directory only the cells whose live set still
+#   lists it (`_read_cells`), so a pinned snapshot stays self-consistent
+#   at every instant;
 # - folds APPEND the folded cell's rows (and its re-encoded codes) under
 #   a fresh generation tag `ingest_batch=-<gen>` — never touching a live
 #   path — then swap the manifest once: live set, codes set, and
@@ -1087,11 +1156,14 @@ def ann_index_add_batch(
 # - superseded directories are RETIRED (timestamped in the manifest) and
 #   pruned only after `retire_grace_seconds`, so a serve that resolved
 #   the previous manifest keeps its files; the grace bounds how long a
-#   serve may run after resolving its snapshot;
+#   serve may run after resolving its snapshot.  A commit directory
+#   retires only once no live cell lists its tag;
 # - generation numbers are allocated by a manifest write BEFORE the fold
 #   writes data, so a crashed fold's directories (never referenced by
 #   any manifest) can never collide with a retry — they are orphans,
-#   collected by the next fold's O(touched-cells) sweep.
+#   collected by the next fold's O(touched-cells) sweep, which also
+#   removes commit directories no manifest references (a crashed,
+#   abandoned ingest attempt).
 #
 # MAINTENANCE jobs (ingest commits, folds, re-encodes, augments) still
 # must not overlap EACH OTHER — one maintenance writer at a time, the
@@ -1101,7 +1173,9 @@ def ann_index_add_batch(
 # cells schema (`_load_manifest`), so per-batch decisions are always
 # O(touched cells) reads of the manifest, never a tree walk.
 
-_MANIFEST_FORMAT = 1
+# v2: ingest commits are commit-major (`deltas/`); a v1 root's per-cell
+# delta leaves have no reader and are refused by `_load_manifest`
+_MANIFEST_FORMAT = 2
 
 # How long a pinned snapshot's retired directories stay on disk.  A
 # serve must finish within this window of resolving its manifest; the
@@ -1184,55 +1258,148 @@ def _list_tree_tags(tree_dir: str) -> dict[str, list[int]]:
     return out
 
 
-def _live_paths(root: str, tree: str, m: dict, cells=None) -> list[str]:
-    """Absolute live directories of ``tree`` (``"cells"`` or
-    ``"pq_codes"``) under the manifest snapshot, restricted to ``cells``
-    (iterable of partition VALUES) when given.  Readers hand these to
-    ``spark.read.option("basePath", <tree>).parquet(*paths)`` — every
-    path segment below basePath is a k=v pair, so partition columns
-    still parse, and the listing is exactly the live set (static
-    pruning with snapshot isolation)."""
-    key = "cells" if tree == "cells" else "codes"
-    base = os.path.join(root, tree)
+def _tag_dir(root: str, cell, tag: int) -> str:
+    """The directory holding ``cell``'s rows of cells tag ``tag``: the
+    commit directory of an ingest (``tag >= 0``), the cell's base leaf
+    otherwise (the build's -1 and the folds' ``-<gen>``)."""
+    if int(tag) >= 0:
+        return _commit_dir(root, tag)
+    return os.path.join(root, "cells", f"cell={cell}", f"ingest_batch={tag}")
+
+
+def _live_items(m: dict, key: str, cells=None) -> list[tuple[str, list]]:
+    """``(cell, live tags)`` of the manifest map ``key`` (``"cells"`` or
+    ``"codes"``), restricted to ``cells`` (partition VALUES) when
+    given."""
     want = None if cells is None else {str(c) for c in cells}
-    out: list[str] = []
-    for c, tags in m[key].items():
-        if want is not None and c not in want:
-            continue
-        for t in tags:
-            out.append(
-                os.path.join(base, f"cell={c}", f"ingest_batch={t}")
-            )
-    return out
+    return [
+        (c, tags) for c, tags in m[key].items()
+        if want is None or c in want
+    ]
+
+
+def _cell_dirs(root: str, m: dict, cells=None) -> list[str]:
+    """The distinct live directories holding the rows of ``cells``
+    (every cell when None) under the manifest snapshot."""
+    return sorted({
+        _tag_dir(root, c, t)
+        for c, tags in _live_items(m, "cells", cells)
+        for t in tags
+    })
+
+
+def _code_paths(root: str, m: dict, cells=None) -> list[str]:
+    """The live ``pq_codes/cell=<c>/ingest_batch=<t>`` directories of
+    ``cells`` (every cell when None) under the manifest snapshot."""
+    return [
+        os.path.join(root, "pq_codes", f"cell={c}", f"ingest_batch={t}")
+        for c, tags in _live_items(m, "codes", cells)
+        for t in tags
+    ]
+
+
+def _codes_missing(root: str, m: dict, cell) -> bool:
+    """Whether a live codes directory of ``cell`` is gone from disk (a
+    hand-deleted sidecar): its rows have no codes, so the cell is not
+    fresh whatever its recorded fingerprint says."""
+    return not all(map(os.path.isdir, _code_paths(root, m, [cell])))
+
+
+def _sql_literal(value: str, ddl: str) -> str:
+    """A cell value (its directory-name string) as a typed SQL literal,
+    so a ``cell`` predicate pushes down as a plain comparison."""
+    quoted = value.replace("\\", "\\\\").replace("'", "\\'")
+    return f"CAST('{quoted}' AS {ddl})"
 
 
 def _read_cells(
-    spark: SparkSession, root: str, m: dict, paths: list[str]
-) -> DataFrame:
-    """The cells tree's ``paths`` (from :func:`_live_paths`), read with
-    the schema the build recorded in the manifest — no schema-inference
-    job."""
-    return (
-        spark.read.option("basePath", os.path.join(root, "cells"))
-        .schema(m["cells_schema"])
-        .parquet(*paths)
+    spark: SparkSession,
+    root: str,
+    m: dict,
+    cells=None,
+    skip_missing: bool = False,
+) -> DataFrame | None:
+    """The live rows of ``cells`` (partition VALUES; every cell when
+    None) under the manifest snapshot ``m``, or None when none is live.
+
+    The base leaves are read under basePath ``cells`` and the live
+    commit directories under basePath ``deltas``, one path each, both
+    with the schema the build recorded (no schema-inference job).  A
+    commit directory keeps only the rows of the cells whose live set
+    still lists it: a fold drops the commit's tag from the cells it
+    folded while their siblings still serve it.  Naming one path per
+    commit instead of one per (cell, commit) keeps a fold of 16 cells ×
+    2 commits under Spark's 32-path threshold, past which the listing
+    runs as a Spark job of its own.  ``skip_missing`` drops directories
+    that are gone from disk: maintenance tolerates a hand-removed
+    directory, while a serve fails on it."""
+    base: list[str] = []
+    commits: dict[int, list[str]] = {}
+    for c, tags in _live_items(m, "cells", cells):
+        for t in tags:
+            if t < 0:
+                base.append(_tag_dir(root, c, t))
+            else:
+                commits.setdefault(int(t), []).append(c)
+    if skip_missing:
+        base = [p for p in base if os.path.isdir(p)]
+        commits = {
+            t: cs for t, cs in commits.items()
+            if os.path.isdir(_commit_dir(root, t))
+        }
+    schema = m["cells_schema"]
+    frames = []
+    if base:
+        frames.append(
+            spark.read.option("basePath", os.path.join(root, "cells"))
+            .schema(schema)
+            .parquet(*base)
+        )
+    if commits:
+        cell_ddl = dict(
+            f.split(" ", 1) for f in schema.split(", ")
+        )["cell"]
+        keep = " OR ".join(
+            f"(ingest_batch = {t} AND cell IN ("
+            + ", ".join(_sql_literal(c, cell_ddl) for c in sorted(cs))
+            + "))"
+            for t, cs in sorted(commits.items())
+        )
+        frames.append(
+            spark.read.option("basePath", os.path.join(root, "deltas"))
+            .schema(schema)
+            .parquet(*(_commit_dir(root, t) for t in sorted(commits)))
+            .where(keep)
+        )
+    if not frames:
+        return None
+    return frames[0] if len(frames) == 1 else frames[0].unionByName(
+        frames[1]
     )
 
 
 def _manifest_walk(cdir: str, tags) -> str | None:
     """The live-set digest walk behind :func:`_manifest_cell_digest`:
     sha256 over sorted (path relative to the cell dir, size) of every
-    visible file under the given ``ingest_batch=`` tag directories.
-    Hidden (``.``/``_``) entries are skipped — they are markers or
-    in-flight writer state, and the listing cache's mtime token
-    (functions/listing.py) does not descend into hidden directories.
-    Module-level so tests can interpose it (warm serves must not
-    re-walk — the r8 staleness-cache discipline)."""
+    visible file under the given tags' directories.  ``cdir`` is the
+    cell's base directory ``<root>/cells/cell=<c>``; a commit tag
+    resolves to ``<root>/deltas/ingest_batch=<tag>`` and contributes all
+    of that commit's files (shared with the other cells it touched, and
+    never changed once written).  Hidden (``.``/``_``) entries are
+    skipped — they are markers or in-flight writer state, and the
+    listing cache's mtime token (functions/listing.py) does not descend
+    into hidden directories.  Module-level so tests can interpose it
+    (warm serves must not re-walk — the r8 staleness-cache
+    discipline)."""
     import hashlib
 
+    root = os.path.dirname(os.path.dirname(cdir))
     entries = []
     for t in sorted(tags):
-        d = os.path.join(cdir, f"ingest_batch={t}")
+        d = (
+            _commit_dir(root, t) if t >= 0
+            else os.path.join(cdir, f"ingest_batch={t}")
+        )
         if not os.path.isdir(d):
             continue
         for dirpath, dirnames, files in os.walk(d):
@@ -1263,31 +1430,42 @@ def _manifest_cell_digest(
     set is empty (consistent-empty: an empty probed cell has no codes
     either).
 
-    Serving memoizes the walk behind the O(#dirs) mtime token
-    (functions/listing.py) keyed by the live tag set — a fold or prune
-    moves the cell dir's mtime, so the cache can never serve a digest
-    for a superseded live set; maintenance passes ``use_cache=False``
-    so recorded fingerprints always come from a real walk."""
+    Serving memoizes the walk behind the O(#dirs) mtime token of the
+    cell's base directory (functions/listing.py), keyed by the live tag
+    set and the mtimes of its commit directories — a fold or prune
+    moves the base directory's mtime and a replay rewrites a commit
+    directory, so the cache can never serve a digest for a superseded
+    live set; maintenance passes ``use_cache=False`` so recorded
+    fingerprints always come from a real walk."""
     from ..functions.listing import cached_listing_digest
 
     tags = sorted(
         set(m["cells"].get(str(cell), [])) | {int(t) for t in extra_tags}
     )
+    stamps = []
+    for t in tags:
+        if t >= 0:
+            try:
+                ns = os.stat(_commit_dir(root, t)).st_mtime_ns
+            except OSError:
+                ns = "-"
+            stamps.append(f"{t}@{ns}")
     cdir = os.path.join(root, "cells", f"cell={cell}")
     return cached_listing_digest(
         cdir,
         lambda src: _manifest_walk(src, tags),
-        "mcell:" + ",".join(map(str, tags)),
+        "mcell:" + ",".join(map(str, tags)) + ";" + ",".join(stamps),
         use_cache=use_cache,
     )
 
 
 def _live_tree_bytes(root: str, m: dict, cells=None) -> int:
-    """On-disk bytes of the LIVE cells directories only — retired (but
-    not yet pruned) generations must not inflate the serving policy's
-    probed-bytes estimate."""
+    """On-disk bytes of the LIVE directories of ``cells`` only — retired
+    (but not yet pruned) generations must not inflate the serving
+    policy's probed-bytes estimate.  A commit directory counts whole:
+    its other cells' rows are skipped by row-group statistics at best."""
     total = 0
-    for d in _live_paths(root, "cells", m, cells):
+    for d in _cell_dirs(root, m, cells):
         if os.path.isdir(d):
             total += _tree_bytes(d)
     return total
@@ -1314,41 +1492,62 @@ def _prune_retired(root: str, m: dict, grace_seconds: float) -> None:
     m["retired"] = keep
 
 
+def _retire_cells_tags(m: dict, superseded: dict, now: float) -> None:
+    """Retire the directories of the cells tags in ``superseded`` (``{cell:
+    tags}``, already replaced in ``m["cells"]``): each base leaf, and
+    each commit directory that no live cell lists any more."""
+    live_commits = {t for ts in m["cells"].values() for t in ts if t >= 0}
+    rels = set()
+    for c, tags in superseded.items():
+        for t in tags:
+            if t < 0:
+                rels.add(f"cells/cell={c}/ingest_batch={t}")
+            elif t not in live_commits:
+                rels.add(f"deltas/ingest_batch={t}")
+    m["retired"].extend([rel, now] for rel in sorted(rels))
+
+
+def _tag_of(name: str) -> int | None:
+    """The tag of an ``ingest_batch=<tag>`` directory name, else None."""
+    if not name.startswith("ingest_batch="):
+        return None
+    try:
+        return int(name[len("ingest_batch="):])
+    except ValueError:
+        return None
+
+
 def _sweep_orphan_dirs(root: str, m: dict, cells) -> None:
-    """Remove ``ingest_batch=`` directories in the given cells that no
-    manifest references (not live, not retired) — a crashed fold's
+    """Remove the directories no manifest references (not live, not
+    retired): ``ingest_batch=`` leaves of the given cells in both trees
+    and commit directories under ``deltas/`` — a crashed fold's
     generation dirs (its generation was allocated by a manifest write
     BEFORE the data write, so a retry never reuses the tag) and a
-    crashed-then-abandoned ingest attempt's tagged dirs (invisible: the
-    attempt never swapped the manifest).  No reader can hold an
-    unreferenced path, and MAINTENANCE is single-writer (an in-flight
-    ingest append cannot overlap this fold), so the sweep is safe.
-    O(touched cells) listings."""
+    crashed-then-abandoned ingest attempt's commit and codes dirs
+    (invisible: the attempt never swapped the manifest).  No reader can
+    hold an unreferenced path, and MAINTENANCE is single-writer (an
+    in-flight ingest append cannot overlap this fold), so the sweep is
+    safe.  O(touched cells + live commits) listings."""
     import shutil
 
     retired_paths = {rel for rel, _ in m.get("retired", [])}
-    for tree, key in (("cells", "cells"), ("pq_codes", "codes")):
-        base = os.path.join(root, tree)
-        for c in cells:
-            c = str(c)
-            cdir = os.path.join(base, f"cell={c}")
-            try:
-                subs = os.listdir(cdir)
-            except OSError:
+
+    def sweep(tree: str, live) -> None:
+        try:
+            subs = os.listdir(os.path.join(root, tree))
+        except OSError:
+            return
+        for sub in subs:
+            t = _tag_of(sub)
+            if t is None or t in live or f"{tree}/{sub}" in retired_paths:
                 continue
-            live = set(m[key].get(c, []))
-            for sub in subs:
-                if not sub.startswith("ingest_batch="):
-                    continue
-                try:
-                    t = int(sub[len("ingest_batch="):])
-                except ValueError:
-                    continue
-                if t in live:
-                    continue
-                if f"{tree}/cell={c}/ingest_batch={t}" in retired_paths:
-                    continue
-                shutil.rmtree(os.path.join(cdir, sub), ignore_errors=True)
+            shutil.rmtree(os.path.join(root, tree, sub), ignore_errors=True)
+
+    for c in cells:
+        c = str(c)
+        sweep(f"cells/cell={c}", set(m["cells"].get(c, [])))
+        sweep(f"pq_codes/cell={c}", set(m["codes"].get(c, [])))
+    sweep("deltas", {t for ts in m["cells"].values() for t in ts if t >= 0})
 
 
 def _sidecar_books(root: str, m: dict):
@@ -1376,14 +1575,36 @@ def _sidecar_books(root: str, m: dict):
     )
 
 
+def _write_codes(cells: DataFrame, cb, root: str, tag: int) -> str:
+    """Encode cells-tree rows with the codebooks ``cb`` and append them
+    under ``pq_codes/cell=<c>/ingest_batch=<tag>``; returns the written
+    schema, which the manifest records as ``codes_schema`` so the codes
+    read in :func:`ann_search_pq` runs no schema-inference job."""
+    from .pq import pq_encode
+
+    codes = pq_encode(
+        cells,
+        cb,
+        id_col="vec_id",
+        vec_col="cv",
+        extra_cols={"cell": cells.schema["cell"].dataType.simpleString()},
+    ).withColumn("ingest_batch", F.lit(int(tag)))
+    codes.write.mode("append").partitionBy("cell", "ingest_batch").parquet(
+        os.path.join(root, "pq_codes")
+    )
+    return ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in codes.schema.fields
+    )
+
+
 def ann_index_compact(
     spark: SparkSession,
     root: str,
     retire_grace_seconds: float = DEFAULT_RETIRE_GRACE_SECONDS,
 ) -> int:
-    """Fold EVERY cell's accumulated ``ingest_batch=<id>`` delta
-    directories into a fresh generation; returns the NUMBER OF DELTA
-    DIRECTORIES FOLDED (0 when no cell holds a delta).
+    """Fold EVERY cell's accumulated ingest commits into a fresh base
+    generation; returns the NUMBER OF (CELL, COMMIT) DELTAS FOLDED (0
+    when no cell holds a delta).
 
     This is :func:`ann_index_compact_cells` over every cell the manifest
     names, with the same snapshot isolation (see the section comment
@@ -1401,39 +1622,38 @@ def ann_index_compact_cells(
     cells,
     retire_grace_seconds: float = DEFAULT_RETIRE_GRACE_SECONDS,
 ) -> int:
-    """Fold ONLY the given cells' ``ingest_batch=<id>`` delta
-    directories into a fresh generation; returns the number of delta
-    directories folded.
+    """Fold ONLY the given cells' ingest commits into a fresh base
+    generation; returns the number of (cell, commit) deltas folded.
 
     The selective counterpart of :func:`ann_index_compact` (r12 VERDICT
     task 1): under skewed ingest the hot cell crosses the fragmentation
-    dial while cold cells hold 1–2 delta dirs, and folding the WHOLE
+    dial while cold cells hold 1–2 commits, and folding the WHOLE
     index on the hot cell's schedule is a corpus-scale synchronous
     stall inside a micro-batch — the same problem the postings LSM
     solved with per-bucket segment lists (streaming/index_maintenance).
-    Each cell's live set is self-contained, so the fold reads and
-    rewrites ONLY the requested cells: cost is O(requested cells'
-    bytes), never O(index).
+    The fold reads the requested cells' base leaves and the live
+    commits that hold their rows (keeping only those cells' rows), and
+    rewrites ONLY the requested cells: cost is O(requested cells' bytes
+    + their live commits' bytes), never O(index).
 
     ``cells`` is an iterable of cell partition VALUES (the ``<c>`` of
     ``cell=<c>``); values whose live set is delta-free are skipped.
 
     Snapshot isolation (r14 — see the manifest section comment): the
-    folded rows land under a fresh ``ingest_batch=-<gen>`` directory
+    folded rows land under a fresh ``ingest_batch=-<gen>`` base leaf
     per cell (append — no live path is touched), a PQ sidecar's folded
     cells are re-encoded from that SAME folded content in the same
     commit (which also heals any pre-existing staleness in those cells
     — the re-encode is the cell's full content by construction), and
     ONE atomic manifest swap moves live set + codes set + fingerprints
     together, so concurrent serves — float AND PQ — stay consistent at
-    every instant.  Superseded directories retire behind
-    ``retire_grace_seconds``.  Concurrent MAINTENANCE is still
-    single-writer."""
+    every instant.  Superseded base leaves retire behind
+    ``retire_grace_seconds``, and so does a commit directory once the
+    fold leaves no live cell listing it.  Concurrent MAINTENANCE is
+    still single-writer."""
     import time as _time
 
     m = _load_manifest(root)
-    cells_dir = os.path.join(root, "cells")
-    codes_dir = os.path.join(root, "pq_codes")
     want = [str(c) for c in cells]
     todo = [
         c
@@ -1453,56 +1673,27 @@ def ann_index_compact_cells(
     m["gen"] = g
     _write_manifest(root, m)
     tag = -g
-    live = [
-        p
-        for p in _live_paths(root, "cells", m, todo)
-        if os.path.isdir(p)
-    ]
-    # r14: the tiny-input static-planning gate was tried here and
-    # REVERTED with the rest of the ANN family (see build_ann_index)
-    current = _read_cells(spark, root, m, live).select(
-        "cell", "vec_id", "cv", "cn"
-    )
-    (
-        current.withColumn("ingest_batch", F.lit(tag))
-        .hint("rebalance", "cell")  # one file per folded cell
-        .write.mode("append")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(cells_dir)
-    )
+    current = _read_cells(spark, root, m, todo, skip_missing=True)
+    if current is not None:
+        _write_base(
+            current.select(
+                "cell", F.lit(tag).alias("ingest_batch"), "vec_id", "cv",
+                "cn",
+            ),
+            root,
+        )
     folded_cells = [
         c
         for c in todo
-        if os.path.isdir(
-            os.path.join(cells_dir, f"cell={c}", f"ingest_batch={tag}")
-        )
+        if os.path.isdir(_tag_dir(root, c, tag))
     ]  # a zero-row cell (empty delta files only) keeps its old live set
     codes_updates: dict[str, str] = {}
     cb = _sidecar_books(root, m)
     if cb is not None and folded_cells:
-        from .pq import pq_encode
-
-        folded_paths = [
-            os.path.join(cells_dir, f"cell={c}", f"ingest_batch={tag}")
-            for c in folded_cells
-        ]
-        folded_df = _read_cells(spark, root, m, folded_paths).select(
-            "cell", "vec_id", "cv", "cn"
-        )
-        cell_ddl = folded_df.schema["cell"].dataType.simpleString()
-        (
-            pq_encode(
-                folded_df,
-                cb,
-                id_col="vec_id",
-                vec_col="cv",
-                extra_cols={"cell": cell_ddl},
-            )
-            .withColumn("ingest_batch", F.lit(tag))
-            .write.mode("append")
-            .partitionBy("cell", "ingest_batch")
-            .parquet(codes_dir)
-        )
+        folded_df = _read_cells(
+            spark, root, {**m, "cells": {c: [tag] for c in folded_cells}}
+        ).select("cell", "vec_id", "cv", "cn")
+        _write_codes(folded_df, cb, root, tag)
         for c in folded_cells:
             dg = _manifest_cell_digest(
                 root, {"cells": {c: [tag]}}, c, use_cache=False
@@ -1510,14 +1701,11 @@ def ann_index_compact_cells(
             if dg is not None:
                 codes_updates[c] = dg
     now = _time.time()
-    folded_deltas = 0
+    superseded = {c: m["cells"].get(c, []) for c in folded_cells}
+    folded_deltas = sum(
+        1 for tags in superseded.values() for t in tags if t >= 0
+    )
     for c in folded_cells:
-        old_tags = m["cells"].get(c, [])
-        folded_deltas += sum(1 for t in old_tags if t >= 0)
-        for t in old_tags:
-            m["retired"].append(
-                [f"cells/cell={c}/ingest_batch={t}", now]
-            )
         m["cells"][c] = [tag]
         if c in codes_updates:
             for t in m["codes"].get(c, []):
@@ -1526,9 +1714,10 @@ def ann_index_compact_cells(
                 )
             m["codes"][c] = [tag]
             m["code_fps"][c] = codes_updates[c]
+    _retire_cells_tags(m, superseded, now)
     _prune_retired(root, m, retire_grace_seconds)
     _write_manifest(root, m)
-    _stamp_bandwidth(root)  # free probe window, scratch copy (task 6)
+    _stamp_bandwidth_once(root)
     return folded_deltas
 
 
@@ -1732,13 +1921,11 @@ def ann_search(
                     schema=score_pa_schema,
                 )
 
-    paths = _live_paths(root, "cells", manifest, probe_cells)
-    if not paths:  # every probed cell is empty under this snapshot
-        return spark.createDataFrame([], empty_schema)
     # the pinned live set: static pruning with snapshot isolation
-    cells = _read_cells(spark, root, manifest, paths).select(
-        "cell", "vec_id", "cv"
-    )
+    cells = _read_cells(spark, root, manifest, probe_cells)
+    if cells is None:  # every probed cell is empty under this snapshot
+        return spark.createDataFrame([], empty_schema)
+    cells = cells.select("cell", "vec_id", "cv")
     scored = cells.mapInArrow(_score, score_ddl)
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id").asc()
@@ -1824,7 +2011,7 @@ def pq_augment_ann_index(
     """
     import time as _time
 
-    from .pq import pq_train, pq_encode
+    from .pq import pq_train
 
     m = _load_manifest(root)
     if n_dims is None:
@@ -1848,16 +2035,12 @@ def pq_augment_ann_index(
     m["gen"] = g
     _write_manifest(root, m)
     tag = -g
-    live = [
-        p for p in _live_paths(root, "cells", m) if os.path.isdir(p)
-    ]
-    if not live:
+    cells = _read_cells(spark, root, m, skip_missing=True)
+    if cells is None:
         raise ValueError(
             f"pq_augment_ann_index: no live cells to encode at {root}."
         )
-    cells = _read_cells(spark, root, m, live).select(
-        "cell", "vec_id", "cv", "cn"
-    )
+    cells = cells.select("cell", "vec_id", "cv", "cn")
     cb = pq_train(
         cells,
         m_subspaces=m_subspaces,
@@ -1868,20 +2051,7 @@ def pq_augment_ann_index(
         vec_col="cv",
         n_dims=n_dims,
     )
-    cell_ddl = cells.schema["cell"].dataType.simpleString()
-    (
-        pq_encode(
-            cells,
-            cb,
-            id_col="vec_id",
-            vec_col="cv",
-            extra_cols={"cell": cell_ddl},
-        )
-        .withColumn("ingest_batch", F.lit(tag))
-        .write.mode("append")
-        .partitionBy("cell", "ingest_batch")
-        .parquet(codes_dir)
-    )
+    codes_schema = _write_codes(cells, cb, root, tag)
     encoded = [
         c
         for c in m["cells"]
@@ -1922,18 +2092,13 @@ def pq_augment_ann_index(
         m["codes"][c] = [tag]
     m["code_fps"] = digests
     m["books_id"] = bid
+    m["codes_schema"] = codes_schema
     _prune_retired(root, m, DEFAULT_RETIRE_GRACE_SECONDS)
     _write_manifest(root, m)
     # an index whose build-time bandwidth probe failed gets a second
     # chance here — augmentation is the moment a deployment opts into
     # the float-vs-PQ choice the stamp informs
-    try:
-        with open(os.path.join(root, "_ann_meta.json")) as f:
-            has_stamp = "bandwidth_mbps" in json.load(f)
-    except (OSError, ValueError):
-        has_stamp = True  # unreadable meta: nothing to stamp into
-    if not has_stamp:
-        _stamp_bandwidth(root)
+    _stamp_bandwidth_once(root)
     return root
 
 
@@ -1969,10 +2134,12 @@ def pq_reencode_stale_cells(
     path is touched) and ONE manifest swap moves codes set +
     fingerprints together; a crash anywhere leaves the old state
     serving (stale cells keep refusing) and the new generation's dirs
-    orphaned for the next maintenance sweep."""
-    import time as _time
+    orphaned for the next maintenance sweep.
 
-    from .pq import pq_encode
+    A cell whose live codes directories were deleted by hand counts as
+    stale too (:func:`_codes_missing`): its rows have no codes, whatever
+    the recorded fingerprint says, so it is re-encoded whole."""
+    import time as _time
 
     m = _load_manifest(root)
     cb = _sidecar_books(root, m)
@@ -1990,7 +2157,8 @@ def pq_reencode_stale_cells(
     refresh = sorted(
         c
         for c, d in current.items()
-        if d is not None and m["code_fps"].get(c) != d
+        if d is not None
+        and (m["code_fps"].get(c) != d or _codes_missing(root, m, c))
     )
     dropped = sorted(
         c
@@ -2006,30 +2174,12 @@ def pq_reencode_stale_cells(
     tag = -g
     encoded: list[str] = []
     if refresh:
-        live = [
-            p
-            for p in _live_paths(root, "cells", m, refresh)
-            if os.path.isdir(p)
-        ]
-        cells = _read_cells(spark, root, m, live).select(
-            "cell", "vec_id", "cv", "cn"
-        )
-        cell_ddl = cells.schema["cell"].dataType.simpleString()
+        cells = _read_cells(spark, root, m, refresh, skip_missing=True)
         # a refreshed cell's codes are rewritten WHOLE under the new
         # generation — the refresh doubles as that cell's codes
         # defragmentation (tagged per-batch code dirs retire with it)
-        (
-            pq_encode(
-                cells,
-                cb,
-                id_col="vec_id",
-                vec_col="cv",
-                extra_cols={"cell": cell_ddl},
-            )
-            .withColumn("ingest_batch", F.lit(tag))
-            .write.mode("append")
-            .partitionBy("cell", "ingest_batch")
-            .parquet(codes_dir)
+        _write_codes(
+            cells.select("cell", "vec_id", "cv", "cn"), cb, root, tag
         )
         encoded = [
             c
@@ -2046,7 +2196,6 @@ def pq_reencode_stale_cells(
         # only zero-row files) serves zero codes consistently
         m["codes"][c] = [tag] if c in encoded else []
         m["code_fps"][c] = current[c]
-    cells_root = os.path.join(root, "cells")
     for c in dropped:
         for t in m["codes"].get(c, []):
             m["retired"].append([f"pq_codes/cell={c}/ingest_batch={t}", now])
@@ -2057,10 +2206,7 @@ def pq_reencode_stale_cells(
         # later snapshot readers don't resolve paths that cannot exist
         tags = m["cells"].get(c, [])
         if tags and not any(
-            os.path.isdir(
-                os.path.join(cells_root, f"cell={c}", f"ingest_batch={t}")
-            )
-            for t in tags
+            os.path.isdir(_tag_dir(root, c, t)) for t in tags
         ):
             del m["cells"][c]
     _prune_retired(root, m, retire_grace_seconds)
@@ -2094,42 +2240,23 @@ def _encode_batch_codes(
     cell (no live dirs, no recorded fingerprint) counts as fresh: all
     of its rows ARE this batch.
     """
-    from .pq import pq_encode
-
     cb = _sidecar_books(root, m)
-    cells_dir = os.path.join(root, "cells")
-    codes_dir = os.path.join(root, "pq_codes")
     fresh = [
-        c
+        str(c)
         for c in touched
         if m["code_fps"].get(str(c))
         == _manifest_cell_digest(root, m, str(c), use_cache=False)
-        and all(map(os.path.isdir, _live_paths(root, "pq_codes", m, [c])))
+        and not _codes_missing(root, m, c)
     ]
     if not fresh:
         return {}
-    delta_dirs = [
-        os.path.join(cells_dir, f"cell={c}", f"ingest_batch={batch_tag}")
-        for c in fresh
-    ]
-    delta_dirs = [d for d in delta_dirs if os.path.isdir(d)]
-    if delta_dirs:
-        batch = _read_cells(spark, root, m, delta_dirs).select(
-            "cell", "vec_id", "cv", "cn"
-        )
-        cell_ddl = batch.schema["cell"].dataType.simpleString()
-        (
-            pq_encode(
-                batch,
-                cb,
-                id_col="vec_id",
-                vec_col="cv",
-                extra_cols={"cell": cell_ddl},
-            )
-            .withColumn("ingest_batch", F.lit(int(batch_tag)))
-            .write.mode("append")
-            .partitionBy("cell", "ingest_batch")
-            .parquet(codes_dir)
+    batch = _read_cells(
+        spark, root, {**m, "cells": {c: [int(batch_tag)] for c in fresh}},
+        skip_missing=True,
+    )
+    if batch is not None:
+        _write_codes(
+            batch.select("cell", "vec_id", "cv", "cn"), cb, root, batch_tag
         )
     updates: dict[str, str] = {}
     for c in fresh:
@@ -2144,8 +2271,8 @@ def _encode_batch_codes(
 def pq_append_batch_codes(
     spark: SparkSession, root: str, batch_tag: int, touched=None
 ) -> list:
-    """Encode ONE ingest batch's rows (already appended to the cells
-    tree under ``ingest_batch=<batch_tag>``) with the sidecar's
+    """Encode ONE ingest batch's rows (already written as the commit
+    directory ``deltas/ingest_batch=<batch_tag>``) with the sidecar's
     EXISTING codebooks, append them under the same tag in the codes
     tree, and refresh those cells' fingerprints; returns the refreshed
     cell values.
@@ -2359,6 +2486,14 @@ def ann_search_pq(
             "codes are STALE. Run pq_reencode_stale_cells(spark, "
             "root) (or pq_augment_ann_index to retrain)."
         )
+    missing = [c for c in probe_cells if _codes_missing(root, manifest, c)]
+    if missing:
+        raise ValueError(
+            f"ann_search_pq: the live PQ codes of probed cells {missing} "
+            f"at {root} are missing from disk. Run "
+            "pq_augment_ann_index(spark, root) (or "
+            "pq_reencode_stale_cells to re-encode just those cells)."
+        )
     if _stop_after == "probe":
         cell_ddl = _cell_ddl
         return spark.createDataFrame(
@@ -2510,7 +2645,7 @@ def ann_search_pq(
                     schema=adc_pa_schema,
                 )
 
-    code_paths = _live_paths(root, "pq_codes", manifest, probe_cells)
+    code_paths = _code_paths(root, manifest, probe_cells)
     if not code_paths:
         # every probed cell is codeless under this snapshot — and
         # consistent (the per-cell gate above passed), i.e. empty
@@ -2521,6 +2656,7 @@ def ann_search_pq(
         )
     codes_df = (
         spark.read.option("basePath", os.path.join(root, "pq_codes"))
+        .schema(manifest["codes_schema"])
         .parquet(*code_paths)  # pinned snapshot, static pruning
         .select("cell", "vec_id", "codes", "vnorm")
     )
@@ -2558,8 +2694,8 @@ def ann_search_pq(
         F.col(vec_col).alias("qv"),
         norm(F.col(vec_col)).alias("qn"),
     )
-    float_paths = _live_paths(root, "cells", manifest, probe_cells)
-    if not float_paths:  # codes without cells: nothing to re-rank
+    floats = _read_cells(spark, root, manifest, probe_cells)
+    if floats is None:  # codes without cells: nothing to re-rank
         return spark.createDataFrame(
             [],
             f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
@@ -2567,7 +2703,7 @@ def ann_search_pq(
         )
     # non-empty: codes above came from these cells' live content (gate
     # invariant)
-    floats = _read_cells(spark, root, manifest, float_paths).select(
+    floats = floats.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("cv"),
         F.col("cn"),

@@ -454,12 +454,23 @@ class IndexCatalog:
         )
 
     def lookup(
-        self, table: str, field: str, doc_id_col: str | None = None
+        self,
+        table: str,
+        field: str,
+        doc_id_col: str | None = None,
+        value: str | None = None,
     ) -> DataFrame | None:
         """Postings DataFrame for (table, field) if materialized, else None.
 
         Chunked indexes are re-merged lazily (groupBy value + flatten) so
         callers always see the logical ``[value, doc_ids]`` shape.
+
+        ``value`` restricts the result to that value's rows (a point
+        lookup).  A streaming entry then reads only the value's bucket
+        and returns its chunk rows unmerged — several rows whose
+        ``doc_ids`` together are the postings, the same multiset under
+        an ``explode`` (:func:`..streaming.index_maintenance
+        .read_index_postings`); a static entry filters the frame above.
 
         Scale guard: for a CHUNKED index the merge rebuilds exactly the
         unbounded per-value array the chunked form exists to avoid — safe
@@ -508,15 +519,17 @@ class IndexCatalog:
         if meta.get("streaming"):
             from ..streaming.index_maintenance import read_index_postings
 
-            return read_index_postings(self.spark, meta["path"])
+            return read_index_postings(self.spark, meta["path"], value)
+        from pyspark.sql import functions as F
+
         df = self._scan(meta["path"])
         if meta.get("chunked"):
-            from pyspark.sql import functions as F
-
             df = (
                 df.groupBy("value")
                 .agg(F.sort_array(F.flatten(F.collect_list("doc_ids"))).alias("doc_ids"))
             )
+        if value is not None:
+            df = df.where(F.col("value") == F.lit(str(value)))
         return df
 
     def lookup_by_doc_ids(

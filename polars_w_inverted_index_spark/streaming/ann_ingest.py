@@ -1,8 +1,8 @@
 """Streaming ANN-index ingest: new vectors join the materialized index
 as they arrive (foreachBatch over operators/ann_index.add_batch).
 
-Each micro-batch is assigned against the FROZEN centroids and appended
-to the cell-partitioned layout — O(batch) per commit, index size
+Each micro-batch is assigned against the FROZEN centroids and written
+as one commit directory — O(batch) per commit, index size
 irrelevant (the postings-index merge's property, for vectors).
 foreachBatch is at-least-once, and a blind append would double-insert
 on replay, so commits are guarded by a recorded batch_id exactly like
@@ -16,16 +16,18 @@ batch is a no-op" guarantee to actually hold):
 - the marker is written tmp-file + ``os.replace`` — a crash mid-write
   leaves the OLD marker intact, never a truncated JSON that poisons
   every later ``_read_marker``;
-- each batch's files land under their own ``ingest_batch=<id>``
-  partition directories in BOTH trees (cells and, when the sidecar is
-  maintainable, pq_codes), and become visible only at the single
-  manifest swap below.  A crash anywhere before the marker lands
-  replays as a full re-run: the replay removes the attempt's tagged
-  directories — the cells are known O(touched) from the manifest
-  (post-swap crash) plus the replay's own deterministic assignment
-  (pre-swap crash) — rolls the manifest back, and re-appends.  Without
-  the tag the half-committed files would be indistinguishable from
-  older data and the replay would double-insert.
+- each batch's files land under its own tag: one commit directory
+  ``deltas/ingest_batch=<id>`` for the vectors and, when the sidecar is
+  maintainable, one ``pq_codes/cell=<c>/ingest_batch=<id>`` directory
+  per encoded cell; they become visible only at the single manifest
+  swap below.  A crash anywhere before the marker lands replays as a
+  full re-run: the replay removes the attempt's commit directory and
+  its codes directories — the cells are known O(touched) from the
+  manifest (post-swap crash) plus the replay's own deterministic
+  assignment (pre-swap crash) — rolls the manifest back, and
+  re-appends.  Without the tag the half-committed files would be
+  indistinguishable from older data and the replay would
+  double-insert.
 
 **Snapshot isolation (r14 — r13 VERDICT task 1): serves may run
 concurrently with ingest and with the autocompaction dial's folds.**
@@ -50,15 +52,20 @@ without a readable manifest is refused with a ValueError that says to
 rebuild it.
 
 Commit shape (pinned by tests/test_plan_budgets.py and
-tests/test_commit_shape.py): one parquet file per touched cell per
-batch, and one per folded cell per fold — the rows are rebalanced on
-``cell`` before the partitioned write, so AQE still splits a cell above
-the advisory partition size.  An ingest is 5 Spark jobs: the assign
-checkpoint, the per-cell collect (a shuffle map stage and its result)
-and the write (a shuffle map stage and the write).  A fold adds 2 more;
-it reads the live cells with the schema the build recorded in the
-manifest, so it runs no schema-inference job (it still pays Spark's
-parallel-listing job when it reads more than 32 directories).
+tests/test_commit_shape.py): a batch is ONE commit directory
+``deltas/ingest_batch=<id>`` whose rows are rebalanced without a key
+and sorted by ``cell`` (4 files for 1,000 vectors over 16 cells on
+local[4], where a file per touched cell made 16), and a fold writes
+one file per folded cell into the cell-partitioned base (rebalanced on
+``cell``, so AQE still splits a cell above the advisory partition
+size).  An ingest is 5 Spark jobs: the assign checkpoint, the per-cell
+collect (a shuffle map stage and its result) and the write (a shuffle
+map stage and the write).  A fold adds 2 more.  It reads the folded
+cells' base leaves and one path per live commit with the schema the
+build recorded in the manifest, so it runs no schema-inference job,
+and in the ``ingest`` benchmark's shape (16 cells × 2 commits: 18
+paths) no parallel-listing job either: Spark lists more than 32 paths
+with a Spark job of its own.
 
 Centroids never move during ingest; rebuild with ``build_ann_index``
 on the cadence the drift monitor (streaming/drift.py) indicates —
@@ -85,14 +92,15 @@ from ..operators.ann_index import (
     pq_augment_ann_index,
 )
 
-# Autocompaction dial (r12): fold the per-batch delta directories back
-# into the base layout once any cell has accumulated more than this
-# many.  Measured knee (a one-shot benchmark, since deleted; SAME-SIZE
-# fragmented-vs-compacted warm serves on an incompressible
-# 0.9–3.9 M-row corpus): amplification 1.41× at 4 dirs, 1.60× at 8,
-# 1.84× at 16, then 3.09× at 32 and 3.53× at 64 — 16 is the last
-# point inside the ≤2× discipline the LSM postings index pins its
-# DEFAULT_MAX_SEGMENTS_PER_BUCKET at (r11 read-amplification knee).
+# Autocompaction dial (r12): fold a cell's ingest commits back into its
+# base leaf once more than this many live commits hold its rows.
+# Measured knee (a one-shot benchmark, since deleted, on the per-cell
+# delta layout; SAME-SIZE fragmented-vs-compacted warm serves on an
+# incompressible 0.9–3.9 M-row corpus): amplification 1.41× at 4
+# dirs, 1.60× at 8, 1.84× at 16, then 3.09× at 32 and 3.53× at 64 —
+# 16 is the last point inside the ≤2× discipline the LSM postings index
+# pins its DEFAULT_MAX_SEGMENTS_PER_BUCKET at (r11 read-amplification
+# knee).
 # ``None`` disables (operators who schedule compaction off-peak).
 DEFAULT_MAX_BATCH_DIRS_PER_CELL = 16
 
@@ -120,28 +128,30 @@ def _write_marker(root: str, meta: dict) -> None:
 
 
 def _rollback_batch_tag(root: str, m: dict, tag: int, cells) -> bool:
-    """Remove a crashed attempt's ``ingest_batch=<tag>`` directories
-    from BOTH trees in the given cells and roll the manifest maps back,
-    so the re-append can never double-insert; returns whether the
-    manifest changed (the caller writes it before re-appending).
+    """Remove a crashed attempt's commit directory
+    ``deltas/ingest_batch=<tag>`` and its ``pq_codes`` directories in
+    the given cells, and roll the manifest maps back, so the re-append
+    can never double-insert; returns whether the manifest changed (the
+    caller writes it before re-appending).
 
     O(touched): ``cells`` is the union of the manifest-listed cells for
     this tag (an attempt that crashed AFTER its manifest swap) and the
     replay's own deterministic assignment (an attempt that crashed
     BEFORE it — its directories are invisible but would pollute the
-    re-append's tag directory).  A fingerprint the attempt refreshed is
+    re-append's tag directories).  A fingerprint the attempt refreshed is
     re-pinned to the post-removal live content: the attempt only
     refreshed cells that were FRESH before it, so the rollback digest
     equals the attempt's own pre-append digest — already-stale cells
     stay stale (the r13 ADVICE freshness guard survives replay)."""
     changed = False
+    shutil.rmtree(AI._commit_dir(root, tag), ignore_errors=True)
     roll_fps = []
     for c in cells:
         c = str(c)
-        for tree, key in (("cells", "cells"), ("pq_codes", "codes")):
-            d = os.path.join(root, tree, f"cell={c}", f"ingest_batch={tag}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
+        d = os.path.join(root, "pq_codes", f"cell={c}", f"ingest_batch={tag}")
+        if os.path.isdir(d):
+            shutil.rmtree(d)
+        for key in ("cells", "codes"):
             tags = m[key].get(c)
             if tags and tag in tags:
                 tags.remove(tag)

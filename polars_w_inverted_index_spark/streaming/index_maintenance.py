@@ -167,14 +167,69 @@ def read_index(spark: SparkSession, index_path: str) -> DataFrame | None:
     return spark.read.schema(_segment_schema(meta)).parquet(*paths)
 
 
+# Spark lists the paths of one read with a Spark job of its own when
+# there are more than this many, and lists any directory with more
+# children the same way (``spark.sql.sources.parallelPartitionDiscovery
+# .threshold``, default 32; local[4]: ~0.3-0.4 s per listing job against
+# 35-60 ms for a driver-side listing).
+_LISTING_THRESHOLD = 32
+
+
+def _read_live_segments(
+    spark: SparkSession, index_path: str, meta: dict
+) -> DataFrame:
+    """Every live segment of the index, for a maintenance pass
+    (:func:`compact_index`, :func:`rebucket_index`): the
+    :func:`read_index` rows, read through one path per live ``m=<n>``
+    directory under basePath ``index_path`` and filtered to the marker's
+    exact ``(m, bucket)`` pairs.  A directory with more than
+    ``_LISTING_THRESHOLD`` live buckets is named by its leaves instead,
+    since Spark would list it with a job of its own, so no (buckets,
+    segments) shape lists with more jobs than naming every leaf does;
+    16 buckets × 3 segments (48 leaves) lists on the driver.
+
+    Safe only under the single-maintenance-writer rule, right after a
+    commit's prune: a named ``m=<n>`` directory then holds exactly its
+    live buckets, and the filter keeps out anything else."""
+    by_m: dict[str, list[str]] = {}
+    for segs in meta["buckets"].values():
+        for rel in segs:
+            m_dir, b_dir = os.path.split(rel)
+            by_m.setdefault(m_dir, []).append(b_dir)
+    paths, keep = [], []
+    for m_dir, b_dirs in sorted(by_m.items()):
+        if len(b_dirs) > _LISTING_THRESHOLD:
+            paths += [os.path.join(index_path, m_dir, b) for b in b_dirs]
+        else:
+            paths.append(os.path.join(index_path, m_dir))
+        buckets = ", ".join(sorted(b.split("=", 1)[1] for b in b_dirs))
+        m_val = m_dir.split("=", 1)[1]
+        keep.append(f"(m = {m_val} AND bucket IN ({buckets}))")
+    return (
+        spark.read.option("basePath", index_path)
+        .schema(f"{_segment_schema(meta)}, m int, bucket int")
+        .parquet(*paths)
+        .where(" OR ".join(keep))
+        .drop("m", "bucket")
+    )
+
+
 def read_index_postings(
-    spark: SparkSession, index_path: str
+    spark: SparkSession, index_path: str, value: str | None = None
 ) -> DataFrame | None:
     """Logical ``[value, doc_ids]`` view of the index, merging chunk rows
     for a chunked index (sorted postings, like the plain form).
 
+    ``value`` restricts the view to one value's rows and reads only its
+    bucket's segments: the bucket ``pmod(xxhash64(value), B)`` is
+    computed on the driver (:func:`~..functions.hashing.xxhash64`), so
+    the lookup names at most one bucket's segment list and runs no
+    listing job whatever the index's size.  Its chunk rows are returned
+    as stored, without the merge: the value's postings are the union of
+    their ``doc_ids``, which an ``explode`` reads as the same multiset.
+
     Scale guard (same as plans/catalog.IndexCatalog.lookup): for a
-    chunked index this merge rebuilds exactly the unbounded per-value
+    chunked index the merge rebuilds exactly the unbounded per-value
     array the chunked form exists to avoid — safe when the consumer
     filters by value first (Catalyst pushes the predicate below the
     merge) or the result set is small; whole-index consumers at scale
@@ -186,6 +241,22 @@ def read_index_postings(
             f"index at {index_path} is COMPOSITE (tuple-keyed over "
             f"{meta['composite_fields']}); read it with "
             "read_composite_index."
+        )
+    if value is not None and meta is not None and meta["buckets"]:
+        from ..functions.hashing import xxhash64
+
+        value = str(value)
+        bucket = xxhash64(value.encode("utf-8")) % int(meta["n_buckets"])
+        segs = meta["buckets"].get(str(bucket), [])
+        if not segs:
+            return spark.createDataFrame(
+                [], "value string, doc_ids array<bigint>"
+            )
+        return (
+            spark.read.schema(_segment_schema(meta))
+            .parquet(*(os.path.join(index_path, rel) for rel in segs))
+            .where(F.col("value") == F.lit(value))
+            .select("value", "doc_ids")
         )
     df = read_index(spark, index_path)
     if df is None:
@@ -295,11 +366,13 @@ def compact_index(spark: SparkSession, index_path: str) -> None:
     capped.
     """
     meta = _read_marker(index_path)
-    if meta is None or meta.get("max_postings_per_row") is None:
+    if (
+        meta is None
+        or meta.get("max_postings_per_row") is None
+        or not meta["buckets"]
+    ):
         return
-    df = read_index(spark, index_path)
-    if df is None:
-        return
+    df = _read_live_segments(spark, index_path, meta)
     n_buckets = meta["n_buckets"]
     _write_folded(
         index_path, meta, _rechunked(df, meta, n_buckets), n_buckets
@@ -377,8 +450,7 @@ def rebucket_index(
             f"no index at {index_path} — nothing to rebucket; the first "
             "merge takes n_buckets directly."
         )
-    df = read_index(spark, index_path)
-    if df is None:  # committed-but-empty index: just re-dial the marker
+    if not meta["buckets"]:  # committed-but-empty: just re-dial the marker
         _commit(
             index_path, meta, {}, None, new_n,
             next_m=meta.get("merge", -1) + 1,
@@ -387,6 +459,7 @@ def rebucket_index(
             composite_fields=meta.get("composite_fields"),
         )
         return
+    df = _read_live_segments(spark, index_path, meta)
     if meta.get("max_postings_per_row") is not None and any(
         len(v) > 1 for v in meta["buckets"].values()
     ):

@@ -58,6 +58,28 @@ def _key(df):
     )
 
 
+def _stored_rows(spark, root):
+    """``vec_id`` of every vector row on disk: the base leaves plus the
+    ingest commit directories."""
+    rows = spark.read.parquet(os.path.join(root, "cells")).select("vec_id")
+    deltas = os.path.join(root, "deltas")
+    if os.path.isdir(deltas) and os.listdir(deltas):
+        rows = rows.unionByName(spark.read.parquet(deltas).select("vec_id"))
+    return rows
+
+
+def _live_deltas(root, cell=None):
+    """Live ingest-commit tags (>= 0) of ``cell`` (of every cell when
+    None) under the manifest; negative tags are base generations."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    cells = ai._load_manifest(root)["cells"]
+    return [
+        t for c, tags in cells.items() for t in tags
+        if t >= 0 and (cell is None or c == str(cell))
+    ]
+
+
 def test_full_probe_equals_brute_force(spark, emb, queries, index_root):
     exact = brute_force_topk(emb, queries, k=5)
     served = ann_search(spark, index_root, queries, k=5, nprobe=8)
@@ -201,14 +223,11 @@ def test_streaming_ingest_replay_guard(spark, emb, tmp_path):
 
     assert ann_ingest_batch(b1, root, batch_id=0) == b1.count()
     assert ann_ingest_batch(b2, root, batch_id=1) == b2.count()
-    cells = spark.read.parquet(os.path.join(root, "cells"))
-    assert cells.count() == emb.count()
+    assert _stored_rows(spark, root).count() == emb.count()
 
-    # committed replay: no-op, cells unchanged
+    # committed replay: no-op, stored rows unchanged
     assert ann_ingest_batch(b2, root, batch_id=1) == 0
-    assert spark.read.parquet(os.path.join(root, "cells")).count() == (
-        emb.count()
-    )
+    assert _stored_rows(spark, root).count() == emb.count()
     # behind the committed id: loud failure
     with pytest.raises(ValueError, match="behind committed"):
         ann_ingest_batch(b1, root, batch_id=0)
@@ -223,7 +242,7 @@ def test_streaming_ingest_replay_guard(spark, emb, tmp_path):
 def test_ingest_crash_window_replay(spark, emb, tmp_path):
     """The crash window AFTER the parquet append commits but BEFORE the
     marker lands: the replay must remove the orphaned batch files
-    (they're isolated in ingest_batch=<id> partition dirs) and re-append
+    (they're isolated in the batch's commit directory) and re-append
     exactly once — no double-insert, no lost rows."""
     from polars_w_inverted_index_spark.operators.ann_index import (
         ann_index_add_batch,
@@ -241,14 +260,14 @@ def test_ingest_crash_window_replay(spark, emb, tmp_path):
     ann_index_add_batch(spark, root, b1, batch_tag=1)
     # replay of batch 1 cleans the orphan and appends exactly once
     assert ann_ingest_batch(b1, root, batch_id=1) == b1.count()
-    cells = spark.read.parquet(os.path.join(root, "cells"))
+    cells = _stored_rows(spark, root)
     assert cells.count() == emb.count()
     assert cells.select("vec_id").distinct().count() == emb.count()
 
 
 def test_compaction_folds_deltas_and_preserves_serving(spark, emb, tmp_path):
     """After several guarded micro-batches, compaction folds the
-    ingest_batch delta dirs into the base layout with identical served
+    ingest commits into the base layout with identical served
     results (full-probe == brute force before and after), and a second
     compaction is a no-op."""
     import glob
@@ -264,8 +283,7 @@ def test_compaction_folds_deltas_and_preserves_serving(spark, emb, tmp_path):
     for i, lo, hi in [(0, 200, 300), (1, 300, 400), (2, 400, 10**9)]:
         b = emb.where((F.col("vec_id") >= lo) & (F.col("vec_id") < hi))
         assert ann_ingest_batch(b, root, batch_id=i) == b.count()
-    deltas = glob.glob(f"{root}/cells/cell=*/ingest_batch=*")
-    assert any(not d.endswith("=-1") for d in deltas)
+    assert len(glob.glob(f"{root}/deltas/ingest_batch=*")) == 3
 
     queries = emb.where(F.col("vec_id") % 100 == 0)
     before = _key(ann_search(spark, root, queries, k=5, nprobe=6))
@@ -286,6 +304,7 @@ def test_compaction_folds_deltas_and_preserves_serving(spark, emb, tmp_path):
     for d in after_dirs:
         per_cell.setdefault(d.rsplit("/", 2)[-2], []).append(d)
     assert per_cell and all(len(v) == 1 for v in per_cell.values()), per_cell
+    assert os.listdir(f"{root}/deltas") == []  # every commit retired
     assert _key(ann_search(spark, root, queries, k=5, nprobe=6)) == before
     assert before == _key(brute_force_topk(emb, queries, k=5))
     assert ann_index_compact(spark, root) == 0  # idempotent no-op
@@ -822,7 +841,6 @@ def test_ingest_autocompact_dial_folds_and_reaugments(spark, emb, tmp_path):
     (``pq_reencode_stale_cells`` covers folded AND sub-dial stale
     cells) so ``ann_search_pq`` keeps serving without an external
     scheduler."""
-    import glob
     import json as _json
 
     from polars_w_inverted_index_spark.operators.ann_index import (
@@ -841,11 +859,7 @@ def test_ingest_autocompact_dial_folds_and_reaugments(spark, emb, tmp_path):
     books_before = _json.load(open(f"{root}/_pq_meta.json"))["books"]
 
     def delta_dirs():
-        return [
-            d
-            for d in glob.glob(f"{root}/cells/cell=*/ingest_batch=*")
-            if not d.endswith("ingest_batch=-1")
-        ]
+        return _live_deltas(root)
 
     b0 = emb.where((F.col("vec_id") >= 200) & (F.col("vec_id") < 300))
     b1 = emb.where(F.col("vec_id") >= 300)
@@ -929,7 +943,6 @@ def test_compact_cells_folds_only_requested(spark, emb, tmp_path):
     folds the requested cells' delta dirs, leaves other cells' deltas
     for a later fold, reports the folded-dir count, leaves no staging/
     old directories, and a no-op call returns 0."""
-    import glob
 
     from polars_w_inverted_index_spark.operators.ann_index import (
         ann_index_add_batch,
@@ -942,15 +955,7 @@ def test_compact_cells_folds_only_requested(spark, emb, tmp_path):
     (cell_a, vec_a), (cell_b, vec_b) = _two_cell_vectors(spark, root)
 
     def deltas(cell):
-        # delta dirs = guarded batch tags (>= 0); negative tags are the
-        # base/fold generations, and retired dirs prune behind grace=0
-        return [
-            d
-            for d in glob.glob(
-                f"{root}/cells/cell={cell}/ingest_batch=*"
-            )
-            if int(d.rsplit("=", 1)[1]) >= 0
-        ]
+        return _live_deltas(root, cell)
 
     # two delta batches into A, one into B (skew)
     for tag, vec in ((1, vec_a), (2, vec_a), (3, vec_b)):
@@ -997,7 +1002,6 @@ def test_autocompact_selective_fold_is_per_cell(spark, emb, tmp_path):
     — and the PQ sidecar refresh is selective too (existing codebooks,
     stale cells only), after which both serve paths equal brute force
     over the union corpus."""
-    import glob
     import json as _json
 
     from polars_w_inverted_index_spark.operators.ann_index import (
@@ -1014,12 +1018,7 @@ def test_autocompact_selective_fold_is_per_cell(spark, emb, tmp_path):
     (cell_a, vec_a), (cell_b, vec_b) = _two_cell_vectors(spark, root)
 
     def deltas(cell):
-        # delta dirs = guarded batch tags (>= 0); see the sibling helper
-        return [
-            d
-            for d in glob.glob(f"{root}/cells/cell={cell}/ingest_batch=*")
-            if int(d.rsplit("=", 1)[1]) >= 0
-        ]
+        return _live_deltas(root, cell)
 
     # batch 0 → cold cell B; batches 1,2 → hot cell A (dial=1: the
     # second A batch pushes A past the dial)
@@ -1100,63 +1099,68 @@ def test_per_cell_gate_blocks_only_stale_probed_cells(spark, emb, tmp_path):
     assert pq_reencode_stale_cells(spark, root) == 0
 
 
-def test_compact_restamps_bandwidth(spark, emb, tmp_path, monkeypatch):
-    """r12 VERDICT Missing #3: both folds re-probe and re-stamp the
-    measured bandwidth (the rewrite is a free cold-read window), so a
-    stale stamp moves; implausible (cache-tainted) readings are
-    REFUSED and leave the stamp untouched (r12 ADVICE)."""
+def test_fold_stamps_bandwidth_once(spark, emb, tmp_path, monkeypatch):
+    """A fold probes the bandwidth only while ``_ann_meta.json`` has no
+    stamp: a root the build could not measure is stamped by its first
+    measurable fold, and later folds never run the probe's tree walk,
+    copy and fsync again.  An implausible (cache-tainted) reading is
+    refused and leaves the root unstamped (r12 ADVICE)."""
     import json as _json
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
 
-    root = str(tmp_path / "restamp")
+    probes = []
+
+    def measure(result):
+        def fake(*a, **k):
+            probes.append(result)
+            return result
+        return fake
+
+    root = str(tmp_path / "stamp_once")
+    monkeypatch.setattr(ai, "_measure_cold_bandwidth_mbps", measure(None))
     ai.build_ann_index(emb.where(F.col("vec_id") < 200), root,
                        n_centroids=4, n_iters=0)
     meta_path = os.path.join(root, "_ann_meta.json")
+    assert "bandwidth_mbps" not in _json.loads(open(meta_path).read())
 
-    def plant(mbps):
-        meta = _json.loads(open(meta_path).read())
-        meta["bandwidth_mbps"] = mbps
-        open(meta_path, "w").write(_json.dumps(meta))
-
-    def ingest(tag):
+    def fold(tag):
         ai.ann_index_add_batch(
             spark, root,
-            emb.where(F.col("vec_id").between(200, 220)), batch_tag=tag,
+            emb.where(F.col("vec_id").between(200 + 10 * tag, 209 + 10 * tag)),
+            batch_tag=tag,
         )
+        assert ai.ann_index_compact(spark, root) > 0
+
+    # implausible reading → refused, the root stays unstamped
+    monkeypatch.setattr(
+        ai, "_measure_cold_bandwidth_mbps",
+        measure((ai._MAX_PLAUSIBLE_DISK_MBPS + 1, 64 << 20)),
+    )
+    fold(1)
+    assert "bandwidth_mbps" not in _json.loads(open(meta_path).read())
 
     monkeypatch.setattr(
-        ai, "_measure_cold_bandwidth_mbps", lambda *a, **k: (777.0, 8 << 20)
+        ai, "_measure_cold_bandwidth_mbps", measure((777.0, 8 << 20))
     )
-    plant(1.0)
-    ingest(1)
-    assert ai.ann_index_compact(spark, root) > 0
+    probes.clear()
+    fold(2)  # the first measurable fold stamps the root
     meta = _json.loads(open(meta_path).read())
-    assert meta["bandwidth_mbps"] == 777.0       # full fold re-stamped
+    assert meta["bandwidth_mbps"] == 777.0
     assert meta["bandwidth_probe_method"] == (
         "scratch_copy+fsync+fadvise_dontneed+seqread"
     )
-
-    plant(1.0)
-    ingest(2)
-    cells = [
-        d[len("cell="):]
-        for d in os.listdir(os.path.join(root, "cells"))
-        if d.startswith("cell=")
-    ]
-    assert ai.ann_index_compact_cells(spark, root, cells) > 0
-    assert _json.loads(open(meta_path).read())["bandwidth_mbps"] == 777.0
-
-    # implausible reading → refused, stamp untouched
-    monkeypatch.setattr(
-        ai,
-        "_measure_cold_bandwidth_mbps",
-        lambda *a, **k: (ai._MAX_PLAUSIBLE_DISK_MBPS + 1, 64 << 20),
+    assert len(probes) == 1
+    probes.clear()
+    fold(3)  # stamped: no probe at all
+    cells = sorted(ai._load_manifest(root)["cells"])
+    ai.ann_index_add_batch(
+        spark, root, emb.where(F.col("vec_id").between(300, 320)),
+        batch_tag=4,
     )
-    plant(42.0)
-    ingest(3)
-    assert ai.ann_index_compact(spark, root) > 0
-    assert _json.loads(open(meta_path).read())["bandwidth_mbps"] == 42.0
+    assert ai.ann_index_compact_cells(spark, root, cells) > 0
+    assert probes == []
+    assert _json.loads(open(meta_path).read())["bandwidth_mbps"] == 777.0
 
 
 def test_fold_probe_never_evicts_live_cells(spark, emb, tmp_path, monkeypatch):
@@ -1284,6 +1288,67 @@ def test_reencode_drops_codes_of_removed_cells(spark, emb, tmp_path):
     assert ann_search_pq(
         spark, root, q_b, k=3, nprobe=1, rerank_factor=1000
     ).count() == 3
+
+
+def _pq_root_without_one_cells_codes(spark, emb, root):
+    """A PQ root whose first cell lost its live codes directories by
+    hand; returns that cell."""
+    import shutil
+
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    build_ann_index(emb.where(F.col("vec_id") < 300), root,
+                    n_centroids=4, n_iters=1)
+    ai.pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
+    cell = sorted(ai._load_manifest(root)["codes"])[0]
+    shutil.rmtree(os.path.join(root, "pq_codes", f"cell={cell}"))
+    return cell
+
+
+def test_pq_serve_names_a_cell_whose_codes_are_missing(
+    spark, emb, tmp_path
+):
+    """A serve probing a cell whose live codes directory is gone raises
+    a ValueError naming the cell and the repair (Spark's PATH_NOT_FOUND
+    named neither)."""
+    from polars_w_inverted_index_spark.operators.ann_index import (
+        ann_search_pq,
+    )
+
+    root = str(tmp_path / "codes_gone")
+    cell = _pq_root_without_one_cells_codes(spark, emb, root)
+    q = emb.where(F.col("vec_id") % 100 == 0)
+    with pytest.raises(ValueError, match="pq_augment_ann_index") as e:
+        ann_search_pq(spark, root, q, k=5, nprobe=4)
+    assert f"probed cells [{cell}]" in str(e.value)
+    assert "missing" in str(e.value)
+
+
+def test_reencode_restores_a_cells_missing_codes(spark, emb, tmp_path):
+    """The re-encode counts a cell whose live codes directory is gone as
+    stale (its recorded fingerprint still matches its unchanged rows)
+    and rewrites its codes, after which a full-coverage PQ serve equals
+    brute force again."""
+    from polars_w_inverted_index_spark.operators.ann_index import (
+        _load_manifest,
+        ann_search_pq,
+        pq_reencode_stale_cells,
+    )
+
+    root = str(tmp_path / "codes_gone")
+    cell = _pq_root_without_one_cells_codes(spark, emb, root)
+    assert pq_reencode_stale_cells(spark, root) == 1
+    tags = _load_manifest(root)["codes"][cell]
+    assert all(
+        os.path.isdir(os.path.join(
+            root, "pq_codes", f"cell={cell}", f"ingest_batch={t}"))
+        for t in tags
+    ) and tags
+    assert pq_reencode_stale_cells(spark, root) == 0
+    q = emb.where(F.col("vec_id") % 100 == 0)
+    got = ann_search_pq(spark, root, q, k=5, nprobe=4, rerank_factor=1000)
+    want = brute_force_topk(emb.where(F.col("vec_id") < 300), q, k=5)
+    assert _key(got) == _key(want)
 
 
 def test_encode_at_ingest_keeps_pq_fresh(spark, emb, tmp_path):

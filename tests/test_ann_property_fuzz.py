@@ -730,7 +730,7 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
       swap — the dirs are referenced by NO manifest, invisible to every
       reader, and must be collected by a later fold's orphan sweep,
       never resurrected;
-    - ``crash_ingest_pre_swap``: an ingest appended tagged directories
+    - ``crash_ingest_pre_swap``: an ingest wrote its commit directory
       but crashed before its manifest swap and was ABANDONED (no
       replay) — same invariant: invisible, swept by a later fold;
     - ``crash_prune_window``: a prune deleted a retired directory but
@@ -774,12 +774,12 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
         [(1000, vec(0)), (1001, vec(3))], SCHEMA
     )
 
-    def any_live_dir():
+    def any_live_base_dir():
         m = ai._load_manifest(root)
         for c, tags in sorted(m["cells"].items()):
             for t in tags:
-                d = os.path.join(cells, f"cell={c}", f"ingest_batch={t}")
-                if os.path.isdir(d):
+                d = ai._tag_dir(root, c, t)
+                if t < 0 and os.path.isdir(d):
                     return c, d
         return None, None
 
@@ -809,7 +809,7 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
             m = ai._load_manifest(root)
             ann_index_compact_cells(spark, root, sorted(m["cells"]))
         elif op == "crash_fold_orphan":
-            c, d = any_live_dir()
+            c, d = any_live_base_dir()
             if d is None:
                 continue
             m = ai._load_manifest(root)
@@ -820,14 +820,14 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
                 d, os.path.join(cells, f"cell={c}", f"ingest_batch={-g}")
             )
         elif op == "crash_ingest_pre_swap":
-            c, d = any_live_dir()
-            if d is None:
-                continue
-            shutil.copytree(
-                d,
-                os.path.join(cells, f"cell={c}", "ingest_batch=999555"),
-                dirs_exist_ok=True,
+            # the commit write of a real attempt, without its swap
+            rows = [(next_id, vec(next_id))]
+            assigned, _touched, _n = ai._assign_batch_checkpoint(
+                spark, root, spark.createDataFrame(rows, SCHEMA),
+                "vec_id", "embedding",
             )
+            ai._append_assigned(root, assigned, 999555)
+            next_id += 2
         elif op == "crash_prune_window":
             m = ai._load_manifest(root)
             m["retired"].append(
@@ -846,11 +846,14 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
     m = ai._load_manifest(root)
     assert m["retired"] == []
     live = {
-        os.path.join(cells, f"cell={c}", f"ingest_batch={t}")
+        ai._tag_dir(root, c, t)
         for c, tags in m["cells"].items()
         for t in tags
     }
-    physical = set(_glob.glob(os.path.join(cells, "cell=*", "ingest_batch=*")))
+    physical = set(
+        _glob.glob(os.path.join(cells, "cell=*", "ingest_batch=*"))
+        + _glob.glob(os.path.join(root, "deltas", "ingest_batch=*"))
+    )
     assert physical == live, (physical - live, live - physical)
     assert _key(ann_search(spark, root, queries, k=K, nprobe=2)) == truth()
 

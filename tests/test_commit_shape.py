@@ -1,9 +1,10 @@
 """Commit shape of the two streaming indexes.
 
-A streaming commit writes one parquet file per touched LSM bucket or
-IVF cell, whatever the partitioning of the batch, and compaction
-re-chunks in one shuffle with exactly the rows of the two-shuffle join
-form it replaced (kept below as the oracle).
+An LSM commit writes one parquet file per touched bucket, whatever the
+partitioning of the batch, and compaction re-chunks in one shuffle with
+exactly the rows of the two-shuffle join form it replaced (kept below
+as the oracle).  An IVF ingest commit is one commit directory of a few
+files, and a fold writes one file per folded cell.
 """
 
 from __future__ import annotations
@@ -177,44 +178,118 @@ def _vectors(spark, lo, n, parts=None, dim=8):
     return df.repartition(parts) if parts else df
 
 
-def _live_dirs(root, tag=None):
+def _manifest_cells(root):
     with open(os.path.join(root, "_cells_manifest.json")) as f:
-        cells = json.load(f)["cells"]
-    return {
-        c: os.path.join(root, "cells", f"cell={c}", f"ingest_batch={t}")
-        for c, tags in cells.items()
-        for t in tags
-        if tag is None or t == tag
-    }
+        return json.load(f)["cells"]
 
 
-def test_ann_ingest_and_fold_write_one_file_per_cell(spark, tmp_path):
+def test_ann_ingest_writes_one_commit_dir_and_fold_one_file_per_cell(
+    spark, tmp_path
+):
+    """An ingest is ONE commit directory ``deltas/ingest_batch=<t>``
+    holding fewer files than the cells it touches (a file per touched
+    cell made 16 directories and 16 files for this batch); a fold
+    writes one base file per folded cell; the rows served from base ∪
+    deltas are exactly the ingested ones, and a full probe still equals
+    brute force."""
+    from polars_w_inverted_index_spark.operators import ann_index as AI
+    from polars_w_inverted_index_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
     root = str(tmp_path / "ann")
-    build_ann_index(_vectors(spark, 0, 1200), root, n_centroids=6, n_iters=1)
-    batch = _vectors(spark, 5000, 600, parts=4)
-    assert batch.rdd.getNumPartitions() == 4
+    base = _vectors(spark, 0, 4000)
+    build_ann_index(base, root, n_centroids=16, n_iters=1)
+    b0 = _vectors(spark, 5000, 1000, parts=4)
     assert ann_ingest_batch(
-        batch, root, batch_id=0, max_batch_dirs_per_cell=None
-    ) == 600
-    touched = _live_dirs(root, tag=0)
-    assert len(touched) >= 4
-    for d in touched.values():
-        assert len(_parquet_files(d)) == 1, d
+        b0, root, batch_id=0, max_batch_dirs_per_cell=None
+    ) == 1000
+    touched = [c for c, tags in _manifest_cells(root).items() if 0 in tags]
+    assert len(touched) >= 8
+    assert os.listdir(os.path.join(root, "deltas")) == ["ingest_batch=0"]
+    commit = os.path.join(root, "deltas", "ingest_batch=0")
+    assert 1 <= len(_parquet_files(commit)) < len(touched)
+    assert not [
+        c for c in os.listdir(os.path.join(root, "cells"))
+        if os.path.exists(os.path.join(root, "cells", c, "ingest_batch=0"))
+    ]
     # the next batch pushes every cell it touches past the dial of 1:
     # each folded cell's new generation is one file
-    ann_ingest_batch(
-        _vectors(spark, 9000, 600, parts=4), root, batch_id=1,
-        max_batch_dirs_per_cell=1,
-    )
-    folded = {c: d for c, d in _live_dirs(root).items()
-              if int(d.rsplit("=", 1)[1]) < -1}
-    assert len(folded) >= 4
+    b1 = _vectors(spark, 9000, 1000, parts=4)
+    ann_ingest_batch(b1, root, batch_id=1, max_batch_dirs_per_cell=1)
+    cells = _manifest_cells(root)
+    folded = {
+        c: os.path.join(root, "cells", f"cell={c}", f"ingest_batch={t}")
+        for c, tags in cells.items() for t in tags if t < -1
+    }
+    assert len(folded) >= 8
     for d in folded.values():
         assert len(_parquet_files(d)) == 1, d
-    live = spark.read.option("basePath", os.path.join(root, "cells")).parquet(
-        *_live_dirs(root).values()
+    m = AI._load_manifest(root)
+    ids = sorted(r["vec_id"] for r in AI._read_cells(spark, root, m).collect())
+    want = sorted(
+        list(range(0, 4000)) + list(range(5000, 6000))
+        + list(range(9000, 10000))
     )
-    assert live.count() == 2400  # nothing lost or doubled by the fold
+    assert ids == want  # nothing lost or doubled by the fold
+    corpus = base.unionByName(b0).unionByName(b1)
+    q = _vectors(spark, 10**6, 12)
+    key = ["query_id", "neighbor_id", "cos_sim", "rank"]
+    served = AI.ann_search(spark, root, q, k=5, nprobe=16)
+    exact = brute_force_topk(corpus, q, k=5)
+    assert sorted(served.select(key).collect()) == sorted(
+        exact.select(key).collect()
+    )
+
+
+def test_cells_files_write_vectors_without_a_dictionary(spark, tmp_path):
+    """The build, an ingest commit and a fold write ``cv`` PLAIN: no
+    dictionary page in the footer, on vectors a default write does
+    dictionary-encode (few distinct values)."""
+    import pyarrow.parquet as papq
+
+    def cv_chunk(path):
+        md = papq.ParquetFile(path).metadata.row_group(0)
+        return next(
+            md.column(i) for i in range(md.num_columns)
+            if md.column(i).path_in_schema == "cv.list.element"
+        )
+
+    def small_ints(lo, n, parts=None):
+        x = np.random.default_rng(lo).integers(0, 3, size=(n, 8))
+        df = spark.createDataFrame(pa.table({
+            "vec_id": pa.array(np.arange(lo, lo + n), pa.int64()),
+            "embedding": pa.array(
+                list(x.astype(float)), pa.list_(pa.float64())
+            ),
+        }))
+        return df.repartition(parts) if parts else df
+
+    control = str(tmp_path / "control")
+    small_ints(0, 800).selectExpr("embedding AS cv").write.parquet(control)
+    assert cv_chunk(os.path.join(
+        control, _parquet_files(control)[0])).has_dictionary_page
+
+    root = str(tmp_path / "ann")
+    build_ann_index(small_ints(0, 800), root, n_centroids=4, n_iters=1)
+    ann_ingest_batch(small_ints(1000, 300, 2), root, batch_id=0,
+                     max_batch_dirs_per_cell=None)
+    ann_ingest_batch(small_ints(2000, 300, 2), root, batch_id=1,
+                     max_batch_dirs_per_cell=1)
+    files = [
+        os.path.join(dp, f)
+        for dp, _dn, fs in os.walk(root)
+        for f in fs
+        if f.endswith(".parquet") and ("/cells/" in dp or "/deltas/" in dp)
+    ]
+    tags = {os.path.basename(os.path.dirname(f)) for f in files}
+    assert {"ingest_batch=-1", "ingest_batch=0", "ingest_batch=1"} <= tags
+    assert any(t.startswith("ingest_batch=-") and t != "ingest_batch=-1"
+               for t in tags)  # a fold's generation
+    for f in files:
+        chunk = cv_chunk(f)
+        assert not chunk.has_dictionary_page, f
+        assert not any("DICTIONARY" in e for e in chunk.encodings), f
 
 
 def test_cells_readers_use_the_recorded_schema(spark, tmp_path):
@@ -230,11 +305,10 @@ def test_cells_readers_use_the_recorded_schema(spark, tmp_path):
         "cell bigint, ingest_batch int, vec_id bigint, cv array<double>, "
         "cn double"
     )
-    paths = AI._live_paths(root, "cells", m)
-    known = AI._read_cells(spark, root, m, paths)
+    known = AI._read_cells(spark, root, m)
     inferred = spark.read.option(
         "basePath", os.path.join(root, "cells")
-    ).parquet(*paths)
+    ).parquet(*AI._cell_dirs(root, m))
     del m["cells_schema"]
     with open(os.path.join(root, "_cells_manifest.json"), "w") as f:
         json.dump(m, f)

@@ -16,6 +16,7 @@ with AQE, one job per exchange, except span-scrub's tiny commits.
 
 from __future__ import annotations
 
+import json
 import os
 import re
 import time
@@ -29,7 +30,9 @@ from pyspark.sql import functions as F
 from polars_w_inverted_index_spark.functions.text import unigram_lm
 from polars_w_inverted_index_spark.operators.ann_index import (
     ann_search,
+    ann_search_pq,
     build_ann_index,
+    pq_augment_ann_index,
 )
 from polars_w_inverted_index_spark.operators.inverted_index import postings
 from polars_w_inverted_index_spark.operators.stats import numeric_stats
@@ -98,6 +101,35 @@ def _jobs(spark, fn) -> int:
     finally:
         sc.setLocalProperty("spark.jobGroup.id", prev)
     return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+LISTING = "Listing leaf files and directories"
+
+
+def _job_descriptions(spark, fn) -> list[str]:
+    """Descriptions of the Spark jobs ``fn()`` launches (by job group),
+    read from the status store; Spark's parallel file listing describes
+    its jobs with ``LISTING``."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    prev = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prev)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty(30_000)
+    store = jsc.statusStore()
+    out = []
+    for jid in sc.statusTracker().getJobIdsForGroup(group):
+        desc = store.job(jid).description()
+        out.append(desc.get() if desc.isDefined() else "")
+    return out
+
+
+def _listing(descs) -> int:
+    return sum(d.startswith(LISTING) for d in descs)
 
 
 def _backdate(path, secs=10.0):
@@ -287,6 +319,114 @@ def test_live_corpus_frame_launches_no_jobs(spark, ann_root):
     with open(os.path.join(ann_root, "_ann_meta.json")) as f:
         meta = json.load(f)
     assert _jobs(spark, lambda: _live_corpus(spark, ann_root, meta)) == 0
+
+
+def test_pq_serve_reads_codes_with_the_recorded_schema(spark, tmp_path):
+    """The augment records the codes tree's schema in the manifest and
+    the PQ serve reads its codes with it: building an ``ann_search_pq``
+    frame launches at most 2 jobs (3 with a schema-inferring read)."""
+    root = str(tmp_path / "pq")
+    build_ann_index(_vectors(spark, 0, 400), root, n_centroids=4, n_iters=1)
+    pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
+    with open(os.path.join(root, "_cells_manifest.json")) as f:
+        assert json.load(f)["codes_schema"].startswith(
+            "vec_id bigint, codes array<bigint>, vnorm double, cell "
+        )
+    q = _vectors(spark, 10**9, 5)
+    assert ann_search_pq(spark, root, q, k=3, nprobe=2).count() == 15
+    assert _jobs(
+        spark, lambda: ann_search_pq(spark, root, q, k=3, nprobe=2)
+    ) <= 2
+
+
+def _users(spark, lo, n=2000, users=997):
+    return spark.range(lo, lo + n, numPartitions=4).selectExpr(
+        "id AS doc_id", f"concat('u', id % {users}) AS user_id"
+    )
+
+
+def _lsm(spark, idx, n_buckets, n_merges, n=2000):
+    for i in range(n_merges):
+        merge_postings_batch(
+            _users(spark, i * n, n), "user_id", idx, batch_id=i,
+            n_buckets=n_buckets, max_postings_per_row=64,
+            max_segments_per_bucket=None,
+        )
+    frag = index_fragmentation(idx)
+    assert frag["segments"] == n_buckets * n_merges, frag
+
+
+def test_ingest_shape_maintenance_runs_no_listing_job(spark, tmp_path):
+    """The ``ingest`` benchmark's shape: a compaction of 16 buckets × 3
+    segments and a fold of 16 cells × 2 live commits each name at most
+    18 paths, so Spark lists them on the driver.  Naming a directory per
+    (bucket, segment) or (cell, commit) — 48 paths, past Spark's
+    threshold of 32 — added a parallel-listing job to each: compaction
+    3 jobs, folding ingest 8.  The full-probe serves between them list
+    on the driver too, and the ``ann_search`` plan launches no job."""
+    idx = str(tmp_path / "lsm")
+    _lsm(spark, idx, n_buckets=16, n_merges=3)
+    compact = _job_descriptions(spark, lambda: compact_index(spark, idx))
+    assert index_fragmentation(idx)["max_segments_per_bucket"] == 1
+    assert _listing(compact) == 0 and len(compact) <= 2, compact
+
+    root = str(tmp_path / "ann")
+    build_ann_index(_vectors(spark, 0, 4000), root, n_centroids=16,
+                    n_iters=1)
+    b0, b1 = _vectors(spark, 5000, 1000, 4), _vectors(spark, 6000, 1000, 4)
+    b0.count(), b1.count()
+    q = _vectors(spark, 10**9, 5)
+    plain = _job_descriptions(spark, lambda: ann_ingest_batch(
+        b0, root, batch_id=0, max_batch_dirs_per_cell=None))
+    with open(os.path.join(root, "_cells_manifest.json")) as f:
+        assert len(json.load(f)["cells"]) == 16
+    serve = _job_descriptions(
+        spark, lambda: ann_search(spark, root, q, k=3, nprobe=16).collect())
+    fold = _job_descriptions(spark, lambda: ann_ingest_batch(
+        b1, root, batch_id=1, max_batch_dirs_per_cell=1))
+    with open(os.path.join(root, "_cells_manifest.json")) as f:
+        cells = json.load(f)["cells"]
+    assert all(t < 0 for tags in cells.values() for t in tags), cells
+    assert _listing(plain + serve + fold) == 0, (plain, serve, fold)
+    assert len(plain) <= 5 and len(fold) <= 7, (plain, fold)
+    assert _jobs(
+        spark, lambda: ann_search(spark, root, q, k=3, nprobe=16)
+    ) == 0
+
+
+def test_wide_compaction_lists_no_more_than_its_leaves(spark, tmp_path):
+    """64 buckets: every ``m=<n>`` directory has more than 32 live
+    buckets, so the compaction names its leaves (a directory that wide
+    lists with a job of its own) and lists with one job, as naming
+    every leaf always did."""
+    idx = str(tmp_path / "lsm64")
+    _lsm(spark, idx, n_buckets=64, n_merges=3, n=4000)
+    compact = _job_descriptions(spark, lambda: compact_index(spark, idx))
+    assert _listing(compact) <= 1, compact
+
+
+def test_streaming_point_lookup_reads_one_bucket(spark, tmp_path):
+    """At the default dial (16 buckets, up to 17 segments each before
+    the compaction fires) a point lookup names only its value's bucket:
+    1 job and no listing job.  Merging every bucket's chunks named 272
+    paths and paid a listing job and a shuffle on every lookup."""
+    from polars_w_inverted_index_spark.engine import Engine
+
+    idx = str(tmp_path / "lsm")
+    _lsm(spark, idx, n_buckets=16, n_merges=17, n=400)
+    cat = IndexCatalog(spark, str(tmp_path / "catalog"))
+    cat.adopt_streaming("events", "user_id", idx)
+    empty = spark.createDataFrame([], "doc_id long, user_id string")
+    eng = Engine(spark, df=empty, table_name="events", index_catalog=cat)
+    for user, want in (("u5", [i for i in range(17 * 400) if i % 997 == 5]),
+                       ("nobody", [])):
+        got = []
+        descs = _job_descriptions(spark, lambda u=user: got.extend(
+            r["doc_id"]
+            for r in eng.get_doc_ids_where({"user_id": u}).collect()
+        ))
+        assert sorted(got) == want
+        assert _listing(descs) == 0 and len(descs) <= 1, descs
 
 
 def test_sorted_and_zorder_write_budgets(spark, tmp_path):

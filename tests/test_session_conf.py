@@ -1,6 +1,7 @@
 """Session-wide configuration: the default driver heap follows the host,
-and no engine operation rewrites the session's planner conf while it
-runs.  Neither test starts Spark."""
+no engine operation rewrites the session's planner conf while it runs,
+and nothing in the package sets Spark's parallel-listing threshold.
+None of the tests starts Spark."""
 
 from __future__ import annotations
 
@@ -30,6 +31,11 @@ ALLOWED = {
     ("sources/parquet.py", "scan_parquet"),
     ("streaming/span_scrub.py", "_static_plan_when_tiny"),
 }
+# Spark lists a read's paths with a job of its own past this threshold
+# (default 32).  The engine keeps its streaming reads under it instead
+# of raising it for every query of the session, so no scope may set it,
+# the session factory included.
+LISTING_KEYS = ("spark.sql.sources.parallelPartitionDiscovery.",)
 
 
 def _meminfo(tmp_path, total_kb):
@@ -122,9 +128,25 @@ def planner_conf_flips(rel: str, source: str) -> list[str]:
     return [
         f"{rel}:{line} {func} sets {key!r}"
         for line, func, key in conf_writes(source)
-        if (rel, None) not in ALLOWED
-        and (rel, func) not in ALLOWED
-        and (key is None or key.startswith(PLANNER_KEYS))
+        if (key is not None and key.startswith(LISTING_KEYS))
+        or (
+            (rel, None) not in ALLOWED
+            and (rel, func) not in ALLOWED
+            and (key is None or key.startswith(PLANNER_KEYS))
+        )
+    ]
+
+
+def listing_key_constants(source: str) -> list[int]:
+    """Lines of string constants naming a parallel-listing key — the
+    builder's ``.config(...)`` and conf dicts write a key without a
+    ``conf.set`` call."""
+    return [
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and node.value.startswith(LISTING_KEYS)
     ]
 
 
@@ -140,6 +162,20 @@ def test_no_package_operation_flips_planner_conf():
                 scanned += 1
     assert scanned > 50
     assert not flips, flips
+
+
+def test_no_package_code_names_the_listing_threshold():
+    found = []
+    for dirpath, _dn, filenames in os.walk(PKG):
+        for fn in filenames:
+            if fn.endswith(".py"):
+                path = os.path.join(dirpath, fn)
+                with open(path) as f:
+                    found += [
+                        f"{path}:{line}"
+                        for line in listing_key_constants(f.read())
+                    ]
+    assert not found, found
 
 
 def test_scanner_flags_a_conf_flip():
@@ -171,3 +207,14 @@ def low_memory_scans(spark):
     # the allowed scopes are exempt: all of session.py, one function here
     assert planner_conf_flips("session.py", src) == []
     assert len(planner_conf_flips("sources/parquet.py", src)) == 4
+    # ... but not from the listing threshold, in any form
+    key = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+    listing = f'''
+def factory(builder, spark):
+    spark.conf.set("{key}", "64")
+    return builder.config("{key}", "64")
+'''
+    assert planner_conf_flips("session.py", listing) == [
+        f"session.py:3 factory sets {key!r}"
+    ]
+    assert listing_key_constants(listing) == [3, 4]
