@@ -18,8 +18,9 @@ once, serve forever) taken to its operational conclusion:
 * a **rebuild** (:func:`ann_deployment_rebuild`) trains into a FRESH
   root from the live corpus (read via the old root's manifest — no
   external corpus copy needed), re-augments PQ with the recorded
-  dials, seeds the ingest marker so micro-batch replay semantics
-  carry across the flip, then swaps the pointer once; the old root
+  dials, carries the committed ingest batch id into the new root's
+  manifest so micro-batch replay semantics carry across the flip,
+  then swaps the pointer once; the old root
   retires behind the same grace window as folded cell directories.
 
 Crash windows: the pointer only ever names a COMPLETE root (the flip
@@ -224,6 +225,20 @@ def _live_corpus(spark: SparkSession, root: str, meta: dict) -> DataFrame:
     )
 
 
+def _carry_batch_id(old_root: str, root: str) -> None:
+    """Record ``old_root``'s committed ingest ``batch_id`` in the
+    manifest of ``root``, a rebuild not yet live.  An old root this
+    engine refuses (an older manifest format) has no batch id to carry:
+    rebuilding it from an explicit corpus is its repair."""
+    try:
+        batch_id = AI._load_manifest(old_root).get("batch_id")
+    except ValueError:
+        batch_id = None
+    m = AI._load_manifest(root)
+    m["batch_id"] = batch_id
+    AI._write_manifest(root, m)
+
+
 def ann_deployment_rebuild(
     spark: SparkSession,
     deployment_dir: str,
@@ -241,13 +256,14 @@ def ann_deployment_rebuild(
 
     Order (each step invisible to serves until the single flip):
     sweep crashed-rebuild orphans → build new root → PQ re-augment →
-    seed the ingest marker from the live root (micro-batch ids stay
-    monotone across the flip, so a checkpoint replay of an
-    already-committed batch still no-ops) → re-baseline the drift
+    carry the live root's committed ingest ``batch_id`` into the new
+    root's manifest (micro-batch ids stay monotone across the flip, so
+    a checkpoint replay of an already-committed batch still no-ops) →
+    re-baseline the drift
     monitor (``mark_rebuilt``) when ``report_path`` is given → pointer
     flip (atomic) → retire the old root behind ``retire_grace_seconds``
     and prune any retiree past it."""
-    from ..streaming.ann_ingest import _read_marker, _write_marker, mark_rebuilt
+    from ..streaming.ann_ingest import mark_rebuilt
 
     p = _load_pointer(deployment_dir)
     if p is None:
@@ -294,9 +310,7 @@ def ann_deployment_rebuild(
                 n_iters=int(pq_meta.get("n_iters", 4)),
                 sample_rows=int(pq_meta.get("sample_rows", 65_536)),
             )
-    marker = _read_marker(old_root)
-    if marker is not None:
-        _write_marker(root, marker)
+    _carry_batch_id(old_root, root)
     if report_path is not None:
         mark_rebuilt(spark, root, report_path)
     p["live"] = rel

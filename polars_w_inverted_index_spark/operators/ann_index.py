@@ -920,10 +920,13 @@ def build_ann_index(
     # round this was built).  Carry max(previous gen, any gen tag still
     # physically present) forward — the tags cover a previous build that
     # crashed before its manifest write.
+    # An in-place rebuild keeps the replay guard too: the stream's
+    # batch ids go on from the committed one.
     try:
-        prev_gen = int(_load_manifest(root)["gen"])
+        prev = _load_manifest(root)
     except ValueError:  # no usable manifest yet: this build writes one
-        prev_gen = 1
+        prev = {"gen": 1}
+    prev_gen = int(prev["gen"])
     gen = max(
         [1, prev_gen]
         + [-t for tags in old_code_tags.values() for t in tags if t < -1]
@@ -933,6 +936,7 @@ def build_ann_index(
         {
             "format": _MANIFEST_FORMAT,
             "gen": gen,
+            "batch_id": prev.get("batch_id"),
             "cells": _list_tree_tags(os.path.join(root, "cells")),
             "codes": {},
             "code_fps": {},
@@ -981,14 +985,17 @@ def _assign_batch_checkpoint(
     # before any parquet/manifest write, with the exact standalone
     # errors (_width_gate_verdict); a refused batch writes nothing.
     # Centroids come from the file-listing memo (frozen per root).
-    # (Observed metrics on the checkpoint would fold the per-cell
-    # collect's two jobs into it, but a pyspark ``Observation`` leaves
-    # its session unable to serialize a fitted Spark ML model.)
+    # The per-cell collect groups a single-partition view of the
+    # checkpoint, so it needs no Exchange and runs as one job (grouping
+    # the checkpoint's own partitions paid a shuffle map stage too).
+    # (Observed metrics on the checkpoint would fold that job into it,
+    # but a pyspark ``Observation`` leaves its session unable to
+    # serialize a fitted Spark ML model.)
     assigned = _assign_cells(
         batch, None, id_col, vec_col, keep_n=1, width_flags=True,
         _collected=_load_centroids(spark, root),
     ).localCheckpoint(eager=True)
-    rows = assigned.groupBy("cell").agg(
+    rows = assigned.coalesce(1).groupBy("cell").agg(
         F.count("*").alias("count"),
         F.min("_wlo").alias("lo"),
         F.max("_whi").alias("hi"),
@@ -1158,12 +1165,15 @@ def ann_index_add_batch(
 #   the previous manifest keeps its files; the grace bounds how long a
 #   serve may run after resolving its snapshot.  A commit directory
 #   retires only once no live cell lists its tag;
-# - generation numbers are allocated by a manifest write BEFORE the fold
-#   writes data, so a crashed fold's directories (never referenced by
-#   any manifest) can never collide with a retry — they are orphans,
-#   collected by the next fold's O(touched-cells) sweep, which also
-#   removes commit directories no manifest references (a crashed,
-#   abandoned ingest attempt).
+# - a crashed fold's directories are never referenced by any manifest:
+#   they are orphans, and every fold first runs an O(touched-cells)
+#   sweep of its cells' unreferenced directories, so a retry (which
+#   takes the same generation number) never appends beside them.  The
+#   sweep also removes commit directories no manifest references (a
+#   crashed ingest attempt);
+# - the manifest records the last committed streaming ingest
+#   `batch_id`, so the swap that publishes a batch's rows is also the
+#   one that makes its replay a no-op.
 #
 # MAINTENANCE jobs (ingest commits, folds, re-encodes, augments) still
 # must not overlap EACH OTHER — one maintenance writer at a time, the
@@ -1173,9 +1183,10 @@ def ann_index_add_batch(
 # cells schema (`_load_manifest`), so per-batch decisions are always
 # O(touched cells) reads of the manifest, never a tree walk.
 
-# v2: ingest commits are commit-major (`deltas/`); a v1 root's per-cell
-# delta leaves have no reader and are refused by `_load_manifest`
-_MANIFEST_FORMAT = 2
+# v3: the manifest records the committed ingest `batch_id` (v2 kept it in
+# a separate marker file, a second visibility point); v2 and older
+# roots are refused by `_load_manifest`
+_MANIFEST_FORMAT = 3
 
 # How long a pinned snapshot's retired directories stay on disk.  A
 # serve must finish within this window of resolving its manifest; the
@@ -1312,6 +1323,20 @@ def _sql_literal(value: str, ddl: str) -> str:
     return f"CAST('{quoted}' AS {ddl})"
 
 
+def _cells_types(m: dict) -> dict[str, str]:
+    """``{column → DDL type}`` of the cells tree the manifest records."""
+    return dict(f.split(" ", 1) for f in m["cells_schema"].split(", "))
+
+
+def _cell_in(m: dict, cells) -> str:
+    """SQL predicate ``cell IN (...)`` over cell values (directory-name
+    strings), typed like the recorded ``cell`` column."""
+    ddl = _cells_types(m)["cell"]
+    return "cell IN (" + ", ".join(
+        _sql_literal(c, ddl) for c in sorted(cells)
+    ) + ")"
+
+
 def _read_cells(
     spark: SparkSession,
     root: str,
@@ -1356,13 +1381,8 @@ def _read_cells(
             .parquet(*base)
         )
     if commits:
-        cell_ddl = dict(
-            f.split(" ", 1) for f in schema.split(", ")
-        )["cell"]
         keep = " OR ".join(
-            f"(ingest_batch = {t} AND cell IN ("
-            + ", ".join(_sql_literal(c, cell_ddl) for c in sorted(cs))
-            + "))"
+            f"(ingest_batch = {t} AND {_cell_in(m, cs)})"
             for t, cs in sorted(commits.items())
         )
         frames.append(
@@ -1651,8 +1671,6 @@ def ann_index_compact_cells(
     ``retire_grace_seconds``, and so does a commit directory once the
     fold leaves no live cell listing it.  Concurrent MAINTENANCE is
     still single-writer."""
-    import time as _time
-
     m = _load_manifest(root)
     want = [str(c) for c in cells]
     todo = [
@@ -1663,33 +1681,63 @@ def ann_index_compact_cells(
     # collect crashed folds' never-referenced generation dirs in the
     # requested cells (single maintenance writer; O(touched))
     _sweep_orphan_dirs(root, m, want)
-    if not todo:
-        _prune_retired(root, m, retire_grace_seconds)
-        _write_manifest(root, m)
-        return 0
-    # generation allocation commits BEFORE any data write: a crashed
-    # fold's tag is never reused, so its partial dirs stay orphans
-    g = int(m["gen"]) + 1
-    m["gen"] = g
+    folded = _fold_cells(spark, root, m, todo) if todo else 0
+    _prune_retired(root, m, retire_grace_seconds)
     _write_manifest(root, m)
+    if todo:
+        _stamp_bandwidth_once(root)
+    return folded
+
+
+def _fold_cells(
+    spark: SparkSession,
+    root: str,
+    m: dict,
+    cells,
+    batch: DataFrame | None = None,
+) -> int:
+    """Write the live rows of ``cells`` — plus ``batch``, cells-tree rows
+    of those cells that no directory holds yet — as ONE fresh base
+    generation ``ingest_batch=-<gen>`` per cell, re-encode their PQ
+    codes from that generation when the sidecar is maintainable, and
+    apply the fold to ``m`` in memory (live set, codes set,
+    fingerprints, retirees, ``gen``); returns the number of (cell,
+    commit) deltas folded.  The caller sweeps ``cells``' unreferenced
+    directories first (:func:`_sweep_orphan_dirs`), so a crashed
+    fold's generation directories never mix with a retry's, and
+    publishes the result with its one manifest swap: the fold is
+    invisible until then.  A cell that ends up with no row (empty
+    delta files only) keeps its old live set."""
+    import time as _time
+
+    g = int(m["gen"]) + 1
     tag = -g
-    current = _read_cells(spark, root, m, todo, skip_missing=True)
-    if current is not None:
+    rows = _read_cells(spark, root, m, cells, skip_missing=True)
+    if batch is not None:
+        kinds = _cells_types(m)
+        batch = batch.select(
+            *(F.col(c).cast(kinds[c]) for c in ("cell", "vec_id", "cv", "cn"))
+        )
+        rows = batch if rows is None else rows.select(
+            "cell", "vec_id", "cv", "cn"
+        ).unionByName(batch)
+    if rows is not None:
         _write_base(
-            current.select(
+            rows.select(
                 "cell", F.lit(tag).alias("ingest_batch"), "vec_id", "cv",
                 "cn",
             ),
             root,
         )
     folded_cells = [
-        c
-        for c in todo
-        if os.path.isdir(_tag_dir(root, c, tag))
-    ]  # a zero-row cell (empty delta files only) keeps its old live set
+        c for c in cells if os.path.isdir(_tag_dir(root, c, tag))
+    ]
+    if not folded_cells:
+        return 0
+    m["gen"] = g
     codes_updates: dict[str, str] = {}
     cb = _sidecar_books(root, m)
-    if cb is not None and folded_cells:
+    if cb is not None:
         folded_df = _read_cells(
             spark, root, {**m, "cells": {c: [tag] for c in folded_cells}}
         ).select("cell", "vec_id", "cv", "cn")
@@ -1715,9 +1763,6 @@ def ann_index_compact_cells(
             m["codes"][c] = [tag]
             m["code_fps"][c] = codes_updates[c]
     _retire_cells_tags(m, superseded, now)
-    _prune_retired(root, m, retire_grace_seconds)
-    _write_manifest(root, m)
-    _stamp_bandwidth_once(root)
     return folded_deltas
 
 

@@ -383,11 +383,12 @@ def q_ann_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
     (root-pointer indirection), ``ann_deployment_rebuild`` trains into
     a FRESH root from the old root's LIVE rows (read via its manifest
     — no corpus re-read), re-augments PQ with the dials recorded in
-    ``_pq_meta.json``, seeds the ingest marker (a replay of the
+    ``_pq_meta.json``, carries the committed ingest batch id into the
+    new root's manifest (a replay of the
     pre-flip batch 1 must still no-op on the new root — loud assert
     AND the hash would double), re-baselines the drift monitor, and
     flips the pointer atomically; serves resolve the pointer in-path.
-    The pointer flip, marker seeding, dial carry-over, and
+    The pointer flip, batch-id carry, dial carry-over, and
     live-corpus rebuild are thereby all under this oracle's hash.
 
     The row's corpus is the ``vec_id % 12 == 0`` TWELFTH of the table

@@ -10,24 +10,19 @@ streaming/near_dedup: a replayed committed batch is a no-op, a
 batch_id BEHIND the committed one means the checkpoint was reset —
 fail loudly rather than silently fork the index.
 
-Crash-consistency contract (both halves required for the "replayed
-batch is a no-op" guarantee to actually hold):
-
-- the marker is written tmp-file + ``os.replace`` — a crash mid-write
-  leaves the OLD marker intact, never a truncated JSON that poisons
-  every later ``_read_marker``;
-- each batch's files land under its own tag: one commit directory
-  ``deltas/ingest_batch=<id>`` for the vectors and, when the sidecar is
-  maintainable, one ``pq_codes/cell=<c>/ingest_batch=<id>`` directory
-  per encoded cell; they become visible only at the single manifest
-  swap below.  A crash anywhere before the marker lands replays as a
-  full re-run: the replay removes the attempt's commit directory and
-  its codes directories — the cells are known O(touched) from the
-  manifest (post-swap crash) plus the replay's own deterministic
-  assignment (pre-swap crash) — rolls the manifest back, and
-  re-appends.  Without the tag the half-committed files would be
-  indistinguishable from older data and the replay would
-  double-insert.
+Crash-consistency contract: a batch has exactly ONE visibility point,
+the atomic swap of ``_cells_manifest.json`` (tmp file + ``os.replace``),
+which publishes its rows, its codes, any fold it runs AND its
+``batch_id`` together.  Everything the batch writes before it lands in
+directories no manifest references: the commit directory
+``deltas/ingest_batch=<id>``, one ``pq_codes/cell=<c>/ingest_batch=<id>``
+directory per encoded cell when the sidecar is maintainable, and the
+folded cells' fresh base generation.  A crash anywhere before the swap
+replays as a full re-run: the replay first sweeps the unreferenced
+directories of the cells its own deterministic assignment names
+(``operators/ann_index._sweep_orphan_dirs``) and then writes again, so
+nothing double-inserts.  A crash after the swap replays as a no-op,
+since the manifest already records the batch id.
 
 **Snapshot isolation (r14 — r13 VERDICT task 1): serves may run
 concurrently with ingest and with the autocompaction dial's folds.**
@@ -45,27 +40,33 @@ overlap EACH OTHER — foreachBatch already serializes them per stream.
 Per-batch metadata is O(touched cells), never O(#cells) (r13 VERDICT
 task 4): the batch's own GEMM assignment names its cells, the manifest
 carries every cell's delta count for the dial, and replay cleanup
-resolves its directories from the manifest + the assignment — no
-``cell=*`` globs in the hot path.  The only full tree listing is the
-one ``build_ann_index`` makes to write a root's first manifest; a root
-without a readable manifest is refused with a ValueError that says to
-rebuild it.
+lists only the touched cells' directories — no ``cell=*`` globs in the
+hot path.  The only full tree listing is the one ``build_ann_index``
+makes to write a root's first manifest; a root without a readable
+manifest is refused with a ValueError that says to rebuild it.
 
 Commit shape (pinned by tests/test_plan_budgets.py and
-tests/test_commit_shape.py): a batch is ONE commit directory
-``deltas/ingest_batch=<id>`` whose rows are rebalanced without a key
-and sorted by ``cell`` (4 files for 1,000 vectors over 16 cells on
-local[4], where a file per touched cell made 16), and a fold writes
-one file per folded cell into the cell-partitioned base (rebalanced on
-``cell``, so AQE still splits a cell above the advisory partition
-size).  An ingest is 5 Spark jobs: the assign checkpoint, the per-cell
-collect (a shuffle map stage and its result) and the write (a shuffle
-map stage and the write).  A fold adds 2 more.  It reads the folded
-cells' base leaves and one path per live commit with the schema the
-build recorded in the manifest, so it runs no schema-inference job,
-and in the ``ingest`` benchmark's shape (16 cells × 2 commits: 18
-paths) no parallel-listing job either: Spark lists more than 32 paths
-with a Spark job of its own.
+tests/test_commit_shape.py): the cells whose live commit count would
+pass the dial with this batch are known from the manifest and the
+assignment before anything is written (:func:`_cells_past_dial`).
+Their rows go straight into one fresh base generation built from their
+base leaves, their live commits and the batch — one file per folded
+cell, rebalanced on ``cell`` so AQE still splits a cell above the
+advisory partition size — with their PQ codes re-encoded from it.  The
+other touched cells' rows are the commit directory
+``deltas/ingest_batch=<id>``, rebalanced without a key and sorted by
+``cell`` (4 files for 1,000 vectors over 16 cells on local[4], where a
+file per touched cell made 16).  A plain ingest and an ingest whose
+touched cells all fold are each 4 Spark jobs: the assign checkpoint,
+the per-cell collect, and the write (a shuffle map stage and the
+write); a batch that both folds and commits pays the second write's
+2.  Committing the batch and then folding it wrote it twice, read it
+back and swapped the manifest twice.  The fold reads its cells' base
+leaves and one path per live commit with the schema the build recorded
+in the manifest, so it runs no schema-inference job, and in the
+``ingest`` benchmark's shape (16 cells × 1 live commit: 17 paths) no
+parallel-listing job either: Spark lists more than 32 paths with a
+Spark job of its own.
 
 Centroids never move during ingest; rebuild with ``build_ann_index``
 on the cadence the drift monitor (streaming/drift.py) indicates —
@@ -82,15 +83,12 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 from ..operators import ann_index as AI
-from ..operators.ann_index import (
-    ann_index_compact_cells,
-    pq_augment_ann_index,
-)
+from ..operators.ann_index import pq_augment_ann_index
 
 # Autocompaction dial (r12): fold a cell's ingest commits back into its
 # base leaf once more than this many live commits hold its rows.
@@ -105,143 +103,47 @@ from ..operators.ann_index import (
 DEFAULT_MAX_BATCH_DIRS_PER_CELL = 16
 
 
-def _marker_path(root: str) -> str:
-    return os.path.join(root, "_ANN_INGEST")
-
-
-def _read_marker(root: str) -> dict | None:
-    p = _marker_path(root)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
-
-
-def _write_marker(root: str, meta: dict) -> None:
-    """Atomic: tmp file + os.replace — readers see old or new, never a
-    torn write (on HDFS/S3 the same shape is a rename/conditional-put)."""
-    p = _marker_path(root)
-    tmp = p + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, p)
-
-
-def _rollback_batch_tag(root: str, m: dict, tag: int, cells) -> bool:
-    """Remove a crashed attempt's commit directory
-    ``deltas/ingest_batch=<tag>`` and its ``pq_codes`` directories in
-    the given cells, and roll the manifest maps back, so the re-append
-    can never double-insert; returns whether the manifest changed (the
-    caller writes it before re-appending).
-
-    O(touched): ``cells`` is the union of the manifest-listed cells for
-    this tag (an attempt that crashed AFTER its manifest swap) and the
-    replay's own deterministic assignment (an attempt that crashed
-    BEFORE it — its directories are invisible but would pollute the
-    re-append's tag directories).  A fingerprint the attempt refreshed is
-    re-pinned to the post-removal live content: the attempt only
-    refreshed cells that were FRESH before it, so the rollback digest
-    equals the attempt's own pre-append digest — already-stale cells
-    stay stale (the r13 ADVICE freshness guard survives replay)."""
-    changed = False
-    shutil.rmtree(AI._commit_dir(root, tag), ignore_errors=True)
-    roll_fps = []
-    for c in cells:
-        c = str(c)
-        d = os.path.join(root, "pq_codes", f"cell={c}", f"ingest_batch={tag}")
-        if os.path.isdir(d):
-            shutil.rmtree(d)
-        for key in ("cells", "codes"):
-            tags = m[key].get(c)
-            if tags and tag in tags:
-                tags.remove(tag)
-                changed = True
-                if not tags:
-                    del m[key][c]
-                if key == "codes":
-                    roll_fps.append(c)
-    for c in roll_fps:
-        dg = AI._manifest_cell_digest(root, m, c, use_cache=False)
-        if dg is None:
-            m["code_fps"].pop(c, None)
-        else:
-            m["code_fps"][c] = dg
-    return changed
-
-
-def _cells_past_dial(m: dict, dial: int) -> list[str]:
-    """Cell values whose live delta-tag count (tags >= 0: guarded batch
-    appends not yet folded) EXCEEDS the dial — a pure in-memory manifest
-    scan, zero filesystem listings (r13 VERDICT task 4; the pre-r14
-    form listdir'd every cell each micro-batch)."""
-    return [
+def _cells_past_dial(m: dict, dial: int, touched=()) -> list[str]:
+    """Cell values whose live commit count (tags >= 0: guarded batch
+    appends not yet folded), plus one for each cell in ``touched`` (the
+    cells a tagged batch is about to commit to), EXCEEDS the dial — a
+    pure in-memory manifest scan, zero filesystem listings."""
+    add = {str(c) for c in touched}
+    return sorted(
         c
-        for c, tags in m["cells"].items()
-        if sum(1 for t in tags if t >= 0) > dial
-    ]
-
-
-def _maybe_autocompact(
-    spark,
-    root: str,
-    max_batch_dirs_per_cell: int | None,
-    retire_grace_seconds: float = AI.DEFAULT_RETIRE_GRACE_SECONDS,
-) -> bool:
-    """Inline compaction trigger for the streaming ingest (r12 — the
-    ``_maybe_autocompact`` the LSM merge paths got in r11): once a
-    cell's delta-tag count exceeds the dial, fold THAT CELL (and any
-    siblings past the dial), so a long-running stream pays a write
-    stall bounded by the offending cells' bytes instead of relying on
-    an external scheduler to ever run :func:`ann_index_compact` (serve
-    cost measured ~1.9× at 64 accumulated dirs — 17.96 s fragmented vs
-    9.40 s compacted, with a one-shot benchmark since deleted).
-
-    Selective since r13 (r12 VERDICT #1): under skewed ingest the fold
-    follows the hot cells — :func:`ann_index_compact_cells` reads and
-    rewrites only the offenders.  Snapshot-isolated since r14: the fold
-    appends a fresh generation and swaps the manifest once, with the
-    folded cells' PQ codes re-encoded from the folded content INSIDE
-    that same commit (existing codebooks — geometry and training dials
-    untouched), so concurrent float AND PQ serves stay consistent
-    through the fold and ``ann_search_pq`` needs no separate refresh
-    pass.  A sidecar whose codes/books pairing the manifest cannot
-    verify (a crashed retrain) falls back to one full
-    ``pq_augment_ann_index`` replaying the dials recorded at augment
-    time (m_subspaces/n_codes/n_iters/sample_rows — r12 ADVICE), which
-    re-pairs it for every later trigger."""
-    if max_batch_dirs_per_cell is None:
-        return False
-    m = AI._load_manifest(root)
-    offending = _cells_past_dial(m, int(max_batch_dirs_per_cell))
-    if not offending:
-        return False
-    ann_index_compact_cells(
-        spark, root, offending, retire_grace_seconds=retire_grace_seconds
+        for c in set(m["cells"]) | add
+        if sum(1 for t in m["cells"].get(c, []) if t >= 0) + (c in add)
+        > dial
     )
+
+
+def _reaugment_unpaired(spark, root: str) -> None:
+    """After a fold: a sidecar whose codes/books pairing the manifest
+    cannot verify (a crashed retrain) got no re-encode in the fold, so
+    run one full ``pq_augment_ann_index`` replaying the dials recorded
+    at augment time (m_subspaces/n_codes/n_iters/sample_rows; a meta
+    without them recovers geometry from the books and keeps default
+    training dials).  It re-pairs codes and books, so
+    every later fold re-encodes inline."""
     pq_meta = os.path.join(root, "_pq_meta.json")
-    if os.path.exists(pq_meta):
-        m = AI._load_manifest(root)
-        if AI._sidecar_books(root, m) is None:
-            # unpaired sidecar (a crashed retrain): one full augment —
-            # replaying the dials recorded at augment time (r12 ADVICE;
-            # a meta without them recovers geometry from the books and
-            # keeps default training dials) — re-pairs codes and books,
-            # so every later trigger takes the inline path above
-            try:
-                with open(pq_meta) as f:
-                    meta = json.load(f)
-                books = meta["books"]
-            except (OSError, ValueError, KeyError):
-                return True  # unreadable sidecar: fail closed at serve
-            pq_augment_ann_index(
-                spark,
-                root,
-                m_subspaces=meta.get("m_subspaces", len(books)),
-                n_codes=meta.get("n_codes", len(books[0])),
-                n_iters=meta.get("n_iters", 4),
-                sample_rows=meta.get("sample_rows", 65_536),
-            )
-    return True
+    if not os.path.exists(pq_meta) or AI._sidecar_books(
+        root, AI._load_manifest(root)
+    ) is not None:
+        return
+    try:
+        with open(pq_meta) as f:
+            meta = json.load(f)
+        books = meta["books"]
+    except (OSError, ValueError, KeyError):
+        return  # unreadable sidecar: fail closed at serve
+    pq_augment_ann_index(
+        spark,
+        root,
+        m_subspaces=meta.get("m_subspaces", len(books)),
+        n_codes=meta.get("n_codes", len(books[0])),
+        n_iters=meta.get("n_iters", 4),
+        sample_rows=meta.get("sample_rows", 65_536),
+    )
 
 
 def ann_ingest_batch(
@@ -257,52 +159,72 @@ def ann_ingest_batch(
     appended (0 for a committed replay).
 
     Commit order (every instant snapshot-consistent for readers):
-    assign (GEMM, O(batch)) → replay cleanup (tagged replays only) →
-    cells parquet append (invisible) → guarded codes append for the
-    pre-append-fresh touched cells (invisible; r13 ADVICE freshness
-    guard, see ``operators/ann_index._encode_batch_codes``) → ONE
-    manifest swap (cells tags + codes tags + fingerprints) → marker →
-    autocompaction dial (see :func:`_maybe_autocompact`; pass ``None``
-    to schedule compaction externally instead)."""
+    replay guard (the manifest's ``batch_id``) → assign (GEMM,
+    O(batch)) → sweep of the touched cells' unreferenced directories (a
+    crashed attempt's) → the dial decision (:func:`_cells_past_dial`;
+    pass ``max_batch_dirs_per_cell=None`` to schedule compaction
+    externally instead) → the commit directory for the cells that do
+    not fold (invisible) → guarded codes append for those of them that
+    were fresh before the batch (invisible; the freshness guard, see
+    ``operators/ann_index._encode_batch_codes``) → one fresh base
+    generation, with re-encoded codes, for the cells that fold
+    (invisible) → ONE manifest swap (cells tags + codes tags +
+    fingerprints + ``batch_id``).
+
+    Under skew the fold follows the hot cells: only the cells past the
+    dial are rewritten, so a long-running stream pays a write stall
+    bounded by the offending cells' bytes instead of relying on an
+    external scheduler to ever run ``ann_index_compact`` (serve cost
+    measured ~1.9× at 64 accumulated dirs — 17.96 s fragmented vs
+    9.40 s compacted, with a one-shot benchmark since deleted)."""
     spark = batch_df.sparkSession
-    meta = _read_marker(root)
-    if (
-        batch_id is not None
-        and meta is not None
-        and meta.get("batch_id") is not None
-    ):
-        if batch_id == meta["batch_id"]:
-            return 0  # committed replay: no-op
-        if batch_id < meta["batch_id"]:
-            raise ValueError(
-                f"batch_id {batch_id} is behind committed "
-                f"{meta['batch_id']}: checkpoint was reset — rebuild the "
-                f"index or replay without batch_id."
-            )
     m = AI._load_manifest(root)
+    committed = m.get("batch_id")
+    if batch_id is not None and committed is not None:
+        if batch_id == committed:
+            return 0  # committed replay: no-op
+        if batch_id < committed:
+            raise ValueError(
+                f"batch_id {batch_id} is behind committed {committed}: "
+                f"checkpoint was reset — rebuild the index or replay "
+                f"without batch_id."
+            )
     assigned, touched, n = AI._assign_batch_checkpoint(
         spark, root, batch_df, id_col, vec_col
     )
     tag = int(batch_id) if batch_id is not None else -1
-    if batch_id is not None:
-        suspect = sorted(
-            set(touched)
-            | {c for c, ts in m["cells"].items() if tag in ts}
-            | {c for c, ts in m["codes"].items() if tag in ts}
+    fold = []
+    if max_batch_dirs_per_cell is not None:
+        fold = _cells_past_dial(
+            m, int(max_batch_dirs_per_cell), touched if tag >= 0 else ()
         )
-        if _rollback_batch_tag(root, m, tag, suspect):
-            AI._write_manifest(root, m)
-    AI._append_assigned(root, assigned, tag)
-    # guarded encode-at-ingest (r13): computed against the PRE-append
-    # manifest view (the tag is added below), appended invisibly, and
-    # committed in the same swap as the cells tags — ann_search_pq
-    # serves continuously through the stream, and a cell that was stale
+    commit = [c for c in touched if c not in fold]
+    # a crashed attempt of this batch left only unreferenced
+    # directories, all in the cells it touched or folded
+    AI._sweep_orphan_dirs(root, m, sorted(set(touched) | set(fold)))
+    if commit:
+        AI._append_assigned(
+            root,
+            assigned.where(~F.expr(AI._cell_in(m, fold))) if fold
+            else assigned,
+            tag,
+        )
+    # guarded encode-at-ingest: computed against the PRE-append
+    # manifest view (the tag is added below), so a cell that was stale
     # BEFORE this batch stays stale (fail-closed) until a fold or
     # pq_reencode_stale_cells re-encodes its full content
     codes_updates: dict[str, str] = {}
-    if batch_id is not None and AI._sidecar_books(root, m) is not None:
-        codes_updates = AI._encode_batch_codes(spark, root, m, tag, touched)
-    for c in touched:
+    if tag >= 0 and commit and AI._sidecar_books(root, m) is not None:
+        codes_updates = AI._encode_batch_codes(spark, root, m, tag, commit)
+    if fold:
+        rows = None
+        if set(fold) & set(touched):
+            rows = AI._cells_rows(
+                assigned.where(AI._cell_in(m, fold)), tag
+            )
+        AI._fold_cells(spark, root, m, fold, rows)
+        AI._prune_retired(root, m, retire_grace_seconds)
+    for c in commit:
         tags = m["cells"].setdefault(c, [])
         if tag not in tags:
             tags.append(tag)
@@ -313,21 +235,12 @@ def ann_ingest_batch(
             tags.append(tag)
             tags.sort()
         m["code_fps"][c] = dg
+    if batch_id is not None:
+        m["batch_id"] = int(batch_id)
     AI._write_manifest(root, m)  # the batch's single visibility point
-    _write_marker(
-        root,
-        {
-            "batch_id": batch_id
-            if batch_id is not None
-            else (meta or {}).get("batch_id"),
-        },
-    )
-    # maintenance runs AFTER the durable commit: a crash mid-fold leaves
-    # the batch committed and the fold's orphan generation dirs are
-    # collected by the next fold's sweep
-    _maybe_autocompact(
-        spark, root, max_batch_dirs_per_cell, retire_grace_seconds
-    )
+    if fold:
+        AI._stamp_bandwidth_once(root)
+        _reaugment_unpaired(spark, root)
     return n
 
 
@@ -378,8 +291,9 @@ def start_ann_ingest_deployed(
     with pointer indirection.  The rebuild happens BETWEEN ingest
     commits by construction (foreachBatch serializes the body), which
     is exactly the single-maintenance-writer rule; a checkpoint replay
-    after a crash re-resolves the pointer and the seeded marker makes
-    an already-committed batch no-op on the new root.
+    after a crash re-resolves the pointer, and the batch id the rebuild
+    carried into the new root's manifest makes an already-committed
+    batch a no-op there.
     """
     from ..operators.ann_deploy import (
         ann_deployment_rebuild,
@@ -428,8 +342,6 @@ def _latest_drift_report(spark, report_path: str):
     if not os.path.exists(report_path):
         return None
     reports = spark.read.parquet(report_path)
-    from pyspark.sql import functions as F
-
     return reports.orderBy(F.col("batch_id").desc()).limit(1).first()
 
 
@@ -467,7 +379,7 @@ def mark_rebuilt(spark, root: str, report_path: str) -> None:
     call right after ``build_ann_index`` retrains the centroids so
     :func:`should_rebuild` measures drift SINCE this rebuild, not since
     the original build.  Atomic (tmp + replace), same discipline as the
-    ingest marker."""
+    index manifest."""
     row = _latest_drift_report(spark, report_path)
     meta = {
         "cumulative_js_bits": float(row["cumulative_js_bits"])

@@ -66,7 +66,10 @@ def drift_monitor_batch(
     running ingest LM, commit the state, and return a 1-row report
     ``[batch_id, batch_tokens, total_tokens, batch_js_bits,
     cumulative_js_bits]``.  A replayed (already-committed) batch_id
-    returns None and leaves the state untouched.
+    returns None and leaves the state untouched; a batch_id BEHIND the
+    committed one means the checkpoint was reset and raises ValueError,
+    as in the other streaming operators (skipping would silently drop
+    every batch until the ids pass the old high-water mark).
 
     The report is computed BEFORE the commit from lineage-severed
     inputs, so a crash between report and commit replays the batch
@@ -74,13 +77,17 @@ def drift_monitor_batch(
     """
     spark = batch_df.sparkSession
     meta = _read_marker(state_path)
-    if (
-        batch_id is not None
-        and meta is not None
-        and meta.get("batch_id") is not None
-        and batch_id <= meta["batch_id"]
-    ):
-        return None  # committed replay: no-op
+    committed = (meta or {}).get("batch_id")
+    if batch_id is not None and committed is not None:
+        if batch_id == committed:
+            return None  # committed replay: no-op
+        if batch_id < committed:
+            raise ValueError(
+                f"batch_id {batch_id} is behind the drift state's "
+                f"committed batch_id {committed}: the streaming "
+                f"checkpoint was reset or replaced. Use a fresh "
+                f"state_path for the new stream."
+            )
 
     # r15 (guide §1.2/§5): persist, NOT localCheckpoint — the eager
     # checkpoint was its own Spark job; a lazy cache is populated by the

@@ -12,8 +12,6 @@ directories behind one pointer file:
     <index_path>/_LATEST   JSON {"merge": n, "batch_id": b,
                                  "n_buckets": B,
                                  "buckets": {"k": ["m=i/bucket=k", ...]}}
-(legacy markers stored one string per bucket; readers normalize to a
-1-element list.)
 
 Bucket = ``pmod(xxhash64(value), B)`` — a pure function of the value, so
 a value's postings always live in one bucket and a merge knows exactly
@@ -36,12 +34,15 @@ Two merge shapes:
   full-bucket rewrite was the one remaining growth-proportional cost).
   Segment count grows with merge count until :func:`compact_index`
   folds every bucket back to one segment in one explicit O(index) job
-  — the LSM append+compact trade.  By default that fold runs INLINE
-  once any bucket exceeds ``DEFAULT_MAX_SEGMENTS_PER_BUCKET`` (= 16,
-  the measured ≤2×-read-amplification knee — see the constant's note),
+  — the LSM append+compact trade.  By default that fold runs INLINE:
+  a merge into an index where some bucket already holds
+  ``DEFAULT_MAX_SEGMENTS_PER_BUCKET`` segments (= 16, the measured
+  ≤2×-read-amplification knee — see the constant's note) IS the fold,
   so a naive long-running stream never accumulates unbounded
   compaction debt; pass ``max_segments_per_bucket=None`` to take over
-  the schedule.
+  the schedule.  The rule reads only the marker (:func:`_at_dial`), so
+  the fold may come before the hot bucket is touched again, and no
+  bucket ever holds more segments than the dial after a commit.
 
 Commit shape (pinned by tests/test_plan_budgets.py and
 tests/test_commit_shape.py): every write is ONE shuffle on the bucket
@@ -51,6 +52,10 @@ shuffles the batch's raw ``(bucket, key, doc_id)`` rows and groups and
 cuts chunks inside the partition (2 Spark jobs: the shuffle's map stage
 and the write); compaction and rebucket shuffle the compact chunk rows
 and re-chunk inside the partition (:func:`_rechunked`, also 2 jobs).
+The folding merge is one such re-chunk over the live segments and the
+batch's raw rows together: 2 jobs and ONE ``_LATEST`` swap, where
+appending the batch's segment and then compacting wrote the batch
+twice, read it back and swapped twice (4 jobs).
 Readers pass the segment schema derived from the marker
 (:func:`_segment_schema`), so opening the index — every streaming
 catalog lookup, every compaction — runs no schema-inference job.
@@ -90,9 +95,9 @@ from ..operators.inverted_index import postings
 
 DEFAULT_N_BUCKETS = 16
 
-# Default autocompaction dial (r10 VERDICT task 6 — measured, not
-# taste: tools/lsm_read_amplification.py, 64 merges × 100k rows, every
-# batch touching every bucket).  Merges stay flat (~0.55 s, O(batch))
+# Default autocompaction dial (measured, not taste: a one-shot
+# benchmark, since deleted, streamed 64 merges × 100k rows, every batch
+# touching every bucket).  Merges stay flat (~0.55 s, O(batch))
 # while lookups degrade with segment count: 0.24-0.44 s at 1-8
 # segments/bucket, 0.55 s at 16, 0.85 s at 32, 1.40 s at 64 — vs a
 # 0.29 s compacted floor.  At 16 the read amplification is ≤2× the
@@ -120,13 +125,6 @@ def _read_marker(index_path: str) -> dict | None:
             f"(pre-bucketed marker {sorted(meta)}); rebuild it into a "
             f"fresh index_path (batch backfill with batch_id=None)."
         )
-    # legacy (pre-segment-list) markers stored one path string per
-    # bucket; normalize to the 1-element list form so every consumer
-    # sees one shape
-    meta["buckets"] = {
-        k: ([v] if isinstance(v, str) else list(v))
-        for k, v in meta["buckets"].items()
-    }
     return meta
 
 
@@ -320,12 +318,17 @@ def _rechunked(df: DataFrame, meta: dict, n_buckets: int) -> DataFrame:
 
 
 def _write_folded(
-    index_path: str, meta: dict, folded: DataFrame, n_buckets: int
+    index_path: str,
+    meta: dict,
+    folded: DataFrame,
+    n_buckets: int,
+    batch_id: int | None = None,
 ) -> None:
     """Write ``folded`` (rows clustered by ``bucket``: one file per
     bucket) under a fresh ``m=<n>`` directory and swap EVERY bucket's
-    segment list to it — the commit :func:`compact_index` and
-    :func:`rebucket_index` share."""
+    segment list to it — the commit :func:`compact_index`,
+    :func:`rebucket_index` and the folding merge share (the merge
+    commits its ``batch_id`` in the same swap)."""
     next_m = meta.get("merge", -1) + 1
     out = os.path.join(index_path, f"m={next_m}")
     folded.write.mode("overwrite").partitionBy("bucket").parquet(out)
@@ -338,7 +341,7 @@ def _write_folded(
         index_path,
         meta,
         new_pointers,
-        batch_id=None,
+        batch_id=batch_id,
         n_buckets=n_buckets,
         next_m=next_m,
         max_rows=meta.get("max_postings_per_row"),
@@ -400,21 +403,22 @@ def index_fragmentation(index_path: str) -> dict:
     }
 
 
-def _maybe_autocompact(
-    spark: SparkSession, index_path: str, max_segments_per_bucket: int | None
-) -> None:
-    """Inline compaction trigger for the merge paths: once any bucket's
-    segment list exceeds the dial, fold the index.  The same amortized
-    policy as _delta_state's ``max_delta_dirs`` — the stream pays one
-    O(index / dial)-amortized write stall instead of relying on an
-    external scheduler to ever run :func:`compact_index` (the classic
-    LSM compaction-debt failure).  Explicit compaction remains available
-    for operators who schedule it off-peak (pass ``None`` to disable)."""
-    if max_segments_per_bucket is None:
-        return
-    frag = index_fragmentation(index_path)
-    if frag["max_segments_per_bucket"] > int(max_segments_per_bucket):
-        compact_index(spark, index_path)
+def _at_dial(meta: dict | None, max_segments_per_bucket: int | None) -> bool:
+    """Whether a chunked merge into the index ``meta`` describes is the
+    inline fold: some bucket already holds ``max_segments_per_bucket``
+    segments.  Decided from the marker alone, before anything is
+    written; which buckets the batch touches is not known without a
+    Spark job, so the rule ignores it: when the bucket at the dial is
+    not in the batch, the fold comes earlier than "append, then fold
+    once a bucket exceeds the dial" would run it.  Either rule leaves
+    every bucket at one segment after a fold, so folds stay at least
+    ``dial`` merges apart, and no bucket holds more than the dial
+    after any commit."""
+    if max_segments_per_bucket is None or not (meta or {}).get("buckets"):
+        return False
+    return max(map(len, meta["buckets"].values())) >= int(
+        max_segments_per_bucket
+    )
 
 
 def rebucket_index(
@@ -527,8 +531,10 @@ def merge_postings_batch(
     re-read or re-written, so per-merge bytes (read and written) track
     the batch, not the index.  Segment and chunk counts grow with merge
     count until :func:`compact_index` squashes both (the LSM
-    append+compact trade).  That compaction runs INLINE once any
-    bucket's list exceeds ``max_segments_per_bucket`` — default
+    append+compact trade).  That compaction runs INLINE: once some
+    bucket's list holds ``max_segments_per_bucket`` segments, the next
+    merge writes the whole index re-chunked with its batch folded in,
+    in one write and one swap (:func:`_at_dial`) — default
     ``DEFAULT_MAX_SEGMENTS_PER_BUCKET`` (16, the measured
     read-amplification knee; see the constant), ``None`` to disable and
     schedule :func:`compact_index` yourself.  An operational per-call
@@ -660,8 +666,27 @@ def _append_segment(
     segment-LOCAL — readers merge by key and compaction re-chunks, so
     chunk-id collisions across segments are harmless by construction.
     The write is the merge's only action: the touched buckets are read
-    off the written partition tree."""
+    off the written partition tree.
+
+    At the dial (:func:`_at_dial`) the merge is the fold instead: it
+    writes ``_rechunked(live segments ∪ batch rows)`` — the batch as
+    single-element ``doc_ids`` arrays — under one ``m=<n>`` directory
+    and commits it with ``batch_id`` in one swap, the rows
+    :func:`compact_index` would write after a plain append, without
+    writing the batch's segment and reading it back."""
     m = max_postings_per_row
+    if _at_dial(meta, max_segments_per_bucket):
+        live = _read_live_segments(spark, index_path, meta)
+        batch = pairs.select(*keys, F.array("doc_id").alias("doc_ids"))
+        _write_folded(
+            index_path, meta,
+            _rechunked(
+                live.select(*keys, "doc_ids").unionByName(batch),
+                meta, n_buckets,
+            ),
+            n_buckets, batch_id,
+        )
+        return
     pieces = F.ceil(F.size("doc_ids") / F.lit(m)).cast("int")
     piece = F.explode(F.sequence(F.lit(0), pieces - 1))
     next_m = (meta or {}).get("merge", -1) + 1
@@ -701,7 +726,6 @@ def _append_segment(
         index_path, meta, new_pointers, batch_id, n_buckets, next_m,
         max_rows=m, composite_fields=composite_fields, append=True,
     )
-    _maybe_autocompact(spark, index_path, max_segments_per_bucket)
 
 
 def _commit(

@@ -5,7 +5,8 @@ Evidence ladder:
   never semantics);
 - a rebuild from the index's OWN live rows (manifest corpus) serves the
   full base+ingested set on the new root, flips atomically, and keeps
-  micro-batch replay semantics across the flip (seeded marker);
+  micro-batch replay semantics across the flip (the committed batch id
+  carried into the new root's manifest);
 - snapshot isolation one level up: a serve that resolved the old root
   before the flip still reads a complete index after it (grace window),
   and pruning past the grace removes the retiree;
@@ -70,7 +71,8 @@ def test_rebuild_from_live_rows_and_marker_carry(spark, emb, tmp_path):
     """Build → guarded ingest → rebuild (no corpus argument): the new
     root must serve base+ingested rows exactly, the flip must be
     atomic, and a checkpoint replay of the pre-flip batch id must
-    still no-op against the NEW root (seeded marker)."""
+    still no-op against the NEW root (the batch id the rebuild carried
+    into its manifest)."""
     dep = str(tmp_path / "dep")
     base = emb.where(F.col("vec_id") % 2 == 0).select("vec_id", "embedding")
     extra_rows = [
@@ -98,7 +100,8 @@ def test_rebuild_from_live_rows_and_marker_carry(spark, emb, tmp_path):
     assert _key(_serve(spark, dep, q, n_centroids=4)) == _key(
         brute_force_topk(full, q, k=5, allow_full_scan=True)
     )
-    # marker seeded: replaying the committed batch no-ops on the new root
+    # batch id carried: replaying the committed batch no-ops on the new
+    # root
     assert ann_ingest_batch(extra, new_root, batch_id=7) == 0
     # and the stream continues monotone
     nxt = spark.createDataFrame(
@@ -240,15 +243,17 @@ def test_stream_loop_rebuilds_zero_downtime(spark, emb, tmp_path):
         stream, dep, str(tmp_path / "ckpt"), report_path=report
     )
     # the helper runs a production (forever) stream; drain by polling
-    # the ingest marker until the second file's batch committed
+    # the live root's manifest until the second file's batch committed
     import time
 
     try:
         deadline = time.time() + 120
         while time.time() < deadline:
-            marker = os.path.join(AD.resolve_ann_root(dep), "_ANN_INGEST")
-            if os.path.exists(marker):
-                with open(marker) as f:
+            manifest = os.path.join(
+                AD.resolve_ann_root(dep), "_cells_manifest.json"
+            )
+            if os.path.exists(manifest):
+                with open(manifest) as f:
                     if json.load(f).get("batch_id") == 1:
                         break
             time.sleep(0.5)
@@ -275,7 +280,7 @@ def test_stream_loop_rebuilds_zero_downtime(spark, emb, tmp_path):
 def test_rebuild_crash_windows_never_break_serving(spark, tmp_path, monkeypatch):
     """Crash-window sweep for ann_deployment_rebuild: inject a crash
     immediately AFTER each step of the rebuild sequence (build, PQ
-    augment, marker seed, drift re-baseline, pointer flip, prune).
+    augment, batch-id carry, drift re-baseline, pointer flip, prune).
     After every crash the pointer must resolve to a COMPLETE root whose
     full-probe serve equals brute force over the corpus that root was
     built from (old corpus before the flip, new corpus at/after it),
@@ -302,7 +307,7 @@ def test_rebuild_crash_windows_never_break_serving(spark, tmp_path, monkeypatch)
     crash_points = [
         (AD.AI, "build_ann_index"),
         (AD.AI, "pq_augment_ann_index"),
-        (ING, "_write_marker"),
+        (AD, "_carry_batch_id"),
         (ING, "mark_rebuilt"),
         (AD, "_write_pointer"),
         (AD, "prune_ann_roots"),
@@ -314,8 +319,8 @@ def test_rebuild_crash_windows_never_break_serving(spark, tmp_path, monkeypatch)
             corpus, dep, n_centroids=4, n_iters=0,
             pq={"m_subspaces": 2, "n_codes": 4, "n_iters": 1},
         )
-        # marker + drift report so the marker-seed and re-baseline
-        # steps actually execute
+        # a committed batch + drift report so the batch-id carry and
+        # re-baseline steps actually execute
         assert ann_ingest_batch(extra, AD.resolve_ann_root(dep),
                                 batch_id=0) == 1
         spark.createDataFrame(
@@ -351,6 +356,9 @@ def test_rebuild_crash_windows_never_break_serving(spark, tmp_path, monkeypatch)
         live = AD.resolve_ann_root(dep)
         got = AI.ann_search(spark, live, q, k=5, nprobe=4)
         assert _key(got) == want, f"recovery broken after crash at {name}"
+        # the replay guard carried across the flip: batch 0 no-ops
+        assert AI._load_manifest(live)["batch_id"] == 0, name
+        assert ann_ingest_batch(extra, live, batch_id=0) == 0, name
         # every root on disk is referenced (live or retired) — the
         # recovery rebuild swept the crashed attempt's orphan
         p = AD._load_pointer(dep)

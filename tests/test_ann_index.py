@@ -240,13 +240,11 @@ def test_streaming_ingest_replay_guard(spark, emb, tmp_path):
 
 
 def test_ingest_crash_window_replay(spark, emb, tmp_path):
-    """The crash window AFTER the parquet append commits but BEFORE the
-    marker lands: the replay must remove the orphaned batch files
+    """The crash window AFTER the parquet append lands but BEFORE the
+    manifest swap: the replay must remove the orphaned batch files
     (they're isolated in the batch's commit directory) and re-append
     exactly once — no double-insert, no lost rows."""
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
-    )
+    import polars_w_inverted_index_spark.operators.ann_index as ai
     from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     first = emb.where(F.col("vec_id") < 300)
@@ -256,8 +254,11 @@ def test_ingest_crash_window_replay(spark, emb, tmp_path):
     build_ann_index(first, root, n_centroids=6, n_iters=1)
     assert ann_ingest_batch(b0, root, batch_id=0) == b0.count()
 
-    # simulate the crashed attempt: files land, marker does not
-    ann_index_add_batch(spark, root, b1, batch_tag=1)
+    # simulate the crashed attempt: files land, the manifest does not
+    assigned, _touched, _n = ai._assign_batch_checkpoint(
+        spark, root, b1, "vec_id", "embedding"
+    )
+    ai._append_assigned(root, assigned, 1)
     # replay of batch 1 cleans the orphan and appends exactly once
     assert ann_ingest_batch(b1, root, batch_id=1) == b1.count()
     cells = _stored_rows(spark, root)
@@ -830,7 +831,7 @@ def test_probed_cell_bytes_unlistable_root_is_none(tmp_path, monkeypatch):
 
 def test_ingest_autocompact_dial_folds_and_reaugments(spark, emb, tmp_path):
     """r12: the streaming ingest's autocompaction dial (the LSM
-    ``_maybe_autocompact`` pattern at the measured fragmentation knee).
+    inline fold at the measured fragmentation knee).
     With ``max_batch_dirs_per_cell=1``, the second guarded batch pushes
     cells past the dial and the ingest folds — SELECTIVELY since r13
     (r12 VERDICT #1): only the offending cells lose their delta
@@ -881,8 +882,8 @@ def test_ingest_autocompact_dial_folds_and_reaugments(spark, emb, tmp_path):
     assert _cells_past_dial(ai._load_manifest(root), 1) == []
     assert before_fold > 0
 
-    # replay guard survives the fold (the ingest marker is separate
-    # from the cells swap)
+    # replay guard survives the fold (the batch id commits in the same
+    # manifest swap as the fold)
     assert ann_ingest_batch(
         b1, root, batch_id=1, max_batch_dirs_per_cell=1
     ) == 0

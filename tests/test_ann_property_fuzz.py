@@ -869,15 +869,38 @@ INGEST_CRASH_OPS = st.lists(
             [
                 "ok",
                 "crash_codes",
+                "crash_commit",
+                "crash_fold",
                 "crash_manifest",
-                "crash_marker",
-                "crash_autocompact",
+                "crash_post_swap",
             ]
         ),
     ),
     min_size=2,
     max_size=5,
 )
+
+
+def _crash_after(real):
+    """``real`` that raises :class:`_Crash` once it has returned, on its
+    first call only."""
+    calls = []
+
+    def _boom(*a, **k):
+        out = real(*a, **k)
+        if not calls:
+            calls.append(1)
+            raise _Crash()
+        return out
+
+    return _boom
+
+
+def _crash_before(real):
+    def _boom(*a, **k):
+        raise _Crash()
+
+    return _boom
 
 
 @settings(
@@ -887,32 +910,29 @@ INGEST_CRASH_OPS = st.lists(
 )
 @given(ops=INGEST_CRASH_OPS)
 def test_fuzz_ann_ingest_wrapper_crash_windows(ops, tmp_path_factory):
-    """r12 VERDICT task 5, rewritten for the r14 single-swap commit:
-    crash-inject ``ann_ingest_batch`` at every commit-adjacent window
-    and replay each crashed batch the way foreachBatch's at-least-once
-    contract does —
+    """Crash-inject ``ann_ingest_batch`` at every window of its
+    write-once commit and replay each crashed batch the way
+    foreachBatch's at-least-once contract does —
 
-    - AT the guarded codes encode (``crash_codes``): cells parquet
-      landed, codes did not, manifest never swapped — the attempt is
-      INVISIBLE; the replay rolls back its directories
-      (``_rollback_batch_tag``) and re-runs;
-    - AT the manifest swap itself (``crash_manifest``): both trees'
-      parquet landed but nothing is visible — same replay contract,
-      nothing double-inserts in either tree;
-    - BETWEEN the swap and ``_write_marker`` (``crash_marker``): the
-      batch IS visible but the marker never advanced — the replay
-      must remove the visible tagged directories, roll the manifest
-      back (fingerprints re-pinned to the pre-append content), and
-      re-append exactly once;
-    - AFTER the marker but BEFORE ``_maybe_autocompact``
-      (``crash_autocompact``): durably committed — the replay must
-      NO-OP (return 0), and the skipped maintenance is picked up by a
-      later batch's dial check;
+    - AT the guarded codes encode (``crash_codes``), right AFTER the
+      commit directory write (``crash_commit``), right AFTER the folded
+      cells' generation write (``crash_fold``: between the
+      fold-generation write and the swap), and AT the manifest swap
+      itself (``crash_manifest``): files landed, nothing is visible —
+      the replay sweeps the attempt's directories and re-runs, and
+      nothing double-inserts in either tree.  A batch mixing folded and
+      committed cells passes through both the commit and the fold
+      windows;
+    - right AFTER the swap (``crash_post_swap``): the one visibility
+      point carries the batch id, so the replay must NO-OP (return 0);
 
     with the autocompact dial at 1 throughout (real selective folds
-    with inline codes refresh interleave with the crashes), a live PQ
-    sidecar, and a final serve asserting BOTH paths equal brute force
-    over exactly the ingested rows."""
+    with inline codes re-encode), a live PQ sidecar, and a final serve
+    asserting BOTH paths equal brute force over exactly the ingested
+    rows.  A window a batch never reaches (no commit cells, no fold,
+    an empty batch) leaves that attempt uncrashed, and its replay
+    no-ops."""
+    import glob
     import os
 
     import polars_w_inverted_index_spark.streaming.ann_ingest as si
@@ -945,47 +965,47 @@ def test_fuzz_ann_ingest_wrapper_crash_windows(ops, tmp_path_factory):
             if rows
             else spark.createDataFrame([], SCHEMA)
         )
+        crashed = post_swap = False
         if mode != "ok":
-            # (owner_module, attribute) — the wrapper reaches the first
-            # two through the ann_index module (si.AI)
-            target = {
-                "crash_codes": (si.AI, "_encode_batch_codes"),
-                "crash_manifest": (si.AI, "_write_manifest"),
-                "crash_marker": (si, "_write_marker"),
-                "crash_autocompact": (si, "_maybe_autocompact"),
+            # the wrapper reaches each target through the ann_index
+            # module (si.AI)
+            name, wrap = {
+                "crash_codes": ("_encode_batch_codes", _crash_before),
+                "crash_commit": ("_append_assigned", _crash_after),
+                "crash_fold": ("_fold_cells", _crash_after),
+                "crash_manifest": ("_write_manifest", _crash_before),
+                "crash_post_swap": ("_write_manifest", _crash_after),
             }[mode]
-            owner, name = target
-            real = getattr(owner, name)
-
-            def _boom(*a, **k):
-                raise _Crash()
-
-            setattr(owner, name, _boom)
+            real = getattr(si.AI, name)
+            setattr(si.AI, name, wrap(real))
             try:
-                with pytest.raises(_Crash):
-                    si.ann_ingest_batch(
-                        batch, root, batch_id=batch_id,
-                        max_batch_dirs_per_cell=1,
-                    )
+                si.ann_ingest_batch(
+                    batch, root, batch_id=batch_id,
+                    max_batch_dirs_per_cell=1,
+                )
+            except _Crash:
+                crashed = True
+                post_swap = mode == "crash_post_swap"
             finally:
-                setattr(owner, name, real)
+                setattr(si.AI, name, real)
         # the (re)play — for "ok" the only attempt
         got = si.ann_ingest_batch(
             batch, root, batch_id=batch_id, max_batch_dirs_per_cell=1
         )
-        if mode == "crash_autocompact":
-            assert got == 0  # marker landed: committed replay no-ops
-        else:
-            assert got == len(rows)  # marker lost: replay re-runs
+        if crashed and not post_swap:
+            assert got == len(rows)  # nothing visible: replay re-runs
+        elif mode != "ok":
+            assert got == 0  # the swap landed: committed replay no-ops
         ingested.extend(rows)
         next_id += n_rows + 1
         batch_id += 1
 
-    # marker reflects the last committed batch through every crash
-    with open(os.path.join(root, "_ANN_INGEST")) as f:
-        import json as _json
-
-        assert _json.load(f)["batch_id"] == batch_id - 1
+    # the manifest holds the last committed batch through every crash,
+    # and no separate ingest marker exists
+    m = si.AI._load_manifest(root)
+    assert m["batch_id"] == batch_id - 1
+    assert not glob.glob(os.path.join(root, "**", "_ANN_INGEST*"),
+                         recursive=True)
 
     queries = spark.createDataFrame([(1000, vec(1)), (1001, vec(5))], SCHEMA)
     truth = _key(
@@ -1000,3 +1020,91 @@ def test_fuzz_ann_ingest_wrapper_crash_windows(ops, tmp_path_factory):
             spark, root, queries, k=K, nprobe=2, rerank_factor=1000
         )
     ) == truth
+
+
+def test_mixed_batch_crash_windows_replay_once(tmp_path):
+    """A batch whose touched cells partly fold and partly commit, with
+    a crash injected after its commit directory write, after its fold
+    generation write, at its guarded codes encode and at its manifest
+    swap, one window per batch: each replay writes the batch exactly
+    once, the replay of the committed batch no-ops, and both serve
+    paths equal brute force over the ingested rows after every batch."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+    import polars_w_inverted_index_spark.streaming.ann_ingest as si
+    from polars_w_inverted_index_spark.operators.ann_index import (
+        ann_search_pq,
+        pq_augment_ann_index,
+    )
+
+    spark = get_session("property_tests")
+    root = str(tmp_path / "idx")
+    base_rows = [
+        (i, [float((i * 5 + j) % 9 - 4) or 2.0 for j in range(4)])
+        for i in range(16)
+    ]
+    build_ann_index(
+        spark.createDataFrame(base_rows, SCHEMA), root,
+        n_centroids=2, n_iters=1,
+    )
+    pq_augment_ann_index(spark, root, m_subspaces=2, n_codes=4)
+    # a copy of a stored vector assigns to that vector's own cell
+    by_cell: dict = {}
+    for r in ai._read_cells(spark, root, ai._load_manifest(root)).collect():
+        by_cell.setdefault(str(r["cell"]), [float(x) for x in r["cv"]])
+    assert len(by_cell) == 2, by_cell
+    (cell_a, vec_a), (cell_b, vec_b) = sorted(by_cell.items())
+    ingested = list(base_rows)
+    queries = spark.createDataFrame([(900, vec_a), (901, vec_b)], SCHEMA)
+
+    def ingest(bid, rows, name=None, wrap=None):
+        batch = spark.createDataFrame(rows, SCHEMA)
+        if name is not None:
+            real = getattr(si.AI, name)
+            setattr(si.AI, name, wrap(real))
+            try:
+                with pytest.raises(_Crash):
+                    si.ann_ingest_batch(
+                        batch, root, batch_id=bid, max_batch_dirs_per_cell=1
+                    )
+            finally:
+                setattr(si.AI, name, real)
+        assert si.ann_ingest_batch(
+            batch, root, batch_id=bid, max_batch_dirs_per_cell=1
+        ) == len(rows)
+        assert si.ann_ingest_batch(
+            batch, root, batch_id=bid, max_batch_dirs_per_cell=1
+        ) == 0
+        ingested.extend(rows)
+        truth = _key(brute_force_topk(
+            spark.createDataFrame(ingested, SCHEMA), queries, k=K
+        ))
+        assert _key(ann_search(spark, root, queries, k=K, nprobe=2)) == truth
+        assert _key(ann_search_pq(
+            spark, root, queries, k=K, nprobe=2, rerank_factor=1000
+        )) == truth
+
+    def rows(bid, cells):
+        return [
+            (1000 * (bid + 1) + j, vec)
+            for j, vec in enumerate(v for v in cells for _ in range(2))
+        ]
+
+    ingest(0, rows(0, [vec_a]))  # cell A holds one live commit
+    windows = [
+        ("_append_assigned", _crash_after),
+        ("_fold_cells", _crash_after),
+        ("_encode_batch_codes", _crash_before),
+        ("_write_manifest", _crash_before),
+    ]
+    for bid, (name, wrap) in enumerate(windows, start=1):
+        m = ai._load_manifest(root)
+        held = {c for c, tags in m["cells"].items() if any(t >= 0 for t in tags)}
+        assert len(held) == 1, m["cells"]  # the batch will be mixed
+        ingest(bid, rows(bid, [vec_a, vec_b]), name, wrap)
+        m = ai._load_manifest(root)
+        # the cell that held a commit folded; the other committed
+        assert all(t < 0 for t in m["cells"][held.pop()])
+        stored = ai._read_cells(spark, root, m).select("vec_id").collect()
+        assert sorted(r[0] for r in stored) == sorted(
+            v for v, _ in ingested
+        )

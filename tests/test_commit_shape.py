@@ -41,11 +41,11 @@ def _events(spark, lo, n=1500):
     )
 
 
-def _merge(spark, idx, i, composite):
+def _merge(spark, idx, i, composite, dial=None):
     batch = _events(spark, i * 10_000)
     kw = dict(
         batch_id=i, n_buckets=4, max_postings_per_row=MAX_ROWS,
-        max_segments_per_bucket=None,
+        max_segments_per_bucket=dial,
     )
     if composite:
         im.merge_composite_postings_batch(batch, ["a", "b"], idx, **kw)
@@ -146,6 +146,71 @@ def test_rechunk_matches_two_shuffle_oracle(spark, tmp_path, composite, fold):
     _assert_unique_per_segment(spark, idx, keys)
 
 
+@pytest.mark.parametrize("composite", [False, True], ids=["single", "composite"])
+def test_folding_merge_equals_append_then_compact(spark, tmp_path, composite):
+    """A merge into an index whose buckets hold the dial's segments
+    writes once what appending its batch and then ``compact_index``
+    wrote: the same chunk rows (the re-chunk is a function of the
+    (key, doc_id) multiset), one single-file segment per bucket, and
+    its batch id committed in the same swap."""
+    ref = _fragmented(spark, str(tmp_path / "ref"), composite)
+    im.compact_index(spark, ref)
+    idx = os.path.join(str(tmp_path / "fold"), "index")
+    for i in range(3):
+        _merge(spark, idx, i, composite, dial=2)
+        segs = im.index_fragmentation(idx)["max_segments_per_bucket"]
+        assert segs == (1 if i != 1 else 2), (i, segs)
+    meta = im._read_marker(idx)
+    assert meta["batch_id"] == 2
+    keys = im._key_cols(meta)
+    assert _rows(im.read_index(spark, idx), keys) == _rows(
+        im.read_index(spark, ref), keys
+    )
+    _assert_unique_per_segment(spark, idx, keys)
+
+
+def test_fold_at_the_dial_ignores_the_batchs_buckets(spark, tmp_path):
+    """The fold is decided from the marker alone: a bucket at the dial
+    folds the index even when the merging batch lands in another
+    bucket, and the postings stay exact."""
+    from polars_w_inverted_index_spark.functions.hashing import xxhash64
+
+    def bucket(v):
+        return xxhash64(v.encode("utf-8")) % 4
+
+    idx = str(tmp_path / "idx")
+    hot = "a0"
+    cold = next(
+        f"z{i}" for i in range(100) if bucket(f"z{i}") != bucket(hot)
+    )
+    batches = [
+        [(i, f"a{i % 11}") for i in range(60)],
+        [(100 + i, hot) for i in range(5)],
+        [(200 + i, cold) for i in range(5)],
+    ]
+    for bid, rows in enumerate(batches):
+        im.merge_postings_batch(
+            spark.createDataFrame(rows, "doc_id long, a string"), "a", idx,
+            batch_id=bid, n_buckets=4, max_postings_per_row=MAX_ROWS,
+            max_segments_per_bucket=2,
+        )
+        frag = im.index_fragmentation(idx)
+        if bid == 1:  # the hot bucket reaches the dial
+            assert frag["max_segments_per_bucket"] == 2, frag
+    meta = im._read_marker(idx)
+    assert frag["segments"] == len(meta["buckets"]) == 4, frag
+    assert meta["batch_id"] == 2
+    truth: dict = {}
+    for rows in batches:
+        for d, v in rows:
+            truth.setdefault(v, []).append(d)
+    got = {
+        r["value"]: list(r["doc_ids"])
+        for r in im.read_index_postings(spark, idx).collect()
+    }
+    assert got == {v: sorted(ds) for v, ds in truth.items()}
+
+
 def test_rechunk_plans_one_exchange(spark, tmp_path):
     idx = _fragmented(spark, str(tmp_path), composite=True, n_merges=2)
     meta = im._read_marker(idx)
@@ -242,6 +307,74 @@ def test_ann_ingest_writes_one_commit_dir_and_fold_one_file_per_cell(
     )
 
 
+def test_ann_mixed_batch_folds_and_commits_in_one_swap(
+    spark, tmp_path, monkeypatch
+):
+    """A batch whose touched cells partly cross the dial: the crossing
+    cells' rows go straight into their new generation (one file per
+    cell), the others' into the commit directory, and ONE manifest swap
+    publishes both.  The served rows are exactly the ingested multiset
+    and a full probe equals brute force."""
+    from polars_w_inverted_index_spark.operators import ann_index as AI
+    from polars_w_inverted_index_spark.operators.similarity import (
+        brute_force_topk,
+    )
+
+    root = str(tmp_path / "ann")
+    base = _vectors(spark, 0, 4000)
+    build_ann_index(base, root, n_centroids=16, n_iters=1)
+    # copies of stored vectors of four cells: batch 0 touches only them
+    by_cell: dict = {}
+    for r in AI._read_cells(spark, root, AI._load_manifest(root)).collect():
+        by_cell.setdefault(str(r["cell"]), [float(x) for x in r["cv"]])
+    hot = sorted(by_cell)[:4]
+    b0 = spark.createDataFrame(
+        [(50_000 + j, by_cell[c]) for j, c in enumerate(hot * 3)],
+        "vec_id long, embedding array<double>",
+    )
+    assert ann_ingest_batch(
+        b0, root, batch_id=0, max_batch_dirs_per_cell=None
+    ) == 12
+    b1 = _vectors(spark, 9000, 1000, parts=4)
+    swaps = []
+    real = AI._write_manifest
+    monkeypatch.setattr(
+        AI, "_write_manifest", lambda *a: (swaps.append(1), real(*a))
+    )
+    assert ann_ingest_batch(
+        b1, root, batch_id=1, max_batch_dirs_per_cell=1
+    ) == 1000
+    monkeypatch.undo()
+    assert len(swaps) == 1
+    cells = _manifest_cells(root)
+    folded = [c for c, tags in cells.items() if all(t < -1 for t in tags)]
+    committed = [c for c, tags in cells.items() if 1 in tags]
+    # every hot cell batch 1 touched folded; a hot cell it missed
+    # keeps batch 0's commit
+    assert folded and set(folded) <= set(hot), cells
+    assert all(0 in cells[c] for c in set(hot) - set(folded)), cells
+    assert len(committed) >= 8 and not set(committed) & set(hot)
+    for c in folded:
+        (t,) = cells[c]
+        d = os.path.join(root, "cells", f"cell={c}", f"ingest_batch={t}")
+        assert len(_parquet_files(d)) == 1, d
+    m = AI._load_manifest(root)
+    assert m["batch_id"] == 1
+    ids = sorted(r["vec_id"] for r in AI._read_cells(spark, root, m).collect())
+    assert ids == sorted(
+        list(range(0, 4000)) + list(range(50_000, 50_012))
+        + list(range(9000, 10000))
+    )
+    corpus = base.unionByName(b0).unionByName(b1)
+    q = _vectors(spark, 10**6, 12)
+    key = ["query_id", "neighbor_id", "cos_sim", "rank"]
+    served = AI.ann_search(spark, root, q, k=5, nprobe=16)
+    exact = brute_force_topk(corpus, q, k=5)
+    assert sorted(served.select(key).collect()) == sorted(
+        exact.select(key).collect()
+    )
+
+
 def test_cells_files_write_vectors_without_a_dictionary(spark, tmp_path):
     """The build, an ingest commit and a fold write ``cv`` PLAIN: no
     dictionary page in the footer, on vectors a default write does
@@ -283,7 +416,7 @@ def test_cells_files_write_vectors_without_a_dictionary(spark, tmp_path):
         if f.endswith(".parquet") and ("/cells/" in dp or "/deltas/" in dp)
     ]
     tags = {os.path.basename(os.path.dirname(f)) for f in files}
-    assert {"ingest_batch=-1", "ingest_batch=0", "ingest_batch=1"} <= tags
+    assert {"ingest_batch=-1", "ingest_batch=0"} <= tags
     assert any(t.startswith("ingest_batch=-") and t != "ingest_batch=-1"
                for t in tags)  # a fold's generation
     for f in files:
