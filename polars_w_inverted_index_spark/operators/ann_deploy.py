@@ -9,7 +9,7 @@ up — the reference's reusable-index directive (main.rs:325-385: build
 once, serve forever) taken to its operational conclusion:
 
 * a **deployment** is a directory holding ``_root_pointer.json``
-  (atomic tmp+replace, the repo's manifest discipline) and numbered
+  (written atomically, like the index manifest) and numbered
   index roots under ``roots/g<seq>``;
 * **serves** resolve the pointer once per serve
   (:func:`resolve_ann_root`) and then pin that root's own cells
@@ -42,6 +42,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.atomic_json import write_json_atomic
 from . import ann_index as AI
 
 _POINTER_FORMAT = 1
@@ -71,8 +72,7 @@ def _load_pointer(deployment_dir: str) -> dict | None:
 
 
 def _write_pointer(deployment_dir: str, p: dict) -> None:
-    os.makedirs(deployment_dir, exist_ok=True)
-    AI._write_meta_atomic(_pointer_path(deployment_dir), p)
+    write_json_atomic(_pointer_path(deployment_dir), p)
 
 
 def resolve_ann_root(deployment_dir: str) -> str:

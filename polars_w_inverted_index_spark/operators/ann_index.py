@@ -65,6 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrow_batches import decode_list_matrix
+from ..functions.atomic_json import write_json_atomic
 from ..functions.pickling import by_value, guard_import_caches
 from ..functions.vectors import cosine_with_norms, norm
 
@@ -782,16 +783,6 @@ def _measure_cold_bandwidth_mbps(
 _MAX_PLAUSIBLE_DISK_MBPS = 16_000.0
 
 
-def _write_meta_atomic(meta_path: str, meta: dict) -> None:
-    """tmp + ``os.replace`` — a crash mid-write leaves the OLD meta
-    intact, never a truncated JSON that poisons every later read (r12
-    ADVICE; the same convention as the streaming ingest marker)."""
-    tmp = meta_path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, meta_path)
-
-
 def _stamp_bandwidth_once(root: str) -> None:
     """:func:`_stamp_bandwidth` unless ``_ann_meta.json`` already
     records ``bandwidth_mbps``: a root whose build could not measure
@@ -832,7 +823,7 @@ def _stamp_bandwidth(root: str) -> None:
         meta["bandwidth_probe_method"] = (
             "scratch_copy+fsync+fadvise_dontneed+seqread"
         )
-        _write_meta_atomic(meta_path, meta)
+        write_json_atomic(meta_path, meta)
     except (OSError, ValueError):
         pass
 
@@ -883,7 +874,7 @@ def build_ann_index(
     import shutil
 
     shutil.rmtree(os.path.join(root, "deltas"), ignore_errors=True)
-    _write_meta_atomic(
+    write_json_atomic(
         os.path.join(root, "_ann_meta.json"),
         {
             "n_centroids": n_centroids,
@@ -954,6 +945,27 @@ def build_ann_index(
     return root
 
 
+def _recorded_dims(root: str) -> int | None:
+    """The vector width ``_ann_meta.json`` records, or None when the
+    meta cannot be opened or records none (an empty-corpus build).  A
+    torn meta raises ValueError, as :func:`_load_manifest` does for a
+    torn manifest: the writer is atomic, so only a hand-damaged root
+    has one."""
+    path = os.path.join(root, "_ann_meta.json")
+    try:
+        with open(path) as f:
+            text = f.read()
+    except OSError:
+        return None
+    try:
+        return json.loads(text).get("dims")
+    except ValueError as e:
+        raise ValueError(
+            f"ANN index at {root} has a torn _ann_meta.json "
+            f"({type(e).__name__}) — rebuild it with build_ann_index."
+        ) from e
+
+
 def _assign_batch_checkpoint(
     spark: SparkSession,
     root: str,
@@ -969,15 +981,7 @@ def _assign_batch_checkpoint(
     and ``n`` the row count.  The touched set is what makes every
     downstream ingest decision O(touched cells) instead of an
     O(#cells) tree walk (r13 VERDICT task 4)."""
-    recorded = None
-    try:
-        with open(os.path.join(root, "_ann_meta.json")) as f:
-            recorded = json.load(f).get("dims")
-    except (OSError, ValueError):
-        # ValueError: a meta truncated by a pre-r13 (non-atomic) writer's
-        # crash must not block ingest forever (r12 ADVICE) — the dims
-        # gate simply has no recorded width to check against
-        pass
+    recorded = _recorded_dims(root)
     # r15 (guide §4 / r14 VERDICT task 1): the _uniform_width gate rides
     # the assign GEMM as per-batch flag columns instead of paying its
     # own Spark job — the ingest leg is action-count-bound.  The gate's
@@ -1227,7 +1231,7 @@ def _load_manifest(root: str) -> dict:
 
 
 def _write_manifest(root: str, m: dict) -> None:
-    _write_meta_atomic(_manifest_path(root), m)
+    write_json_atomic(_manifest_path(root), m)
 
 
 def _books_id(books) -> str:
@@ -2060,12 +2064,7 @@ def pq_augment_ann_index(
 
     m = _load_manifest(root)
     if n_dims is None:
-        ann_meta_path = os.path.join(root, "_ann_meta.json")
-        try:
-            with open(ann_meta_path) as f:
-                recorded = json.load(f).get("dims")
-        except (OSError, ValueError):  # truncated legacy meta: no dims
-            recorded = None
+        recorded = _recorded_dims(root)
         if recorded is None:
             raise ValueError(
                 f"pq_augment_ann_index: {root}/_ann_meta.json does not "
@@ -2113,7 +2112,7 @@ def pq_augment_ann_index(
     # books swap: from here until the manifest swap, PQ serves refuse
     # via books_id mismatch — a file-write-wide window, loud, healed by
     # re-running this augmentation
-    _write_meta_atomic(
+    write_json_atomic(
         os.path.join(root, "_pq_meta.json"),
         {
             "books": cb.books,

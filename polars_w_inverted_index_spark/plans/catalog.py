@@ -14,12 +14,12 @@ rewrite, no engine fork needed.
 
 from __future__ import annotations
 
-import json
 import os
 from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..functions.atomic_json import read_json, write_json_atomic
 from ..functions.listing import session_scan
 from ..operators.inverted_index import postings, postings_chunked
 
@@ -62,10 +62,7 @@ class IndexCatalog:
         self.spark = spark
         self.root = root
         self._meta_path = os.path.join(root, "_index_catalog.json")
-        self._meta: dict[str, dict] = {}
-        if os.path.exists(self._meta_path):
-            with open(self._meta_path) as f:
-                self._meta = json.load(f)
+        self._meta: dict[str, dict] = read_json(self._meta_path) or {}
 
     def _key(self, table: str, field: str) -> str:
         return f"{table}::{field}"
@@ -119,16 +116,15 @@ class IndexCatalog:
             # partial rows must never be served as complete postings.
             # ``fingerprint`` snapshots the base table's file listing so a
             # later append/rewrite makes the index refuse to serve.
-            with open(os.path.join(path, "_index_meta.json"), "w") as f:
-                json.dump(
-                    {
-                        "source": src,
-                        "doc_id_col": doc_id_col,
-                        "chunked": chunked,
-                        "fingerprint": fp,
-                    },
-                    f,
-                )
+            write_json_atomic(
+                os.path.join(path, "_index_meta.json"),
+                {
+                    "source": src,
+                    "doc_id_col": doc_id_col,
+                    "chunked": chunked,
+                    "fingerprint": fp,
+                },
+            )
         self._meta[self._key(table, field)] = {
             "path": path,
             "chunked": chunked,
@@ -136,9 +132,7 @@ class IndexCatalog:
             "source": src,
             "fingerprint": fp,
         }
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta_path, "w") as f:
-            json.dump(self._meta, f, indent=2)
+        write_json_atomic(self._meta_path, self._meta)
         return path
 
     def build_many(
@@ -230,18 +224,15 @@ class IndexCatalog:
             if src is not None:
                 with open(os.path.join(path, "_index_source"), "w") as fh:
                     fh.write(src)
-                with open(
-                    os.path.join(path, "_index_meta.json"), "w"
-                ) as fh:
-                    json.dump(
-                        {
-                            "source": src,
-                            "doc_id_col": doc_id_col,
-                            "chunked": False,
-                            "fingerprint": fp,
-                        },
-                        fh,
-                    )
+                write_json_atomic(
+                    os.path.join(path, "_index_meta.json"),
+                    {
+                        "source": src,
+                        "doc_id_col": doc_id_col,
+                        "chunked": False,
+                        "fingerprint": fp,
+                    },
+                )
             self._meta[self._key(table, f)] = {
                 "path": path,
                 "chunked": False,
@@ -251,9 +242,7 @@ class IndexCatalog:
             }
             out[f] = path
         shutil.rmtree(staging, ignore_errors=True)
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta_path, "w") as fh:
-            json.dump(self._meta, fh, indent=2)
+        write_json_atomic(self._meta_path, self._meta)
         return out
 
     def adopt_streaming(
@@ -281,9 +270,7 @@ class IndexCatalog:
             "source": None,
             "streaming": True,
         }
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta_path, "w") as f:
-            json.dump(self._meta, f, indent=2)
+        write_json_atomic(self._meta_path, self._meta)
 
     def adopt_streaming_composite(
         self,
@@ -316,9 +303,7 @@ class IndexCatalog:
             "streaming": True,
             "composite_fields": norm,
         }
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta_path, "w") as f:
-            json.dump(self._meta, f, indent=2)
+        write_json_atomic(self._meta_path, self._meta)
 
     def _write_with_stable_fingerprint(self, src, frame, write_fn) -> str | None:
         """Materialize an index (``write_fn(frame)`` builds and writes it
@@ -660,12 +645,9 @@ class IndexCatalog:
         if src is not None:
             with open(os.path.join(path, "_index_source"), "w") as f:
                 f.write(src)
-            with open(os.path.join(path, "_index_meta.json"), "w") as f:
-                json.dump(meta, f)
+            write_json_atomic(os.path.join(path, "_index_meta.json"), meta)
         self._meta[self._key(table, fkey)] = meta
-        os.makedirs(self.root, exist_ok=True)
-        with open(self._meta_path, "w") as f:
-            json.dump(self._meta, f, indent=2)
+        write_json_atomic(self._meta_path, self._meta)
         return path
 
     def lookup_composite(
@@ -720,5 +702,4 @@ class IndexCatalog:
 
     def drop(self, table: str, field: str) -> None:
         self._meta.pop(self._key(table, field), None)
-        with open(self._meta_path, "w") as f:
-            json.dump(self._meta, f, indent=2)
+        write_json_atomic(self._meta_path, self._meta)

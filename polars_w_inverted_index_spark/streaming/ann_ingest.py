@@ -5,13 +5,13 @@ Each micro-batch is assigned against the FROZEN centroids and written
 as one commit directory — O(batch) per commit, index size
 irrelevant (the postings-index merge's property, for vectors).
 foreachBatch is at-least-once, and a blind append would double-insert
-on replay, so commits are guarded by a recorded batch_id exactly like
-streaming/near_dedup: a replayed committed batch is a no-op, a
-batch_id BEHIND the committed one means the checkpoint was reset —
-fail loudly rather than silently fork the index.
+on replay, so commits follow the replay rule of ``streaming/_commit``
+against the batch id the manifest records: a replayed committed batch
+returns 0 rows, a batch_id BEHIND the committed one raises rather than
+silently fork the index.
 
 Crash-consistency contract: a batch has exactly ONE visibility point,
-the atomic swap of ``_cells_manifest.json`` (tmp file + ``os.replace``),
+the atomic swap of ``_cells_manifest.json`` (``functions/atomic_json``),
 which publishes its rows, its codes, any fold it runs AND its
 ``batch_id`` together.  Everything the batch writes before it lands in
 directories no manifest references: the commit directory
@@ -87,8 +87,10 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.atomic_json import read_json, write_json_atomic
 from ..operators import ann_index as AI
 from ..operators.ann_index import pq_augment_ann_index
+from ._commit import replayed
 
 # Autocompaction dial (r12): fold a cell's ingest commits back into its
 # base leaf once more than this many live commits hold its rows.
@@ -179,16 +181,8 @@ def ann_ingest_batch(
     9.40 s compacted, with a one-shot benchmark since deleted)."""
     spark = batch_df.sparkSession
     m = AI._load_manifest(root)
-    committed = m.get("batch_id")
-    if batch_id is not None and committed is not None:
-        if batch_id == committed:
-            return 0  # committed replay: no-op
-        if batch_id < committed:
-            raise ValueError(
-                f"batch_id {batch_id} is behind committed {committed}: "
-                f"checkpoint was reset — rebuild the index or replay "
-                f"without batch_id."
-            )
+    if replayed(m.get("batch_id"), batch_id, root):
+        return 0
     assigned, touched, n = AI._assign_batch_checkpoint(
         spark, root, batch_df, id_col, vec_col
     )
@@ -367,10 +361,9 @@ def should_rebuild(
     row = _latest_drift_report(spark, report_path)
     if row is None or row["cumulative_js_bits"] is None:
         return False
-    base = 0.0
-    if os.path.exists(_baseline_path(root)):
-        with open(_baseline_path(root)) as f:
-            base = float(json.load(f).get("cumulative_js_bits", 0.0))
+    base = float(
+        (read_json(_baseline_path(root)) or {}).get("cumulative_js_bits", 0.0)
+    )
     return float(row["cumulative_js_bits"]) - base > float(threshold_bits)
 
 
@@ -378,8 +371,7 @@ def mark_rebuilt(spark, root: str, report_path: str) -> None:
     """Record the current drift level as the new rebuild baseline —
     call right after ``build_ann_index`` retrains the centroids so
     :func:`should_rebuild` measures drift SINCE this rebuild, not since
-    the original build.  Atomic (tmp + replace), same discipline as the
-    index manifest."""
+    the original build.  Written atomically, like the index manifest."""
     row = _latest_drift_report(spark, report_path)
     meta = {
         "cumulative_js_bits": float(row["cumulative_js_bits"])
@@ -387,7 +379,4 @@ def mark_rebuilt(spark, root: str, report_path: str) -> None:
         else 0.0,
         "batch_id": row["batch_id"] if row is not None else None,
     }
-    tmp = _baseline_path(root) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, _baseline_path(root))
+    write_json_atomic(_baseline_path(root), meta)

@@ -2,9 +2,9 @@
 
 A training-data ingest stream should alarm when the incoming text stops
 looking like the corpus it is meant to extend.  This module maintains a
-running unigram LM of everything ingested (parquet state behind the same
-atomic-pointer discipline as streaming/near_dedup) and emits, per
-micro-batch, the divergence of (a) THIS batch and (b) the CUMULATIVE
+running unigram LM of everything ingested (parquet state under the
+commit protocol of ``streaming/_commit``, one ``v=<n>`` directory per
+commit) and emits, per micro-batch, the divergence of (a) THIS batch and (b) the CUMULATIVE
 ingest against a fixed reference LM:
 
 - ``batch_js_bits`` spikes on a bad shipment (one poisoned/garbled
@@ -15,43 +15,33 @@ State is vocabulary-sized (token → count), a pure function of ingested
 content: merge cost per batch is one full-outer join of two
 vocabulary-sized tables, independent of corpus text volume — the same
 O(vocabulary) bound as functions.text.corpus_divergence, which supplies
-the divergence math.  Replayed micro-batches (foreachBatch is
-at-least-once) are committed no-ops via the recorded batch_id, so the
+the divergence math.  A replayed micro-batch returns None, so the
 running counts are exactly-once.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import corpus_divergence, unigram_lm
-
-
-def _marker_path(state_path: str) -> str:
-    return os.path.join(state_path, "_LATEST")
-
-
-def _read_marker(state_path: str) -> dict | None:
-    p = _marker_path(state_path)
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        return json.load(f)
+from ._commit import (
+    committed_batch_id,
+    read_marker,
+    read_state,
+    replayed,
+    start_foreach_batch,
+    swap_marker,
+)
 
 
 def read_ingest_lm(
     spark: SparkSession, state_path: str
 ) -> DataFrame | None:
     """Current committed running LM ``[t, c]``, or None before batch 0."""
-    meta = _read_marker(state_path)
-    if meta is None:
-        return None
-    return spark.read.parquet(os.path.join(state_path, meta["dir"]))
+    return read_state(spark, state_path)
 
 
 def drift_monitor_batch(
@@ -76,18 +66,9 @@ def drift_monitor_batch(
     cleanly (at-least-once upstream, exactly-once counts).
     """
     spark = batch_df.sparkSession
-    meta = _read_marker(state_path)
-    committed = (meta or {}).get("batch_id")
-    if batch_id is not None and committed is not None:
-        if batch_id == committed:
-            return None  # committed replay: no-op
-        if batch_id < committed:
-            raise ValueError(
-                f"batch_id {batch_id} is behind the drift state's "
-                f"committed batch_id {committed}: the streaming "
-                f"checkpoint was reset or replaced. Use a fresh "
-                f"state_path for the new stream."
-            )
+    meta = read_marker(state_path)
+    if replayed((meta or {}).get("batch_id"), batch_id, state_path):
+        return None
 
     # r15 (guide §1.2/§5): persist, NOT localCheckpoint — the eager
     # checkpoint was its own Spark job; a lazy cache is populated by the
@@ -141,22 +122,15 @@ def drift_monitor_batch(
         .localCheckpoint()
     )
 
-    marker = {
-        "v": next_v,
-        "dir": f"v={next_v}",
-        "batch_id": batch_id
-        if batch_id is not None
-        else (meta or {}).get("batch_id"),
-    }
-    tmp = _marker_path(state_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(marker, f)
-    os.replace(tmp, _marker_path(state_path))
-    for name in os.listdir(state_path):
-        if name.startswith("v=") and name != f"v={next_v}":
-            shutil.rmtree(
-                os.path.join(state_path, name), ignore_errors=True
-            )
+    # the swap comes after the report is materialized (see above)
+    swap_marker(
+        state_path,
+        {
+            "v": next_v,
+            "dirs": [f"v={next_v}"],
+            "batch_id": committed_batch_id(meta, batch_id),
+        },
+    )
     batch_lm.unpersist()
     return report
 
@@ -169,7 +143,6 @@ def start_drift_monitor(
     reference_lm: DataFrame,
     text_col: str = "text",
     alpha: float = 0.5,
-    trigger_available_now: bool = True,
 ):
     """Attach the drift monitor to a stream: per-batch reports append to
     ``report_path`` (parquet), LM state lives at ``state_path``.
@@ -187,11 +160,4 @@ def start_drift_monitor(
         if rep is not None:
             rep.write.mode("append").parquet(report_path)
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_proc)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _proc, checkpoint)

@@ -68,6 +68,8 @@ transactionally; on plain parquet the pointer file is the idiomatic
 stand-in — a reader resolves _LATEST once and then reads immutable
 directories.  Directories no longer referenced are pruned after commit,
 which also collects orphans from merges that crashed before commit.
+The marker read, the replay rule and the atomic swap are those of
+``streaming/_commit``.
 
 Hot values: chunked rows are ``(value, chunk, doc_ids)`` with every
 array bounded by the cap, so no single row outgrows a task either.
@@ -84,14 +86,21 @@ after and a mid-rebucket crash leaves the old marker serving.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..functions.atomic_json import write_json_atomic
 from ..functions.paths import field_name_to_column, sql_ident
 from ..operators.inverted_index import postings
+from ._commit import (
+    committed_batch_id,
+    marker_path,
+    read_marker,
+    replayed,
+    start_foreach_batch,
+)
 
 DEFAULT_N_BUCKETS = 16
 
@@ -108,24 +117,10 @@ DEFAULT_N_BUCKETS = 16
 DEFAULT_MAX_SEGMENTS_PER_BUCKET = 16
 
 
-def _latest_path(index_path: str) -> str:
-    return os.path.join(index_path, "_LATEST")
-
-
 def _read_marker(index_path: str) -> dict | None:
-    """Commit marker (see module docstring) or None for an empty index."""
-    marker = _latest_path(index_path)
-    if not os.path.exists(marker):
-        return None
-    with open(marker) as f:
-        meta = json.load(f)
-    if "buckets" not in meta:
-        raise ValueError(
-            f"index at {index_path} uses a legacy single-directory layout "
-            f"(pre-bucketed marker {sorted(meta)}); rebuild it into a "
-            f"fresh index_path (batch backfill with batch_id=None)."
-        )
-    return meta
+    """Commit marker (see module docstring) or None for an empty index;
+    a legacy single-directory marker (no ``buckets``) is refused."""
+    return read_marker(index_path, key="buckets")
 
 
 def _bucket_col(keys: list[str], n_buckets: int):
@@ -482,30 +477,6 @@ def rebucket_index(
     _write_folded(index_path, meta, folded, new_n)
 
 
-def _replayed(meta: dict | None, batch_id: int | None) -> bool:
-    """foreachBatch at-least-once guard (shared by the single-field and
-    composite merges): True for an exact replay of the committed batch
-    (no-op), raise for a batch BEHIND the marker (reset/rewound
-    checkpoint — silently skipping would freeze the index forever)."""
-    if (
-        batch_id is None
-        or meta is None
-        or meta.get("batch_id") is None
-    ):
-        return False
-    if batch_id == meta["batch_id"]:
-        return True
-    if batch_id < meta["batch_id"]:
-        raise ValueError(
-            f"batch_id {batch_id} is behind the index's committed "
-            f"batch_id {meta['batch_id']}: the streaming checkpoint "
-            f"was reset or replaced. Use a fresh index_path for the "
-            f"new stream, or merge with batch_id=None for a manual "
-            f"backfill."
-        )
-    return False
-
-
 def merge_postings_batch(
     batch_df: DataFrame,
     field: str,
@@ -538,18 +509,14 @@ def merge_postings_batch(
     ``DEFAULT_MAX_SEGMENTS_PER_BUCKET`` (16, the measured
     read-amplification knee; see the constant), ``None`` to disable and
     schedule :func:`compact_index` yourself.  An operational per-call
-    dial (like the trigger mode), not a layout property, so it is not
-    recorded in the marker.
+    dial, not a layout property, so it is not recorded in the marker.
 
-    Idempotence: foreachBatch is at-least-once — after a failure between
-    this commit and Spark's checkpoint commit, the same micro-batch is
-    replayed.  The marker records the last-applied ``batch_id``; a replay
-    of exactly that batch is a no-op instead of a double merge that would
-    permanently duplicate doc_ids.  A batch_id BEHIND the marker can only
-    mean the stream restarted with a fresh/rewound checkpoint (Spark
-    replays at most the one uncommitted batch); silently skipping would
-    freeze the index forever, so that raises instead — point the new
-    stream at a new index_path, or backfill with ``batch_id=None``.
+    Idempotence is the replay rule of ``streaming/_commit``: the marker
+    records the last-applied ``batch_id``, a replay of exactly that
+    batch is a no-op instead of a double merge that would permanently
+    duplicate doc_ids, and a batch_id BEHIND the marker raises — point
+    the new stream at a new index_path, or backfill with
+    ``batch_id=None``.
     """
     spark = batch_df.sparkSession
     meta = _read_marker(index_path)
@@ -559,8 +526,8 @@ def merge_postings_batch(
             f"{meta['composite_fields']}); merge with "
             "merge_composite_postings_batch, not the single-field merge."
         )
-    if _replayed(meta, batch_id):
-        return  # replayed micro-batch — already merged and committed
+    if replayed((meta or {}).get("batch_id"), batch_id, index_path):
+        return
     if meta is not None:
         n_buckets = meta["n_buckets"]
         max_postings_per_row = meta.get("max_postings_per_row")
@@ -754,27 +721,19 @@ def _commit(
             buckets.setdefault(k, []).append(rel)
         else:
             buckets[k] = [rel]
-    committed = batch_id if batch_id is not None else (
-        (meta or {}).get("batch_id")
-    )
     marker = {
         "merge": next_m if next_m is not None else (meta or {}).get("merge", -1),
-        "batch_id": committed,
+        "batch_id": committed_batch_id(meta, batch_id),
         "n_buckets": n_buckets,
         "max_postings_per_row": max_rows,
         "buckets": buckets,
     }
     if composite_fields:
         marker["composite_fields"] = composite_fields
-    # A first merge whose batch is EMPTY (all-null field/id rows at
-    # stream start) commits without any parquet write having created
-    # the index directory — make it here or the tmp-marker open fails
-    # (r11 fuzz: ops=[merge([]), ...] crashed the maintainer).
-    os.makedirs(index_path, exist_ok=True)
-    tmp = _latest_path(index_path) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(marker, f)
-    os.replace(tmp, _latest_path(index_path))
+    # a first merge whose batch is EMPTY (all-null field/id rows at
+    # stream start) commits before any parquet write has created the
+    # index directory: the write makes it
+    write_json_atomic(marker_path(index_path), marker)
     _prune(index_path, buckets)
 
 
@@ -853,7 +812,7 @@ def merge_composite_postings_batch(
             f"{meta.get('composite_fields') or 'a single field'}; this "
             f"merge is over {norm}. One index, one key."
         )
-    if _replayed(meta, batch_id):
+    if replayed((meta or {}).get("batch_id"), batch_id, index_path):
         return
     if meta is not None:
         n_buckets = meta["n_buckets"]
@@ -983,7 +942,6 @@ def start_composite_index_maintenance(
     index_path: str,
     checkpoint: str,
     doc_id_col: str = "doc_id",
-    trigger_available_now: bool = True,
     n_buckets: int = DEFAULT_N_BUCKETS,
     max_postings_per_row: int | None = None,
     max_segments_per_bucket: int | None = DEFAULT_MAX_SEGMENTS_PER_BUCKET,
@@ -1003,14 +961,7 @@ def start_composite_index_maintenance(
             max_segments_per_bucket=max_segments_per_bucket,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)
 
 
 def start_index_maintenance(
@@ -1019,16 +970,12 @@ def start_index_maintenance(
     index_path: str,
     checkpoint: str,
     doc_id_col: str = "doc_id",
-    trigger_available_now: bool = True,
     n_buckets: int = DEFAULT_N_BUCKETS,
     max_postings_per_row: int | None = None,
     max_segments_per_bucket: int | None = DEFAULT_MAX_SEGMENTS_PER_BUCKET,
 ):
-    """Attach the merge to a streaming source; returns the StreamingQuery.
-
-    ``availableNow`` drains the current backlog then stops (test/backfill
-    mode); pass False for a continuously running maintainer.
-    """
+    """Attach the merge to a streaming source; returns the StreamingQuery
+    (``availableNow``: it drains the current backlog, then stops)."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         merge_postings_batch(
@@ -1042,11 +989,4 @@ def start_index_maintenance(
             max_segments_per_bucket=max_segments_per_bucket,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)

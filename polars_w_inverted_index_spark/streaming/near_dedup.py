@@ -10,17 +10,12 @@ order.
 
 State is the accepted corpus's BAND table (doc_id, band_idx, band_hash)
 — ``n_bands`` small rows per accepted doc, a pure function of content —
-stored as parquet behind an atomic pointer marker exactly like
-streaming/index_maintenance.  Commits are DELTAS: each batch writes
-only its accepted bands to a fresh immutable directory and the marker
-lists the directory set, so per-batch commit I/O is O(batch) — a
-full old∪new rewrite would make every commit O(corpus), which at fleet
-scale is a non-starter.  When the directory list exceeds
-``max_delta_dirs`` the commit compacts (one merged rewrite, amortized
-O(corpus / max_delta_dirs) per batch).  Readers (the next micro-batch's
-anti-join) never see partial writes — the pointer swap is atomic — and
-a replayed micro-batch (foreachBatch is at-least-once) is a committed
-no-op via the recorded batch_id.
+committed as per-batch delta directories under the commit protocol of
+``streaming/_commit``: each batch writes only its accepted bands, so
+per-batch commit I/O is O(batch), and the commit compacts to one
+directory once the list exceeds ``max_delta_dirs``.  Readers (the next
+micro-batch's anti-join) never see partial writes, and a replayed
+micro-batch returns an empty frame.
 
 Scale shape per batch: batch bands (narrow + one doc_id shuffle for
 signatures) anti-joined against the corpus band table — AQE broadcasts
@@ -49,7 +44,14 @@ from ..operators.dedup import (
     drop_near_duplicates,
     minhash_signatures,
 )
-from ._delta_state import commit_delta, read_marker, read_state
+from ._commit import (
+    commit_delta,
+    committed_batch_id,
+    read_marker,
+    read_state,
+    replayed,
+    start_foreach_batch,
+)
 
 
 def read_corpus_bands(
@@ -94,19 +96,8 @@ def near_dedup_batch(
     """
     spark = batch_df.sparkSession
     meta = read_marker(state_path)
-    if (
-        batch_id is not None
-        and meta is not None
-        and meta.get("batch_id") is not None
-    ):
-        if batch_id == meta["batch_id"]:
-            return batch_df.where(F.lit(False))  # committed replay: no-op
-        if batch_id < meta["batch_id"]:
-            raise ValueError(
-                f"batch_id {batch_id} is behind committed "
-                f"{meta['batch_id']}: checkpoint was reset — use a fresh "
-                f"state_path or replay without batch_id."
-            )
+    if replayed((meta or {}).get("batch_id"), batch_id, state_path):
+        return batch_df.where(F.lit(False))
     r = num_hashes // num_bands
     bands = _lsh_bands(
         minhash_signatures(batch_df, text_col, id_col, num_hashes, shingle_k),
@@ -182,9 +173,7 @@ def near_dedup_batch(
         ),
         meta=meta,
         extra_marker={
-            "batch_id": batch_id
-            if batch_id is not None
-            else (meta or {}).get("batch_id"),
+            "batch_id": committed_batch_id(meta, batch_id),
             "num_hashes": num_hashes,
             "num_bands": num_bands,
             "shingle_k": shingle_k,
@@ -204,7 +193,6 @@ def start_near_dedup(
     text_col: str = "text",
     id_col: str = "doc_id",
     min_shared_bands: int = 1,
-    trigger_available_now: bool = True,
 ):
     """Attach online near-dedup to a stream: accepted rows land in
     per-batch ``out_path/batch=<id>/`` parquet directories (read
@@ -233,11 +221,4 @@ def start_near_dedup(
             ),
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_proc)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _proc, checkpoint)

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.text import tokens
+from ._commit import start_foreach_batch
 from .index_maintenance import (
     DEFAULT_N_BUCKETS,
     merge_postings_batch,
@@ -65,7 +66,6 @@ def start_term_index_maintenance(
     checkpoint: str,
     text_col: str = "text",
     id_col: str = "doc_id",
-    trigger_available_now: bool = True,
     n_buckets: int = DEFAULT_N_BUCKETS,
 ):
     """Attach term-index maintenance to a document stream; returns the
@@ -81,14 +81,7 @@ def start_term_index_maintenance(
             n_buckets=n_buckets,
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _merge, checkpoint)
 
 
 def boolean_search_from_index(

@@ -6,15 +6,15 @@ batch's OWN window counts join the state — a passage first seen in
 batch 3 is scrubbed from batch 7 onward (and from batch 3 itself if it
 repeats within the batch or reaches ``min_count`` against the corpus).
 
-State = the window-count table (sh, n), committed as per-batch DELTA
-directories behind the atomic ``_LATEST`` pointer (the near_dedup
-layout): per-batch commit I/O is O(batch windows), the reader sums
-duplicate keys batch-side AFTER its join
+State = the window-count table (sh, n), committed as per-batch delta
+directories under the commit protocol of ``streaming/_commit``:
+per-batch commit I/O is O(batch windows), the reader sums duplicate
+keys batch-side AFTER its join
 (operators/span_dedup.scrub_repeated_spans_against), and the commit
 compacts to one aggregated directory when the delta list exceeds
-``max_delta_dirs``.  foreachBatch is at-least-once: a replayed
-committed batch_id is a no-op (returning an EMPTY frame — its rows
-already flowed downstream once), a behind batch_id fails loudly.
+``max_delta_dirs``.  A replayed committed batch_id returns an EMPTY
+frame (its rows already flowed downstream once); a behind batch_id
+raises.
 
 Unlike near-dedup (which drops whole documents and must not re-emit
 them), scrubbing REWRITES rows, so the at-least-once contract matters
@@ -37,7 +37,14 @@ from ..operators.span_dedup import (
     scrub_repeated_spans_against,
 )
 from ..plans.distribution import plan_size_bytes
-from ._delta_state import commit_delta, read_marker, read_state
+from ._commit import (
+    commit_delta,
+    committed_batch_id,
+    read_marker,
+    read_state,
+    replayed,
+    start_foreach_batch,
+)
 
 # A scrub commit is a dozen small exchanges, and AQE runs each one as a
 # Spark job of its own.  Below one advisory partition (session.py) of
@@ -177,29 +184,17 @@ def _span_scrub_batch_actions(
             f"{meta['min_count']}, got min_count={min_count}; use a "
             f"fresh state_path to change the scrub threshold."
         )
-    if (
-        batch_id is not None
-        and meta is not None
-        and meta.get("batch_id") is not None
-    ):
-        if batch_id == meta["batch_id"]:
-            # committed replay: no-op with the EXACT output schema (an
-            # ad-hoc empty select would reorder columns and break a
-            # downstream parquet append)
-            return scrub_repeated_spans_against(
-                spark.createDataFrame([], "sh long, n long"),
-                batch_df.limit(0),
-                k,
-                min_count,
-                text_col,
-                id_col,
-            )
-        if batch_id < meta["batch_id"]:
-            raise ValueError(
-                f"batch_id {batch_id} is behind committed "
-                f"{meta['batch_id']}: checkpoint was reset — use a fresh "
-                f"state_path or replay without batch_id."
-            )
+    if replayed((meta or {}).get("batch_id"), batch_id, state_path):
+        # the EXACT output schema (an ad-hoc empty select would reorder
+        # columns and break a downstream parquet append)
+        return scrub_repeated_spans_against(
+            spark.createDataFrame([], "sh long, n long"),
+            batch_df.limit(0),
+            k,
+            min_count,
+            text_col,
+            id_col,
+        )
     corpus = read_window_state(spark, state_path)
     if corpus is None:
         corpus = spark.createDataFrame([], "sh long, n long")
@@ -240,9 +235,7 @@ def _span_scrub_batch_actions(
         ),
         meta=meta,
         extra_marker={
-            "batch_id": batch_id
-            if batch_id is not None
-            else (meta or {}).get("batch_id"),
+            "batch_id": committed_batch_id(meta, batch_id),
             "k": k,
             "min_count": min_count,
             "hash": HASH_XXH64,
@@ -263,7 +256,6 @@ def start_span_scrub(
     min_count: int = 2,
     text_col: str = "text",
     id_col: str = "doc_id",
-    trigger_available_now: bool = True,
 ):
     """Attach online span scrubbing to a stream: scrubbed rows land in
     per-batch ``out_path/batch=<id>/`` parquet directories (read
@@ -292,11 +284,4 @@ def start_span_scrub(
             ),
         )
 
-    writer = (
-        stream_df.writeStream.foreachBatch(_proc)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("update")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(stream_df, _proc, checkpoint)

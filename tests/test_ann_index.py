@@ -1219,32 +1219,35 @@ def test_fold_probe_never_evicts_live_cells(spark, emb, tmp_path, monkeypatch):
     assert not os.path.exists(os.path.join(root, "_bw_probe_scratch"))
 
 
-def test_truncated_legacy_meta_does_not_block_lifecycle(
+def test_torn_ann_meta_is_refused_by_ingest_and_augment(
     spark, emb, tmp_path
 ):
-    """r12 ADVICE: a meta truncated by a pre-r13 (non-atomic) writer's
-    crash must not wedge ingest/augment behind a JSONDecodeError — the
-    dims gate simply has nothing recorded (and pq_augment still works
-    with an explicit n_dims).  New writes go through tmp+os.replace,
-    so the class cannot recur."""
+    """``_ann_meta.json`` is written atomically, so a torn one means a
+    hand-damaged root.  Both readers of its dims refuse it with the
+    rebuild message instead of tolerating it: the ingest's width gate
+    (which would otherwise run with nothing to check against) and
+    ``pq_augment_ann_index`` (which would otherwise blame a pre-dims
+    index).  Nothing is committed."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
     from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
         pq_augment_ann_index,
     )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
-    root = str(tmp_path / "trunc_meta")
+    root = str(tmp_path / "torn_meta")
     build_ann_index(emb.where(F.col("vec_id") < 100), root,
                     n_centroids=2, n_iters=0)
+    manifest = ai._load_manifest(root)
     meta_path = os.path.join(root, "_ann_meta.json")
     open(meta_path, "w").write('{"n_centroids": 2, "di')  # torn write
-    assert ann_index_add_batch(
-        spark, root, emb.where(F.col("vec_id").between(100, 110)),
-        batch_tag=1,
-    ) == 11
-    with pytest.raises(ValueError, match="n_dims"):
+    torn = f"ANN index at {root} has a torn _ann_meta.json.*build_ann_index"
+    with pytest.raises(ValueError, match=torn):
+        ann_ingest_batch(
+            emb.where(F.col("vec_id").between(100, 110)), root, batch_id=0
+        )
+    with pytest.raises(ValueError, match=torn):
         pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
-    pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8, n_dims=64)
-    assert not os.path.exists(meta_path + ".tmp")
+    assert ai._load_manifest(root) == manifest
 
 
 def test_reencode_drops_codes_of_removed_cells(spark, emb, tmp_path):

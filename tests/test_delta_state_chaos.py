@@ -1,9 +1,9 @@
 """Delta-state compaction concurrency chaos test (VERDICT r5 task 5).
 
-`_delta_state` promises readers old-or-new state, never a mix: the
-``_LATEST`` marker is the ONLY thing a reader consults, and it is
-swapped with tmp-write + ``os.replace`` after the new ``v=`` directory
-is fully written.  These tests interpose a real reader at the exact
+``streaming/_commit`` promises readers old-or-new state, never a mix:
+the ``_LATEST`` marker is the ONLY thing a reader consults, and it is
+swapped with tmp-write + ``os.replace`` (``functions/atomic_json``)
+after the new ``v=`` directory is fully written.  These tests interpose a real reader at the exact
 hazard points of a COMPACTING commit — after the compacted directory is
 written but before the swap, at a crash that prevents the swap, and
 after the swap — and assert the observed state is exactly the old or
@@ -16,7 +16,8 @@ import os
 
 import pytest
 
-from polars_w_inverted_index_spark.streaming import _delta_state as DS
+from polars_w_inverted_index_spark.functions import atomic_json as AJ
+from polars_w_inverted_index_spark.streaming import _commit as DS
 
 
 def _mk(spark, rows):
@@ -54,7 +55,7 @@ def test_reader_between_compact_write_and_swap_sees_old(spark, tmp_path, monkeyp
     _commit(spark, state, [("a", 3)])
     old_totals = _totals(spark, state)
     assert old_totals == {"a": 4, "b": 2}
-    assert len(DS.marker_dirs(DS.read_marker(state))) == 3
+    assert len(DS.read_marker(state)["dirs"]) == 3
 
     observed = {}
     real_replace = os.replace
@@ -65,7 +66,7 @@ def test_reader_between_compact_write_and_swap_sees_old(spark, tmp_path, monkeyp
         observed["mid"] = _totals(spark, state)
         real_replace(src, dst)
 
-    monkeypatch.setattr(DS.os, "replace", replace_with_reader)
+    monkeypatch.setattr(AJ.os, "replace", replace_with_reader)
     _commit(spark, state, [("c", 5)])  # 4th commit → compaction path
     monkeypatch.undo()
 
@@ -74,9 +75,9 @@ def test_reader_between_compact_write_and_swap_sees_old(spark, tmp_path, monkeyp
     assert new_totals == {"a": 4, "b": 2, "c": 5}
     # compaction folded to a single directory and pruned the rest
     marker = DS.read_marker(state)
-    assert len(DS.marker_dirs(marker)) == 1
+    assert len(marker["dirs"]) == 1
     on_disk = {d for d in os.listdir(state) if d.startswith("v=")}
-    assert on_disk == set(DS.marker_dirs(marker))
+    assert on_disk == set(marker["dirs"])
 
 
 def test_crash_before_swap_leaves_old_state_and_replays_cleanly(
@@ -93,7 +94,7 @@ def test_crash_before_swap_leaves_old_state_and_replays_cleanly(
     def crash(src, dst):
         raise OSError("simulated crash before marker swap")
 
-    monkeypatch.setattr(DS.os, "replace", crash)
+    monkeypatch.setattr(AJ.os, "replace", crash)
     with pytest.raises(OSError, match="simulated crash"):
         _commit(spark, state, [("c", 5)])
     monkeypatch.undo()
@@ -108,7 +109,7 @@ def test_crash_before_swap_leaves_old_state_and_replays_cleanly(
     _commit(spark, state, [("c", 5)])
     assert _totals(spark, state) == {"a": 4, "b": 2, "c": 5}
     on_disk = {d for d in os.listdir(state) if d.startswith("v=")}
-    assert on_disk == set(DS.marker_dirs(DS.read_marker(state)))
+    assert on_disk == set(DS.read_marker(state)["dirs"])
 
 
 def test_reader_frame_resolved_before_swap_still_serves_old_rows(
@@ -155,7 +156,7 @@ def test_interleaved_readers_never_observe_a_mix(spark, tmp_path, monkeypatch):
         real_replace(src, dst)
         observations.append(_totals(spark, state))
 
-    monkeypatch.setattr(DS.os, "replace", spy_replace)
+    monkeypatch.setattr(AJ.os, "replace", spy_replace)
     for rows in history:
         _commit(spark, state, rows)
     monkeypatch.undo()
@@ -196,11 +197,11 @@ def test_compaction_write_is_file_bounded_no_retrigger(spark, tmp_path):
     # delta list full (max_delta_dirs=2) -> this commit compacts, and
     # the compacted frame is deliberately 16-partition wide
     meta = commit([("c", 3)], compact_wide=True)
-    assert len(DS.marker_dirs(meta)) == 1  # it DID compact
+    assert len(meta["dirs"]) == 1  # it DID compact
     assert (
         DS.state_file_count(state, meta) <= max_state_files // 2
     ), DS.state_file_count(state, meta)
     # the very next commit must append a delta, NOT re-compact
     meta2 = commit([("d", 4)])
-    assert len(DS.marker_dirs(meta2)) == 2, meta2
+    assert len(meta2["dirs"]) == 2, meta2
     assert _totals(spark, state) == {"a": 1, "b": 2, "c": 3, "d": 4}

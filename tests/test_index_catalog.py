@@ -721,6 +721,49 @@ def test_adopt_streaming_index_serves_engine_queries(spark, tmp_path):
     assert cat.lookup("events", "event_type", doc_id_col="other") is None
 
 
+def test_crash_mid_catalog_write_keeps_the_previous_catalog(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A crash halfway through writing ``_index_catalog.json`` (here an
+    ``adopt_streaming`` whose ``json.dump`` raises after half the
+    document) leaves the previous catalog whole: a new IndexCatalog
+    opens it and serves the entry it held."""
+    import json
+    import os
+
+    from polars_w_inverted_index_spark.streaming import merge_postings_batch
+
+    events = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
+    idx = str(tmp_path / "stream_idx")
+    merge_postings_batch(events, "event_type", idx, "event_id", batch_id=0)
+    root = str(tmp_path / "cat")
+    IndexCatalog(spark, root).adopt_streaming(
+        "events", "event_type", idx, doc_id_col="event_id"
+    )
+
+    def torn_dump(obj, f, **kw):
+        text = json.dumps(obj, **kw)
+        f.write(text[: len(text) // 2])
+        raise OSError("simulated crash mid-dump")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-dump"):
+        IndexCatalog(spark, root).adopt_streaming(
+            "events", "user_id", idx, doc_id_col="event_id"
+        )
+    monkeypatch.undo()
+
+    cat = IndexCatalog(spark, root)
+    assert cat.lookup("events", "user_id", doc_id_col="event_id") is None
+    got = cat.lookup("events", "event_type", doc_id_col="event_id")
+    assert sorted(
+        (r["value"], tuple(r["doc_ids"])) for r in got.collect()
+    ) == sorted(
+        (r["value"], tuple(r["doc_ids"]))
+        for r in postings(events, "event_type", "event_id").collect()
+    )
+
+
 @pytest.mark.parametrize("chunk", [None, 3], ids=["plain", "chunked"])
 def test_streaming_point_lookup_equals_base_filter(spark, tmp_path, chunk):
     """A single-equality lookup on a streaming entry reads only its

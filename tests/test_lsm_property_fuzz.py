@@ -456,7 +456,7 @@ def test_fuzz_crash_windows_heal(ops, cap, tmp_path_factory):
     final successful fold must leave the on-disk ``m=*/bucket=*`` set
     EXACTLY equal to the marker's live pointer set — every orphan from
     every injected crash collected (the orphan-collection story in
-    ``_prune``'s docstring, pinned the way the ``_delta_state`` chaos
+    ``_prune``'s docstring, pinned the way the delta-state chaos
     tests pin streaming commits)."""
     spark = get_session("property_tests")
     idx = str(tmp_path_factory.mktemp("lsm_crash") / "idx")

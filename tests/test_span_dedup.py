@@ -286,7 +286,7 @@ def test_streaming_state_file_count_bounded(spark, tmp_path):
     to ``delta_partitions`` part-files and the ``max_state_files``
     trigger compacts on the live listing even before the directory dial
     trips.  Counts stay exact across every compaction."""
-    from polars_w_inverted_index_spark.streaming._delta_state import (
+    from polars_w_inverted_index_spark.streaming._commit import (
         read_marker,
         state_file_count,
     )

@@ -1088,7 +1088,7 @@ def test_should_rebuild_wires_drift_to_ann_cadence(spark, tmp_path):
 
 def test_autocompact_bounds_segment_growth(spark, tmp_path):
     """max_segments_per_bucket: once any bucket's segment list exceeds
-    the dial, the merge folds the index inline (the _delta_state
+    the dial, the merge folds the index inline (the delta-state
     max_delta_dirs policy applied to the LSM index) — segment growth is
     bounded without an external compaction scheduler, and the logical
     postings stay exact throughout."""
