@@ -17,12 +17,15 @@ import os
 
 def read_json(path: str) -> dict | None:
     """The object stored at ``path``, or None when there is no file.  A
-    torn file raises ``ValueError``: no writer here produces one."""
+    torn file raises a ``ValueError`` naming it: no writer here produces
+    one, so a reader must not take it for a missing file."""
     try:
         with open(path) as f:
             return json.load(f)
     except FileNotFoundError:
         return None
+    except ValueError as e:
+        raise ValueError(f"{path} is torn: {e}") from e
 
 
 def write_json_atomic(path: str, obj) -> None:

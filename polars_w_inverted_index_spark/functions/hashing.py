@@ -71,11 +71,6 @@ def uh_base_sql(expr: str) -> str:
     return f"({md5_long_sql(expr)} % {UH_PRIME})"
 
 
-def uh_apply(base: Column, j: int) -> Column:
-    a, b = uh_params(j)
-    return F.pmod(base * F.lit(a) + F.lit(b), F.lit(UH_PRIME))
-
-
 def uh_apply_sql(base_expr: str, j: int) -> str:
     a, b = uh_params(j)
     return f"(({base_expr} * {a} + {b}) % {UH_PRIME})"

@@ -75,12 +75,6 @@ def scrub_text(col: Column | str) -> Column:
     return out
 
 
-def scrub_counts(col: Column | str) -> list[Column]:
-    """Per-pattern redaction counts (aliased ``n_email`` etc.) plus the
-    total — see :func:`_stages` for the sequential-count semantics."""
-    return _stages(col)[1]
-
-
 def scrub_documents(df, text_col: str = "text"):
     """``df`` with ``text`` scrubbed in place plus per-pattern counts —
     the whole hygiene pass as one narrow projection, with the regex

@@ -42,7 +42,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..functions.atomic_json import write_json_atomic
+from ..functions.atomic_json import read_json, write_json_atomic
 from . import ann_index as AI
 
 _POINTER_FORMAT = 1
@@ -58,12 +58,8 @@ def _roots_dir(deployment_dir: str) -> str:
 
 
 def _load_pointer(deployment_dir: str) -> dict | None:
-    try:
-        with open(_pointer_path(deployment_dir)) as f:
-            p = json.load(f)
-    except (OSError, ValueError):
-        return None
-    if p.get("format") != _POINTER_FORMAT:
+    p = read_json(_pointer_path(deployment_dir))
+    if p is not None and p.get("format") != _POINTER_FORMAT:
         raise ValueError(
             f"deployment pointer at {deployment_dir} has format "
             f"{p.get('format')!r}; this engine writes v{_POINTER_FORMAT}."
@@ -294,22 +290,16 @@ def ann_deployment_rebuild(
         id_col=meta["id_col"],
         vec_col=meta["vec_col"],
     )
-    pq_meta_path = os.path.join(old_root, "_pq_meta.json")
-    if os.path.exists(pq_meta_path):
-        try:
-            with open(pq_meta_path) as f:
-                pq_meta = json.load(f)
-        except (OSError, ValueError):
-            pq_meta = None
-        if pq_meta is not None and pq_meta.get("books"):
-            AI.pq_augment_ann_index(
-                spark,
-                root,
-                m_subspaces=int(pq_meta["m_subspaces"]),
-                n_codes=int(pq_meta["n_codes"]),
-                n_iters=int(pq_meta.get("n_iters", 4)),
-                sample_rows=int(pq_meta.get("sample_rows", 65_536)),
-            )
+    pq_meta = read_json(os.path.join(old_root, "_pq_meta.json"))
+    if pq_meta is not None and pq_meta.get("books"):
+        AI.pq_augment_ann_index(
+            spark,
+            root,
+            m_subspaces=int(pq_meta["m_subspaces"]),
+            n_codes=int(pq_meta["n_codes"]),
+            n_iters=int(pq_meta.get("n_iters", 4)),
+            sample_rows=int(pq_meta.get("sample_rows", 65_536)),
+        )
     _carry_batch_id(old_root, root)
     if report_path is not None:
         mark_rebuilt(spark, root, report_path)

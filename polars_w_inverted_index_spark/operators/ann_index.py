@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.arrow_batches import decode_list_matrix
-from ..functions.atomic_json import write_json_atomic
+from ..functions.atomic_json import read_json, write_json_atomic
 from ..functions.pickling import by_value, guard_import_caches
 from ..functions.vectors import cosine_with_norms, norm
 
@@ -789,12 +789,9 @@ def _stamp_bandwidth_once(root: str) -> None:
     gets its stamp from the first maintenance pass that can (a fold or
     an augment), and every later pass skips the probe's tree walk,
     copy and fsync."""
-    try:
-        with open(os.path.join(root, "_ann_meta.json")) as f:
-            if "bandwidth_mbps" in json.load(f):
-                return
-    except (OSError, ValueError):
-        return  # unreadable meta: nothing to stamp into
+    meta = read_json(os.path.join(root, "_ann_meta.json"))
+    if meta is None or "bandwidth_mbps" in meta:
+        return  # no meta to stamp into, or stamped already
     _stamp_bandwidth(root)
 
 
@@ -815,16 +812,17 @@ def _stamp_bandwidth(root: str) -> None:
     if mbps > _MAX_PLAUSIBLE_DISK_MBPS:
         return
     meta_path = os.path.join(root, "_ann_meta.json")
+    meta = read_json(meta_path)
+    if meta is None:
+        return
+    meta["bandwidth_mbps"] = mbps
+    meta["bandwidth_probe_bytes"] = probed
+    meta["bandwidth_probe_method"] = (
+        "scratch_copy+fsync+fadvise_dontneed+seqread"
+    )
     try:
-        with open(meta_path) as f:
-            meta = json.load(f)
-        meta["bandwidth_mbps"] = mbps
-        meta["bandwidth_probe_bytes"] = probed
-        meta["bandwidth_probe_method"] = (
-            "scratch_copy+fsync+fadvise_dontneed+seqread"
-        )
         write_json_atomic(meta_path, meta)
-    except (OSError, ValueError):
+    except OSError:
         pass
 
 

@@ -13,8 +13,14 @@ here hard-codes a data size, only ratios and feature flags.
 from __future__ import annotations
 
 import os
+import re
+from typing import Callable
 
+from py4j.protocol import Py4JError
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from .plans.catalyst_ext import DEFAULT_JAR, jar_available
 
 # Default driver heap: half the host's memory, capped at 48 GB.  A fixed
 # 48 GB default let a full test run on a 15 GB host grow until the
@@ -92,6 +98,65 @@ _DEFAULTS: dict[str, str] = {
 }
 
 
+# Hadoop's ``file:`` FileSystem sets the mode of every file and
+# directory a write creates.  Pyspark ships no native Hadoop library, so
+# it forks ``chmod`` for each one, on executor task threads, and starts
+# a stderr-reader thread per fork.  A JFR recording of one perfbench
+# ``ingest`` run (setup, warm-up and 30 timed ops; 4-core VM) counted
+# 1,416 ``chmod`` process starts and 2,286 thread starts; with
+# ``NioLocalFileSystem`` (jvm/), which sets the same mode bits
+# in-process, 0 and 879.  Traced per-kind medians (seeds 31, 32):
+# ``merge.ms`` 269/315 -> 206/206, ``compact.ms`` 454/506 -> 413/440,
+# ``exec.run_ms_per_op`` 249/296 -> 211/236; ``ann.ingest_ms``
+# 387/385 -> 350/454 moved within its run-to-run spread.  The class is
+# bound only where it is sure to load: a local master (executors share
+# the driver JVM and its classpath) on a JVM this call launches, or on a
+# running one that already has the jar.  A class name the JVM cannot
+# load would fail every ``file:`` access.
+NIO_FS_CLASS = "org.polarsindex.NioLocalFileSystem"
+FS_IMPL_KEY = "spark.hadoop.fs.file.impl"
+CLASSPATH_KEY = "spark.driver.extraClassPath"
+_LOCAL_MASTER = re.compile(r"local(\[[^\]]*\])?")
+
+
+def session_conf(
+    master: str,
+    low_memory: bool = False,
+    extra_conf: dict[str, str] | None = None,
+    running_jvm_loads: Callable[[str], bool] | None = None,
+) -> dict[str, str]:
+    """The builder conf :func:`get_session` applies for ``master``.
+
+    ``running_jvm_loads`` is None when no JVM gateway is running (the
+    builder launches one with this conf), else a predicate telling
+    whether the running JVM can load a class by name.  A caller's
+    ``spark.driver.extraClassPath`` is kept, with the jar joined to it.
+    """
+    conf = dict(_DEFAULTS)
+    if low_memory:
+        conf["spark.sql.files.maxPartitionBytes"] = str(32 * 1024 * 1024)
+    if extra_conf:
+        conf.update(extra_conf)
+    if not _LOCAL_MASTER.fullmatch(master) or not jar_available():
+        return conf
+    if running_jvm_loads is not None and not running_jvm_loads(NIO_FS_CLASS):
+        return conf
+    paths = [p for p in conf.get(CLASSPATH_KEY, "").split(os.pathsep) if p]
+    if DEFAULT_JAR not in paths:
+        paths.append(DEFAULT_JAR)
+    conf[CLASSPATH_KEY] = os.pathsep.join(paths)
+    conf.setdefault(FS_IMPL_KEY, NIO_FS_CLASS)
+    return conf
+
+
+def _jvm_loads(gateway, name: str) -> bool:
+    try:
+        gateway.jvm.java.lang.Class.forName(name)
+    except Py4JError:  # a ClassNotFoundException in the JVM
+        return False
+    return True
+
+
 def get_session(
     app_name: str = "polars_w_inverted_index_spark",
     master: str | None = None,
@@ -106,14 +171,15 @@ def get_session(
     change.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    builder = SparkSession.builder.appName(app_name).master(
-        master or f"local[{cpus}]"
+    master = master or f"local[{cpus}]"
+    gateway = SparkContext._gateway
+    conf = session_conf(
+        master,
+        low_memory,
+        extra_conf,
+        None if gateway is None else (lambda name: _jvm_loads(gateway, name)),
     )
-    conf = dict(_DEFAULTS)
-    if low_memory:
-        conf["spark.sql.files.maxPartitionBytes"] = str(32 * 1024 * 1024)
-    if extra_conf:
-        conf.update(extra_conf)
+    builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

@@ -8,20 +8,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..functions.listing import session_scan
 
-TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
 def _read_table(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         # events.ts is TIMESTAMP(NANOS) parquet, which Spark rejects by
@@ -49,7 +35,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     root ``os.stat`` cannot see (``s3a://``, ``hdfs://``) reads uncached."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     return session_scan(spark, path, lambda: _read_table(spark, path, name))
-
-
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}

@@ -81,7 +81,6 @@ guarded ingest — into one stream operator.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -132,12 +131,10 @@ def _reaugment_unpaired(spark, root: str) -> None:
         root, AI._load_manifest(root)
     ) is not None:
         return
-    try:
-        with open(pq_meta) as f:
-            meta = json.load(f)
-        books = meta["books"]
-    except (OSError, ValueError, KeyError):
-        return  # unreadable sidecar: fail closed at serve
+    meta = read_json(pq_meta)
+    books = (meta or {}).get("books")
+    if not books:
+        return  # no codebooks recorded: fail closed at serve
     pq_augment_ann_index(
         spark,
         root,

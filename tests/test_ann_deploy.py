@@ -67,6 +67,18 @@ def test_build_resolve_serve(spark, emb, queries, tmp_path):
         AD.ann_deployment_build(emb, dep, n_centroids=8)
 
 
+def test_torn_pointer_is_named_not_missing(tmp_path):
+    """A half-written ``_root_pointer.json`` raises naming the file; only
+    a missing one reads as "not an ANN deployment"."""
+    dep = tmp_path / "dep"
+    dep.mkdir()
+    (dep / "_root_pointer.json").write_text('{"format": 1, "live": "ro')
+    with pytest.raises(ValueError, match=r"_root_pointer\.json is torn"):
+        AD.resolve_ann_root(str(dep))
+    with pytest.raises(FileNotFoundError, match="not an ANN deployment"):
+        AD.resolve_ann_root(str(tmp_path / "absent"))
+
+
 def test_rebuild_from_live_rows_and_marker_carry(spark, emb, tmp_path):
     """Build → guarded ingest → rebuild (no corpus argument): the new
     root must serve base+ingested rows exactly, the flip must be

@@ -1250,6 +1250,46 @@ def test_torn_ann_meta_is_refused_by_ingest_and_augment(
     assert ai._load_manifest(root) == manifest
 
 
+def test_torn_ann_meta_is_named_by_the_bandwidth_stamp(tmp_path, monkeypatch):
+    """The bandwidth stamp's two reads of ``_ann_meta.json`` raise
+    naming a half-written file instead of skipping it; a missing meta
+    is still nothing to stamp into."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    monkeypatch.setattr(
+        ai, "_measure_cold_bandwidth_mbps", lambda cells: (900.0, 1 << 20)
+    )
+    root = tmp_path / "root"
+    root.mkdir()
+    ai._stamp_bandwidth_once(str(root))  # no meta: a no-op
+    assert os.listdir(root) == []
+    (root / "_ann_meta.json").write_text('{"n_centroids": 2, "di')
+    for stamp in (ai._stamp_bandwidth_once, ai._stamp_bandwidth):
+        with pytest.raises(ValueError, match=r"_ann_meta\.json is torn"):
+            stamp(str(root))
+
+
+def test_torn_pq_meta_is_named_by_the_reaugment(spark, emb, tmp_path):
+    """After a fold, ``_reaugment_unpaired`` reads ``_pq_meta.json`` of
+    an unpaired sidecar; a half-written one raises naming it instead of
+    leaving the sidecar unpaired without a word."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+    from polars_w_inverted_index_spark.streaming.ann_ingest import (
+        _reaugment_unpaired,
+    )
+
+    root = str(tmp_path / "torn_pq")
+    build_ann_index(emb.where(F.col("vec_id") < 100), root,
+                    n_centroids=2, n_iters=0)
+    _reaugment_unpaired(spark, root)  # no sidecar: a no-op
+    manifest = ai._load_manifest(root)
+    with open(os.path.join(root, "_pq_meta.json"), "w") as f:
+        f.write('{"m_subspaces": 4, "books": [[[0.1, ')
+    with pytest.raises(ValueError, match=r"_pq_meta\.json is torn"):
+        _reaugment_unpaired(spark, root)
+    assert ai._load_manifest(root) == manifest
+
+
 def test_reencode_drops_codes_of_removed_cells(spark, emb, tmp_path):
     """The refresh's DROPPED branch: a cell that disappears from the
     cells tree (re-shard / manual surgery) must lose its codes dir and

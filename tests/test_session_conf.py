@@ -1,19 +1,26 @@
 """Session-wide configuration: the default driver heap follows the host,
-no engine operation rewrites the session's planner conf while it runs,
-and nothing in the package sets Spark's parallel-listing threshold.
-None of the tests starts Spark."""
+the in-process ``file:`` FileSystem is bound only on a JVM that can load
+it, no engine operation rewrites the session's planner conf while it
+runs, and nothing in the package sets Spark's parallel-listing
+threshold.  None of the tests starts Spark."""
 
 from __future__ import annotations
 
 import ast
 import os
+import zipfile
 
 import pytest
 
 import polars_w_inverted_index_spark
+from polars_w_inverted_index_spark.plans.catalyst_ext import DEFAULT_JAR
 from polars_w_inverted_index_spark.session import (
+    CLASSPATH_KEY,
     DRIVER_MEM_CEILING_MB,
+    FS_IMPL_KEY,
+    NIO_FS_CLASS,
     default_driver_memory,
+    session_conf,
 )
 
 PKG = os.path.dirname(polars_w_inverted_index_spark.__file__)
@@ -67,6 +74,65 @@ def test_default_driver_memory_without_meminfo(tmp_path):
     garbled = tmp_path / "garbled"
     garbled.write_text("MemFree: 12 kB\n")
     assert default_driver_memory(str(garbled)) == f"{DRIVER_MEM_CEILING_MB}m"
+
+
+@pytest.mark.parametrize("master", ["local", "local[4]", "local[*]"])
+def test_local_master_binds_the_nio_file_system(master):
+    conf = session_conf(master)
+    assert conf[FS_IMPL_KEY] == NIO_FS_CLASS
+    assert conf[CLASSPATH_KEY] == DEFAULT_JAR
+
+
+def test_callers_classpath_is_kept():
+    mine = os.pathsep.join(["/opt/a.jar", "/opt/b.jar"])
+    conf = session_conf("local[2]", extra_conf={CLASSPATH_KEY: mine})
+    assert conf[CLASSPATH_KEY] == os.pathsep.join([mine, DEFAULT_JAR])
+    # a caller that already names the jar (bench.py) gets it once
+    conf = session_conf("local[2]", extra_conf={CLASSPATH_KEY: DEFAULT_JAR})
+    assert conf[CLASSPATH_KEY] == DEFAULT_JAR
+
+
+def test_running_jvm_with_the_class_binds_it():
+    asked = []
+    conf = session_conf(
+        "local[2]", running_jvm_loads=lambda n: asked.append(n) or True
+    )
+    assert asked == [NIO_FS_CLASS]
+    assert conf[FS_IMPL_KEY] == NIO_FS_CLASS
+
+
+@pytest.mark.parametrize(
+    "master, loads",
+    [
+        ("spark://host:7077", None),  # executors lack the jar
+        ("yarn", None),
+        ("local-cluster[2,1,1024]", None),  # executors are other JVMs
+        ("local[2]", lambda name: False),  # running JVM without the jar
+    ],
+)
+def test_no_key_where_the_class_may_not_load(master, loads):
+    mine = {CLASSPATH_KEY: "/opt/a.jar"}
+    conf = session_conf(master, extra_conf=mine, running_jvm_loads=loads)
+    assert FS_IMPL_KEY not in conf
+    assert conf[CLASSPATH_KEY] == "/opt/a.jar"
+    assert CLASSPATH_KEY not in session_conf(master, running_jvm_loads=loads)
+
+
+def test_committed_jar_holds_every_source_class():
+    """``jvm/build.sh`` compiles every ``src/**/*.java``; a source added
+    without rebuilding the committed jar fails here."""
+    src = os.path.join(os.path.dirname(DEFAULT_JAR), "src")
+    sources = {
+        os.path.relpath(os.path.join(d, f), src)[: -len(".java")]
+        for d, _dn, fs in os.walk(src)
+        for f in fs
+        if f.endswith(".java")
+    }
+    with zipfile.ZipFile(DEFAULT_JAR) as jar:
+        classes = {n[: -len(".class")] for n in jar.namelist()
+                   if n.endswith(".class")}
+    assert NIO_FS_CLASS.replace(".", "/") in sources
+    assert sources <= classes, sources - classes
 
 
 def conf_writes(source: str) -> list[tuple[int, str | None, str | None]]:
