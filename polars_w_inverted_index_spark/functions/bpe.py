@@ -274,7 +274,7 @@ def bpe_encode(
     encode each document with the learned merges.
 
     Arrow-batched ``mapInPandas`` — measured and KEPT (r11,
-    tools/string_bridge_bench.py): the encode kernel needs a Python str
+    a one-shot A/B since deleted): the encode kernel needs a Python str
     per document regardless of bridge (``.lower().split()`` + the
     per-word merge loop), and the pandas object Series materializes
     them cheaper than ``to_pylist()`` on the Arrow column — 0.51 s vs

@@ -61,13 +61,25 @@ from __future__ import annotations
 import json
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.arrow_batches import decode_list_matrix
 from ..functions.atomic_json import read_json, write_json_atomic
 from ..functions.pickling import by_value, guard_import_caches
-from ..functions.vectors import cosine_with_norms, norm
+from ..functions.topk import (
+    arrow_schema,
+    collect_queries,
+    cosine_block,
+    empty_topk,
+    exact_rerank,
+    half_up,
+    local_topk,
+    prep_queries,
+    rank_topk,
+    topk_ddl,
+)
+from ..functions.vectors import norm
 
 
 def _centroid_frame(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -175,33 +187,6 @@ def kmeans_centroids(
 _MAX_COLLECTED_CENTROIDS = 65_536
 
 
-def _half_up(a, digits: int):
-    """Round half AWAY FROM ZERO, like Spark's ``F.round`` (BigDecimal
-    HALF_UP).  ``np.round`` is half-to-even, which diverges from the SQL
-    twins on cosines landing exactly on a .5 boundary at round_digits —
-    reachable with dyadic-rational vectors (e.g. cos = 0.25 rounded to 1
-    digit: np.round → 0.2, F.round → 0.3) — flipping the last digit and
-    potentially the rank/tie order vs a hash-matched oracle (r9 ADVICE).
-    Worker closures inline the same two-line formula (self-contained
-    pickling convention, functions/pickling.py)."""
-    import numpy as np
-
-    p = 10.0 ** int(digits)
-    return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
-
-
-def _arrow_schema(ddl: str):
-    """Driver-side: the pyarrow schema for a Spark DDL string, so a
-    ``mapInArrow`` closure can build output RecordBatches with exactly
-    the declared field types (inference on empty/py-object lists would
-    flip types batch-to-batch).  pa.Schema pickles by value into the
-    closure."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-    from pyspark.sql.types import StructType
-
-    return to_arrow_schema(StructType.fromDDL(ddl))
-
-
 def _collect_centroids(centroids: DataFrame):
     """Bounded driver-side centroid matrix for the GEMM closures:
     ``(cids, cmat, cns, n_dims)`` sorted by cid (argmax first-hit ==
@@ -281,61 +266,6 @@ def _load_centroids(spark: SparkSession, root: str):
     return out
 
 
-def _null_elem_flags(vec_lists, width):
-    """Driver-side per-row "has a NULL element within the ``width``
-    prefix" flags for COLLECTED vectors — the numpy conversion turns
-    None into NaN, indistinguishable from a NaN element, but Spark
-    branches them apart (NULL norm → the guard's otherwise-0; NaN norm
-    → scored NaN, ranked first)."""
-    import numpy as np
-
-    w = int(width)
-    return np.array(
-        [
-            any(x is None for x in (v[:w] if v is not None else []))
-            for v in vec_lists
-        ],
-        dtype=bool,
-    )
-
-
-def _probe_rank(q_mat, cmat, cns, nprobe: int, round_digits: int,
-                q_zero=None):
-    """Driver-side probe ranking: ``(|Q|, min(nprobe, n_cells))``
-    CENTROID INDICES (index order == sorted-cid order), same GEMM +
-    tie rule as ``_assign_cells`` (round before rank, stable sort →
-    lowest cid wins ties).  Runs on the ALREADY-collected query matrix
-    so serving never executes the query plan a second time — a
-    nondeterministic query frame (sample/limit/rand) would otherwise
-    return different ids on the probe pass than on the collect
-    (r9 review finding)."""
-    import numpy as np
-
-    n_dims = q_mat.shape[1]
-    C = np.zeros((len(cmat), n_dims), dtype=np.float64)
-    for i, c in enumerate(cmat):
-        a = np.asarray(c, dtype=np.float64)[:n_dims]
-        C[i, : len(a)] = a
-    cn = np.asarray(cns, dtype=np.float64)
-    cn_safe = np.where(cn > 0, cn, 1.0)
-    qn = np.linalg.norm(q_mat, axis=1)
-    qn_safe = np.where(qn > 0, qn, 1.0)
-    cos = (q_mat @ C.T) / np.outer(qn_safe, cn_safe)
-    # Spark-branch zero mask (r12): NULL-element queries (via q_zero,
-    # passed from the collected rows) and zero queries probe like zero
-    # vectors — 0.0 everywhere, ties to the lowest cids; NaN norms
-    # (NaN/±inf elements) stay scored, their NaN cos remapped below
-    cos[(qn == 0) if q_zero is None else q_zero, :] = 0.0
-    cos[:, cn == 0] = 0.0  # centroids come from the gated lifecycle
-    cos = _half_up(cos, round_digits)
-    # NaN cos (an inf-element query): rank those cells FIRST (Spark's
-    # NaN-largest rule, the serve tie-tier) — argsort would rank NaN
-    # last; cell choice only steers recall, but keep one ordering rule
-    cos = np.where(np.isnan(cos), np.inf, cos)
-    k = min(int(nprobe), len(cmat))
-    return np.argsort(-cos, axis=1, kind="stable")[:, :k]
-
-
 def _cell_partial_sums(
     df: DataFrame,
     centroids: DataFrame,
@@ -355,9 +285,9 @@ def _cell_partial_sums(
     cell_ddl = centroids.schema["cid"].dataType.simpleString()
     rd = int(round_digits)
     out_ddl = f"cell {cell_ddl}, psum array<double>, n long"
-    out_pa_schema = _arrow_schema(out_ddl)
+    out_pa_schema = arrow_schema(out_ddl)
     dec = by_value(decode_list_matrix)  # canonical decode (r12)
-    hup = by_value(_half_up)
+    hup = by_value(half_up)
 
     def _sums(batches):
         # SELF-CONTAINED worker closure (repo convention)
@@ -458,7 +388,7 @@ def _assign_cells(
     columns pass through as Arrow arrays untouched.
 
     Vectors are zero-pad/truncated to the centroid width (the
-    ``_pad_matrix`` contract); zero-norm rows/centroids score 0.0.
+    ``pad_matrix`` contract); zero-norm rows/centroids score 0.0.
 
     ``width_flags`` (r15, guide §4 / r14 VERDICT task 1): appends three
     per-row columns ``_wlo int, _whi int, _bad int`` — the batch-local
@@ -485,12 +415,12 @@ def _assign_cells(
     )
     if wf:
         out_ddl += ", _wlo int, _whi int, _bad int"
-    out_pa_schema = _arrow_schema(out_ddl)
+    out_pa_schema = arrow_schema(out_ddl)
     dec = by_value(decode_list_matrix)  # the canonical list→matrix
     # decode (functions/arrow_batches, r12 consolidation — this closure
     # inlined its own copy r10–r11), shipped by value per the
     # self-contained pickling convention
-    hup = by_value(_half_up)  # one rounding implementation (r12)
+    hup = by_value(half_up)  # one rounding implementation (r12)
 
     def _gemm(batches):
         # SELF-CONTAINED worker closure (repo convention: imports inside,
@@ -513,7 +443,7 @@ def _assign_cells(
             id_arr = rb.column(0)
             v_arr = rb.column(1)
             # NULL vec -> zero row (scores 0); width pins to n_dims
-            # (truncate/zero-pad, the _pad_matrix contract)
+            # (truncate/zero-pad, the pad_matrix contract)
             mat, _live, _lens = dec(v_arr, n, width=n_dims)
             vn = np.linalg.norm(mat, axis=1)
             vn_safe = np.where(vn > 0, vn, 1.0)
@@ -944,24 +874,11 @@ def build_ann_index(
 
 
 def _recorded_dims(root: str) -> int | None:
-    """The vector width ``_ann_meta.json`` records, or None when the
-    meta cannot be opened or records none (an empty-corpus build).  A
-    torn meta raises ValueError, as :func:`_load_manifest` does for a
-    torn manifest: the writer is atomic, so only a hand-damaged root
-    has one."""
-    path = os.path.join(root, "_ann_meta.json")
-    try:
-        with open(path) as f:
-            text = f.read()
-    except OSError:
-        return None
-    try:
-        return json.loads(text).get("dims")
-    except ValueError as e:
-        raise ValueError(
-            f"ANN index at {root} has a torn _ann_meta.json "
-            f"({type(e).__name__}) — rebuild it with build_ann_index."
-        ) from e
+    """The vector width ``_ann_meta.json`` records, or None when there
+    is no meta or it records none (an empty-corpus build).  A torn meta
+    raises naming it (:func:`read_json`)."""
+    meta = read_json(os.path.join(root, "_ann_meta.json"))
+    return None if meta is None else meta.get("dims")
 
 
 def _assign_batch_checkpoint(
@@ -1578,11 +1495,7 @@ def _sidecar_books(root: str, m: dict):
     ``books_id`` pairs with them.  A mid-retrain (or crashed-augment)
     state mismatches and reads as None: not maintainable, and serving
     refuses loudly rather than mixing codes with foreign books."""
-    try:
-        with open(os.path.join(root, "_pq_meta.json")) as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        return None
+    meta = read_json(os.path.join(root, "_pq_meta.json")) or {}
     books = meta.get("books")
     if not books:
         return None
@@ -1768,6 +1681,77 @@ def _fold_cells(
     return folded_deltas
 
 
+def _probe(
+    spark: SparkSession,
+    root: str,
+    q_rows: list,
+    vec_col: str,
+    nprobe: int,
+    round_digits: int,
+    max_probe_cells: int,
+    caller: str,
+):
+    """Driver-side probe of a collected query set:
+    ``(q, probes, cell_qidx, cell_ddl)`` — ``q`` the
+    :func:`prep_queries` triple at the centroid width, ``probes[j]`` the
+    ``nprobe`` cells query ``j`` probes, ``cell_qidx`` each probed
+    cell's query indices, ``cell_ddl`` the cell column's type.
+
+    Identity gate first (the IndexCatalog discipline): an index built
+    over d-dim vectors must not score d'-dim queries — a silent
+    truncation would return plausible nonsense.  The width is read off
+    the collected rows, and the probe ranks over the collected matrix,
+    so the query plan never runs twice (a nondeterministic query frame
+    would otherwise probe for different ids than it scores).  Cells
+    rank by the serve's rounded cosine with ``_assign_cells``' tie rule
+    (stable sort: the lowest cid wins), NaN first."""
+    import numpy as np
+
+    vecs = [r["qv"] for r in q_rows]
+    want = _recorded_dims(root)
+    widths = [len(v) for v in vecs if v is not None]
+    if want is not None and widths and widths[0] != want:
+        raise ValueError(
+            f"{caller}: index at {root} was built over {want}-dim "
+            f"vectors; query column {vec_col!r} has {widths[0]} dims."
+        )
+    cids, cmat, cns, n_dims, cell_ddl = _load_centroids(spark, root)
+    q = prep_queries(vecs, n_dims)
+    cn = np.asarray(cns, dtype=np.float64)
+    cos = half_up(
+        cosine_block(q[0] @ np.asarray(cmat).T, q[1], cn, q[2], cn == 0),
+        round_digits,
+    )
+    # argsort ranks NaN last: map it to +inf to rank those cells first
+    order = np.argsort(-np.where(np.isnan(cos), np.inf, cos), axis=1,
+                       kind="stable")
+    probes = [[cids[int(ci)] for ci in r[: int(nprobe)]] for r in order]
+    cell_qidx: dict = {}
+    for j, cells in enumerate(probes):
+        for c in cells:
+            cell_qidx.setdefault(c, []).append(j)
+    if len(cell_qidx) > max_probe_cells:
+        raise ValueError(
+            f"{caller} probes > max_probe_cells={max_probe_cells} cells; "
+            "shrink the query set / nprobe or raise the cap explicitly"
+        )
+    return q, probes, cell_qidx, cell_ddl
+
+
+def _cell_groups(cells, cell_qidx):
+    """Worker-side: ``(rows, qidx)`` per probed cell present in one
+    Arrow batch — the batch's row indices of that cell and the indices
+    of the queries that probe it (rows of unprobed cells are skipped)."""
+    import numpy as np
+
+    order = np.argsort(cells, kind="stable")
+    uniq, starts = np.unique(cells[order], return_index=True)
+    for u, s0, e0 in zip(uniq, starts, np.r_[starts[1:], len(cells)]):
+        qidx = cell_qidx.get(u.item() if hasattr(u, "item") else u)
+        if qidx:
+            yield order[s0:e0], np.asarray(qidx, dtype=np.int64)
+
+
 def ann_search(
     spark: SparkSession,
     root: str,
@@ -1783,204 +1767,92 @@ def ann_search(
     """Serve cosine top-k from a materialized index: zero corpus I/O.
 
     ``[query_id, neighbor_id, cos_sim, rank]`` — the contract of
-    ``similarity.brute_force_topk`` / ``ivf_topk``.  Per query the
-    ``nprobe`` best cells are searched; the union of probe cells across
-    the query set is collected (bounded by ``max_probe_cells``) and
-    pushed as a literal partition predicate, so the cells read prunes
-    to the probed directories at file-listing time.  With ``nprobe >=
-    n_centroids`` every cell is probed and the result is EXACTLY brute
-    force (same rounding, same tie order) — the equivalence tests pin
-    that.
+    ``similarity.brute_force_topk`` / ``ivf_topk``, with ``query_id``
+    of the query column's type.  Per query the ``nprobe`` best cells
+    are searched; the union of probe cells across the query set is
+    collected (bounded by ``max_probe_cells``) and pushed as a literal
+    partition predicate, so the cells read prunes to the probed
+    directories at file-listing time.  With ``nprobe >= n_centroids``
+    every cell is probed and the result is EXACTLY brute force (same
+    rounding, same tie order) — the equivalence tests pin that.
 
-    Scoring is one vectorized Arrow pass over the probed cells (r9 —
-    the pq_topk batch shape): the BOUNDED query set is collected
-    (``max_query_rows`` guard, the PQ-path contract) and each cells
-    batch scores as a numpy GEMM against the queries probing its cell,
-    keeping a per-batch local top-k so only |Q|·k rows per batch reach
-    the global rank.  The previous per-pair ``zip_with`` cosine was
-    interpreted (higher-order exprs skip codegen) and measured 122 s
-    for 40 queries × 1 M rows at nprobe=4 on local[32] — this form
-    serves the same query set in well under a tenth of that (see
-    SCALE.md's crossover table).
+    Scoring is one vectorized Arrow pass over the probed cells: the
+    BOUNDED query set is collected (``max_query_rows`` guard) and each
+    cells batch scores as a numpy GEMM against the queries probing its
+    cell, keeping a per-batch local top-k so only |Q|·k rows per batch
+    reach the global rank (functions/topk.py).  The earlier per-pair
+    ``zip_with`` cosine was interpreted (higher-order exprs skip
+    codegen) and measured 122 s for 40 queries × 1 M rows at nprobe=4
+    on local[32] — this form serves the same query set in well under a
+    tenth of that (see SCALE.md's crossover table).
     """
-    import numpy as np
-
-    # snapshot resolve (r14): ONE manifest read pins this serve's live
+    # snapshot resolve: ONE manifest read pins this serve's live
     # directory set — concurrent ingest/folds swap the manifest and
     # retire (never delete-in-grace) directories, so the pinned snapshot
     # stays readable and self-consistent throughout the serve
     manifest = _load_manifest(root)
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .limit(max_query_rows + 1)
-        .collect()
+    q_rows = collect_queries(
+        queries, id_col, vec_col, max_query_rows, "ann_search"
     )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"ann_search collects the query set to the driver; got > "
-            f"max_query_rows={max_query_rows} rows. Batch the queries "
-            "or raise max_query_rows explicitly."
-        )
     q_id_ddl = queries.schema[id_col].dataType.simpleString()
-    empty_schema = (
-        f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, rank int"
-    )
     if not q_rows:
-        return spark.createDataFrame([], empty_schema)
-    # identity gate (the IndexCatalog discipline): an index built over
-    # d-dim vectors must not score d'-dim queries — a silent truncation
-    # would return plausible nonsense.  Width read off the collected
-    # rows (no extra Spark job).
-    meta_path = os.path.join(root, "_ann_meta.json")
-    if os.path.exists(meta_path):
-        with open(meta_path) as f:
-            meta = json.load(f)
-        want = meta.get("dims")
-        widths = [len(r["qv"]) for r in q_rows if r["qv"] is not None]
-        got_d = widths[0] if widths else None
-        if want is not None and got_d is not None and got_d != want:
-            raise ValueError(
-                f"ann_search: index at {root} was built over {want}-dim "
-                f"vectors; query column {vec_col!r} has {got_d} dims."
-            )
-    from .pq import _pad_matrix
-
-    cids, cmat, cns, n_dims, _cell_ddl = _load_centroids(spark, root)
-    q_mat = _pad_matrix([r["qv"] for r in q_rows], n_dims)
+        return empty_topk(spark, q_id_ddl)
+    (q_mat, q_norm, q_zero), _, cell_qidx, _ = _probe(
+        spark, root, q_rows, vec_col, nprobe, round_digits,
+        max_probe_cells, "ann_search",
+    )
     q_ids = [r["qid"] for r in q_rows]
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    # Spark's otherwise-0 branch for the query side (r12): NULL-element
-    # queries (NULL norm in the brute twin's guard) and zero queries
-    # score 0.0; NaN norms (NaN/±inf elements) PASS Spark's `> 0` and
-    # score NaN — ranked first, the serve tie-tier
-    q_zero = _null_elem_flags(
-        [r["qv"] for r in q_rows], n_dims
-    ) | (q_norm == 0)
-    # probe ranking runs driver-side over the ALREADY-collected matrix
-    # (same GEMM + tie rule as _assign_cells): no second execution of
-    # the query plan, no KeyError on a nondeterministic query frame
-    ranked = _probe_rank(q_mat, cmat, cns, nprobe, round_digits, q_zero)
-    cell_qidx: dict = {}
-    for j in range(len(q_ids)):
-        for ci in ranked[j]:
-            cell_qidx.setdefault(cids[int(ci)], []).append(j)
-    probe_cells = sorted(cell_qidx)
-    if len(probe_cells) > max_probe_cells:
-        raise ValueError(
-            f"ann_search probes > max_probe_cells={max_probe_cells} cells; "
-            "shrink the query set / nprobe or raise the cap explicitly"
-        )
+    n_dims = q_mat.shape[1]
 
-    score_ddl = f"query_id {q_id_ddl}, neighbor_id long, cos_sim double"
-    score_pa_schema = _arrow_schema(score_ddl)
-    dec = by_value(decode_list_matrix)  # canonical decode (r12; this
-    # closure inlined its own copy r10–r11), shipped by value
-    hup = by_value(_half_up)  # one rounding implementation (r12)
+    score_ddl = topk_ddl(q_id_ddl)
+    score_pa_schema = arrow_schema(score_ddl)
+    dec = by_value(decode_list_matrix)
+    groups = by_value(_cell_groups)
+    cos = by_value(cosine_block)
+    hup = by_value(half_up)
+    emit = by_value(local_topk)
 
     def _score(batches):
-        # Arrow-native (r10): the pandas bridge's per-row vector objects
-        # + pad loop measured ~2 s per million probed rows — the
-        # dominant serve cost at 10 M rows; one flatten+reshape decodes
-        # each batch with zero per-row Python (see _assign_cells).
+        # Arrow-native: one flatten+reshape decodes each batch with
+        # zero per-row Python (see _assign_cells).
         guard_import_caches()
         import numpy as np
-        import pyarrow as pa
 
-        qn_safe = np.where(q_norm > 0, q_norm, 1.0)
         for rb in batches:
             nrows = rb.num_rows
             if not nrows:
                 continue
-            cells_np = rb.column(0).to_numpy(zero_copy_only=False)
-            ids_np = rb.column(1).to_numpy(zero_copy_only=False)
-            col = rb.column(2)
-            # NULL corpus vectors are never EMITTED as neighbors: the
-            # SQL twin scores them NULL (sorted last under desc), so a
-            # 0.0 emission would outrank genuine negative-sim matches
-            # (r9 ADVICE).  Genuine zero VECTORS keep the 0.0 zero-norm
-            # rule (the twin rounds them to 0.0 too).
-            mat, live, _lens = dec(col, nrows, width=n_dims)
+            ids = rb.column(1).to_numpy(zero_copy_only=False)
+            mat, live, _lens = dec(rb.column(2), nrows, width=n_dims)
             vn = np.linalg.norm(mat, axis=1)
-            vn_safe = np.where(vn > 0, vn, 1.0)
-            out_q, out_n, out_s = [], [], []
-            order = np.argsort(cells_np, kind="stable")
-            uniq, starts = np.unique(
-                cells_np[order], return_index=True
-            )
-            bounds = np.r_[starts[1:], nrows]
-            for u, s0, e0 in zip(uniq, starts, bounds):
-                qidx = cell_qidx.get(u if not hasattr(u, "item") else u.item())
-                if not qidx:
-                    continue
-                sel = order[s0:e0]
-                qi = np.asarray(qidx, dtype=np.int64)
-                sims = (mat[sel] @ q_mat[qi].T) / np.outer(
-                    vn_safe[sel], qn_safe[qi]
+
+            def block(sel, qi):
+                # corpus norms are gate-clean: only real zeros take the
+                # otherwise-0 branch
+                sims = cos(
+                    mat[sel] @ q_mat[qi].T, vn[sel], q_norm[qi],
+                    vn[sel] == 0, q_zero[qi],
                 )
-                # Spark-branch zero mask (r12): q_zero carries the
-                # NULL-element flag from the collected rows (the brute
-                # twin's guard sees a NULL norm there → otherwise-0),
-                # plus genuine zero norms; NaN norms (NaN/±inf
-                # elements) PASS Spark's `> 0`, score NaN, rank first.
-                # Corpus norms are gate-clean: only real zeros here.
-                sims[vn[sel] == 0, :] = 0.0
-                sims[:, q_zero[qi]] = 0.0
-                sims = hup(sims, round_digits)
-                c_ids = ids_np[sel]
-                g_live = live[sel]
-                for cj, j in enumerate(qi):
-                    qid = q_ids[j]
-                    keep = np.nonzero((c_ids != qid) & g_live)[0]
-                    if not len(keep):
-                        continue
-                    # NaN sims (an INF-element query — the lifecycle
-                    # gate keeps the corpus clean) rank FIRST like
-                    # Spark's NaN-above-every-double DESC window, so
-                    # the local cut keeps the same candidates the
-                    # global rank would (r12)
-                    vals = sims[keep, cj]
-                    nan_v = np.isnan(vals)
-                    top = keep[
-                        np.lexsort(
-                            (
-                                c_ids[keep],
-                                np.where(nan_v, 0.0, -vals),
-                                ~nan_v,
-                            )
-                        )[:k]
-                    ]
-                    out_q.extend([qid] * len(top))
-                    out_n.extend(c_ids[top])
-                    out_s.extend(sims[top, cj])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_q, type=score_pa_schema.field(0).type),
-                        pa.array(
-                            np.asarray(out_n, dtype=np.int64),
-                            type=score_pa_schema.field(1).type,
-                        ),
-                        pa.array(
-                            np.asarray(out_s, dtype=np.float64),
-                            type=score_pa_schema.field(2).type,
-                        ),
-                    ],
-                    schema=score_pa_schema,
+                return (
+                    hup(sims, round_digits),
+                    ids[sel],
+                    live[sel],
+                    [q_ids[j] for j in qi],
                 )
 
+            row_cells = rb.column(0).to_numpy(zero_copy_only=False)
+            yield from emit(
+                (block(sel, qi) for sel, qi in groups(row_cells, cell_qidx)),
+                k,
+                score_pa_schema,
+            )
+
     # the pinned live set: static pruning with snapshot isolation
-    cells = _read_cells(spark, root, manifest, probe_cells)
+    cells = _read_cells(spark, root, manifest, sorted(cell_qidx))
     if cells is None:  # every probed cell is empty under this snapshot
-        return spark.createDataFrame([], empty_schema)
+        return empty_topk(spark, q_id_ddl)
     cells = cells.select("cell", "vec_id", "cv")
-    scored = cells.mapInArrow(_score, score_ddl)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(cells.mapInArrow(_score, score_ddl), k)
 
 
 # ---------------------------------------------------------------------------
@@ -2043,7 +1915,7 @@ def pq_augment_ann_index(
 
     ``n_dims`` defaults to the dims recorded in ``_ann_meta.json`` at
     build time — NOT a fixed constant, or a >64-dim index would be
-    silently encoded over a 64-dim prefix (``_pad_matrix`` truncates)
+    silently encoded over a 64-dim prefix (``pad_matrix`` truncates)
     and ADC ranking would quietly degrade.  Raises if the meta is
     missing dims and no explicit override is given.
 
@@ -2310,81 +2182,6 @@ def _encode_batch_codes(
     return updates
 
 
-def pq_append_batch_codes(
-    spark: SparkSession, root: str, batch_tag: int, touched=None
-) -> list:
-    """Encode ONE ingest batch's rows (already written as the commit
-    directory ``deltas/ingest_batch=<batch_tag>``) with the sidecar's
-    EXISTING codebooks, append them under the same tag in the codes
-    tree, and refresh those cells' fingerprints; returns the refreshed
-    cell values.
-
-    The encode-at-ingest half of the r13 LSM discipline for the codes
-    sidecar: without it, every ingest batch leaves its cells
-    fingerprint-stale and ``ann_search_pq`` fails closed on those cells
-    until the next fold's refresh — correct, but an availability hole
-    exactly while the stream is healthiest.  Appending the batch's own
-    codes (an O(batch) GEMM — the batch is read back from its tagged
-    cell directories, so the stored assignment is reused, never
-    recomputed) keeps codes content equal to cells content after every
-    commit, so the per-cell gate passes continuously.  Tagged code
-    directories retire whenever a fold or
-    :func:`pq_reencode_stale_cells` rewrites their cell.
-
-    Freshness-guarded (r13 ADVICE, high — see
-    :func:`_encode_batch_codes`): only cells whose recorded fingerprint
-    matches their PRE-append content refresh; already-stale cells stay
-    stale and fail closed until a full re-encode heals them.  The
-    streaming wrapper threads the batch's touched-cell set through
-    (``touched``, O(touched) — r13 VERDICT task 4) and commits this
-    append inside its single manifest swap; standalone callers get the
-    same semantics with the tag derived from the manifest.
-
-    Raises if the sidecar is missing/unusable or ``batch_tag`` is the
-    untagged ``-1`` base (encoding "batch -1" would duplicate every
-    base row's codes).
-    """
-    import copy
-
-    if int(batch_tag) == -1:
-        raise ValueError(
-            "pq_append_batch_codes: batch_tag=-1 is the untagged base "
-            "partition, not a batch — guarded callers must skip codes "
-            "maintenance for untagged appends."
-        )
-    m = _load_manifest(root)
-    if _sidecar_books(root, m) is None:
-        raise ValueError(
-            f"pq_append_batch_codes: no usable PQ sidecar at {root} "
-            "(missing meta/codes pairing) — run "
-            "pq_augment_ann_index(spark, root) first."
-        )
-    if touched is None:
-        touched = sorted(
-            c for c, tags in m["cells"].items() if int(batch_tag) in tags
-        )
-    touched = [str(c) for c in touched]
-    if not touched:
-        return []  # empty batch: nothing appended, nothing stale
-    # pre-append view: the freshness guard must compare against the
-    # cells content WITHOUT this batch's tag
-    m_pre = copy.deepcopy(m)
-    for c in touched:
-        tags = m_pre["cells"].get(c)
-        if tags and int(batch_tag) in tags:
-            m_pre["cells"][c] = [t for t in tags if t != int(batch_tag)]
-    updates = _encode_batch_codes(spark, root, m_pre, batch_tag, touched)
-    for c, dg in updates.items():
-        tags = m["codes"].setdefault(c, [])
-        if int(batch_tag) not in tags:
-            tags.append(int(batch_tag))
-            tags.sort()
-        m["code_fps"][c] = dg
-    if updates:
-        _write_manifest(root, m)
-    return sorted(updates)
-
-
 def ann_search_pq(
     spark: SparkSession,
     root: str,
@@ -2422,23 +2219,19 @@ def ann_search_pq(
     brute force (pinned by test).  Raises if the sidecar is missing or
     stale (cells tree changed since :func:`pq_augment_ann_index`).
     """
-    import numpy as np
+    from .pq import PQCodebooks, _subspace_slices
 
-    from .pq import PQCodebooks, _pad_matrix, _subspace_slices
-
-    # snapshot resolve (r14): the manifest pins live sets AND recorded
+    # snapshot resolve: the manifest pins live sets AND recorded
     # fingerprints in one atomic read, so a serve concurrent with an
     # ingest commit or fold pairs codes, cells and fingerprints from
     # the SAME snapshot at every instant (see the manifest section)
     manifest = _load_manifest(root)
-    meta_path = os.path.join(root, "_pq_meta.json")
-    if not os.path.exists(meta_path):
+    meta = read_json(os.path.join(root, "_pq_meta.json"))
+    if meta is None:
         raise ValueError(
             f"ann_search_pq: no PQ sidecar at {root} — run "
             "pq_augment_ann_index(spark, root) first."
         )
-    with open(meta_path) as f:
-        meta = json.load(f)
     # codes/books pairing: a mid-retrain (or crashed-augment) state
     # mismatches — refuse loudly rather than rank ADC sims computed from
     # foreign codebooks
@@ -2454,67 +2247,19 @@ def ann_search_pq(
         books=tuple(tuple(tuple(c) for c in b) for b in meta["books"]),
         n_dims=meta["n_dims"],
     )
-    # -- bounded query collect FIRST: the dims gate reads the width off
-    # the collected rows instead of paying its own .first() Spark job
-    # per serve (the float path keeps a standalone gate — it never
-    # collects queries)
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .limit(max_query_rows + 1)
-        .collect()
+    q_rows = collect_queries(
+        queries, id_col, vec_col, max_query_rows, "ann_search_pq"
     )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"ann_search_pq collects the query set to the driver; got > "
-            f"max_query_rows={max_query_rows} rows."
-        )
     q_id_ddl = queries.schema[id_col].dataType.simpleString()
     if not q_rows:
-        # schema matches the non-empty path (q_id_ddl, not a hardcoded
-        # long) so per-batch unions don't flip types on an empty batch
-        return spark.createDataFrame(
-            [],
-            f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
-            "rank int",
-        )
-    ann_meta_path = os.path.join(root, "_ann_meta.json")
-    if os.path.exists(ann_meta_path):
-        with open(ann_meta_path) as f:
-            ann_meta = json.load(f)
-        want = ann_meta.get("dims")
-        widths = [len(r["qv"]) for r in q_rows if r["qv"] is not None]
-        got_d = widths[0] if widths else None
-        if want is not None and got_d is not None and got_d != want:
-            raise ValueError(
-                f"ann_search_pq: index at {root} was built over "
-                f"{want}-dim vectors; query column {vec_col!r} has "
-                f"{got_d} dims."
-            )
-
-    # -- probe: rank centroids per query, driver-side over the
-    # already-collected matrix (see _probe_rank); centroids come from
-    # the file-listing memo (r15 — one collect per standing root)
-    cids, cmat, cns, cent_dims, _cell_ddl = _load_centroids(spark, root)
-    probe_mat = _pad_matrix([r["qv"] for r in q_rows], cent_dims)
-    probe_zero = _null_elem_flags(
-        [r["qv"] for r in q_rows], cent_dims
-    ) | (np.linalg.norm(probe_mat, axis=1) == 0)
-    ranked = _probe_rank(
-        probe_mat, cmat, cns, nprobe, round_digits, probe_zero
+        return empty_topk(spark, q_id_ddl)
+    _, probes, cell_qidx, cell_ddl = _probe(
+        spark, root, q_rows, vec_col, nprobe, round_digits,
+        max_probe_cells, "ann_search_pq",
     )
-    cell_qidx: dict = {}
-    for j in range(len(q_rows)):
-        for ci in ranked[j]:
-            cell_qidx.setdefault(cids[int(ci)], []).append(j)
     probe_cells = sorted(cell_qidx)
-    if len(probe_cells) > max_probe_cells:
-        raise ValueError(
-            f"ann_search_pq probes > max_probe_cells={max_probe_cells} "
-            "cells; shrink the query set / nprobe or raise the cap "
-            "explicitly"
-        )
-    # per PROBED cell gate (r13): ingest into cell A must not block
-    # serves probing only untouched cell B
+    # per PROBED cell gate: ingest into cell A must not block serves
+    # probing only untouched cell B
     stale = [
         c
         for c in probe_cells
@@ -2537,51 +2282,55 @@ def ann_search_pq(
             "pq_reencode_stale_cells to re-encode just those cells)."
         )
     if _stop_after == "probe":
-        cell_ddl = _cell_ddl
         return spark.createDataFrame(
             [
-                (q_rows[j]["qid"], cids[int(ci)])
-                for j in range(len(q_rows))
-                for ci in ranked[j]
+                (r["qid"], c)
+                for r, cells in zip(q_rows, probes)
+                for c in cells
             ],
             f"query_id {q_id_ddl}, cell {cell_ddl}",
         )
+    code_paths = _code_paths(root, manifest, probe_cells)
+    floats = (
+        _read_cells(spark, root, manifest, probe_cells) if code_paths
+        else None
+    )
+    if floats is None:
+        # every probed cell is empty under this snapshot (the per-cell
+        # gate passed, so codes and cells agree)
+        return empty_topk(spark, q_id_ddl)
 
     # -- compact query shipment: the closure carries q_mat/books/q_norm
     # (n_queries × n_dims floats + the tiny codebooks), NOT the expanded
     # per-query (m × n_codes) LUT dict — at max_query_rows=100k that
     # dict is ~100+ MB serialized into EVERY task.  LUTs are built once
     # per worker from the compact arrays (the pq_topk._scan shape).
-    # The ADC scan itself is JOIN-FREE (r9): the previous form joined
-    # probes onto the codes and windowed over the full |Q|-duplicated
-    # pair frame — 10 M shuffled rows for 40 queries × 1 M codes; now
-    # one Arrow pass over the pruned codes scores each batch against
-    # the queries probing its cell and keeps a LOCAL top-(k·factor), so
-    # only |Q|·k·factor rows per batch reach the global rank (the
-    # ann_search/pq_topk shape).
+    # The ADC scan is JOIN-FREE: one Arrow pass over the pruned codes
+    # scores each batch against the queries probing its cell and keeps
+    # a LOCAL top-(k·factor), so only |Q|·k·factor rows per batch reach
+    # the global rank.
     slices = _subspace_slices(cb.n_dims, cb.m_subspaces)
     books = cb.books
-    q_mat = _pad_matrix([r["qv"] for r in q_rows], cb.n_dims)
-    q_ids = [r["qid"] for r in q_rows]
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_zero = _null_elem_flags(
+    q_mat, q_norm, q_zero = prep_queries(
         [r["qv"] for r in q_rows], cb.n_dims
-    ) | (q_norm == 0)  # Spark's otherwise-0 branch (r12)
+    )
+    q_ids = [r["qid"] for r in q_rows]
     n_cand = max(k * rerank_factor, k)
 
-    adc_ddl = f"query_id {q_id_ddl}, neighbor_id long, adc_sim double"
-    adc_pa_schema = _arrow_schema(adc_ddl)
-    dec = by_value(decode_list_matrix)  # canonical decode (r12); codes
-    # are small ints, exactly representable through its float64 matrix
-    hup = by_value(_half_up)  # one rounding implementation (r12)
+    adc_ddl = topk_ddl(q_id_ddl)
+    adc_pa_schema = arrow_schema(adc_ddl)
+    dec = by_value(decode_list_matrix)  # codes are small ints, exact
+    # through its float64 matrix
+    groups = by_value(_cell_groups)
+    cos = by_value(cosine_block)
+    hup = by_value(half_up)
+    emit = by_value(local_topk)
 
     def _adc(batches):
-        # Arrow-native (r10): codes decode to the (batch × m) int matrix
-        # with one flatten+reshape — zero per-row Python (the pandas
-        # bridge's per-row np.vstack objects dominated at 10 M rows)
+        # Arrow-native: codes decode to the (batch × m) int matrix with
+        # one flatten+reshape, no per-row Python
         guard_import_caches()
         import numpy as np
-        import pyarrow as pa
 
         cents = [np.asarray(b, dtype=np.float64) for b in books]
         # luts[s]: (n_codes, n_queries) — built once per worker;
@@ -2595,193 +2344,78 @@ def ann_search_pq(
             nrows = rb.num_rows
             if not nrows:
                 continue
-            cells_np = rb.column(0).to_numpy(zero_copy_only=False)
-            ids_np = rb.column(1).to_numpy(zero_copy_only=False)
-            codes_col = rb.column(2)
-            # codes are fixed-width (one per subspace) and never null —
-            # pq_encode emits a row for every input, NULLs marked via
-            # NaN vnorm below; the shared decode's float64 matrix is
-            # exact for code ids (all << 2^53)
-            codes_all = dec(codes_col, nrows, width=m)[0].astype(
-                np.int64
-            )
-            vnorm_all = rb.column(3).to_numpy(zero_copy_only=False)
-            out_q, out_n, out_s = [], [], []
-            order = np.argsort(cells_np, kind="stable")
-            uniq, starts = np.unique(cells_np[order], return_index=True)
-            bounds = np.r_[starts[1:], nrows]
-            for u, s0, e0 in zip(uniq, starts, bounds):
-                qidx = cell_qidx.get(
-                    u if not hasattr(u, "item") else u.item()
-                )
-                if not qidx:
-                    continue
-                sel = order[s0:e0]
-                qi = np.asarray(qidx, dtype=np.int64)
-                codes = codes_all[sel]
-                c_ids = ids_np[sel]
-                vnorm = vnorm_all[sel]
-                # NaN vnorm marks a NULL source vector (pq_encode): it
-                # must never surface as an ADC candidate — the SQL twin
-                # scores NULLs NULL (sorted last), so a 0.0 emission
-                # would outrank genuine negative sims (r9 ADVICE).
-                # Pre-r10 sidecars encoded NULLs as vnorm=0.0; those
-                # keep the old zero-score behavior until re-augmented.
-                live = ~np.isnan(vnorm)
-                vn_safe = np.where(vnorm > 0, vnorm, 1.0)
-                qn = q_norm[qi]
-                qn_safe = np.where(qn > 0, qn, 1.0)
+            ids = rb.column(1).to_numpy(zero_copy_only=False)
+            codes = dec(rb.column(2), nrows, width=m)[0].astype(np.int64)
+            vnorm = rb.column(3).to_numpy(zero_copy_only=False)
+
+            def block(sel, qi):
                 # slice each LUT to this cell's probing queries BEFORE
                 # the code gather: gathering first materializes a
                 # (batch × |Q_total|) temporary per subspace — 8 GB at
-                # the documented max_query_rows (r9 review finding)
-                dots = luts[0][:, qi][codes[:, 0]]
+                # the documented max_query_rows
+                dots = luts[0][:, qi][codes[sel, 0]]
                 for s in range(1, m):
-                    dots = dots + luts[s][:, qi][codes[:, s]]
-                sims = dots / np.outer(vn_safe, qn_safe)
-                # Spark-branch zero mask (r12): q_zero carries the
-                # NULL-element query flag; NaN q-norms (NaN/±inf
-                # elements) stay scored — NaN, ranked first below.
-                # Corpus rows: NaN vnorm (pq_encode's undefined-norm
-                # marker) is dropped by `live`; the mask catches
-                # genuine zeros only.
-                sims[vnorm == 0, :] = 0.0
-                sims[:, q_zero[qi]] = 0.0
-                sims = hup(sims, round_digits)
-                for cj, j in enumerate(qi):
-                    qid = q_ids[j]
-                    keep = np.nonzero((c_ids != qid) & live)[0]
-                    if not len(keep):
-                        continue
-                    # NaN ADC sims (inf-element query): rank first,
-                    # Spark's NaN-largest DESC rule — the candidate
-                    # cut then feeds the exact rerank the same rows
-                    # the global rank would keep (r12)
-                    vals = sims[keep, cj]
-                    nan_v = np.isnan(vals)
-                    top = keep[
-                        np.lexsort(
-                            (
-                                c_ids[keep],
-                                np.where(nan_v, 0.0, -vals),
-                                ~nan_v,
-                            )
-                        )[:n_cand]
-                    ]
-                    out_q.extend([qid] * len(top))
-                    out_n.extend(c_ids[top])
-                    out_s.extend(sims[top, cj])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(out_q, type=adc_pa_schema.field(0).type),
-                        pa.array(
-                            np.asarray(out_n, dtype=np.int64),
-                            type=adc_pa_schema.field(1).type,
-                        ),
-                        pa.array(
-                            np.asarray(out_s, dtype=np.float64),
-                            type=adc_pa_schema.field(2).type,
-                        ),
-                    ],
-                    schema=adc_pa_schema,
+                    dots = dots + luts[s][:, qi][codes[sel, s]]
+                # NaN vnorm is pq_encode's "never a candidate" marker;
+                # only genuine zeros take the otherwise-0 branch
+                vn = vnorm[sel]
+                sims = cos(dots, vn, q_norm[qi], vn == 0, q_zero[qi])
+                return (
+                    hup(sims, round_digits),
+                    ids[sel],
+                    ~np.isnan(vn),
+                    [q_ids[j] for j in qi],
                 )
 
-    code_paths = _code_paths(root, manifest, probe_cells)
-    if not code_paths:
-        # every probed cell is codeless under this snapshot — and
-        # consistent (the per-cell gate above passed), i.e. empty
-        return spark.createDataFrame(
-            [],
-            f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
-            "rank int",
-        )
+            row_cells = rb.column(0).to_numpy(zero_copy_only=False)
+            yield from emit(
+                (block(sel, qi) for sel, qi in groups(row_cells, cell_qidx)),
+                n_cand,
+                adc_pa_schema,
+            )
+
     codes_df = (
         spark.read.option("basePath", os.path.join(root, "pq_codes"))
         .schema(manifest["codes_schema"])
         .parquet(*code_paths)  # pinned snapshot, static pruning
         .select("cell", "vec_id", "codes", "vnorm")
     )
-    scored = codes_df.mapInArrow(_adc, adc_ddl)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc_sim").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("crank", F.row_number().over(w))
-        .where(F.col("crank") <= n_cand)
-        .select("query_id", "neighbor_id")
+    cand = rank_topk(codes_df.mapInArrow(_adc, adc_ddl), n_cand).select(
+        "query_id", "neighbor_id"
     )
     if _stop_after == "adc":
         return cand
 
     # -- exact re-rank: floats fetched for candidates only -------------
-    # Candidate-ID pushdown (r10): joining the float cells against the
+    # Candidate-ID pushdown: joining the float cells against the
     # broadcast candidate frame still SCANS every probed cell's float
-    # column — the r10 crossover measured the PQ serve reading ~2 GB of
-    # floats to fetch 20 candidate rows, erasing the codes' entire byte
-    # advantage (PQ cold 12.1 s vs float 11.3 s at full probe).  The
-    # candidate set is bounded (|Q| × k·rerank_factor), so when small
-    # enough for a literal In filter it is collected ONCE (also reused
-    # as a literal frame for the pairing join — the ADC scan must not
-    # execute twice) and pushed into the parquet scan, where row-group
-    # vec_id stats prune the float read to the candidates' groups.
-    # Above the cap (huge query batches) the join-only shape remains.
-    # The pushdown costs one EXTRA bounded Spark job (the eager
-    # candidate collect), so it only engages when the probed float
-    # bytes are big enough to out-cost that job — a cheap local listing
-    # decides; non-local filesystems (listing fails) default to
-    # pushdown, the scale-safe direction.
-    qframe = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
-    floats = _read_cells(spark, root, manifest, probe_cells)
-    if floats is None:  # codes without cells: nothing to re-rank
-        return spark.createDataFrame(
-            [],
-            f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
-            "rank int",
-        )
-    # non-empty: codes above came from these cells' live content (gate
-    # invariant)
+    # column — the PQ serve once read ~2 GB of floats to fetch 20
+    # candidate rows, erasing the codes' entire byte advantage (PQ cold
+    # 12.1 s vs float 11.3 s at full probe).  The candidate set is
+    # bounded (|Q| × k·rerank_factor), so when small enough for a
+    # literal In filter it is collected ONCE (also reused as a literal
+    # frame for the pairing join — the ADC scan must not execute twice)
+    # and pushed into the parquet scan, where row-group vec_id stats
+    # prune the float read to the candidates' groups.  Above the cap
+    # (huge query batches) the join-only shape remains.  The pushdown
+    # costs one EXTRA bounded Spark job (the eager candidate collect),
+    # so it only engages when the probed float bytes are big enough to
+    # out-cost that job — a cheap local listing decides; non-local
+    # filesystems (listing fails) default to pushdown, the scale-safe
+    # direction.
     floats = floats.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("cv"),
-        F.col("cn"),
+        F.col("vec_id").alias("neighbor_id"), F.col("cv"), F.col("cn")
     )
     probed_bytes = _probed_cell_bytes(root, probe_cells, manifest)
     if len(q_rows) * n_cand <= max_pushdown_candidates and (
         probed_bytes is None or probed_bytes >= min_pushdown_bytes
     ):
         pairs = cand.collect()  # bounded by the gate above
-        if not pairs:
-            return spark.createDataFrame(
-                [],
-                f"query_id {q_id_ddl}, neighbor_id long, cos_sim double, "
-                "rank int",
-            )
         cand = spark.createDataFrame(pairs, cand.schema)
         cand_ids = sorted({r["neighbor_id"] for r in pairs})
         floats = floats.where(F.col("neighbor_id").isin(cand_ids))
-    exact = (
-        floats.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qframe), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_with_norms("qv", "cv", F.col("qn"), F.col("cn")),
-                round_digits,
-            ).alias("cos_sim"),
-        )
-    )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= k)
+    return exact_rerank(
+        floats, cand, queries, id_col, vec_col, k, round_digits
     )
 
 
@@ -2823,12 +2457,7 @@ def ann_serving_policy(
     0.6–1.2 GB.  An unlistable root assumes large (``"pq"`` when the
     sidecar exists), the same fail direction as the rerank pushdown
     gate."""
-    meta = {}
-    try:
-        with open(os.path.join(root, "_ann_meta.json")) as f:
-            meta = json.load(f)
-    except (OSError, ValueError):
-        pass  # unlistable/remote root: meta is a local stat
+    meta = read_json(os.path.join(root, "_ann_meta.json")) or {}
     if bandwidth_mbps is not None:
         bw, bw_src = float(bandwidth_mbps), "argument"
     elif meta.get("bandwidth_mbps"):

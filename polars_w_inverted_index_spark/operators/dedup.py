@@ -918,12 +918,12 @@ def embedding_cosine_pairs_gemm(
 
     from ..functions.arrow_batches import decode_list_matrix
     from ..functions.pickling import by_value
-    from .ann_index import _arrow_schema, _half_up
+    from ..functions.topk import arrow_schema, half_up
 
     dec = by_value(decode_list_matrix)
-    hup = by_value(_half_up)  # one rounding implementation (r12)
+    hup = by_value(half_up)  # one rounding implementation (r12)
     sig_ddl = f"vec_id long, bucket long, {vec_col} array<double>"
-    sig_pa_schema = _arrow_schema(sig_ddl)
+    sig_pa_schema = arrow_schema(sig_ddl)
 
     def _bucketize(batches):
         # Arrow-native (r10): this is the corpus-wide signature pass —

@@ -39,12 +39,25 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.arrow_batches import decode_list_matrix
 from ..functions.pickling import by_value, guard_import_caches
-from ..functions.vectors import cosine_with_norms, norm
+from ..functions.topk import (
+    arrow_schema,
+    collect_queries,
+    cosine_block,
+    empty_topk,
+    exact_rerank,
+    half_up,
+    local_topk,
+    pad_matrix,
+    prep_queries,
+    rank_topk,
+    topk_ddl,
+)
+from ..functions.vectors import norm
 
 __all__ = [
     "PQCodebooks",
@@ -77,23 +90,6 @@ class PQCodebooks:
         import numpy as np
 
         return np.asarray(self.books, dtype=np.float64)
-
-
-def _pad_matrix(vecs, n_dims):
-    """(n, n_dims) float64: truncate to n_dims, zero-pad short vectors
-    (zero dims contribute nothing to dot or norm — the dedup/GEMM
-    padding contract).  A NULL vector becomes the zero vector: its norm
-    is 0, so downstream zero-norm rules score it 0.0 everywhere — the
-    loud-degradation analog of the SQL paths' NULL cosine."""
-    import numpy as np
-
-    mat = np.zeros((len(vecs), n_dims), dtype=np.float64)
-    for i, v in enumerate(vecs):
-        if v is None:
-            continue
-        a = np.asarray(v, dtype=np.float64)[:n_dims]
-        mat[i, : len(a)] = a
-    return mat
 
 
 def _subspace_slices(n_dims: int, m_subspaces: int):
@@ -162,7 +158,7 @@ def pq_train(
             f"pq_train needs >= n_codes={n_codes} sample vectors, "
             f"got {len(rows)}"
         )
-    mat = _pad_matrix([r[vec_col] for r in rows], n_dims)
+    mat = pad_matrix([r[vec_col] for r in rows], n_dims)
     books = []
     for lo, hi in _subspace_slices(n_dims, m_subspaces):
         sub = mat[:, lo:hi]
@@ -214,9 +210,7 @@ def pq_encode(
     schema = "vec_id long, codes array<long>, vnorm double" + "".join(
         f", {name} {ddl}" for name, ddl in extra.items()
     )
-    from .ann_index import _arrow_schema
-
-    out_pa_schema = _arrow_schema(schema)
+    out_pa_schema = arrow_schema(schema)
     dec = by_value(decode_list_matrix)  # canonical decode (r12; this
     # closure inlined its own copy r10–r11), shipped by value
 
@@ -289,58 +283,35 @@ def pq_topk(
     scores).  Each query precomputes an (m × n_codes) dot-product
     lookup table; a code row scores in m table reads — the corpus scan
     never touches float vectors.  Same bounded-query contract and
-    per-batch local top-k shuffle shape as ``brute_force_topk_gemm``."""
+    per-batch local top-k shuffle shape as ``brute_force_topk_gemm``
+    (functions/topk.py)."""
     import numpy as np
 
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .limit(max_query_rows + 1)
-        .collect()
+    q_rows = collect_queries(
+        queries, id_col, vec_col, max_query_rows, "pq_topk"
     )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"pq_topk collects the query set to the driver; got > "
-            f"max_query_rows={max_query_rows} rows. Batch the queries "
-            "or raise max_query_rows explicitly."
-        )
     if not q_rows:
-        return encoded.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
+        return empty_topk(encoded.sparkSession, "long")
     q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
-    q_mat = _pad_matrix([r["qv"] for r in q_rows], cb.n_dims)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_norm_safe = np.where(q_norm > 0, q_norm, 1.0)
-    # Spark's otherwise-0 branch (r12): NULL-element queries (NULL norm
-    # in an expression guard) + genuine zero queries; NaN norms
-    # (NaN/±inf elements) stay scored and rank first
-    q_zero = np.array(
-        [
-            any(
-                x is None
-                for x in (r["qv"][: cb.n_dims] if r["qv"] else [])
-            )
-            for r in q_rows
-        ],
-        dtype=bool,
-    ) | (q_norm == 0)
+    q_mat, q_norm, q_zero = prep_queries(
+        [r["qv"] for r in q_rows], cb.n_dims
+    )
     slices = _subspace_slices(cb.n_dims, cb.m_subspaces)
     books = cb.books
-    from .ann_index import _arrow_schema, _half_up
 
-    scan_ddl = "query_id long, neighbor_id long, cos_sim double"
-    scan_pa_schema = _arrow_schema(scan_ddl)
-    dec = by_value(decode_list_matrix)  # canonical decode (r12); codes
-    # are small ints, exactly representable through its float64 matrix
-    hup = by_value(_half_up)  # one rounding implementation (r12)
+    scan_ddl = topk_ddl("long")
+    scan_pa_schema = arrow_schema(scan_ddl)
+    dec = by_value(decode_list_matrix)  # codes are small ints, exact
+    # through its float64 matrix
+    cos = by_value(cosine_block)
+    hup = by_value(half_up)
+    emit = by_value(local_topk)
 
     def _scan(batches):
-        # Arrow-native (r10): codes decode to the (batch × m) int
-        # matrix with one flatten+reshape — the pandas bridge's per-row
-        # np.vstack objects measured ~2 s per million rows
+        # Arrow-native: codes decode to the (batch × m) int matrix with
+        # one flatten+reshape, no per-row Python
         guard_import_caches()
         import numpy as np
-        import pyarrow as pa
 
         cents = [np.asarray(b, dtype=np.float64) for b in books]
         # luts[s]: (n_codes, n_queries) — approx_dot(x, q) =
@@ -360,66 +331,21 @@ def pq_topk(
             dots = luts[0][codes[:, 0]]
             for s in range(1, m):
                 dots = dots + luts[s][codes[:, s]]
-            # NaN vnorm = NULL source vector: never a candidate (the
-            # SQL twin scores NULLs NULL, sorted last; r9 ADVICE).
-            # Pre-r10 encodes carry 0.0 → old zero-score behavior.
+            # NaN vnorm is pq_encode's "never a candidate" marker (NULL
+            # or undefined-norm source vector); only genuine zeros take
+            # the otherwise-0 branch
+            sims = cos(dots, vnorm, q_norm, vnorm == 0, q_zero)
             live = ~np.isnan(vnorm)
-            vsafe = np.where(vnorm > 0, vnorm, 1.0)
-            sims = dots / np.outer(vsafe, q_norm_safe)
-            # Spark-branch zero mask (r12): q_zero carries the
-            # NULL-element query flag; NaN q-norms (NaN/±inf elements)
-            # stay scored — NaN, ranked first below.  NaN vnorm rows
-            # (the undefined-norm corpus marker) are dropped by `live`;
-            # the row mask catches genuine zeros only.
-            sims[vnorm == 0, :] = 0.0
-            sims[:, q_zero] = 0.0
-            sims = hup(sims, round_digits)
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(q_ids)):
-                col = sims[:, j]
-                idx = np.nonzero((c_ids != q_ids[j]) & live)[0]
-                if not len(idx):
-                    continue
-                # NaN sims rank first (Spark's NaN-largest DESC; r12)
-                vals = col[idx]
-                nan_v = np.isnan(vals)
-                top = idx[
-                    np.lexsort(
-                        (c_ids[idx], np.where(nan_v, 0.0, -vals), ~nan_v)
-                    )[:k]
-                ]
-                out_q.extend([q_ids[j]] * len(top))
-                out_n.extend(c_ids[top])
-                out_s.extend(col[top])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.asarray(out_q, dtype=np.int64),
-                            type=scan_pa_schema.field(0).type,
-                        ),
-                        pa.array(
-                            np.asarray(out_n, dtype=np.int64),
-                            type=scan_pa_schema.field(1).type,
-                        ),
-                        pa.array(
-                            np.asarray(out_s, dtype=np.float64),
-                            type=scan_pa_schema.field(2).type,
-                        ),
-                    ],
-                    schema=scan_pa_schema,
-                )
+            yield from emit(
+                [(hup(sims, round_digits), c_ids, live, q_ids)],
+                k,
+                scan_pa_schema,
+            )
 
     scored = encoded.select("vec_id", "codes", "vnorm").mapInArrow(
         _scan, scan_ddl
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k)
 
 
 def pq_topk_rerank(
@@ -451,32 +377,9 @@ def pq_topk_rerank(
         round_digits=round_digits,
         max_query_rows=max_query_rows,
     ).select("query_id", "neighbor_id")
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        norm(F.col(vec_col)).alias("qn"),
-    )
     cv = corpus.select(
         F.col(id_col).alias("neighbor_id"),
         F.col(vec_col).alias("cv"),
         norm(F.col(vec_col)).alias("cn"),
     )
-    exact = (
-        cv.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(qv), "query_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(
-                cosine_with_norms("qv", "cv", F.col("qn"), F.col("cn")),
-                round_digits,
-            ).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return exact_rerank(cv, cand, queries, id_col, vec_col, k, round_digits)

@@ -24,7 +24,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.pickling import guard_import_caches
+from ..functions.arrow_batches import decode_list_matrix
+from ..functions.pickling import by_value, guard_import_caches
+from ..functions.topk import (
+    arrow_schema,
+    collect_queries,
+    cosine_block,
+    empty_topk,
+    half_up,
+    local_topk,
+    prep_queries,
+    rank_topk,
+    topk_ddl,
+)
 from ..functions.vectors import cosine_with_norms, norm
 from ..plans.distribution import plan_size_bytes
 
@@ -103,13 +115,7 @@ def brute_force_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k)
 
 
 _PROBE_ROWS = 10_000
@@ -230,35 +236,16 @@ def brute_force_topk_gemm(
     shipped in the closure, and scoring is one C·Qᵀ GEMM per batch —
     the one hot path where Python beats built-in expressions because it
     buys BLAS.  Per-batch local top-k keeps the shuffle tiny: only
-    |Q|·k rows per batch reach the final global rank.
+    |Q|·k rows per batch reach the final global rank
+    (functions/topk.py holds the serve's shared rules).
     """
     import numpy as np
 
-    # Contract guard: the query set is collected to the driver and shipped
-    # in every task's closure — small by definition.  limit(n+1) bounds the
-    # collect itself, so a corpus passed as `queries` by mistake fails
-    # loudly instead of OOMing the driver.
-    q_rows = (
-        queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qv"))
-        .limit(max_query_rows + 1)
-        .collect()
+    q_rows = collect_queries(
+        queries, id_col, vec_col, max_query_rows, "brute_force_topk_gemm"
     )
-    if len(q_rows) > max_query_rows:
-        raise ValueError(
-            f"brute_force_topk_gemm collects the query set to the driver; "
-            f"got > max_query_rows={max_query_rows} rows. Use "
-            f"brute_force_topk / lsh_bucketed_topk for large query sets, "
-            f"or raise max_query_rows explicitly."
-        )
     if not q_rows:
-        # np.linalg.norm on a (0,) array would raise before any Spark work;
-        # an empty query set has a well-defined empty answer.
-        return corpus.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos_sim double, rank int"
-        )
-    from .ann_index import _null_elem_flags
-    from .pq import _pad_matrix
-
+        return empty_topk(corpus.sparkSession, "long")
     q_ids = np.array([r["qid"] for r in q_rows], dtype=np.int64)
     q_lists = [r["qv"] for r in q_rows]
     widths = sorted({len(v) for v in q_lists if v is not None})
@@ -270,113 +257,46 @@ def brute_force_topk_gemm(
             "width first, or use brute_force_topk (whose zip_with "
             "null-pad semantics define the ragged case)."
         )
-    # NULL query vectors zero-pad (norm 0 → the guard's 0.0, exactly
-    # the expression twin's value — and ann_search's _pad_matrix
-    # behavior); NULL ELEMENTS decode to NaN in q_mat, identically to
-    # NaN elements, but Spark branches them apart (NULL norm fails the
-    # when(norm > 0) guard → 0.0; NaN norm PASSES it, Spark's NaN is
-    # larger than any double → NaN scores, ranked first), so the flag
-    # must come from the raw rows (r12, found by the bad-element fuzz)
-    nd_q = widths[0] if widths else 1
-    q_mat = _pad_matrix(q_lists, nd_q)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_norm_safe = np.where(q_norm > 0, q_norm, 1.0)
-    q_zero = _null_elem_flags(q_lists, nd_q) | (q_norm == 0)
+    nd = widths[0] if widths else 1
+    q_mat, q_norm, q_zero = prep_queries(q_lists, nd)
 
-    from .ann_index import _arrow_schema, _half_up
-    from ..functions.arrow_batches import decode_list_matrix
-    from ..functions.pickling import by_value
-
-    score_ddl = "query_id long, neighbor_id long, cos_sim double"
-    score_pa_schema = _arrow_schema(score_ddl)
-    dec = by_value(decode_list_matrix)  # canonical decode (r12)
-    hup = by_value(_half_up)
+    score_ddl = topk_ddl("long")
+    score_pa_schema = arrow_schema(score_ddl)
+    dec = by_value(decode_list_matrix)
+    cos = by_value(cosine_block)
+    hup = by_value(half_up)
+    emit = by_value(local_topk)
 
     def _score(batches):
-        # Arrow-native (r10): the pandas bridge's per-row vector
-        # objects + pad loop measured ~2 s per million corpus rows —
-        # one flatten+reshape decodes each batch with zero per-row
-        # Python (ann_index._assign_cells has the pattern's rationale)
+        # Arrow-native: one flatten+reshape decodes each batch with
+        # zero per-row Python (ann_index._assign_cells has the
+        # pattern's rationale)
         guard_import_caches()
         import numpy as np
-        import pyarrow as pa
 
-        nd = q_mat.shape[1]
         for rb in batches:
             n = rb.num_rows
             if not n:
                 continue
-            c_ids = rb.column(0).to_numpy(zero_copy_only=False)
-            col = rb.column(1)
-            # NULL corpus vectors never surface as neighbors — the SQL
-            # twin scores them NULL (sorted last under desc); a 0.0
-            # emission would outrank genuine negative sims (r9 ADVICE).
             c_mat, live, _lens, c_nullelem = dec(
-                col, n, width=nd, with_null_elem=True
+                rb.column(1), n, width=nd, with_null_elem=True
             )
             c_norm = np.linalg.norm(c_mat, axis=1)
-            c_norm_safe = np.where(c_norm > 0, c_norm, 1.0)
-            sims = (c_mat @ q_mat.T) / np.outer(c_norm_safe, q_norm_safe)
-            # Spark's otherwise-0 branch is `null_elem | norm == 0`,
-            # NOT ~(norm > 0) (r12, the bad-element fuzz): a NULL
-            # element poisons the expression norm to NULL (guard falls
-            # to 0.0), but a NaN norm — NaN/±inf ELEMENTS — PASSES
-            # Spark's `> 0` (NaN is the largest double there, unlike
-            # numpy), scores NaN, and ranks FIRST under DESC
-            sims[c_nullelem | (c_norm == 0), :] = 0.0
-            sims[:, q_zero] = 0.0
-            sims = hup(sims, round_digits)
-            out_q, out_n, out_s = [], [], []
-            for j in range(len(q_ids)):
-                col_j = sims[:, j]
-                mask = (c_ids != q_ids[j]) & live
-                idx = np.nonzero(mask)[0]
-                if not len(idx):
-                    continue
-                # local top-k, ties broken by id (matches the global
-                # rank); NaN sims (inf-element vectors — norm inf
-                # passes the mask, cosine inf/inf) rank FIRST like
-                # Spark's NaN-above-every-double DESC order, not last
-                # like a plain lexsort (r12)
-                vals = col_j[idx]
-                nan_v = np.isnan(vals)
-                top = idx[
-                    np.lexsort(
-                        (c_ids[idx], np.where(nan_v, 0.0, -vals), ~nan_v)
-                    )[:k]
-                ]
-                out_q.extend([q_ids[j]] * len(top))
-                out_n.extend(c_ids[top])
-                out_s.extend(col_j[top])
-            if out_q:
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            np.asarray(out_q, dtype=np.int64),
-                            type=score_pa_schema.field(0).type,
-                        ),
-                        pa.array(
-                            np.asarray(out_n, dtype=np.int64),
-                            type=score_pa_schema.field(1).type,
-                        ),
-                        pa.array(
-                            np.asarray(out_s, dtype=np.float64),
-                            type=score_pa_schema.field(2).type,
-                        ),
-                    ],
-                    schema=score_pa_schema,
-                )
+            sims = cos(
+                c_mat @ q_mat.T, c_norm, q_norm,
+                c_nullelem | (c_norm == 0), q_zero,
+            )
+            c_ids = rb.column(0).to_numpy(zero_copy_only=False)
+            yield from emit(
+                [(hup(sims, round_digits), c_ids, live, q_ids)],
+                k,
+                score_pa_schema,
+            )
 
     scored = corpus.select(
         F.col(id_col).alias("nid"), F.col(vec_col).alias("cv")
     ).mapInArrow(_score, score_ddl)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k)
 
 
 def _ivf_assign_gemm(
@@ -415,7 +335,7 @@ def _ivf_assign_gemm(
       null-pads, one null poisons the fold) — ranks AFTER every
       non-null ccos, ties by cid ascending;
     - ranking key is the ROUNDED ccos (F.round's BigDecimal HALF_UP —
-      ``ann_index._half_up``, shipped by value like the decode; both
+      ``functions.topk.half_up``, shipped by value like the decode; both
       twins pass NaN/±inf through the round, matching Spark's
       non-finite special case in ``Round``), cid breaks ties
       (``cent_rows`` is sorted by cid, so argmax-first-hit == lowest
@@ -429,12 +349,8 @@ def _ivf_assign_gemm(
     """
     import numpy as np
 
-    from ..functions.arrow_batches import decode_list_matrix
-    from ..functions.pickling import by_value
-    from .ann_index import _arrow_schema, _half_up
-
     dec = by_value(decode_list_matrix)
-    hup = by_value(_half_up)
+    hup = by_value(half_up)
     cent_rows = sorted(cent_rows, key=lambda r: int(r[0]))
     cids = np.array([int(r[0]) for r in cent_rows], dtype=np.int64)
     cvecs = [np.asarray(r[1], dtype=np.float64) for r in cent_rows]
@@ -457,7 +373,7 @@ def _ivf_assign_gemm(
         f"{out_id} {in_fields[id_col]}, cid long, "
         f"{vec_col} {in_fields[vec_col]}"
     )
-    pa_schema = _arrow_schema(out_ddl)
+    pa_schema = arrow_schema(out_ddl)
     rdigits = int(round_digits)
 
     def _assign(batches):
@@ -703,13 +619,7 @@ def ivf_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k)
 
 
 def hyperplane_signature_gemm(
@@ -751,10 +661,6 @@ def hyperplane_signature_gemm(
     """
     import numpy as np
 
-    from ..functions.arrow_batches import decode_list_matrix
-    from ..functions.pickling import by_value
-    from .ann_index import _arrow_schema
-
     dec = by_value(decode_list_matrix)
     w_mat = np.array(
         [plane_weights(p, n_dims) for p in range(n_planes)],
@@ -767,7 +673,7 @@ def hyperplane_signature_gemm(
         f"vec_id {in_fields[id_col]}, sig long, "
         f"{vec_col} {in_fields[vec_col]}"
     )
-    sig_pa_schema = _arrow_schema(sig_ddl)
+    sig_pa_schema = arrow_schema(sig_ddl)
 
     def _sign(batches):
         guard_import_caches()
@@ -861,13 +767,7 @@ def lsh_bucketed_topk(
             ).alias("cos_sim"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return rank_topk(scored, k)
 
 
 def recall_at_k(

@@ -133,7 +133,7 @@ def heavy_hitters_approx(
     partitions.  Exactness check = :func:`heavy_hitters` on a sample.
 
     r11: ``mapInArrow`` — measured at 10 M strings
-    (tools/string_bridge_bench.py): Arrow ``pc.value_counts`` counts a
+    (a one-shot A/B since deleted): Arrow ``pc.value_counts`` counts a
     batch without materializing a Python str per ROW (only per distinct
     value per batch), 0.58 s vs the pandas kernel's 0.69 s.  A modest
     win (strings are ~100× cheaper across the bridge than the vector

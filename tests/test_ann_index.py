@@ -18,6 +18,8 @@ Evidence ladder:
 from __future__ import annotations
 
 import os
+import re
+import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -682,7 +684,7 @@ def test_gemm_rounding_matches_sql_half_up(spark, tmp_path):
     1 x 4) sits ON the .5 boundary at round_digits=1 — np.round
     (half-to-even) gives 0.2, Spark F.round (HALF_UP) gives 0.3.  The
     numpy serve paths must match the SQL twins on this class."""
-    from polars_w_inverted_index_spark.operators.ann_index import _half_up
+    from polars_w_inverted_index_spark.functions.topk import half_up
     from polars_w_inverted_index_spark.operators.similarity import (
         brute_force_topk_gemm,
     )
@@ -715,7 +717,7 @@ def test_gemm_rounding_matches_sql_half_up(spark, tmp_path):
         )
     ).first()
     for i, (v, d) in enumerate(zip(vals, digs)):
-        assert float(_half_up(v, d)) == sql[f"c{i}"], (v, d)
+        assert float(half_up(v, d)) == sql[f"c{i}"], (v, d)
 
 
 def test_kmeans_update_excludes_null_vectors(spark):
@@ -1223,8 +1225,8 @@ def test_torn_ann_meta_is_refused_by_ingest_and_augment(
     spark, emb, tmp_path
 ):
     """``_ann_meta.json`` is written atomically, so a torn one means a
-    hand-damaged root.  Both readers of its dims refuse it with the
-    rebuild message instead of tolerating it: the ingest's width gate
+    hand-damaged root.  Both readers of its dims refuse it naming the
+    file instead of tolerating it: the ingest's width gate
     (which would otherwise run with nothing to check against) and
     ``pq_augment_ann_index`` (which would otherwise blame a pre-dims
     index).  Nothing is committed."""
@@ -1240,7 +1242,7 @@ def test_torn_ann_meta_is_refused_by_ingest_and_augment(
     manifest = ai._load_manifest(root)
     meta_path = os.path.join(root, "_ann_meta.json")
     open(meta_path, "w").write('{"n_centroids": 2, "di')  # torn write
-    torn = f"ANN index at {root} has a torn _ann_meta.json.*build_ann_index"
+    torn = re.escape(meta_path) + " is torn"
     with pytest.raises(ValueError, match=torn):
         ann_ingest_batch(
             emb.where(F.col("vec_id").between(100, 110)), root, batch_id=0
@@ -1288,6 +1290,86 @@ def test_torn_pq_meta_is_named_by_the_reaugment(spark, emb, tmp_path):
     with pytest.raises(ValueError, match=r"_pq_meta\.json is torn"):
         _reaugment_unpaired(spark, root)
     assert ai._load_manifest(root) == manifest
+
+
+def _tear(path):
+    """Overwrite ``path`` with its first half, as a crash mid-dump
+    would leave a non-atomic write."""
+    text = open(path).read()
+    with open(path, "w") as f:
+        f.write(text[: len(text) // 2])
+    return re.escape(path) + " is torn"
+
+
+def test_torn_ann_meta_is_named_by_recorded_dims(tmp_path):
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    assert ai._recorded_dims(str(tmp_path)) is None  # no meta
+    meta = tmp_path / "_ann_meta.json"
+    meta.write_text('{"n_centroids": 2, "dims": 8}')
+    assert ai._recorded_dims(str(tmp_path)) == 8
+    with pytest.raises(ValueError, match=_tear(str(meta))):
+        ai._recorded_dims(str(tmp_path))
+
+
+def test_torn_pq_meta_is_named_by_sidecar_books(tmp_path):
+    """A torn ``_pq_meta.json`` is not an unpaired sidecar: every fold,
+    re-encode and ingest that asks for the books hears about it."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    assert ai._sidecar_books(str(tmp_path), {}) is None  # no sidecar
+    meta = tmp_path / "_pq_meta.json"
+    meta.write_text('{"n_dims": 2, "books": [[[0.5], [1.5]], [[2.0]]]}')
+    m = {"books_id": ai._books_id([[[0.5], [1.5]], [[2.0]]])}
+    assert ai._sidecar_books(str(tmp_path), m).n_dims == 2
+    with pytest.raises(ValueError, match=_tear(str(meta))):
+        ai._sidecar_books(str(tmp_path), m)
+
+
+def test_torn_ann_meta_is_named_by_the_serving_policy(tmp_path):
+    """The policy no longer falls back to the default bandwidth over a
+    torn meta; a missing one still reads as "no stamp"."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    pol = ai.ann_serving_policy(str(tmp_path), 2)
+    assert pol["path"] == "float" and pol["bandwidth_source"] == "default"
+    meta = tmp_path / "_ann_meta.json"
+    meta.write_text('{"n_centroids": 4, "bandwidth_mbps": 900.0}')
+    assert ai.ann_serving_policy(str(tmp_path), 2)["bandwidth_mbps"] == 900.0
+    with pytest.raises(ValueError, match=_tear(str(meta))):
+        ai.ann_serving_policy(str(tmp_path), 2)
+
+
+def test_torn_ann_meta_is_named_by_ann_search(queries, index_root, tmp_path):
+    spark = queries.sparkSession
+    root = str(tmp_path / "idx")
+    shutil.copytree(index_root, root)
+    torn = _tear(os.path.join(root, "_ann_meta.json"))
+    with pytest.raises(ValueError, match=torn):
+        ann_search(spark, root, queries, k=3, nprobe=2)
+
+
+def test_torn_metas_are_named_by_ann_search_pq(spark, emb, tmp_path):
+    """Both files the PQ serve reads: the sidecar's ``_pq_meta.json``
+    and the index's ``_ann_meta.json`` (its dims gate)."""
+    from polars_w_inverted_index_spark.operators.ann_index import (
+        ann_search_pq,
+        pq_augment_ann_index,
+    )
+
+    root = str(tmp_path / "pq")
+    build_ann_index(emb.where(F.col("vec_id") < 100), root,
+                    n_centroids=2, n_iters=0)
+    pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
+    q = emb.where(F.col("vec_id") < 3)
+    for name in ("_pq_meta.json", "_ann_meta.json"):
+        path = os.path.join(root, name)
+        intact = open(path).read()
+        with pytest.raises(ValueError, match=_tear(path)):
+            ann_search_pq(spark, root, q, k=2)
+        with open(path, "w") as f:
+            f.write(intact)
+    assert ann_search_pq(spark, root, q, k=2).count() == 6
 
 
 def test_reencode_drops_codes_of_removed_cells(spark, emb, tmp_path):
@@ -1440,15 +1522,14 @@ def test_missing_codes_tree_disables_ingest_maintenance(
     recreating the tree from new batches alone would let refreshed
     fingerprints serve cells whose BASE rows have no codes — silent
     wrong top-k.  A cell whose live codes directories are gone is not
-    pre-append-fresh, so ingest and a direct append refresh NOTHING
-    (fail closed), no codes tree reappears, a serve over the ingested
-    cells refuses, and a full augment repairs."""
+    pre-append-fresh, so ingest refreshes NOTHING (fail closed), no
+    codes tree reappears, a serve over the ingested cells refuses, and
+    a full augment repairs."""
     import shutil
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
     from polars_w_inverted_index_spark.operators.ann_index import (
         ann_search_pq,
-        pq_append_batch_codes,
         pq_augment_ann_index,
     )
     from polars_w_inverted_index_spark.streaming import ann_ingest_batch
@@ -1465,9 +1546,6 @@ def test_missing_codes_tree_disables_ingest_maintenance(
     ) == b0.count()
     assert not os.path.isdir(os.path.join(root, "pq_codes"))  # skipped
     assert ai._load_manifest(root)["code_fps"] == fps_before
-    # a direct append refreshes nothing — and materializes no codes
-    assert pq_append_batch_codes(spark, root, batch_tag=0) == []
-    assert not os.path.isdir(os.path.join(root, "pq_codes"))
     q = emb.where(F.col("vec_id") % 50 == 0)
     with pytest.raises(ValueError, match="STALE"):
         ann_search_pq(spark, root, q, k=5, nprobe=4, rerank_factor=1000)

@@ -608,7 +608,7 @@ def test_ann_serves_match_brute_on_undefined_norm_queries(spark, tmp_path):
     NULL-element / NaN-element / ±inf-element / zero query must serve
     exactly like the brute expression twin at full coverage: NULL
     element → the guard's NULL norm → 0.0 everywhere (q_zero, wired
-    from the collected rows through _score/_adc/_probe_rank); NaN/inf
+    from the collected rows through _score/_adc/_probe); NaN/inf
     element → NaN scores, ranked FIRST (Spark's NaN-largest order);
     zero → 0.0.  Pins ann_search AND ann_search_pq (corpus-covering
     rerank) against brute_force_topk."""
