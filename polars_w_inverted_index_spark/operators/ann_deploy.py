@@ -1,12 +1,13 @@
 """Zero-downtime ANN index deployments: root-pointer indirection.
 
-The r14 snapshot manifest lets serves overlap streaming ingest and
-selective folds WITHIN one index root, but a centroid retrain
-(``build_ann_index`` over an existing root) is still stop-the-world for
-serving: the cells overwrite deletes live files out from under any
-pinned snapshot.  This module applies the same indirection one level
-up — the reference's reusable-index directive (main.rs:325-385: build
-once, serve forever) taken to its operational conclusion:
+Within one index root, every write lands in directories no manifest
+names and one manifest swap publishes it, so serves overlap streaming
+ingest and selective folds.  A centroid retrain cannot work that way:
+new centroids reassign every row.  So ``build_ann_index`` only ever
+builds a fresh root (it refuses one that holds a live index), and this
+module applies the manifest's indirection one level up — the
+reference's reusable-index directive (main.rs:325-385: build once,
+serve forever) taken to its operational conclusion:
 
 * a **deployment** is a directory holding ``_root_pointer.json``
   (written atomically, like the index manifest) and numbered
@@ -34,7 +35,6 @@ serializes them per stream); serves are unrestricted.
 
 from __future__ import annotations
 
-import json
 import os
 import re
 import shutil
@@ -266,16 +266,18 @@ def ann_deployment_rebuild(
         raise FileNotFoundError(
             f"{deployment_dir} is not an ANN deployment — build it first."
         )
+    old_rel = p["live"]
+    old_root = os.path.join(deployment_dir, old_rel)
+    meta_path = os.path.join(old_root, "_ann_meta.json")
+    meta = read_json(meta_path)  # a torn meta raises naming it
+    if meta is None:
+        raise ValueError(f"ann_deployment_rebuild: {meta_path} is missing")
     # allocate the sequence BEFORE sweeping so a crashed attempt's name
     # is never reused — a lagging LIST on an eventually-consistent
     # object store could otherwise surface the dead directory's files
     # inside the new root
     seq = _next_seq(deployment_dir)
     _sweep_orphan_roots(deployment_dir, p)
-    old_rel = p["live"]
-    old_root = os.path.join(deployment_dir, old_rel)
-    with open(os.path.join(old_root, "_ann_meta.json")) as f:
-        meta = json.load(f)
     if corpus is None:
         corpus = _live_corpus(spark, old_root, meta)
     rel = os.path.join("roots", f"g{seq:06d}")

@@ -773,7 +773,25 @@ def build_ann_index(
     (:func:`_measure_cold_bandwidth_mbps`) so :func:`ann_serving_policy`
     resolves its float-vs-PQ tie from THIS deployment's disk, not the
     dev box's literal.
+
+    ``root`` must not hold a live index: a root whose manifest
+    :func:`_load_manifest` accepts is refused before anything is
+    written, since the build would overwrite directories that manifest
+    names under a running serve.  Retrain into a fresh root, or through
+    ``operators/ann_deploy.ann_deployment_rebuild``.  A root whose
+    manifest is missing, torn or in an older format is built over: that
+    is the repair :func:`_load_manifest` names.
     """
+    try:
+        _load_manifest(root)
+    except ValueError:
+        pass  # no live index here: build one
+    else:
+        raise ValueError(
+            f"build_ann_index: {root} already holds a live ANN index — "
+            "retrain it with ann_deployment_rebuild, or build into a "
+            "fresh root."
+        )
     spark = corpus.sparkSession
     dims = _uniform_width(corpus, vec_col, f"build_ann_index({root})")
     cent = kmeans_centroids(
@@ -797,11 +815,6 @@ def build_ann_index(
     cells.write.mode("overwrite").options(**_CV_PLAIN).partitionBy(
         "cell", "ingest_batch"
     ).parquet(os.path.join(root, "cells"))
-    # a rebuild in place drops the old build's ingest commits with its
-    # cells (their rows were assigned against the old centroids)
-    import shutil
-
-    shutil.rmtree(os.path.join(root, "deltas"), ignore_errors=True)
     write_json_atomic(
         os.path.join(root, "_ann_meta.json"),
         {
@@ -812,55 +825,22 @@ def build_ann_index(
             "vec_col": vec_col,
         },
     )
-    # snapshot manifest (r14): one build-time listing of the fresh tree —
-    # the only writer of a root's FIRST manifest, so the only entry point
-    # that accepts a root without one.
-    # A REBUILD over an existing root invalidates any PQ sidecar
-    # wholesale (new centroids → new cells → every code stale): the new
-    # manifest carries no codes/fingerprints (PQ serves refuse loudly
-    # until the next pq_augment_ann_index) and the old codes directories
-    # retire behind the grace window.  Rebuild-in-place is itself
-    # stop-the-world for serving — the cells overwrite above deletes
-    # live files — so zero-downtime deployments rebuild into a NEW root
-    # and flip the pointer.
-    import time as _time
-
-    now = _time.time()
-    retired = []
-    old_code_tags = _list_tree_tags(os.path.join(root, "pq_codes"))
-    for c, tags in old_code_tags.items():
-        for t in tags:
-            retired.append([f"pq_codes/cell={c}/ingest_batch={t}", now])
-    # the generation counter must survive a rebuild: old gen-tagged
-    # codes directories retire behind the grace window, and a reset
-    # counter would let the next augment REUSE their tag — appending
-    # fresh codes beside retired ones in the same directory, i.e.
-    # duplicate candidates (caught by the lifecycle row's oracle the
-    # round this was built).  Carry max(previous gen, any gen tag still
-    # physically present) forward — the tags cover a previous build that
-    # crashed before its manifest write.
-    # An in-place rebuild keeps the replay guard too: the stream's
-    # batch ids go on from the committed one.
-    try:
-        prev = _load_manifest(root)
-    except ValueError:  # no usable manifest yet: this build writes one
-        prev = {"gen": 1}
-    prev_gen = int(prev["gen"])
-    gen = max(
-        [1, prev_gen]
-        + [-t for tags in old_code_tags.values() for t in tags if t < -1]
-    )
+    # the root's first manifest, from one listing of the fresh cells
+    # tree.  A damaged root's leftover ``deltas/`` and ``pq_codes/``
+    # directories are named by no manifest, so the orphan sweep that
+    # precedes every maintenance write removes them before a write
+    # could reuse their names (:func:`_sweep_orphan_dirs`).
     _write_manifest(
         root,
         {
             "format": _MANIFEST_FORMAT,
-            "gen": gen,
-            "batch_id": prev.get("batch_id"),
+            "gen": 1,
+            "batch_id": None,
             "cells": _list_tree_tags(os.path.join(root, "cells")),
             "codes": {},
             "code_fps": {},
             "books_id": None,
-            "retired": retired,
+            "retired": [],
             # the cells tree's schema (cell typed like the centroid ids),
             # so its readers skip the schema-inference job
             "cells_schema": ", ".join(
@@ -924,7 +904,7 @@ def _assign_batch_checkpoint(
     his = [r["hi"] for r in rows if r["hi"] is not None]
     if los:
         _width_gate_verdict(
-            f"ann_index_add_batch({root})", vec_col,
+            f"ann_ingest_batch({root})", vec_col,
             min(los), max(his),
             any(r["bad"] for r in rows),
             recorded,
@@ -956,20 +936,6 @@ def _cells_rows(assigned: DataFrame, batch_tag: int) -> DataFrame:
 _CV_PLAIN = {"parquet.enable.dictionary#cv.list.element": "false"}
 
 
-def _write_base(rows: DataFrame, root: str) -> None:
-    """Append cells-tree rows ``[cell, ingest_batch, vec_id, cv, cn]`` to
-    the base leaves, one file per cell: the rows are rebalanced on
-    ``cell`` before the partitioned write (AQE still splits a cell
-    above the advisory partition size)."""
-    (
-        rows.hint("rebalance", "cell")
-        .write.mode("append")
-        .options(**_CV_PLAIN)
-        .partitionBy("cell", "ingest_batch")
-        .parquet(os.path.join(root, "cells"))
-    )
-
-
 def _commit_dir(root: str, tag: int) -> str:
     return os.path.join(root, "deltas", f"ingest_batch={int(tag)}")
 
@@ -977,76 +943,20 @@ def _commit_dir(root: str, tag: int) -> str:
 def _append_assigned(
     root: str, assigned: DataFrame, batch_tag: int
 ) -> None:
-    """Write the batch's assigned rows.  A tagged batch (``batch_tag >=
-    0``) is one commit directory ``deltas/ingest_batch=<tag>``: the rows
-    are rebalanced without a key and sorted by ``cell`` inside each
-    file, so the commit is a few files whatever the number of touched
-    cells, and a probe's ``cell`` filter prunes row groups by their
-    min/max.  An untagged append (``-1``) joins the build's base
-    leaves."""
-    rows = _cells_rows(assigned, batch_tag)
-    if int(batch_tag) < 0:
-        _write_base(rows, root)
-        return
+    """Write the batch's assigned rows as one commit directory
+    ``deltas/ingest_batch=<tag>``: the rows are rebalanced without a
+    key and sorted by ``cell`` inside each file, so the commit is a few
+    files whatever the number of touched cells, and a probe's ``cell``
+    filter prunes row groups by their min/max."""
     (
-        rows.drop("ingest_batch")
+        _cells_rows(assigned, batch_tag)
+        .drop("ingest_batch")
         .hint("rebalance")
         .sortWithinPartitions("cell")
         .write.mode("append")
         .options(**_CV_PLAIN)
         .parquet(_commit_dir(root, batch_tag))
     )
-
-
-def ann_index_add_batch(
-    spark: SparkSession,
-    root: str,
-    batch: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    batch_tag: int = -1,
-) -> int:
-    """Append a batch of new vectors to an existing index; returns the
-    batch row count.
-
-    Ingest-time maintenance without retraining: the batch is assigned
-    against the FROZEN centroids (one narrow pass over the batch only —
-    the standing corpus is never touched) and appended as one commit
-    directory (:func:`_append_assigned`), so per-batch cost is
-    O(batch), independent of index size — the same property the streaming postings-index
-    merge has.  Centroids drift from optimal as the distribution moves;
-    rebuild with :func:`build_ann_index` on whatever cadence the drift
-    monitor (streaming/drift.py) says, exactly like any IVF system.
-
-    The manifest swap lands AFTER the parquet append, so snapshot
-    readers see the batch only once it is complete — a crash in between
-    leaves invisible files a tagged replay removes
-    (streaming/ann_ingest.py).  ``batch_tag`` names the commit
-    directory ``deltas/ingest_batch=<tag>`` the files land in:
-    streaming ingest passes its checkpoint batch id so a
-    crashed-then-replayed batch can be removed exactly; direct callers
-    default to -1 (the build's base leaves — untagged: NOT
-    replay-cleanable, and appending into an
-    already-live directory means a concurrent snapshot reader may
-    observe the batch's committed files early.  Guarded streaming
-    ingest never does this; direct untagged appends are a
-    batch-pipeline convenience).
-    """
-    m = _load_manifest(root)
-    assigned, touched, n = _assign_batch_checkpoint(
-        spark, root, batch, id_col, vec_col
-    )
-    _append_assigned(root, assigned, batch_tag)
-    changed = False
-    for c in touched:
-        tags = m["cells"].setdefault(c, [])
-        if int(batch_tag) not in tags:
-            tags.append(int(batch_tag))
-            tags.sort()
-            changed = True
-    if changed:
-        _write_manifest(root, m)
-    return n
 
 
 # ---------------------------------------------------------------------------
@@ -1097,7 +1007,9 @@ def ann_index_add_batch(
 # MAINTENANCE jobs (ingest commits, folds, re-encodes, augments) still
 # must not overlap EACH OTHER — one maintenance writer at a time, the
 # normal single-writer rule — but serves need no coordination at all.
-# `build_ann_index` writes a root's first manifest; every other entry
+# `build_ann_index` writes a root's first manifest and refuses a root
+# that already has one (a retrain builds a fresh root:
+# `operators/ann_deploy.ann_deployment_rebuild`); every other entry
 # point refuses a root whose manifest is missing, torn or lacks the
 # cells schema (`_load_manifest`), so per-batch decisions are always
 # O(touched cells) reads of the manifest, never a tree walk.
@@ -1124,8 +1036,9 @@ def _load_manifest(root: str) -> dict:
     repair, when it is missing, torn (the writer is atomic, so only a
     hand-damaged root has one) or records no ``cells_schema``."""
     try:
-        with open(_manifest_path(root)) as f:
-            m = json.load(f)
+        m = read_json(_manifest_path(root))
+        if m is None:
+            raise FileNotFoundError(_manifest_path(root))
     except (OSError, ValueError) as e:
         raise ValueError(
             f"ANN index at {root} has no readable _cells_manifest.json "
@@ -1460,13 +1373,16 @@ def _sweep_orphan_dirs(root: str, m: dict, cells) -> None:
     """Remove the directories no manifest references (not live, not
     retired): ``ingest_batch=`` leaves of the given cells in both trees
     and commit directories under ``deltas/`` — a crashed fold's
-    generation dirs (its generation was allocated by a manifest write
-    BEFORE the data write, so a retry never reuses the tag) and a
-    crashed-then-abandoned ingest attempt's commit and codes dirs
-    (invisible: the attempt never swapped the manifest).  No reader can
-    hold an unreferenced path, and MAINTENANCE is single-writer (an
-    in-flight ingest append cannot overlap this fold), so the sweep is
-    safe.  O(touched cells + live commits) listings."""
+    generation dirs, a crashed-then-abandoned ingest attempt's commit
+    and codes dirs (invisible: the attempt never swapped the manifest)
+    and a damaged root's leftovers after ``build_ann_index`` rebuilt
+    it.  A fold takes its generation from the manifest without writing
+    it first, so its retry reuses the crashed attempt's tag: this sweep,
+    run before every maintenance write, is what keeps the retry from
+    appending beside the crashed files.  No reader can hold an
+    unreferenced path, and MAINTENANCE is single-writer (an in-flight
+    ingest append cannot overlap this fold), so the sweep is safe.
+    O(touched cells + live commits) listings."""
     import shutil
 
     retired_paths = {rel for rel, _ in m.get("retired", [])}
@@ -1637,12 +1553,19 @@ def _fold_cells(
             "cell", "vec_id", "cv", "cn"
         ).unionByName(batch)
     if rows is not None:
-        _write_base(
+        # one file per cell: rebalanced on ``cell`` before the
+        # partitioned write (AQE still splits a cell above the advisory
+        # partition size)
+        (
             rows.select(
                 "cell", F.lit(tag).alias("ingest_batch"), "vec_id", "cv",
                 "cn",
-            ),
-            root,
+            )
+            .hint("rebalance", "cell")
+            .write.mode("append")
+            .options(**_CV_PLAIN)
+            .partitionBy("cell", "ingest_batch")
+            .parquet(os.path.join(root, "cells"))
         )
     folded_cells = [
         c for c in cells if os.path.isdir(_tag_dir(root, c, tag))
@@ -2036,8 +1959,8 @@ def pq_reencode_stale_cells(
 
     Self-healing by construction: staleness is diffed from the live
     manifest snapshot (not from "what the caller folded"), so cells
-    left stale by a prior crash — or by untagged/guarded-but-stale
-    ingest — are refreshed on the next call, which also keeps
+    left stale by a prior crash — or by an ingest into a cell that
+    was already stale — are refreshed on the next call, which also keeps
     :func:`ann_search_pq` AVAILABLE instead of raising between full
     augments.
 
@@ -2142,9 +2065,9 @@ def _encode_batch_codes(
     ``m`` must be the PRE-APPEND manifest view (the new tag not yet in
     ``m["cells"]``), because the freshness guard (r13 ADVICE, high)
     compares each cell's RECORDED fingerprint against its pre-append
-    live digest: a cell that was already stale — an untagged append
-    left base rows uncoded, or a crashed maintenance pass — stays
-    stale, so the gate keeps refusing it until
+    live digest: a cell that was already stale — an ingest committed
+    while a crashed retrain left the codes unpaired, or hand surgery
+    on its directories — stays stale, so the gate keeps refusing it until
     :func:`pq_reencode_stale_cells` (or a fold) re-encodes its FULL
     content.  Refreshing unconditionally would launder that staleness
     into a passing gate over rows that have no codes — silently wrong

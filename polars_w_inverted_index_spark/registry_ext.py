@@ -330,106 +330,31 @@ _register("similarity_pq_rerank_topk", q_ann_pq_rerank, _BRUTE_SQL)
 
 
 def q_ann_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact top-k served THROUGH the materialized ANN index family —
-    since r12 the FULL INCREMENTAL LIFECYCLE (r11 VERDICT task 1), BOTH
-    serving paths, in one row: ``build_ann_index`` on HALF the
-    embeddings (Lloyd train + GEMM assign + cell-partitioned parquet),
-    ``ann_index_add_batch`` ingesting the other half against the frozen
-    centroids (committed through the root's snapshot manifest),
-    ``ann_index_compact`` folding the ingest delta back into
-    the base layout, ``pq_augment_ann_index`` (codes sidecar over the
-    compacted cells), then
+    """Exact top-k served through the whole ANN index lifecycle, both
+    serving paths, in one row over the ``vec_id % 12 == 0`` slice.
 
-    - ``served_path='float'``: ``ann_search_auto`` at FULL SWEEP
-      (nprobe = n_centroids) — the policy's measured rule resolves a
-      full sweep to the float path from ``_ann_meta.json`` alone (no
-      file-size probe — deterministic on any machine), and a full
-      sweep is exact by construction (same rounding, same tie order as
-      brute force — the ann_index equivalence tests);
-    - ``served_path='pq_rerank'``: ``ann_search_pq`` at full sweep
-      with the rerank candidate width covering the corpus — ADC ranks
-      from the codes sidecar, the float re-rank restores exactness
-      (the pq fuzz pin), so the SAME brute contract holds.
+    - ``ann_deployment_build`` builds a deployment root over ``% 48 ==
+      0`` with a PQ sidecar (4 centroids, one Lloyd and one codebook
+      iteration: full-sweep serving is exact whatever their quality);
+    - ``ann_ingest_batch`` commits ``% 48 == 12`` as batch 0, a replay
+      of batch 0 must no-op, and ``% 48 == 24`` as batch 1 crosses the
+      dial (``max_batch_dirs_per_cell=1``): a selective fold with codes
+      re-encoded in the same manifest swap, which the row asserts;
+    - ``drift_monitor_batch`` on a vocabulary-disjoint batch makes
+      ``should_rebuild`` True; ``ann_deployment_rebuild`` retrains a
+      fresh root from the old root's live rows, re-augments PQ, carries
+      the batch id and flips the pointer; ``should_rebuild`` must then
+      read False and a replay of batch 1 must no-op on the new root;
+    - ``% 48 == 36`` ingests as batch 2 with the dial off;
+    - ``served_path='float'`` is ``ann_search_auto`` at a full sweep
+      (the policy resolves it to the float path from the meta alone),
+      and ``served_path='pq_rerank'`` is ``ann_search_pq`` at a full
+      sweep with a rerank width covering the corpus.
 
-    One oracle (the brute SQL × the two path literals) therefore pins
-    the index build, the incremental ingest, the compaction fold, the
-    sidecar write + fingerprint gate, the policy dispatch, the GEMM
-    float serve, AND the ADC + rerank serve, every round — the same
-    r10→r11 pattern that took the LSM composite row from pytest-only
-    to hash-pinned (``q_index_composite_streaming_lookup`` runs ITS
-    maintenance mutations in-path).  Before r12, ``ann_index_add_batch``
-    / ``ann_index_compact`` — the most-mutated production path of the
-    repo's largest module — carried pytest evidence only.
-
-    r13 (r12 VERDICT task 2): the ingest legs run through the
-    PRODUCTION streaming wrapper ``ann_ingest_batch`` — marker commit,
-    a deliberately REPLAYED batch (must no-op, or the corpus would
-    double and the hash would catch it), and the autocompaction dial
-    in-path (the r14 snapshot fold: fresh generation + one manifest
-    swap, codes re-encoded inside the same commit).
-
-    r14 (r13 VERDICT task 2): the DRIFT-REBUILD stage — the last ANN
-    lifecycle stage without a hash pin — runs in-path too:
-    ``mark_rebuilt`` baselines the drift monitor, the real
-    ``drift_monitor_batch`` ingests a vocabulary-disjoint batch (toy
-    scale, production wiring), ``should_rebuild`` must flip True, the
-    retrain runs, ``should_rebuild`` must flip back False, and a
-    further guarded batch ingests against the NEW tree under the same
-    monotone marker.  The whole build→ingest→fold→rebuild→ingest
-    cycle therefore serves into one brute-force oracle every round.
-
-    r14.2: the retrain goes through the ZERO-DOWNTIME deployment layer
-    (``operators/ann_deploy.py``): the row owns a deployment directory
-    (root-pointer indirection), ``ann_deployment_rebuild`` trains into
-    a FRESH root from the old root's LIVE rows (read via its manifest
-    — no corpus re-read), re-augments PQ with the dials recorded in
-    ``_pq_meta.json``, carries the committed ingest batch id into the
-    new root's manifest (a replay of the
-    pre-flip batch 1 must still no-op on the new root — loud assert
-    AND the hash would double), re-baselines the drift monitor, and
-    flips the pointer atomically; serves resolve the pointer in-path.
-    The pointer flip, batch-id carry, dial carry-over, and
-    live-corpus rebuild are thereby all under this oracle's hash.
-
-    The row's corpus is the ``vec_id % 12 == 0`` TWELFTH of the table
-    (oracle sliced identically — r13 VERDICT task 3 directs the
-    lifecycle slice smaller and n_centroids 8→4 so the rebuild stage
-    lands while the committed row returns under its budget; exactness
-    is by construction, not corpus size, and r14's deployment-rebuild
-    stage added a second full build+augment cycle, so the slice
-    shrank again ⅓→¹⁄₁₂ to hold the budget).  Sub-slices: %48==0
-    builds, %48∈{12,24} arrive as guarded batches 0/1 (batch 1
-    crosses the dial), the rebuild retrains over %48∈{0,12,24}, and
-    %48==36 ingests as batch 2 against the new tree.  Full-table
-    serving stays pinned by the sibling rows
-    (``similarity_pq_rerank_topk`` / ``similarity_ivf_topk`` /
-    ``similarity_lsh_topk``).
-
-    **Budget (r14, measured): this row is ACTION-count-bound, not
-    data-bound — re-budgeted at the measured ~14–16 s after the
-    optimization round's trims (one-file centroids, one-action drift
-    commit; the tiny-input static-planning gate was tried on every leg
-    and removed after both A/B orders ran slower — see
-    OPTIMIZATION_r14.md).**  Instrumented
-    at sf0.1 on local[32]: the full lifecycle launches 118 Spark jobs
-    (88 with AQE off — same wall time, so AQE's extra jobs are cheap
-    and the constant is per-ACTION scheduling + Python↔JVM latency at
-    ~0.11–0.16 s each; statusTracker deltas, per-leg: build+augment
-    19, guarded ingest 10–14 each, drift monitor 22, deployment
-    rebuild 22, serves 7+13).  The embeddings table is 2 000 rows at
-    sf0.1, so virtually NONE of the cost is data: shrinking the slice
-    4× (⅓→¹⁄₁₂) moved the standalone row only ~−3.5 s and the
-    in-bench floor not at all, and forcing shuffle.partitions=4 /
-    AQE off moved it <15% — every r13 task-3 lever is measured
-    exhausted.  The cost is the CONTRACT (two full build+augment
-    cycles since the rebuild stage landed, three guarded ingests, two
-    dial folds with selective re-encode, a replay, the real drift
-    monitor, a pointer-flip rebuild, and two full-sweep serves with
-    corpus-covering rerank ≈ 40+ queries), not a bad plan: a
-    production stream pays ONE leg per micro-batch, and at real batch
-    sizes the per-action constant amortizes into data.  Reaching the
-    old ≤6 s figure would mean unpinning lifecycle legs — the wrong
-    trade; ``row_budget`` flags the row every round by design."""
+    One oracle, brute force over the slice × the two path literals,
+    pins every stage.  The row's cost is its Spark job count (each
+    stage above is several jobs over a few hundred rows), not its data.
+    """
     import os
 
     from .functions.text import unigram_lm

@@ -1,5 +1,6 @@
 """Streaming ANN-index ingest: new vectors join the materialized index
-as they arrive (foreachBatch over operators/ann_index.add_batch).
+as they arrive (foreachBatch over :func:`ann_ingest_batch`, the one
+path by which vectors enter a built index).
 
 Each micro-batch is assigned against the FROZEN centroids and written
 as one commit directory — O(batch) per commit, index size
@@ -68,15 +69,14 @@ in the manifest, so it runs no schema-inference job, and in the
 parallel-listing job either: Spark lists more than 32 paths with a
 Spark job of its own.
 
-Centroids never move during ingest; rebuild with ``build_ann_index``
-on the cadence the drift monitor (streaming/drift.py) indicates —
-standard IVF operating procedure (see :func:`should_rebuild` /
-:func:`mark_rebuilt` below).  A rebuild-in-place is stop-the-world for
-serving (the cells overwrite deletes live files); zero-downtime
-deployments rebuild into a new root and flip the pointer
-(operators/ann_deploy.py), and :func:`start_ann_ingest_deployed` wires
-the WHOLE loop — resolve pointer, drift-gated zero-downtime rebuild,
-guarded ingest — into one stream operator.
+Centroids never move during ingest; retrain on the cadence the drift
+monitor (streaming/drift.py) indicates — standard IVF operating
+procedure (see :func:`should_rebuild` / :func:`mark_rebuilt` below).  A
+retrain builds a fresh root and flips the deployment's pointer
+(operators/ann_deploy.ann_deployment_rebuild); ``build_ann_index``
+refuses a root that holds a live index.  :func:`start_ann_ingest_deployed`
+wires the WHOLE loop — resolve pointer, drift-gated rebuild, guarded
+ingest — into one stream operator.
 """
 
 from __future__ import annotations
@@ -105,9 +105,9 @@ DEFAULT_MAX_BATCH_DIRS_PER_CELL = 16
 
 
 def _cells_past_dial(m: dict, dial: int, touched=()) -> list[str]:
-    """Cell values whose live commit count (tags >= 0: guarded batch
-    appends not yet folded), plus one for each cell in ``touched`` (the
-    cells a tagged batch is about to commit to), EXCEEDS the dial — a
+    """Cell values whose live commit count (tags >= 0: ingest commits
+    not yet folded), plus one for each cell in ``touched`` (the cells
+    the batch is about to commit to), EXCEEDS the dial — a
     pure in-memory manifest scan, zero filesystem listings."""
     add = {str(c) for c in touched}
     return sorted(
@@ -148,7 +148,7 @@ def _reaugment_unpaired(spark, root: str) -> None:
 def ann_ingest_batch(
     batch_df: DataFrame,
     root: str,
-    batch_id: int | None = None,
+    batch_id: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     max_batch_dirs_per_cell: int | None = DEFAULT_MAX_BATCH_DIRS_PER_CELL,
@@ -156,6 +156,12 @@ def ann_ingest_batch(
 ) -> int:
     """Append one micro-batch to the index at ``root``; returns rows
     appended (0 for a committed replay).
+
+    ``batch_id`` is an ``int >= 0``, the next id after the one the
+    manifest records (a stream's foreachBatch id); anything else raises
+    ``ValueError`` before a file is written.  It names the commit
+    directory ``deltas/ingest_batch=<batch_id>``, which no manifest
+    names until the batch's swap.
 
     Commit order (every instant snapshot-consistent for readers):
     replay guard (the manifest's ``batch_id``) → assign (GEMM,
@@ -178,17 +184,20 @@ def ann_ingest_batch(
     9.40 s compacted, with a one-shot benchmark since deleted)."""
     spark = batch_df.sparkSession
     m = AI._load_manifest(root)
+    if not isinstance(batch_id, int) or batch_id < 0:
+        raise ValueError(
+            f"ann_ingest_batch({root}): batch_id must be an int >= 0, got "
+            f"{batch_id!r}; pass the next id after the manifest's "
+            f"batch_id, {m.get('batch_id')!r}."
+        )
     if replayed(m.get("batch_id"), batch_id, root):
         return 0
     assigned, touched, n = AI._assign_batch_checkpoint(
         spark, root, batch_df, id_col, vec_col
     )
-    tag = int(batch_id) if batch_id is not None else -1
     fold = []
     if max_batch_dirs_per_cell is not None:
-        fold = _cells_past_dial(
-            m, int(max_batch_dirs_per_cell), touched if tag >= 0 else ()
-        )
+        fold = _cells_past_dial(m, int(max_batch_dirs_per_cell), touched)
     commit = [c for c in touched if c not in fold]
     # a crashed attempt of this batch left only unreferenced
     # directories, all in the cells it touched or folded
@@ -198,36 +207,33 @@ def ann_ingest_batch(
             root,
             assigned.where(~F.expr(AI._cell_in(m, fold))) if fold
             else assigned,
-            tag,
+            batch_id,
         )
     # guarded encode-at-ingest: computed against the PRE-append
-    # manifest view (the tag is added below), so a cell that was stale
-    # BEFORE this batch stays stale (fail-closed) until a fold or
+    # manifest view (the batch id is added below), so a cell that was
+    # stale BEFORE this batch stays stale (fail-closed) until a fold or
     # pq_reencode_stale_cells re-encodes its full content
     codes_updates: dict[str, str] = {}
-    if tag >= 0 and commit and AI._sidecar_books(root, m) is not None:
-        codes_updates = AI._encode_batch_codes(spark, root, m, tag, commit)
+    if commit and AI._sidecar_books(root, m) is not None:
+        codes_updates = AI._encode_batch_codes(
+            spark, root, m, batch_id, commit
+        )
     if fold:
         rows = None
         if set(fold) & set(touched):
             rows = AI._cells_rows(
-                assigned.where(AI._cell_in(m, fold)), tag
+                assigned.where(AI._cell_in(m, fold)), batch_id
             )
         AI._fold_cells(spark, root, m, fold, rows)
         AI._prune_retired(root, m, retire_grace_seconds)
+    # batch_id is above every live commit tag (the replay rule), so the
+    # tag lists stay sorted
     for c in commit:
-        tags = m["cells"].setdefault(c, [])
-        if tag not in tags:
-            tags.append(tag)
-            tags.sort()
+        m["cells"].setdefault(c, []).append(batch_id)
     for c, dg in codes_updates.items():
-        tags = m["codes"].setdefault(c, [])
-        if tag not in tags:
-            tags.append(tag)
-            tags.sort()
+        m["codes"].setdefault(c, []).append(batch_id)
         m["code_fps"][c] = dg
-    if batch_id is not None:
-        m["batch_id"] = int(batch_id)
+    m["batch_id"] = batch_id
     AI._write_manifest(root, m)  # the batch's single visibility point
     if fold:
         AI._stamp_bandwidth_once(root)
@@ -343,8 +349,8 @@ def should_rebuild(
     threshold_bits: float = 0.05,
 ) -> bool:
     """True when the ingest distribution has drifted far enough from
-    the one the FROZEN centroids were trained on that a
-    ``build_ann_index`` rebuild is due.
+    the one the FROZEN centroids were trained on that a retrain
+    (``operators/ann_deploy.ann_deployment_rebuild``) is due.
 
     Reads the drift monitor's latest ``cumulative_js_bits`` (slow-drift
     signal — per-batch spikes mean a bad shipment, not stale centroids)
@@ -365,10 +371,11 @@ def should_rebuild(
 
 
 def mark_rebuilt(spark, root: str, report_path: str) -> None:
-    """Record the current drift level as the new rebuild baseline —
-    call right after ``build_ann_index`` retrains the centroids so
-    :func:`should_rebuild` measures drift SINCE this rebuild, not since
-    the original build.  Written atomically, like the index manifest."""
+    """Record the current drift level as ``root``'s rebuild baseline —
+    call on the freshly trained root (``ann_deployment_rebuild`` does
+    when given ``report_path``) so :func:`should_rebuild` measures drift
+    SINCE this rebuild, not since the original build.  Written
+    atomically, like the index manifest."""
     row = _latest_drift_report(spark, report_path)
     meta = {
         "cumulative_js_bits": float(row["cumulative_js_bits"])

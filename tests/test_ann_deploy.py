@@ -79,6 +79,26 @@ def test_torn_pointer_is_named_not_missing(tmp_path):
         AD.resolve_ann_root(str(tmp_path / "absent"))
 
 
+@pytest.mark.parametrize("damage", ["torn", "missing"])
+def test_rebuild_names_a_damaged_live_meta(tmp_path, damage):
+    """The rebuild reads the live root's build dials from its
+    ``_ann_meta.json``: a torn or missing one raises a ValueError naming
+    the file, before the rebuild sweeps or writes anything (the orphan
+    root a crashed rebuild left is still there)."""
+    dep = tmp_path / "dep"
+    live = dep / "roots" / "g000001"
+    live.mkdir(parents=True)
+    (dep / "roots" / "g000002").mkdir()
+    (dep / "_root_pointer.json").write_text(json.dumps(
+        {"format": 1, "live": "roots/g000001", "retired": []}
+    ))
+    if damage == "torn":
+        (live / "_ann_meta.json").write_text('{"n_centroids": 4, "n_it')
+    with pytest.raises(ValueError, match=r"_ann_meta\.json is (torn|missing)"):
+        AD.ann_deployment_rebuild(None, str(dep))
+    assert sorted(os.listdir(dep / "roots")) == ["g000001", "g000002"]
+
+
 def test_rebuild_from_live_rows_and_marker_carry(spark, emb, tmp_path):
     """Build → guarded ingest → rebuild (no corpus argument): the new
     root must serve base+ingested rows exactly, the flip must be

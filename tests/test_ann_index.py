@@ -82,6 +82,25 @@ def _live_deltas(root, cell=None):
     ]
 
 
+def _commit_without_codes(spark, root, batch, batch_id):
+    """Commit ``batch`` as ingest ``batch_id`` with ``ann_ingest_batch``'s
+    own steps minus its codes encode: the touched cells' recorded code
+    fingerprints no longer match their rows, so a PQ serve probing them
+    refuses them as STALE."""
+    import polars_w_inverted_index_spark.operators.ann_index as ai
+
+    m = ai._load_manifest(root)
+    assigned, touched, n = ai._assign_batch_checkpoint(
+        spark, root, batch, "vec_id", "embedding"
+    )
+    ai._append_assigned(root, assigned, batch_id)
+    for c in touched:
+        m["cells"].setdefault(c, []).append(batch_id)
+    m["batch_id"] = batch_id
+    ai._write_manifest(root, m)
+    return n
+
+
 def test_full_probe_equals_brute_force(spark, emb, queries, index_root):
     exact = brute_force_topk(emb, queries, k=5)
     served = ann_search(spark, index_root, queries, k=5, nprobe=8)
@@ -192,18 +211,16 @@ def test_probe_cap_guard(spark, emb, queries, index_root):
 
 
 def test_add_batch_then_full_probe_exact(spark, emb, tmp_path):
-    """Index built on half the corpus + add_batch of the other half ==
-    brute force over the WHOLE corpus at full probe (the incremental
-    path changes nothing about served results)."""
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
-    )
+    """Index built on half the corpus + one ingest batch of the other
+    half == brute force over the WHOLE corpus at full probe (the
+    incremental path changes nothing about served results)."""
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     old = emb.where(F.col("vec_id") % 2 == 0)
     new = emb.where(F.col("vec_id") % 2 == 1)
     root = str(tmp_path / "ann_incr")
     build_ann_index(old, root, n_centroids=6, n_iters=1)
-    n = ann_index_add_batch(spark, root, new)
+    n = ann_ingest_batch(new, root, batch_id=0)
     assert n == new.count()
     queries = emb.where(F.col("vec_id") % 100 == 0)
     served = ann_search(spark, root, queries, k=5, nprobe=6)
@@ -491,10 +508,10 @@ def test_pq_cells_fingerprint_cached_on_warm_serve(
         assert ai.ann_search_pq(spark, root, q, k=3, nprobe=4).count() > 0
     assert walks == cold, walks  # warm serves: token hits, no re-walk
 
-    # ingest moves a cell dir mtime: the gate flips THROUGH the cache
-    ai.ann_index_add_batch(
-        spark, root, emb.where(F.col("vec_id").between(300, 310)),
-        batch_tag=1,
+    # an uncoded commit changes the cells' live sets: the gate flips
+    # THROUGH the cache
+    _commit_without_codes(
+        spark, root, emb.where(F.col("vec_id").between(300, 310)), 1
     )
     with _pytest.raises(ValueError, match="STALE"):
         ai.ann_search_pq(spark, root, q, k=3)
@@ -566,13 +583,12 @@ def test_pq_augment_missing_dims_raises(spark, emb, tmp_path):
 
 
 def test_pq_sidecar_staleness_and_missing_gates(spark, emb, tmp_path):
-    """Missing sidecar raises with the augment instruction; ingest
-    after augmentation makes the sidecar STALE (fingerprint gate);
-    re-augmenting serves again."""
+    """Missing sidecar raises with the augment instruction; a commit
+    without codes after augmentation makes the sidecar STALE
+    (fingerprint gate); re-augmenting serves again."""
     import pytest as _pytest
 
     from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
         ann_search_pq,
         build_ann_index,
         pq_augment_ann_index,
@@ -585,9 +601,8 @@ def test_pq_sidecar_staleness_and_missing_gates(spark, emb, tmp_path):
         ann_search_pq(spark, root, q, k=3)
     pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
     assert ann_search_pq(spark, root, q, k=3, nprobe=4).count() > 0
-    ann_index_add_batch(
-        spark, root, emb.where(F.col("vec_id").between(300, 320)),
-        batch_tag=1,
+    _commit_without_codes(
+        spark, root, emb.where(F.col("vec_id").between(300, 320)), 1
     )
     with _pytest.raises(ValueError, match="STALE"):
         ann_search_pq(spark, root, q, k=3)
@@ -948,9 +963,9 @@ def test_compact_cells_folds_only_requested(spark, emb, tmp_path):
     old directories, and a no-op call returns 0."""
 
     from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
         ann_index_compact_cells,
     )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     root = str(tmp_path / "sel_fold")
     build_ann_index(emb.where(F.col("vec_id") < 200), root,
@@ -965,8 +980,8 @@ def test_compact_cells_folds_only_requested(spark, emb, tmp_path):
         batch = spark.createDataFrame(
             [(50_000 + tag * 10 + j, vec) for j in range(3)], _VEC_SCHEMA
         )
-        assert ann_index_add_batch(
-            spark, root, batch, batch_tag=tag
+        assert ann_ingest_batch(
+            batch, root, batch_id=tag, max_batch_dirs_per_cell=None
         ) == 3
     assert len(deltas(cell_a)) == 2 and len(deltas(cell_b)) == 1
 
@@ -1058,13 +1073,12 @@ def test_autocompact_selective_fold_is_per_cell(spark, emb, tmp_path):
 
 
 def test_per_cell_gate_blocks_only_stale_probed_cells(spark, emb, tmp_path):
-    """The r13 gate granularity: ingest into cell A leaves a PQ serve
-    probing only cell B working, a serve probing A raises STALE naming
-    the cell, and pq_reencode_stale_cells (existing books, stale cells
-    only) restores A — whose refreshed codes must now surface the
-    ingested rows (cos 1.0 to the query)."""
+    """The r13 gate granularity: a commit without codes into cell A
+    leaves a PQ serve probing only cell B working, a serve probing A
+    raises STALE naming the cell, and pq_reencode_stale_cells (existing
+    books, stale cells only) restores A — whose refreshed codes must
+    now surface the committed rows (cos 1.0 to the query)."""
     from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
         ann_search_pq,
         pq_augment_ann_index,
         pq_reencode_stale_cells,
@@ -1077,11 +1091,11 @@ def test_per_cell_gate_blocks_only_stale_probed_cells(spark, emb, tmp_path):
     (cell_a, vec_a), (cell_b, vec_b) = _two_cell_vectors(spark, root)
 
     new_ids = [70_001, 70_002]
-    ann_index_add_batch(
+    _commit_without_codes(
         spark,
         root,
         spark.createDataFrame([(i, vec_a) for i in new_ids], _VEC_SCHEMA),
-        batch_tag=9,
+        9,
     )
     q_b = spark.createDataFrame([(900_002, vec_b)], _VEC_SCHEMA)
     q_a = spark.createDataFrame([(900_001, vec_a)], _VEC_SCHEMA)
@@ -1111,6 +1125,7 @@ def test_fold_stamps_bandwidth_once(spark, emb, tmp_path, monkeypatch):
     import json as _json
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     probes = []
 
@@ -1128,10 +1143,9 @@ def test_fold_stamps_bandwidth_once(spark, emb, tmp_path, monkeypatch):
     assert "bandwidth_mbps" not in _json.loads(open(meta_path).read())
 
     def fold(tag):
-        ai.ann_index_add_batch(
-            spark, root,
+        ann_ingest_batch(
             emb.where(F.col("vec_id").between(200 + 10 * tag, 209 + 10 * tag)),
-            batch_tag=tag,
+            root, batch_id=tag, max_batch_dirs_per_cell=None,
         )
         assert ai.ann_index_compact(spark, root) > 0
 
@@ -1157,9 +1171,9 @@ def test_fold_stamps_bandwidth_once(spark, emb, tmp_path, monkeypatch):
     probes.clear()
     fold(3)  # stamped: no probe at all
     cells = sorted(ai._load_manifest(root)["cells"])
-    ai.ann_index_add_batch(
-        spark, root, emb.where(F.col("vec_id").between(300, 320)),
-        batch_tag=4,
+    ann_ingest_batch(
+        emb.where(F.col("vec_id").between(300, 320)), root, batch_id=4,
+        max_batch_dirs_per_cell=None,
     )
     assert ai.ann_index_compact_cells(spark, root, cells) > 0
     assert probes == []
@@ -1178,14 +1192,14 @@ def test_fold_probe_never_evicts_live_cells(spark, emb, tmp_path, monkeypatch):
     import json as _json
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     root = str(tmp_path / "noevict")
     ai.build_ann_index(
         emb.where(F.col("vec_id") < 400), root, n_centroids=4, n_iters=0
     )
-    ai.ann_index_add_batch(
-        spark, root,
-        emb.where(F.col("vec_id").between(400, 450)), batch_tag=1,
+    ann_ingest_batch(
+        emb.where(F.col("vec_id").between(400, 450)), root, batch_id=1
     )
 
     evicted = []
@@ -1567,9 +1581,6 @@ def _refusing_entry_points():
     from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     return {
-        "ann_index_add_batch": lambda spark, dep, root, batch: (
-            ai.ann_index_add_batch(spark, root, batch, batch_tag=0)
-        ),
         "ann_ingest_batch": lambda spark, dep, root, batch: (
             ann_ingest_batch(batch, root, batch_id=0)
         ),
@@ -1675,6 +1686,172 @@ def test_build_over_root_without_manifest(
     q = emb.where(F.col("vec_id") < 3)
     want = _key(brute_force_topk(corpus, q, k=3))
     assert _key(ann_search(spark, root, q, k=3, nprobe=2)) == want
+
+
+@pytest.mark.parametrize("batch_id", [None, -2])
+def test_ingest_refuses_an_id_that_is_not_a_commit_id(
+    spark, emb, pq_deployment, tmp_path, batch_id
+):
+    """``None`` and negative ids named the base leaves or a live fold
+    generation, so ``ann_ingest_batch`` refuses them before writing
+    anything, and says which id to pass."""
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        resolve_ann_root,
+    )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
+
+    dep = str(tmp_path / "dep")
+    shutil.copytree(pq_deployment, dep)
+    before = _tree_state(dep)
+    with pytest.raises(ValueError, match=r"batch_id must be an int >= 0"):
+        ann_ingest_batch(
+            emb.where(F.col("vec_id").between(100, 110)),
+            resolve_ann_root(dep), batch_id=batch_id,
+        )
+    assert _tree_state(dep) == before
+
+
+@pytest.fixture(scope="module")
+def publish_deployment(tmp_path_factory, emb):
+    """A deployment whose live root has a PQ sidecar, live commits in
+    several cells and retired directories; returns ``(deployment_dir,
+    (vec_a, vec_b))``, vectors of two of its cells."""
+    from polars_w_inverted_index_spark.operators import ann_index as ai
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        ann_deployment_build,
+    )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
+
+    spark = emb.sparkSession
+    dep = str(tmp_path_factory.mktemp("publish") / "dep")
+    root = ann_deployment_build(
+        emb.where(F.col("vec_id") < 200), dep, n_centroids=4, n_iters=1,
+        pq={"m_subspaces": 4, "n_codes": 8},
+    )
+    (_a, vec_a), (cell_b, vec_b) = _two_cell_vectors(spark, root)
+    ann_ingest_batch(
+        emb.where(F.col("vec_id").between(200, 260)), root, batch_id=0,
+        max_batch_dirs_per_cell=None,
+    )
+    pair = [(70_000, vec_a), (70_001, vec_b)]
+    ann_ingest_batch(
+        spark.createDataFrame(pair, _VEC_SCHEMA), root, batch_id=1,
+        max_batch_dirs_per_cell=None,
+    )
+    # B's base leaf and codes retire; commit 1 stays live through A
+    assert ai.ann_index_compact_cells(spark, root, [cell_b]) > 0
+    return dep, (vec_a, vec_b)
+
+
+def _refused_build(spark, emb, root, vecs):
+    with pytest.raises(ValueError, match="ann_deployment_rebuild") as e:
+        build_ann_index(emb.where(F.col("vec_id") < 50), root, n_centroids=2)
+    assert root in str(e.value)
+
+
+def _ingest(dial, rows=None):
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
+
+    def call(spark, emb, root, vecs):
+        batch = (
+            emb.where(F.col("vec_id").between(260, 300)) if rows is None
+            else spark.createDataFrame(rows(vecs), _VEC_SCHEMA)
+        )
+        assert ann_ingest_batch(
+            batch, root, batch_id=2, max_batch_dirs_per_cell=dial
+        ) > 0
+    return call
+
+
+def _publish_cases():
+    """Every ANN maintenance entry point, as ``name -> (prepare, call)``;
+    both take ``(spark, emb, root, (vec_a, vec_b))`` and ``prepare``
+    runs before the snapshot."""
+    from polars_w_inverted_index_spark.operators import ann_index as ai
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        ann_deployment_rebuild,
+    )
+
+    return {
+        "build_ann_index": (None, _refused_build),
+        "ingest_plain": (None, _ingest(None)),
+        "ingest_all_fold": (None, _ingest(0)),
+        # A holds a live commit and folds past the dial; B folded in
+        # the fixture, so it takes the batch as a commit
+        "ingest_mixed": (None, _ingest(
+            1, lambda v: [(80_000, v[0]), (80_001, v[1])]
+        )),
+        "ann_index_compact_cells": (None, lambda spark, emb, root, v: (
+            ai.ann_index_compact_cells(
+                spark, root, sorted(ai._load_manifest(root)["cells"])
+            )
+        )),
+        "pq_augment_ann_index": (None, lambda spark, emb, root, v: (
+            ai.pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
+        )),
+        "pq_reencode_stale_cells": (
+            lambda spark, emb, root, v: _commit_without_codes(
+                spark, root, emb.where(F.col("vec_id").between(260, 280)), 2
+            ),
+            lambda spark, emb, root, v: (
+                ai.pq_reencode_stale_cells(spark, root)
+            ),
+        ),
+        "ann_deployment_rebuild": (None, lambda spark, emb, root, v: (
+            ann_deployment_rebuild(
+                spark, os.path.dirname(os.path.dirname(root))
+            )
+        )),
+    }
+
+
+@pytest.mark.parametrize("entry", sorted(_publish_cases()))
+def test_maintenance_never_writes_a_named_directory(
+    spark, emb, publish_deployment, tmp_path, entry
+):
+    """Every ANN write lands in a directory that no manifest names, and
+    a manifest swap publishes it: across each maintenance entry point,
+    the files under every directory the call's starting manifest names,
+    live or retired, are neither added nor changed.  The only change
+    allowed is the prune of a retiree past its grace (one is backdated
+    here, so the prunes run).  ``build_ann_index`` refuses the live
+    root and leaves the deployment as it was; the deployment rebuild
+    leaves the old root as it was."""
+    import time
+
+    from polars_w_inverted_index_spark.operators import ann_index as ai
+    from polars_w_inverted_index_spark.operators.ann_deploy import (
+        resolve_ann_root,
+    )
+
+    template, vecs = publish_deployment
+    dep = str(tmp_path / "dep")
+    shutil.copytree(template, dep)
+    root = resolve_ann_root(dep)
+    prepare, call = _publish_cases()[entry]
+    if prepare is not None:
+        prepare(spark, emb, root, vecs)
+    m = ai._load_manifest(root)
+    m["retired"][0][1] = 0.0  # past any grace
+    ai._write_manifest(root, m)
+    live = set(ai._cell_dirs(root, m)) | set(ai._code_paths(root, m))
+    retired = {os.path.join(root, rel): ts for rel, ts in m["retired"]}
+    assert live and len(retired) > 1
+    before = {d: _tree_state(d) for d in live | set(retired)}
+    assert all(before.values())
+    untouched = {"build_ann_index": dep, "ann_deployment_rebuild": root}
+    whole = _tree_state(untouched[entry]) if entry in untouched else None
+
+    call(spark, emb, root, vecs)
+
+    now = time.time()
+    for d, state in sorted(before.items()):
+        if d in retired and not os.path.exists(d):
+            assert now - retired[d] >= ai.DEFAULT_RETIRE_GRACE_SECONDS, d
+            continue
+        assert _tree_state(d) == state, d
+    if whole is not None:
+        assert _tree_state(untouched[entry]) == whole
 
 
 # ---------------------------------------------------------------------------
@@ -1845,43 +2022,6 @@ def test_serves_overlap_maintenance_threaded(spark, tmp_path):
         t.join(120)
     assert not errors, errors
     assert serves[0] >= 1  # the thread really served during the stream
-
-
-def test_rebuild_carries_generation_forward(spark, emb, tmp_path):
-    """A rebuild over an existing root must not reset the fold
-    generation: the old sidecar's gen-tagged codes directories retire
-    behind the grace window, and a reset counter would let the next
-    augment REUSE their tag — appending fresh codes beside retired ones
-    in the same directory and serving DUPLICATE candidates (the r14
-    lifecycle row's oracle caught exactly this the round the rebuild
-    stage was added)."""
-    import polars_w_inverted_index_spark.operators.ann_index as ai
-
-    root = str(tmp_path / "regen")
-    half = emb.where(F.col("vec_id") < 200)
-    ai.build_ann_index(half, root, n_centroids=4, n_iters=1)
-    ai.pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
-    g1 = ai._load_manifest(root)["gen"]
-    assert g1 > 1  # the augment consumed a generation
-    ai.build_ann_index(half, root, n_centroids=4, n_iters=1)  # rebuild
-    assert ai._load_manifest(root)["gen"] >= g1
-    ai.pq_augment_ann_index(spark, root, m_subspaces=4, n_codes=8)
-    m = ai._load_manifest(root)
-    retired_paths = {rel for rel, _ in m["retired"]}
-    for c, tags in m["codes"].items():
-        for t in tags:
-            assert (
-                f"pq_codes/cell={c}/ingest_batch={t}" not in retired_paths
-            ), "live codes tag collides with a retired directory"
-    q = emb.where(F.col("vec_id") < 2)
-    served = ai.ann_search_pq(
-        spark, root, q, k=5, nprobe=4, rerank_factor=1000
-    )
-    rows = served.collect()
-    assert len(rows) == len(
-        {(r["query_id"], r["neighbor_id"]) for r in rows}
-    ), "duplicate candidates served"
-    assert _key(served) == _key(brute_force_topk(half, q, k=5))
 
 
 def test_ingest_metadata_is_o_touched_cells(spark, tmp_path, monkeypatch):

@@ -199,9 +199,7 @@ def test_null_element_corpus_refused_at_lifecycle(spark, tmp_path):
     0.0.  The lifecycle guard must refuse it loudly at build AND at
     ingest (r11.5; the array_compact check rides the existing
     width-guard aggregate)."""
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
-    )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     good = [(i, [1.0, 0.5]) for i in range(4)]
     bad = spark.createDataFrame(good + [(9, [1.0, None])], SCHEMA)
@@ -222,10 +220,10 @@ def test_null_element_corpus_refused_at_lifecycle(spark, tmp_path):
     build_ann_index(clean, root, n_centroids=2, n_iters=1)
     batch = spark.createDataFrame([(10, [None, 2.0])], SCHEMA)
     with pytest.raises(ValueError, match="NULL, NaN or infinite"):
-        ann_index_add_batch(spark, root, batch)
+        ann_ingest_batch(batch, root, batch_id=0)
     nan_batch = spark.createDataFrame([(10, [float("nan"), 2.0])], SCHEMA)
     with pytest.raises(ValueError, match="NULL, NaN or infinite"):
-        ann_index_add_batch(spark, root, nan_batch)
+        ann_ingest_batch(nan_batch, root, batch_id=0)
     # ±inf elements are the same failure class (r12): norm inf makes
     # every cosine NaN (inf/inf), so the float serve would rank the
     # row FIRST (Spark sorts NaN above every double) while the PQ
@@ -239,7 +237,7 @@ def test_null_element_corpus_refused_at_lifecycle(spark, tmp_path):
             )
         inf_batch = spark.createDataFrame([(10, [inf_val, 2.0])], SCHEMA)
         with pytest.raises(ValueError, match="NULL, NaN or infinite"):
-            ann_index_add_batch(spark, root, inf_batch)
+            ann_ingest_batch(inf_batch, root, batch_id=0)
 
 
 def test_ragged_corpus_refused_at_lifecycle(spark, tmp_path):
@@ -248,9 +246,7 @@ def test_ragged_corpus_refused_at_lifecycle(spark, tmp_path):
     batch at ingest) instead of serving two different projections of
     the same row (w3 row in a 'w2' index scored a 2-dim dot over a
     3-dim norm: cos 0.8165 where every consistent projection is 1.0)."""
-    from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
-    )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     ragged = spark.createDataFrame(
         [(0, [-1.0, -1.0]), (1, None), (2, [-1.0, -1.0, -1.0]),
@@ -265,10 +261,10 @@ def test_ragged_corpus_refused_at_lifecycle(spark, tmp_path):
     build_ann_index(uniform, root, n_centroids=1, n_iters=0)
     wide_batch = spark.createDataFrame([(9, [1.0, 1.0, 1.0])], SCHEMA)
     with pytest.raises(ValueError, match="dims=2"):
-        ann_index_add_batch(spark, root, wide_batch)
+        ann_ingest_batch(wide_batch, root, batch_id=0)
     # NULL-only batches carry no width and still ingest
-    assert ann_index_add_batch(
-        spark, root, spark.createDataFrame([(10, None)], SCHEMA)
+    assert ann_ingest_batch(
+        spark.createDataFrame([(10, None)], SCHEMA), root, batch_id=0
     ) == 1
 
 
@@ -732,7 +728,8 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
       never resurrected;
     - ``crash_ingest_pre_swap``: an ingest wrote its commit directory
       but crashed before its manifest swap and was ABANDONED (no
-      replay) — same invariant: invisible, swept by a later fold;
+      replay) — same invariant: invisible, swept by a later fold or
+      ingest;
     - ``crash_prune_window``: a prune deleted a retired directory but
       crashed before the swap that drops its entry — the manifest
       names a missing path, which later prunes must tolerate
@@ -750,10 +747,10 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
 
     import polars_w_inverted_index_spark.operators.ann_index as ai
     from polars_w_inverted_index_spark.operators.ann_index import (
-        ann_index_add_batch,
         ann_index_compact,
         ann_index_compact_cells,
     )
+    from polars_w_inverted_index_spark.streaming import ann_ingest_batch
 
     spark = get_session("property_tests")
     root = str(tmp_path_factory.mktemp("ann_crash") / "idx")
@@ -798,8 +795,8 @@ def test_fuzz_ann_maintenance_crash_states_heal(ops, tmp_path_factory):
                 if rows
                 else spark.createDataFrame([], SCHEMA)
             )
-            assert ann_index_add_batch(
-                spark, root, batch, batch_tag=next_id
+            assert ann_ingest_batch(
+                batch, root, batch_id=next_id, max_batch_dirs_per_cell=None
             ) == len(rows)
             ingested.extend(rows)
             next_id += arg + 1

@@ -11,7 +11,7 @@ committed one, raises ValueError and writes nothing either.
 The module also pins that the shared marker reader refuses a marker
 form no writer produces, and that ``functions/atomic_json.py`` is the
 only place in the package that swaps a file into view with
-``os.replace``.
+``os.replace`` or reads or writes one with ``json.load``/``json.dump``.
 """
 
 from __future__ import annotations
@@ -203,7 +203,8 @@ def os_replace_calls(source: str) -> list[int]:
     )
 
 
-def test_only_atomic_json_swaps_files():
+def _scan_package(scanner) -> dict[str, list[int]]:
+    """``{module path: the lines scanner flags}`` over the package."""
     found, scanned = {}, 0
     for dirpath, _dn, filenames in os.walk(PKG):
         for fn in filenames:
@@ -211,13 +212,60 @@ def test_only_atomic_json_swaps_files():
                 path = os.path.join(dirpath, fn)
                 rel = os.path.relpath(path, PKG).replace(os.sep, "/")
                 with open(path) as f:
-                    lines = os_replace_calls(f.read())
+                    lines = scanner(f.read())
                 if lines:
                     found[rel] = lines
                 scanned += 1
     assert scanned > 50
+    return found
+
+
+def test_only_atomic_json_swaps_files():
+    """``os.replace``, ``json.load`` and ``json.dump`` appear only in
+    ``functions/atomic_json.py``: every state file is written through
+    its atomic swap and read through ``read_json``, which names a torn
+    file."""
+    found = _scan_package(os_replace_calls)
     assert list(found) == ["functions/atomic_json.py"], found
     assert len(found["functions/atomic_json.py"]) == 1
+    found = _scan_package(json_file_calls)
+    assert list(found) == ["functions/atomic_json.py"], found
+
+
+def json_file_calls(source: str) -> list[int]:
+    """Lines of ``source`` that name ``json.load``/``json.dump`` or
+    import either from ``json``."""
+    names = ("load", "dump")
+    return sorted(
+        node.lineno
+        for node in ast.walk(ast.parse(source))
+        if (
+            isinstance(node, ast.Attribute)
+            and node.attr in names
+            and isinstance(node.value, ast.Name)
+            and node.value.id == "json"
+        )
+        or (
+            isinstance(node, ast.ImportFrom)
+            and node.module == "json"
+            and any(a.name in names for a in node.names)
+        )
+    )
+
+
+def test_json_scanner_flags_raw_reads_and_writes():
+    src = '''
+import json
+from json import dump as _d
+
+def state(path):
+    with open(path) as f:
+        m = json.load(f)
+    json.dumps(m)
+    json.loads("{}")
+    return m
+'''
+    assert json_file_calls(src) == [3, 7]
 
 
 def test_scanner_flags_a_private_swap():
